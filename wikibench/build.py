@@ -72,6 +72,11 @@ def jvm_options(work):
         # JVM's first minute of compilation, and C2's background compile
         # bursts competed with the task threads for the cores (see README)
         "-XX:TieredStopAtLevel=1",
+        # C1 alone gets the 48 MiB code cache of a non-tiered JVM, and the
+        # classes Spark generates per query filled it in some runs: the
+        # JVM then disabled its compiler and a task failed with "Out of
+        # space in CodeCache for adapters". The tiered default size:
+        "-XX:ReservedCodeCacheSize=240m",
         "-XX:-UsePerfData",  # no hsperfdata file outside the checkout
         f"-Djava.io.tmpdir={os.path.join(work, 'tmp')}",
         f"-Dlog4j.configurationFile={LOG_CONF}",
@@ -90,7 +95,8 @@ def archive():
 
 def _stamp(sources, jars):
     h = hashlib.sha256()
-    for path in sources + [LOG_CONF]:
+    # this file too: it holds the JVM options the archive is made with
+    for path in sources + [LOG_CONF, os.path.abspath(__file__)]:
         h.update(path.encode())
         with open(path, "rb") as f:
             h.update(f.read())

@@ -14,6 +14,7 @@ succeeded and passed its check.
 import argparse
 import os
 import shutil
+import signal
 import subprocess
 import sys
 
@@ -53,14 +54,17 @@ def main():
             "--seconds", str(a.seconds), "--trace", str(a.trace),
             "--work", work, "--trace-out", trace_out])
     proc = subprocess.Popen(cmd, stdout=subprocess.PIPE, env=env, text=True)
+    # a SIGTERM to this script must not leave the JVM running
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit("wikibench: terminated"))
     try:
         out, _ = proc.communicate(timeout=TIMEOUT_S)
     except subprocess.TimeoutExpired:
-        proc.kill()
+        sys.exit(f"wikibench: {a.workload} did not finish in {TIMEOUT_S} s")
+    finally:
+        if proc.poll() is None:
+            proc.kill()
         proc.wait()
         shutil.rmtree(work, ignore_errors=True)
-        sys.exit(f"wikibench: {a.workload} did not finish in {TIMEOUT_S} s")
-    shutil.rmtree(work, ignore_errors=True)
     lines = [l for l in out.splitlines() if l.strip()]
     for l in lines:
         print(l)
