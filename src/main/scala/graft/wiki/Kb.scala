@@ -62,10 +62,13 @@ object Kb {
   object BatchEmbedder {
     /** Deterministic stand-in model: hashed bag-of-words, L2-normalized. */
     final class Hashing(val dim: Int = 64) extends BatchModel {
+      require(dim > 0, s"embedding dim must be positive, got $dim")
       def embedBatch(texts: Seq[String]): Seq[Array[Float]] = texts.map { t =>
         val v = new Array[Float](dim)
         if (t != null) {
-          for (tok <- t.toLowerCase.split("\\W+") if tok.nonEmpty) {
+          // Locale.ROOT: Python's str.lower() is locale-free; the default
+          // locale would map I to dotless ı on a Turkish-locale host
+          for (tok <- t.toLowerCase(java.util.Locale.ROOT).split("\\W+") if tok.nonEmpty) {
             val h = tok.hashCode
             val idx = math.floorMod(h, dim)
             v(idx) += (if (math.floorMod(h >> 16, 2) == 0) 1.0f else -1.0f)
@@ -79,22 +82,34 @@ object Kb {
 
   /** Deterministic, model-free default: hashed bag-of-words embedding.
     * Each token's Spark `hash` picks a dimension and a sign; the vector is
-    * L2-normalized. Pure codegen'd column expressions — no UDF, no model —
-    * so the KB plumbing is testable and benchmarkable without spaCy.
+    * L2-normalized. Column expressions only — no UDF, no model — so the KB
+    * plumbing is testable and benchmarkable without spaCy.
+    *
+    * Cost model: the higher-order functions used here (`transform`,
+    * `aggregate`, `filter`) are interpreted (`CodegenFallback`) and do no
+    * common-subexpression elimination inside a lambda, so every column
+    * referenced from a lambda body is re-evaluated per element. The
+    * expression is therefore shaped so that each row is tokenized once and
+    * each token hashed once: the (dim, sign) pairs are scatter-added into
+    * one `dim`-length float array, whose sum of squares is taken once. That
+    * is O(tokens·dim) interpreted lambda steps per row.
     */
   final class HashingEmbedder(val dim: Int = 64) extends Embedder {
+    require(dim > 0, s"embedding dim must be positive, got $dim")
     def embed(text: Column): Column = {
       val tokens = filter(split(lower(coalesce(text, lit(""))), "\\W+"), t => length(t) > 0)
-      // accumulate counts per hashed dim: build vector via sequence + aggregate
-      val idx = transform(tokens, t => pmod(hash(t), lit(dim)))
-      val sgn = transform(tokens, t => when(pmod(hash(t, lit(7)), lit(2)) === 0, 1.0f).otherwise(-1.0f))
-      val raw = transform(sequence(lit(0), lit(dim - 1)), { d =>
-        aggregate(
-          zip_with(idx, sgn, (i, s) => when(i === d, s).otherwise(0.0f)),
-          lit(0.0f), (acc, x) => acc + x)
-      })
-      val norm = sqrt(aggregate(raw, lit(0.0f), (acc, x) => acc + x * x).cast("double"))
-      transform(raw, x => (x / when(norm > 0, norm).otherwise(lit(1.0))).cast("float"))
+      val pairs = transform(tokens, t => struct(
+        pmod(hash(t), lit(dim)).as("i"),
+        when(pmod(hash(t, lit(7)), lit(2)) === 0, 1.0f).otherwise(-1.0f).as("s")))
+      // float sums in token order, then a double sqrt and divide cast back
+      // to float: KbEmbedderSpec pins the resulting vectors bit for bit
+      aggregate(pairs, array_repeat(lit(0.0f), dim),
+        (acc, p) => transform(acc, (v, i) =>
+          when(i === p.getField("i"), v + p.getField("s")).otherwise(v)),
+        raw => aggregate(raw, lit(0.0f), (acc, x) => acc + x * x, { ss =>
+          val norm = sqrt(ss.cast("double"))
+          transform(raw, x => (x / when(norm > 0, norm).otherwise(lit(1.0))).cast("float"))
+        }))
     }
   }
 
