@@ -467,10 +467,9 @@ object Bench {
     * corpus) at storeParts=16·factor, then against BOTH stores (a) probes
     * with the same 5-doc batch, measuring wall seconds and the
     * partition-pruned scan's row count, and (b) APPENDS a small batch,
-    * measuring wall seconds — the partition-local stats merge means the
-    * append reads/rewrites only batch-touched partitions, so its cost
-    * must not grow with the store either (it used to: the r5 design
-    * rewrote the full stats table per append). Expected: rows and both
+    * measuring wall seconds — an append writes one new segment and reads
+    * or rewrites nothing that exists, so its cost must not grow with the
+    * store either. Expected: rows and both
     * timings ~equal at 1× and factor×. Returns
     * (docs1, rows1, probeSec1, appendSec1, docsN, rowsN, probeSecN, appendSecN).
     */
@@ -500,8 +499,8 @@ object Bench {
       val rows = probeRows.get()
       Caches.releaseAll(spark)
       // append a DISTINCT small batch (fresh ids/tokens — store ids are
-      // unique by contract) and time the full append path: sig/bucket
-      // writes plus the partition-local stats merge
+      // unique by contract) and time the full append path: the new
+      // segment's sig/bucket writes plus the manifest commit
       val appendBatch = docs.orderBy("doc_id").limit(5)
         .select((col("doc_id") + 950000000L).as("doc_id"),
           array_join(transform(split(col("text"), "\\s+"),

@@ -1,10 +1,13 @@
 package graft
 
 /** Single-writer guard + filesystem handle shared by the persisted
-  * incremental stores (the MinHash signature store in [[graft.ext.Dedup]]
-  * and the FTS segment store in [[graft.fts.FtsStore]]). Factored here so
-  * both stores carry ONE audited implementation of the token read-back
-  * protocol instead of two drifting copies.
+  * stores. For the two incremental segment stores (the MinHash signature
+  * store in [[graft.ext.Dedup]] and the FTS store in
+  * [[graft.fts.FtsStore]]) the lock guards COMPACTIONS only — appends
+  * are lock-free segment commits ([[graft.SegmentLog]]);
+  * [[graft.catalog.VersionedTable]]'s vacuum takes it too. One audited
+  * implementation of the token read-back protocol instead of drifting
+  * copies.
   */
 private[graft] object StoreLock {
 
@@ -14,7 +17,7 @@ private[graft] object StoreLock {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Single-writer guard: `path/_lock` created with fail-if-exists
-    * semantics. A concurrent append/compaction (or a crashed writer's
+    * semantics. A concurrent lock holder (or a crashed writer's
     * stale lock) fails FAST with a clear error instead of racing the
     * manifest commit into a corrupt store.
     *
@@ -40,7 +43,7 @@ private[graft] object StoreLock {
       try fs.create(lock, false)
       catch { case e: java.io.IOException =>
         throw new IllegalStateException(
-          s"$what at $path is locked: appends/compactions are " +
+          s"$what at $path is locked: compactions and vacuums are " +
             s"SINGLE-WRITER. Another writer holds $lock — or a previous " +
             "writer crashed; verify no writer is live and remove the lock " +
             "file to recover.", e)
@@ -74,7 +77,7 @@ private[graft] object StoreLock {
         // writer's in-flight token write) IS the lost race — surface it
         // as the lock error, not a filesystem internal
         throw new IllegalStateException(
-          s"$what at $path is locked: appends/compactions are " +
+          s"$what at $path is locked: compactions and vacuums are " +
             s"SINGLE-WRITER, and this writer's lock read-back at $lock " +
             "failed under a concurrent writer — aborting before " +
             "touching the store; re-run when the other writer finishes.",

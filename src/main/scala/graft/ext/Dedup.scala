@@ -439,41 +439,28 @@ object Dedup {
     * disk-partitioned on a key the probe can prune on, so a batch probe
     * reads only batch-keyed slices.
     *
-    * Layout (three tables, nothing stored or shuffled redundantly; the
-    * sigs and buckets tables are IMMUTABLE PER-APPEND SEGMENTS — each
-    * append claims a fresh segment id S via an atomic rename-claim in
-    * `path/_claims/seg-S` and writes ONLY under its own `seg-S` dirs,
-    * never into dirs a reader can already see; the live segment list is
-    * committed by the manifest below, Lucene/FtsStore-style):
-    *  - `path/sigs/seg-S/sid=K`: one (doc_id, sig) row per document,
+    * Layout — an append-only list of IMMUTABLE segments, committed by
+    * the segment protocol [[graft.fts.FtsStore]] uses too
+    * ([[graft.SegmentLog]]: `path/meta.json`, `path/manifest-N` listing
+    * the live segments, `path/_claims/seg-S`); each append writes only
+    * under its own claimed `path/seg-S`:
+    *  - `seg-S/sigs/sid=K`: one (doc_id, sig) row per document,
     *    sid = pmod(xxhash64(doc_id), storeParts) — the probe's signature
     *    re-attach prunes to the candidate ids' sid partitions, unioned
     *    across the live segments;
-    *  - `path/buckets/seg-S/band=B/hmod=M`: bare (doc_id, band_hash)
-    *    rows, hmod = pmod(band_hash, storeParts) — the probe's candidate
-    *    join prunes to the batch's (band, hmod) partitions per segment;
-    *  - `path/stats/v=S/band=B/hmod=M`: MERGED (band_hash, cnt) bucket
-    *    populations, version-keyed on the writing append's segment id S.
-    *    Version dir S holds ONLY the partitions rewritten by that
-    *    append; the manifest maps every live (band, hmod) partition to
-    *    the version dir holding its current counts. The merge is
-    *    therefore PARTITION-LOCAL: an append reads and rewrites only the
-    *    batch-touched partitions' stats — O(batch keys), never O(total
-    *    distinct buckets) — and untouched partitions carry forward by
-    *    manifest reference alone. The stats table is what lets
-    *    [[dedupAgainstStore]] build its degenerate-bucket drop list
-    *    WITHOUT re-counting the full bucket table per batch.
+    *  - `seg-S/buckets/band=B/hmod=M`: bare (doc_id, band_hash) rows,
+    *    hmod = pmod(band_hash, storeParts) — the probe's candidate join
+    *    prunes to the batch's (band, hmod) partitions per segment, and
+    *    those partitions hold EVERY store row of each batch bucket, so
+    *    the probe counts bucket populations off the same scan.
     *
-    * THE COMMIT POINT is `path/stats/manifest-N` (highest N wins): one
-    * write-once file carrying the live segment list AND the stats
-    * routing map, claimed by tmp-write + conditional rename — renaming
-    * onto an existing file is refused on local fs and HDFS alike, so
-    * each manifest number has exactly one owner. Until an append's
-    * manifest lands, NOTHING it wrote is reachable: its segment dirs and
-    * stats version dir are unreferenced names no reader resolves. A
-    * crashed (or racing, see below) append therefore leaves the store
-    * bit-for-bit at its pre-append state plus some orphaned dirs that
-    * the next compaction grace-sweeps.
+    * Until an append's manifest lands, nothing it wrote is reachable: a
+    * crashed append leaves the store at its pre-append state plus one
+    * unreferenced claimed segment that a compaction grace-sweeps. An
+    * absent manifest is the empty store (the first append starts it).
+    * A store with the previous layout (a derived `stats/` table,
+    * `sigs/seg-S` dirs) is refused with a rebuild request — read as the
+    * segment layout it would look EMPTY.
     *
     * `storeParts` is the store's partition granularity — fixed at store
     * creation and sized to the expected corpus like any partition count:
@@ -488,46 +475,25 @@ object Dedup {
     * must be unique across ALL appended batches (they key the signature
     * lookup).
     *
-    * '''Recorded decision — single-writer THROUGHPUT, first-committer
-    * CORRECTNESS.''' A signature-store append is a READ-MODIFY-WRITE of
-    * the stats routing: it merges the batch's counts against the
-    * manifest it read. Nearly every batch touches a large share of the
-    * stats partitions (band hashes spray uniformly by construction), so
-    * concurrent appends conflict near-always and optimistic retries
-    * would churn without progress — concurrent ingest belongs UPSTREAM
-    * (shard batches per store, or ride
-    * [[graft.streaming.Streams.streamDedupAgainstStore]], whose
-    * checkpoint serializes micro-batches for free). The `_lock` file
-    * encodes that contract as a FAST, COURTEOUS failure for a
-    * well-behaved concurrent writer or a crashed writer's stale lock.
-    * But the lock's create is not atomic on LocalFileSystem/S3-class
-    * stores (the documented [[graft.StoreLock]] TOCTOU), so CORRECTNESS
-    * never rests on it: a writer that slips past the lock still writes
-    * only its own claimed segment dirs and must win the conditional
-    * manifest rename for `manifest-(readBase+1)` to publish. Exactly
-    * one racer owns that name, and the loser — whose merge could have
-    * missed the winner's counts — dies loudly BEFORE anything it wrote
-    * becomes reachable: no silent half-merge, no partial state in any
-    * live dir, on any filesystem with atomic rename. DedupSpec pins it
-    * with a genuinely racing appender pair: losers fail loud (lock or
-    * manifest claim), and the store's readable state equals exactly the
-    * seed plus the successful appends.
+    * '''Recorded decision — lock-free appends.''' An append reads and
+    * rewrites nothing that exists, so concurrent appends never conflict:
+    * both commit (the loser of a manifest race rebases onto the winner's
+    * segment list), exactly as [[graft.fts.FtsStore.append]]. The
+    * creation-time meta is written by conditional rename and re-read, so
+    * two racing FIRST appends with different parameters cannot both
+    * pass the parameter check. DedupSpec races two appenders and pins
+    * that the store equals the seed plus both batches.
     */
   def appendSignatureStore(df: DataFrame, idCol: String, textCol: String,
                            path: String, n: Int = 3, numHashes: Int = 64,
                            bands: Int = 16, storeParts: Int = 16): Unit = {
     val spark = df.sparkSession
-    val fs = hadoopFs(spark, path)
-    withStoreLock(fs, path) {
-      checkOrWriteMeta(fs, path, n, numHashes, bands, storeParts)
-      // the manifest read is the transaction BASE: the commit below
-      // claims manifest-(mv+1), so it succeeds only if no other writer
-      // committed since this read — first-committer-wins on the merge
-      val (mv, liveSegs, manifest) = readStatsManifest(spark, path)
-      // claim a fresh segment id; every byte this append writes lands
-      // under seg-$seg / stats/v=$seg — dirs no reader can resolve until
-      // the manifest commit publishes them
-      val seg = claimSeg(fs, path)
+    val fs = graft.StoreLock.fs(spark, path)
+    requireSegmentLayout(fs, path)
+    val passed = storeMeta(n, numHashes, bands, storeParts)
+    requireMetaMatch(path, graft.SegmentLog.readMeta(fs, path)
+      .getOrElse(graft.SegmentLog.createMeta(fs, path, passed)), passed)
+    graft.SegmentLog.commitSegment(fs, path, "signature-store append") { seg =>
       val sigs = graft.Caches.stage(withMinhashSignature(
         df.select(col(idCol).as("doc_id"), col(textCol).as("__text")),
         "__text", "sig", n, numHashes).drop("__text"))
@@ -538,277 +504,78 @@ object Dedup {
       sigs.withColumn("sid",
           pmod(xxhash64(col("doc_id")), lit(storeParts.toLong)).cast("int"))
         .repartition(col("sid"))
-        .write.partitionBy("sid").parquet(s"$path/sigs/seg-$seg")
-      // the (band, hmod) arrangement lives INSIDE the staged frame (r19):
-      // the bucket write, the batch-counts aggregation, and the touched-
-      // key distinct below all need exactly this clustering, so they all
-      // reuse the cache's HashPartitioning(band, hmod) instead of each
-      // paying its own exchange (the aggregations' grouping keys are a
-      // superset of the partitioning keys)
-      val buckets = graft.Caches.stage(bandBucketsFromSigs(sigs, numHashes, bands)
+        .write.partitionBy("sid").parquet(s"$path/seg-$seg/sigs")
+      bandBucketsFromSigs(sigs, numHashes, bands)
         .select("doc_id", "band", "band_hash")
         .withColumn("hmod",
           pmod(col("band_hash"), lit(storeParts.toLong)).cast("int"))
-        .repartition(col("band"), col("hmod")))
-      buckets.write.partitionBy("band", "hmod")
-        .parquet(s"$path/buckets/seg-$seg")
-      // PARTITION-LOCAL stats merge: previous counts are read from ONLY
-      // the batch-touched (band, hmod) partitions (via the manifest, so
-      // even directory listing is O(batch keys)), merged with the batch's
-      // counts, and written as version N+1 containing ONLY those
-      // partitions. Untouched partitions are never read, shuffled, or
-      // rewritten — their manifest entries carry forward. This keeps the
-      // append O(batch), matching the probe: a per-micro-batch streaming
-      // ingest no longer pays an O(store) stats rewrite as the corpus
-      // grows (at 100 TB the full stats table is itself TB-scale).
-      val batchCounts = buckets.groupBy("band", "hmod", "band_hash")
-        .agg(count(lit(1)).as("cnt"))
-      val touched = buckets.select("band", "hmod").distinct().collect()
-        .map(r => (r.getInt(0), r.getInt(1)))
-      val prevTouched = touched.toSeq.flatMap { case (b, m) =>
-        manifest.get((b, m)).map(v => (v, b, m)) }
-      // merge with ONE exchange (r19): repartition the union by the
-      // write layout's keys FIRST, so the (band, hmod, band_hash) merge
-      // aggregation reuses that clustering and the partitionBy write
-      // below needs no second shuffle; with no prior counts, batchCounts
-      // already carries the cache's (band, hmod) partitioning — zero
-      // additional exchanges
-      val merged = statsUnionRead(spark, path, prevTouched) match {
-        case Some(prev) => prev.unionByName(batchCounts)
-          .repartition(col("band"), col("hmod"))
-          .groupBy("band", "hmod", "band_hash").agg(sum("cnt").as("cnt"))
-        case None => batchCounts
-      }
-      // the stats version dir is keyed on the CLAIMED segment id — a
-      // name this writer exclusively owns, so even a lock-escaping racer
-      // can never write into another append's stats dir
-      merged.write.partitionBy("band", "hmod")
-        .parquet(s"$path/stats/v=$seg")
-      // COMMIT: one conditional-rename manifest claim publishes the new
-      // segment AND the re-routed stats in a single atomic cut-over;
-      // until it lands, readers see the previous manifest and none of
-      // this append's dirs. The touched keys' previous stats homes
-      // become unreferenced here but are RETAINED — a probe that
-      // resolved them through the pre-append manifest must still find
-      // them, INCLUDING through this append's successor compaction (the
-      // sweep honors every retained manifest generation, so these dirs
-      // die only two compactions later). Until then they are bounded
-      // garbage, one superseded copy per touched key per append since
-      // the last compaction.
-      if (!tryWriteStatsManifest(fs, path, mv + 1, liveSegs :+ seg,
-          manifest ++ touched.map(_ -> seg).toMap))
-        throw new IllegalStateException(
-          s"signature store at $path is SINGLE-WRITER and another append " +
-            s"committed manifest-${mv + 1} first (this writer slipped " +
-            "past the lock on a non-atomic-create filesystem) — aborting " +
-            "WITHOUT publishing: this append's merge was computed against " +
-            "a stale base and none of its files are reachable; re-run it.")
+        .repartition(col("band"), col("hmod"))
+        .write.partitionBy("band", "hmod").parquet(s"$path/seg-$seg/buckets")
     }
   }
 
   /** Offline maintenance for a long-lived signature store: each append
-    * lands one segment (one file per touched partition) and one stats
-    * version dir, so after many increments a probe unions one slice per
-    * segment and the stats table is scattered over many versions.
-    * Compaction rewrites all live segments' sigs and buckets into ONE
-    * fresh segment (one file per partition) and consolidates the live
-    * stats partitions into ONE fresh version, then commits a manifest
-    * referencing only the packed copies. Deliberately O(store) — it's
-    * the amortized maintenance job, run between ingests, never on the
-    * probe path. Takes the same single-writer `_lock` as appends, and
-    * like them publishes through the conditional manifest claim, so a
-    * compaction racing a lock-escaping append fails loud instead of
-    * silently dropping the append's segment.
+    * lands one segment (one file per touched partition), so after many
+    * increments a probe unions one slice per segment. Compaction rewrites
+    * all live segments' sigs and buckets into ONE fresh segment (one file
+    * per partition) and commits a manifest referencing only it.
+    * Deliberately O(store) — the amortized maintenance job, run between
+    * ingests, never on the probe path. It takes the store `_lock`, which
+    * excludes other compactions only; appends stay lock-free, and a
+    * compaction that an append overtakes REPLANS so the packed segment
+    * never drops a committed append.
     *
     * READER-SAFE BY CONSTRUCTION, never by rename: the packed segment
-    * and stats land under a freshly CLAIMED id beside the live dirs and
-    * the write-once manifest is the atomic cut-over, so no path a
-    * reader could have resolved is ever renamed or briefly absent. All
-    * sweeps are DEFERRED: a segment or stats version dir is deleted
-    * only when NO retained manifest references it (manifest files are
-    * retained two generations past the live one), giving a reader that
-    * resolved paths through the latest metadata TWO full writer
-    * generations of headroom — including the documented worst case, a
-    * probe planned before an append and still executing through that
-    * append's successor compaction (asserted by interleaving in
-    * DedupSpec). Three-plus generations of writers inside one probe is
-    * sequential-ingest territory the operating model excludes.
-    * Unreferenced dirs that no manifest ever published (a crashed or
-    * race-losing append's claimed segment) are swept too, past
-    * `orphanGraceMs` — the grace keeps a hypothetical in-flight writer's
-    * staging intact.
-    *
-    * Crash-safe in every window: a packed segment written but not
-    * manifest-committed is an orphan the next compaction grace-sweeps;
-    * a committed manifest whose sweep never ran just leaves deferred
-    * garbage for the next cycle.
+    * lands under a freshly CLAIMED id beside the live dirs and the
+    * write-once manifest is the atomic cut-over. Sweeps are DEFERRED
+    * ([[graft.SegmentLog]]'s sweep, two retained cycles): a superseded
+    * segment is deleted only when none of the live manifest and its two
+    * predecessors references it, giving a reader that resolved paths
+    * through the latest metadata TWO full writer generations of headroom
+    * — including a probe planned before an append and still executing
+    * through that append's successor compaction (asserted by
+    * interleaving in DedupSpec). Never-committed segments (a crashed
+    * append's) are swept past `orphanGraceMs`; its 7-day default keeps a
+    * lock-free in-flight append's claimed segment intact.
     */
   def compactSignatureStore(spark: org.apache.spark.sql.SparkSession,
                             path: String,
-                            orphanGraceMs: Long = 3600000L): Unit = {
-    val fs = hadoopFs(spark, path)
-    withStoreLock(fs, path) {
-      val (mv, liveSegs, manifest) = readStatsManifest(spark, path)
-      if (liveSegs.nonEmpty || manifest.nonEmpty) {
-        val seg = claimSeg(fs, path)
-        def rewriteInto(sub: String, parts: Seq[String]): Boolean = {
-          val srcs = liveSegs.map(s => s"$path/$sub/seg-$s")
-            .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
-          if (srcs.isEmpty) false
-          else {
-            // per-segment reads unioned (not one multi-root read): each
-            // segment dir is its own basePath, keeping the partition
-            // columns parsed per segment
-            srcs.map(spark.read.parquet(_)).reduce(_ unionByName _)
-              .repartition(parts.map(col): _*)
-              .write.partitionBy(parts: _*)
-              .parquet(s"$path/$sub/seg-$seg")
-            true
-          }
-        }
-        val wroteSigs = rewriteInto("sigs", Seq("sid"))
-        val wroteBuckets = rewriteInto("buckets", Seq("band", "hmod"))
-        val packedStats = manifest.nonEmpty && {
-          val all = manifest.toSeq.map { case ((b, m), v) => (v, b, m) }
-          statsUnionRead(spark, path, all).exists { live =>
-            live.repartition(col("band"), col("hmod"))
-              .write.partitionBy("band", "hmod")
-              .parquet(s"$path/stats/v=$seg")
-            true
-          }
-        }
-        val newSegs = if (wroteSigs || wroteBuckets) Seq(seg) else Seq.empty
-        val newMap =
-          if (packedStats) manifest.map { case (k, _) => k -> seg }
-          else manifest
-        if (!tryWriteStatsManifest(fs, path, mv + 1, newSegs, newMap))
-          throw new IllegalStateException(
-            s"signature store at $path is SINGLE-WRITER and another " +
-              s"writer committed manifest-${mv + 1} during this " +
-              "compaction — aborting WITHOUT publishing; the packed " +
-              "copies are unreferenced and will be grace-swept; re-run.")
-      }
-      sweepSigStore(fs, path, orphanGraceMs)
+                            orphanGraceMs: Long = 7L * 24 * 3600 * 1000): Unit = {
+    val fs = graft.StoreLock.fs(spark, path)
+    requireSegmentLayout(fs, path)
+    graft.SegmentLog.compact(fs, path, "signature store", retainCycles = 2,
+        orphanGraceMs) { segs =>
+      val seg = graft.SegmentLog.claimSeg(fs, path)
+      def pack(sub: String, parts: Seq[String]): Unit =
+        // per-segment reads unioned (not one multi-root read): each
+        // segment dir is its own basePath, keeping the partition columns
+        // parsed per segment
+        segs.map(s => spark.read.parquet(s"$path/seg-$s/$sub"))
+          .reduce(_ unionByName _)
+          .repartition(parts.map(col): _*)
+          .write.partitionBy(parts: _*).parquet(s"$path/seg-$seg/$sub")
+      pack("sigs", Seq("sid"))
+      pack("buckets", Seq("band", "hmod"))
+      Seq(seg)
     }
   }
 
-  /** Deferred sweep (under the store lock): delete segment dirs, stats
-    * version dirs and claim markers referenced by NO retained manifest
-    * (the live one plus two predecessors) — but never younger than
-    * `orphanGraceMs`, so a writer between its claim and its commit keeps
-    * its staging. Claim markers are swept only after their dirs are
-    * gone; ids are never reused while any trace of them exists.
+  /** Refuse the previous store layout (a derived `stats/` table and
+    * `sigs/seg-S` / `buckets/seg-S` dirs): it has no root manifest, so
+    * it would read as an EMPTY store and every probe would silently miss
+    * its duplicates.
     */
-  private def sweepSigStore(fs: org.apache.hadoop.fs.FileSystem,
-                            path: String, orphanGraceMs: Long): Unit = {
-    val retained = manifestFiles(fs, path).map(_._2).map(readManifestFile(fs, _))
-    val keepSegs = retained.flatMap(_._1).toSet
-    val keepStats = retained.flatMap(_._2.values).toSet
-    val cutoff = System.currentTimeMillis() - orphanGraceMs
-    def sweepDirs(base: String, prefix: String, keep: Set[Int]): Unit = {
-      val b = new org.apache.hadoop.fs.Path(base)
-      if (fs.exists(b)) fs.listStatus(b).filter(_.isDirectory).foreach { st =>
-        val nm = st.getPath.getName
-        if (nm.startsWith(prefix))
-          scala.util.Try(nm.drop(prefix.length).toInt).toOption.foreach { id =>
-            if (!keep.contains(id) && st.getModificationTime < cutoff)
-              fs.delete(st.getPath, true)
-          }
-      }
-    }
-    sweepDirs(s"$path/sigs", "seg-", keepSegs)
-    sweepDirs(s"$path/buckets", "seg-", keepSegs)
-    sweepDirs(s"$path/stats", "v=", keepStats)
-    val claims = new org.apache.hadoop.fs.Path(s"$path/_claims")
-    if (fs.exists(claims))
-      fs.listStatus(claims).filter(_.isFile).foreach { st =>
-        val nm = st.getPath.getName
-        if (nm.startsWith("seg-"))
-          scala.util.Try(nm.drop(4).toInt).toOption.foreach { id =>
-            val gone = !fs.exists(new org.apache.hadoop.fs.Path(s"$path/sigs/seg-$id")) &&
-              !fs.exists(new org.apache.hadoop.fs.Path(s"$path/buckets/seg-$id")) &&
-              !fs.exists(new org.apache.hadoop.fs.Path(s"$path/stats/v=$id"))
-            if (!keepSegs.contains(id) && !keepStats.contains(id) && gone &&
-                st.getModificationTime < cutoff)
-              fs.delete(st.getPath, false)
-          }
-      }
+  private def requireSegmentLayout(fs: org.apache.hadoop.fs.FileSystem,
+                                   path: String): Unit = {
+    val legacy =
+      try fs.listStatus(new org.apache.hadoop.fs.Path(path)).exists(st =>
+        st.isDirectory && Set("stats", "sigs", "buckets")(st.getPath.getName))
+      catch { case _: java.io.FileNotFoundException => false }
+    if (legacy) throw new IllegalStateException(
+      s"signature store at $path has the previous layout (stats/ or " +
+        "sigs/seg-* dirs) — rebuild it from its corpus with " +
+        "appendSignatureStore into a fresh path")
   }
-
-  // ---- signature-store metadata / manifest / lock plumbing -----------
-
-  /** Per-store JVM monitor: in-process writers serialize the tiny
-    * metadata-only claim step (the exact same-JVM races the filesystem's
-    * conditional rename also catches); cross-process exclusion rests on
-    * the rename alone. Same discipline as [[graft.fts.FtsStore]].
-    */
-  private val claimMonitors =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def claimMonitor(path: String): Object =
-    claimMonitors.computeIfAbsent(path, _ => new Object)
-
-  /** Claim an exclusive segment id: conditionally rename a marker into
-    * `path/_claims/seg-N` — renaming onto an existing file is refused
-    * (local fs and HDFS alike), so each id has at most one owner and two
-    * writers can never build the same `seg-N` (or `stats/v=N`) dirs.
-    * Crashed claims merely burn numbers; markers are grace-swept with
-    * their dirs by [[sweepSigStore]].
-    */
-  private def claimSeg(fs: org.apache.hadoop.fs.FileSystem,
-                       path: String): Int =
-    claimMonitor(path).synchronized {
-      val claimsDir = new org.apache.hadoop.fs.Path(s"$path/_claims")
-      if (!fs.exists(claimsDir)) fs.mkdirs(claimsDir)
-      def ids(base: String, prefix: String): Set[Int] = {
-        val b = new org.apache.hadoop.fs.Path(base)
-        if (!fs.exists(b)) Set.empty
-        else fs.listStatus(b).toSeq.map(_.getPath.getName)
-          .collect { case n if n.startsWith(prefix) =>
-            scala.util.Try(n.drop(prefix.length).toInt).toOption }
-          .flatten.toSet
-      }
-      val taken = ids(s"$path/_claims", "seg-") ++
-        ids(s"$path/sigs", "seg-") ++ ids(s"$path/buckets", "seg-") ++
-        ids(s"$path/stats", "v=")
-      var n = (taken + -1).max + 1
-      var attempts = 0
-      while (attempts < 1000) {
-        attempts += 1
-        val tmp = new org.apache.hadoop.fs.Path(s"$path/_claims/" +
-          f".claim.${scala.util.Random.nextInt(0x10000)}%04x.tmp")
-        fs.create(tmp, false).close()
-        if (fs.rename(tmp, new org.apache.hadoop.fs.Path(s"$path/_claims/seg-$n")))
-          return n
-        try fs.delete(tmp, false)
-        catch { case _: java.io.IOException => () }
-        n += 1
-      }
-      throw new IllegalStateException(
-        s"segment claim at $path lost 1000 straight races — aborting")
-    }
-
-  private def hadoopFs(spark: org.apache.spark.sql.SparkSession,
-                       path: String): org.apache.hadoop.fs.FileSystem =
-    graft.StoreLock.fs(spark, path)
-
-  /** Single-writer guard — the token read-back protocol lives in
-    * [[graft.StoreLock.withLock]]; see its scaladoc for the atomicity
-    * caveat on non-HDFS filesystems.
-    *
-    * The lock is the store's THROUGHPUT contract, not its correctness:
-    * appends are stats read-modify-writes that would conflict
-    * near-always under optimistic retries (band hashes spray uniformly),
-    * so a second writer fails fast here instead of churning. Correctness
-    * rests on the claimed-segment + conditional-manifest-rename protocol
-    * (see [[appendSignatureStore]]): a writer that slips past this lock
-    * on a non-atomic-create filesystem still cannot publish a stale
-    * merge or touch a live dir. A crashed writer's stale lock fails the
-    * next append loudly with removal instructions — the documented
-    * recovery.
-    */
-  private def withStoreLock[T](fs: org.apache.hadoop.fs.FileSystem,
-                               path: String)(body: => T): T =
-    graft.StoreLock.withLock(fs, path, "signature store")(body)
 
   /** Creation-time store parameters, pinned in `path/meta.json`: a probe
     * or append with different values would compute partition paths that
@@ -816,167 +583,18 @@ object Dedup {
     * returning incomplete dup pairs. With the pin, the mismatch is a
     * require() failure at the call site instead of silent data loss.
     */
-  private def checkOrWriteMeta(fs: org.apache.hadoop.fs.FileSystem, path: String,
-                               n: Int, numHashes: Int, bands: Int,
-                               storeParts: Int): Unit =
-    readMeta(fs, path) match {
-      case Some(m) => requireMetaMatch(path, m, n, numHashes, bands, storeParts)
-      case None =>
-        val p = new org.apache.hadoop.fs.Path(s"$path/meta.json")
-        val out = fs.create(p, false)
-        try out.write(
-          (s"""{"n":$n,"numHashes":$numHashes,"bands":$bands,""" +
-            s""""storeParts":$storeParts}""" + "\n")
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-    }
-
-  private def requireMetaMatch(path: String, m: Map[String, Int], n: Int,
-                               numHashes: Int, bands: Int, storeParts: Int): Unit = {
-    val passed = Map("n" -> n, "numHashes" -> numHashes, "bands" -> bands,
+  private def storeMeta(n: Int, numHashes: Int, bands: Int,
+                        storeParts: Int): Seq[(String, Int)] =
+    Seq("n" -> n, "numHashes" -> numHashes, "bands" -> bands,
       "storeParts" -> storeParts)
-    require(m == passed,
-      s"signature store at $path was created with $m but called with " +
-        s"$passed — mismatched parameters would silently skip real " +
+
+  private def requireMetaMatch(path: String, onDisk: Map[String, String],
+                               passed: Seq[(String, Int)]): Unit =
+    require(onDisk == passed.map { case (k, v) => k -> v.toString }.toMap,
+      s"signature store at $path was created with $onDisk but called with " +
+        s"${passed.toMap} — mismatched parameters would silently skip real " +
         "duplicates (partition paths would not resolve); pass the " +
         "creation-time values from meta.json")
-  }
-
-  private def readMeta(fs: org.apache.hadoop.fs.FileSystem,
-                       path: String): Option[Map[String, Int]] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/meta.json")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      Some("\"(\\w+)\"\\s*:\\s*(\\d+)".r.findAllMatchIn(txt)
-        .map(g => g.group(1) -> g.group(2).toInt).toMap)
-    }
-  }
-
-  /** The live manifest:
-    * `(latestManifestNumber, liveSegmentIds, (band, hmod) -> statsVersion)`.
-    * `stats/manifest-N` files are write-once; the highest N wins, so a
-    * manifest write is an atomic commit (a crashed append leaves the old
-    * manifest in charge and its segment/stats dirs unreferenced).
-    * (0, empty, empty) for a store with no commits yet.
-    */
-  private[graft] def readStatsManifest(spark: org.apache.spark.sql.SparkSession,
-                                       path: String): (Int, Seq[Int], Map[(Int, Int), Int]) = {
-    val fs = hadoopFs(spark, path)
-    manifestFiles(fs, path).sortBy(-_._1).headOption match {
-      case None =>
-        // stats version dirs WITHOUT any manifest are not "empty stats":
-        // treating them that way would silently discard every
-        // accumulated bucket count. Two ways here: a store written by a
-        // pre-manifest layout, or a first append that crashed between
-        // its stats write and its manifest commit (the crash also
-        // leaves _lock behind, so the operator has already intervened
-        // once to get this far). Both want an explicit decision, not
-        // silent stats loss.
-        val base = new org.apache.hadoop.fs.Path(s"$path/stats")
-        if (fs.exists(base) && fs.listStatus(base)
-            .exists(st => st.isDirectory && st.getPath.getName.startsWith("v=")))
-          throw new IllegalStateException(
-            s"signature store at $path has stats version dirs but no " +
-              "manifest — either a pre-manifest-layout store or a crashed " +
-              "first append. Rebuild the store (or remove stats/ to reset " +
-              "the counts) rather than letting the bucket populations " +
-              "silently read as zero.")
-        (0, Seq.empty, Map.empty)
-      case Some((v, p)) =>
-        val (segs, stats) = readManifestFile(fs, p)
-        (v, segs, stats)
-    }
-  }
-
-  /** Parse one manifest file: first line `segs:<id>,<id>,...`, then one
-    * `band,hmod,statsVersion` routing line per live stats partition.
-    */
-  private def readManifestFile(fs: org.apache.hadoop.fs.FileSystem,
-                               p: org.apache.hadoop.fs.Path)
-      : (Seq[Int], Map[(Int, Int), Int]) = {
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    val lines = txt.split("\n").filter(_.nonEmpty)
-    require(lines.headOption.exists(_.startsWith("segs:")),
-      s"signature-store manifest $p predates the segment layout — " +
-        "rebuild the store")
-    val segs = lines.head.drop("segs:".length)
-      .split(",").filter(_.nonEmpty).map(_.toInt).toSeq
-    val stats = lines.tail.map { line =>
-      val parts = line.split(",")
-      ((parts(0).toInt, parts(1).toInt), parts(2).toInt)
-    }.toMap
-    (segs, stats)
-  }
-
-  private def manifestFiles(fs: org.apache.hadoop.fs.FileSystem,
-                            path: String): Seq[(Int, org.apache.hadoop.fs.Path)] = {
-    val base = new org.apache.hadoop.fs.Path(s"$path/stats")
-    if (!fs.exists(base)) Seq.empty
-    else fs.listStatus(base).toSeq.filter(_.isFile).flatMap { st =>
-      val nm = st.getPath.getName
-      if (nm.startsWith("manifest-"))
-        scala.util.Try(nm.drop("manifest-".length).toInt).toOption
-          .map(_ -> st.getPath)
-      else None
-    }
-  }
-
-  /** The COMMIT: write-to-temp + CONDITIONAL rename. The rename is both
-    * the atomic content point (a reader never sees a half-written
-    * commit — a dot-prefixed temp never matches the manifest- scan) and
-    * the first-committer-wins claim: renaming onto an existing
-    * `manifest-N` is refused on local fs and HDFS alike, so at most one
-    * writer owns each number and a writer whose base manifest went stale
-    * learns it HERE, before anything it wrote becomes reachable. Returns
-    * whether this writer won; a loss leaves no litter in live dirs.
-    * Object stores without atomic rename need an external committer —
-    * the standard lakehouse caveat.
-    */
-  private def tryWriteStatsManifest(fs: org.apache.hadoop.fs.FileSystem,
-                                    path: String, n: Int, segs: Seq[Int],
-                                    entries: Map[(Int, Int), Int]): Boolean = {
-    val statsDir = new org.apache.hadoop.fs.Path(s"$path/stats")
-    if (!fs.exists(statsDir)) fs.mkdirs(statsDir)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/stats/.manifest-$n." +
-      f"${scala.util.Random.nextInt(0x10000)}%04x.tmp")
-    val p = new org.apache.hadoop.fs.Path(s"$path/stats/manifest-$n")
-    val out = fs.create(tmp, false)
-    try out.write((s"segs:${segs.sorted.mkString(",")}\n" +
-      entries.toSeq.sortBy(_._1)
-        .map { case ((b, m), v) => s"$b,$m,$v" }.mkString("", "\n", "\n"))
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (!fs.rename(tmp, p)) {
-      try fs.delete(tmp, false) catch { case _: Throwable => () }
-      return false
-    }
-    // retain TWO superseded manifests: the compaction sweep keeps every
-    // dir any retained manifest references, so paths a probe resolved
-    // through the latest metadata survive two full writer generations
-    // (readers always take the highest, so retained predecessors change
-    // nothing they can see)
-    manifestFiles(fs, path).filter(_._1 < n - 2)
-      .foreach { case (_, f) => try fs.delete(f, false) catch { case _: Throwable => () } }
-    true
-  }
-
-  /** Union-read of specific live stats partitions `(version, band, hmod)`,
-    * grouped per owning version so each read keeps its basePath-derived
-    * partition columns. None when `parts` is empty.
-    */
-  private def statsUnionRead(spark: org.apache.spark.sql.SparkSession,
-                             path: String,
-                             parts: Seq[(Int, Int, Int)]): Option[DataFrame] =
-    parts.groupBy(_._1).toSeq.sortBy(_._1).map { case (v, keys) =>
-      spark.read.option("basePath", s"$path/stats/v=$v")
-        .parquet(keys.map { case (_, b, m) => s"$path/stats/v=$v/band=$b/hmod=$m" }: _*)
-        .select("band", "hmod", "band_hash", "cnt")
-    }.reduceOption(_ unionByName _)
 
   /** Near-dup pairs of a NEW batch against the persisted store (plus the
     * batch against itself): the incremental form of [[minhashDupPairs]].
@@ -984,18 +602,18 @@ object Dedup {
     *
     *  1. PARTITION-PRUNED store reads — the batch's distinct (band, hmod)
     *     keys (≤ batch×bands rows, collected; bounded by contract — a
-    *     batch is an increment) ENUMERATE the partition directories the
-    *     probe reads from the bucket AND stats tables, so both the scan
-    *     and the driver's file listing touch only batch-keyed slices; the
-    *     signature re-attach likewise prunes `sigs` to the candidate ids'
-    *     sid partitions. Nothing store-sized is ever scanned OR listed.
-    *  2. The degenerate-bucket cap comes from the persisted STATS table
-    *     (store-side populations merged at append time) plus the batch's
-    *     own counts — dropping over-cap (band, band_hash) buckets from
-    *     both sides without re-counting the store. Store-only degenerate
-    *     buckets the batch never touches are irrelevant (no batch key ⇒
-    *     no candidate pair), so pruning the stats read to batch keys
-    *     loses nothing.
+    *     batch is an increment) ENUMERATE the bucket partition
+    *     directories the probe reads, so both the scan and the file
+    *     listing touch only batch-keyed slices; the signature
+    *     re-attach likewise prunes `sigs` to the candidate ids' sid
+    *     partitions. Nothing store-sized is ever scanned OR listed.
+    *  2. The degenerate-bucket cap counts the combined population of
+    *     each batch bucket: hmod is a function of band_hash, so the
+    *     pruned scan holds EVERY store row of every batch bucket — its
+    *     semi-join to the batch's buckets, counted, plus the batch's own
+    *     counts, gives exactly [[minhashDupPairs]]'s bucket size over
+    *     store ∪ batch. Store-only degenerate buckets the batch never
+    *     touches are irrelevant (no batch key ⇒ no candidate pair).
     *  3. The candidate join carries BARE IDS ONLY; the numHashes-long
     *     signatures are re-attached after pair dedup (a true dup matches
     *     in many bands — shipping signatures through the multi-band join
@@ -1025,9 +643,10 @@ object Dedup {
                         threshold: Double = 0.8,
                         maxBucketSize: Int = 200, storeParts: Int = 16,
                         probeRowsRead: Option[java.util.concurrent.atomic.AtomicLong] = None): DataFrame = {
-    val fs = hadoopFs(spark, path)
-    readMeta(fs, path)
-      .foreach(m => requireMetaMatch(path, m, n, numHashes, bands, storeParts))
+    val fs = graft.StoreLock.fs(spark, path)
+    requireSegmentLayout(fs, path)
+    graft.SegmentLog.readMeta(fs, path).foreach(requireMetaMatch(path, _,
+      storeMeta(n, numHashes, bands, storeParts)))
     val batchSigs = graft.Caches.stage(withMinhashSignature(
       batch.select(col(idCol).as("doc_id"), col(textCol).as("__text")),
       "__text", "sig", n, numHashes).drop("__text"))
@@ -1057,42 +676,41 @@ object Dedup {
       else spark.read.option("basePath", base).parquet(live: _*)
     }
     // resolve the live manifest ONCE and plan every store read against
-    // it: the segment list and stats routing it names stay readable for
-    // the whole probe — appends only ADD segments, and the compaction
-    // sweep retains every dir any of the last two manifest generations
-    // references
-    val (_, liveSegs, statsManifest) = readStatsManifest(spark, path)
-    def segUnionRead(sub: String, keyDirs: Int => Seq[String],
+    // it: the segments it names stay readable for the whole probe —
+    // appends only ADD segments, and the compaction sweep retains every
+    // segment the last two manifest generations reference
+    val liveSegs = graft.SegmentLog.readManifest(fs, path)._2
+    def segUnionRead(sub: String, keyDirs: Seq[String],
                      emptyLike: DataFrame): DataFrame =
-      liveSegs.map(s => prunedRead(s"$path/$sub/seg-$s", keyDirs(s), emptyLike))
-        .reduceOption(_ unionByName _)
+      liveSegs.map { s =>
+        val base = s"$path/seg-$s/$sub"
+        prunedRead(base, keyDirs.map(d => s"$base/$d"), emptyLike)
+      }.reduceOption(_ unionByName _)
         .getOrElse(emptyLike.where(lit(false)))
     val storeBuckets = segUnionRead("buckets",
-      s => touched.toSeq.map { case (b, m) =>
-        s"$path/buckets/seg-$s/band=$b/hmod=$m" },
-      batchBuckets)
+      touched.toSeq.map { case (b, m) => s"band=$b/hmod=$m" }, batchBuckets)
       .select("doc_id", "band", "hmod", "band_hash")
     probeRowsRead.foreach(_.set(storeBuckets.count()))
-    // cap over the COMBINED population (store stats + batch counts): a
-    // bucket can be degenerate purely in the store, purely in the batch,
-    // or only once merged
-    val batchCounts = batchBuckets.groupBy("band", "hmod", "band_hash")
-      .agg(count(lit(1)).as("bcnt"))
-    val statsEmpty = batchCounts
-      .select(col("band"), col("hmod"), col("band_hash"), col("bcnt").as("cnt"))
-    // manifest-routed stats read: each batch-touched key's counts live in
-    // exactly the version dir its manifest entry names — O(batch keys)
-    // dirs listed and read, like the bucket scan above
-    val liveTouched = touched.toSeq.flatMap { case (b, m) =>
-      statsManifest.get((b, m)).map(v => (v, b, m)) }
-    val storeStats = statsUnionRead(spark, path, liveTouched)
-      .getOrElse(statsEmpty.where(lit(false)))
-    val degenerate = batchCounts
-      .join(storeStats.withColumnRenamed("cnt", "scnt"),
-        Seq("band", "hmod", "band_hash"), "left")
-      .filter(col("bcnt") + coalesce(col("scnt"), lit(0L)) > maxBucketSize)
+    // the store rows of the batch's buckets — all of them, since the
+    // pruned partitions hold whole buckets. Staged: the cap count and the
+    // cross join both read it, and the store is scanned once
+    val keys = Seq("band", "hmod", "band_hash")
+    val storeHits = graft.Caches.stage(storeBuckets.join(
+      broadcast(batchBuckets.select(keys.map(col): _*).distinct()),
+      keys, "left_semi"))
+    // cap over the COMBINED population (store + batch rows): a bucket
+    // can be degenerate purely in the store, purely in the batch, or
+    // only once merged. The drop list is collected — it is a subset of
+    // the batch's buckets, bounded like `touched` — so its aggregation
+    // runs once instead of inside every branch of the candidate plan
+    val overCap = storeHits.select(keys.map(col): _*)
+      .unionByName(batchBuckets.select(keys.map(col): _*))
+      .groupBy(keys.map(col): _*).agg(count(lit(1)).as("bsize"))
+      .filter(col("bsize") > maxBucketSize)
       .select("band", "band_hash")
-    val prunedStore = storeBuckets
+    val degenerate = spark.createDataFrame(
+      java.util.Arrays.asList(overCap.collect(): _*), overCap.schema)
+    val prunedStore = storeHits
       .join(broadcast(degenerate), Seq("band", "band_hash"), "left_anti")
     val prunedBatch = batchBuckets
       .join(broadcast(degenerate), Seq("band", "band_hash"), "left_anti")
@@ -1117,8 +735,7 @@ object Dedup {
       .select(pmod(xxhash64(col("doc_id")), lit(storeParts.toLong))
         .cast("int").as("sid"))
       .distinct().collect().map(_.getInt(0))
-    val storeSigs = segUnionRead("sigs",
-      s => sids.toSeq.map(k => s"$path/sigs/seg-$s/sid=$k"),
+    val storeSigs = segUnionRead("sigs", sids.toSeq.map(k => s"sid=$k"),
       batchSigs.withColumn("sid", lit(0)))
     val sigLookup = storeSigs.drop("sid").unionByName(batchSigs)
     cands

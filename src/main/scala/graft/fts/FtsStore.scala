@@ -43,24 +43,17 @@ import org.apache.spark.sql.functions._
   *  - '''compaction is reader-safe''': live postings/stats are rewritten
   *    into one fresh segment and committed by the next manifest number;
   *    superseded segments and manifests are retained `retainCycles`
-  *    compactions before sweeping (same two-writer-generation discipline
-  *    as the MinHash signature store, Dedup.scala), so a reader that
-  *    resolved the old manifest keeps valid paths.
+  *    compactions before sweeping, so a reader that resolved the old
+  *    manifest keeps valid paths.
   *  - '''appends are OPTIMISTIC and lock-free''' (a crashed writer
-  *    blocks nobody): a writer first CLAIMS a segment number by
-  *    conditionally renaming a marker into `_claims/seg-N` (rename onto
-  *    an existing file is refused on local and HDFS-class filesystems,
-  *    so numbers are exclusive with no lock), builds its segment dirs
-  *    under the claimed name, then claims `manifest-(latest+1)` the
-  *    same way — a lost manifest race re-resolves and retries, and
-  *    appends REBASE (segment lists union, nothing removed). One
-  *    ordering rule keeps supersession exact: latest-wins is judged by
-  *    SEGMENT id, so before committing, an append whose segment is no
-  *    longer the highest (a concurrent compaction's packed segment —
-  *    carrying OLD copies of its docs — or a later-claimed concurrent
-  *    append landed first) RE-NUMBERS: claims a fresh higher id and
-  *    renames its dirs, an O(1) metadata move. Concurrent upserts of
-  *    the SAME doc_id commit in arbitrary order — the caller contract.
+  *    blocks nobody), committed by the segment protocol both incremental
+  *    stores share ([[graft.SegmentLog]]): claimed segment ids, a
+  *    conditional manifest claim that rebases on a lost race, and a
+  *    re-number whenever a higher segment id landed first — latest-wins
+  *    is judged by SEGMENT id, so an append always supersedes a
+  *    concurrent compaction's packed (older) copies of its docs.
+  *    Concurrent upserts of the SAME doc_id commit in arbitrary order —
+  *    the caller contract.
   *  - [[compact]] still takes the store `_lock` (mutual exclusion
   *    between compactions only) and replans when an append commits
   *    between its plan and its manifest claim; its sweep deletes
@@ -68,15 +61,8 @@ import org.apache.spark.sql.functions._
   *    never pull a lock-free in-flight append's files out from under it.
   */
 object FtsStore {
-
-  /** Per-store JVM monitor: in-process writers serialize the tiny
-    * metadata-only claim steps (exact same-JVM races); cross-process
-    * exclusion rests on the conditional renames.
-    */
-  private val claimMonitors =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def claimMonitor(path: String): Object =
-    claimMonitors.computeIfAbsent(path, _ => new Object)
+  import graft.SegmentLog.{claimSeg, nextManifestNumber, readManifest,
+    tryWriteManifest}
 
   /** Env-gated phase profiler (`GRAFT_PROF=1`), the
     * [[graft.catalog.VersionedTable]] discipline: per-phase wall for the
@@ -168,7 +154,7 @@ object FtsStore {
     if (prof("append: isEmpty probe")(docs.isEmpty)) return
     val fsys = graft.StoreLock.fs(spark, path)
     val nb = readMeta(fsys, path)
-    commitSegment(fsys, path) { seg =>
+    graft.SegmentLog.commitSegment(fsys, path, "fts append") { seg =>
       writeSegment(docs, idCol, textCols, path, seg, nb)
     }
   }
@@ -182,7 +168,7 @@ object FtsStore {
     if (ids.isEmpty) return // no-op: see the append() empty-batch note
     val fsys = graft.StoreLock.fs(spark, path)
     readMeta(fsys, path): Unit // store-exists check, fail loud
-    commitSegment(fsys, path) { seg =>
+    graft.SegmentLog.commitSegment(fsys, path, "fts delete") { seg =>
       ids.select(col(idCol).as("doc_id")).distinct()
         .withColumn("dl", lit(0.0))
         .withColumn("deleted", lit(true))
@@ -195,44 +181,6 @@ object FtsStore {
         .write.parquet(s"$path/seg-$seg/docs")
     }
   }
-
-  /** The optimistic append commit: claim a segment number, `build` the
-    * segment dirs under it, then claim `manifest-(latest+1)` adding the
-    * segment — re-resolving on a lost race, and RE-NUMBERING (fresh
-    * claim + dir rename, no data rewrite) whenever the manifest gained
-    * a segment with a higher id, so latest-wins supersession always
-    * favors this commit over everything it was built after.
-    */
-  private def commitSegment(fsys: FileSystem, path: String)
-                           (build: Int => Unit): Unit = {
-    var seg = claimSeg(fsys, path)
-    build(seg)
-    betweenBuildAndCommit()
-    var attempts = 0
-    while (attempts < 1000) {
-      attempts += 1
-      val committed = claimMonitor(path).synchronized {
-        val (mN, segs) = readManifest(fsys, path)
-        if (segs.exists(_ > seg)) {
-          val fresh = claimSeg(fsys, path)
-          if (!fsys.rename(new HPath(s"$path/seg-$seg"),
-              new HPath(s"$path/seg-$fresh")))
-            throw new IllegalStateException(
-              s"segment re-number rename failed: seg-$seg -> seg-$fresh")
-          seg = fresh
-          false
-        } else tryWriteManifest(fsys, path, mN + 1, segs :+ seg)
-      }
-      if (committed) return
-    }
-    throw new IllegalStateException(
-      s"fts append at $path lost 1000 straight commit races — aborting")
-  }
-
-  /** Test seam: runs between an append's segment build and its manifest
-    * claim. No-op outside tests.
-    */
-  private[fts] var betweenBuildAndCommit: () => Unit = () => ()
 
   /** The resolved live postings — (term, doc_id, tf, positions), exactly
     * [[Fts.buildPositionalIndex]]'s schema over the store's CURRENT
@@ -349,53 +297,30 @@ object FtsStore {
               // write phase is still running
               orphanGraceMs: Long = 7L * 24 * 3600 * 1000): Unit = {
     val fsys = graft.StoreLock.fs(spark, path)
-    // the lock excludes concurrent COMPACTIONS only; appends are
-    // lock-free, so the manifest claim below must still detect them and
-    // REPLAN (the packed segment must cover every committed append, or
-    // its old doc copies could outrank a newer segment)
-    graft.StoreLock.withLock(fsys, path, "fts store") {
-      var attempts = 0
-      var done = false
-      while (!done && attempts < 5) {
-        attempts += 1
-        val nb = readMeta(fsys, path)
-        val (mN, segs) = readManifest(fsys, path)
-        if (segs.isEmpty) done = true // an empty store has nothing to compact
-        else {
-          val stats = graft.Caches.stage(liveDocs(spark, path))
-          if (stats.isEmpty) {
-            // every doc tombstoned: the compacted state is the EMPTY
-            // store — commit a segment-less manifest (writing an empty
-            // docs parquet dir would be unreadable at the next open)
-            done = claimMonitor(path).synchronized {
-              readManifest(fsys, path)._1 == mN &&
-                tryWriteManifest(fsys, path, mN + 1, Seq.empty)
-            }
-          } else {
-            val newSeg = claimSeg(fsys, path)
-            val live = graft.Caches.stage(postings(spark, path))
-            writePostings(live, path, newSeg, nb)
-            stats.withColumn("deleted", lit(false))
-              .select("doc_id", "dl", "deleted")
-              // few larger files, not one per shuffle partition — the
-              // packed docs table is what every later probe reads
-              .repartition(math.max(1,
-                (stats.count() / 4000000L).toInt + 1))
-              .write.parquet(s"$path/seg-$newSeg/docs")
-            // claim only if NOTHING committed since the plan — a lost
-            // race means an append this pack does not contain; replan
-            // (the orphaned packed segment is grace-swept later)
-            done = claimMonitor(path).synchronized {
-              readManifest(fsys, path)._1 == mN &&
-                tryWriteManifest(fsys, path, mN + 1, Seq(newSeg))
-            }
-          }
-          if (done) sweep(fsys, path, retainCycles, orphanGraceMs)
-        }
+    val nb = readMeta(fsys, path) // store-exists check, fail loud
+    // the packed segment must cover every committed append, or its old
+    // doc copies could outrank a newer segment: the shared loop replans
+    // when an append commits between this plan and the manifest claim
+    graft.SegmentLog.compact(fsys, path, "fts store", retainCycles,
+        orphanGraceMs) { _ =>
+      val stats = graft.Caches.stage(liveDocs(spark, path))
+      // every doc tombstoned: the compacted state is the EMPTY store — a
+      // segment-less manifest (an empty docs parquet dir would be
+      // unreadable at the next open)
+      if (stats.isEmpty) Seq.empty
+      else {
+        val newSeg = claimSeg(fsys, path)
+        val live = graft.Caches.stage(postings(spark, path))
+        writePostings(live, path, newSeg, nb)
+        stats.withColumn("deleted", lit(false))
+          .select("doc_id", "dl", "deleted")
+          // few larger files, not one per shuffle partition — the
+          // packed docs table is what every later probe reads
+          .repartition(math.max(1,
+            (stats.count() / 4000000L).toInt + 1))
+          .write.parquet(s"$path/seg-$newSeg/docs")
+        Seq(newSeg)
       }
-      if (!done) throw new IllegalStateException(
-        s"fts compact at $path lost 5 straight replans to concurrent " +
-          "appends — rerun when the ingest quiesces")
     }
   }
 
@@ -776,17 +701,15 @@ object FtsStore {
       : org.apache.spark.sql.types.StructType = {
     val metaId = scala.util.Try {
       val fsys = graft.StoreLock.fs(spark, path)
-      val st = fsys.getFileStatus(new HPath(s"$path/meta.json"))
-      val in = fsys.open(new HPath(s"$path/meta.json"))
-      val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      """"nonce":"([0-9a-f]+)"""".r.findFirstMatchIn(raw)
-        .map(_.group(1))
+      val meta = graft.SegmentLog.readMeta(fsys, path).get
+      meta.get("nonce").getOrElse {
         // legacy (pre-nonce) meta.json content is DETERMINISTIC
         // ({"numBuckets":n} — identical across delete/re-create), so
         // content alone cannot identify the store: keep (mtime, length)
         // in the key alongside it, the identity the nonce replaced
-        .getOrElse(s"$raw@${st.getModificationTime}:${st.getLen}")
+        val st = fsys.getFileStatus(new HPath(s"$path/meta.json"))
+        s"$meta@${st.getModificationTime}:${st.getLen}"
+      }
     }.toOption
     val key = metaId.map(id => s"$path#$kind#$id")
     val cached = key.flatMap(k =>
@@ -813,49 +736,11 @@ object FtsStore {
         ".*/seg-(\\d+)/docs/", 1).cast("int"))
   }
 
-  private def liveSegs(spark: SparkSession, path: String): Seq[Int] =
-    readManifest(graft.StoreLock.fs(spark, path), path)._2
-
-  /** Next segment id: max over the MANIFEST'S segments AND any on-disk
-    * seg dirs — a crashed append's orphan dir (written, never committed)
-    * must not collide with the next writer; it stays unreferenced until
-    * a compaction sweep removes it.
-    */
-  /** Atomically claim the next free SEGMENT NUMBER: conditionally
-    * rename a marker into `_claims/seg-N` — renaming onto an existing
-    * file is refused (local fs and HDFS alike), so each number has at
-    * most one owner and lock-free writers can never build the same
-    * `seg-N` dirs. Crashed claims merely skip numbers; markers are
-    * grace-swept with their segments.
-    */
-  private def claimSeg(fsys: FileSystem, path: String): Int =
-    claimMonitor(path).synchronized {
-      val claimsDir = new HPath(s"$path/_claims")
-      if (!fsys.exists(claimsDir)) fsys.mkdirs(claimsDir)
-      def taken: Set[Int] = {
-        val onDisk = fsys.listStatus(new HPath(path)).toSeq
-          .map(_.getPath.getName)
-          .collect { case n if n.matches("seg-\\d+") => n.drop(4).toInt }
-        val claimed = fsys.listStatus(claimsDir).toSeq
-          .map(_.getPath.getName)
-          .collect { case n if n.matches("seg-\\d+") => n.drop(4).toInt }
-        (onDisk ++ claimed).toSet
-      }
-      var n = (taken + -1).max + 1
-      var attempts = 0
-      while (attempts < 1000) {
-        attempts += 1
-        val tmp = new HPath(s"$path/_claims/" +
-          f".claim.${scala.util.Random.nextInt(0x10000)}%04x.tmp")
-        fsys.create(tmp, false).close()
-        if (fsys.rename(tmp, new HPath(s"$path/_claims/seg-$n"))) return n
-        try fsys.delete(tmp, false)
-        catch { case _: java.io.IOException => () }
-        n += 1
-      }
-      throw new IllegalStateException(
-        s"segment claim at $path lost 1000 straight races — aborting")
-    }
+  private def liveSegs(spark: SparkSession, path: String): Seq[Int] = {
+    val (n, segs) = readManifest(graft.StoreLock.fs(spark, path), path)
+    require(n >= 0, s"no fts store at $path (no manifest)")
+    segs
+  }
 
   private def writeMeta(fsys: FileSystem, path: String, numBuckets: Int): Unit = {
     // the creation NONCE is the store's identity: path-keyed caches key
@@ -863,130 +748,17 @@ object FtsStore {
     // within one mtime tick, with an identical byte length) can never
     // be served the old store's cached verdicts
     val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-    val out = fsys.create(new HPath(s"$path/meta.json"), false)
-    try out.write(
-      s"""{"numBuckets":$numBuckets,"nonce":"$nonce"}""".getBytes("UTF-8"))
-    finally out.close()
+    val onDisk = graft.SegmentLog.createMeta(fsys, path,
+      Seq("numBuckets" -> numBuckets, "nonce" -> nonce))
+    if (!onDisk.get("nonce").contains(nonce))
+      throw new IllegalStateException(
+        s"concurrent create of fts store at $path — only one creator wins")
   }
 
   private def readMeta(fsys: FileSystem, path: String): Int = {
-    val p = new HPath(s"$path/meta.json")
-    require(fsys.exists(p), s"no fts store at $path (missing meta.json)")
-    val in = fsys.open(p)
-    val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    """"numBuckets":(\d+)""".r.findFirstMatchIn(s) match {
-      case Some(m) => m.group(1).toInt
-      case None => sys.error(s"malformed meta.json at $path: $s")
-    }
-  }
-
-  /** The commit point: `manifest-N`, highest N wins; content is the live
-    * segment ids. Tmp + CONDITIONAL rename — the rename is both the
-    * atomic content point (a reader never sees a half-written commit)
-    * and the claim (it is refused when manifest-N already exists, on
-    * local fs and HDFS alike), so at most one optimistic writer wins
-    * each number. Returns whether this writer won; a loss leaves no
-    * litter. Object stores without atomic rename need an external
-    * committer — the standard lakehouse caveat.
-    */
-  private def tryWriteManifest(fsys: FileSystem, path: String, n: Int,
-                               segs: Seq[Int]): Boolean = {
-    val tmp = new HPath(s"$path/.manifest-$n." +
-      f"${scala.util.Random.nextInt(0x10000)}%04x.tmp")
-    val out = fsys.create(tmp, false)
-    try out.write(segs.mkString(",").getBytes("UTF-8"))
-    finally out.close()
-    if (fsys.rename(tmp, new HPath(s"$path/manifest-$n"))) true
-    else {
-      try fsys.delete(tmp, false)
-      catch { case _: java.io.IOException => () }
-      false
-    }
-  }
-
-  private[graft] def readManifest(fsys: FileSystem, path: String): (Int, Seq[Int]) = {
-    val ns = manifestNumbers(fsys, path)
-    require(ns.nonEmpty, s"no fts store at $path (no manifest)")
-    val n = ns.max
-    val in = fsys.open(new HPath(s"$path/manifest-$n"))
-    val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    (n, s.trim.split(",").filter(_.nonEmpty).map(_.toInt).toSeq)
-  }
-
-  private def manifestNumbers(fsys: FileSystem, path: String): Seq[Int] =
-    fsys.listStatus(new HPath(path)).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("manifest-") => n.drop(9).toInt }
-
-  /** One past the highest on-disk manifest (0 for a fresh store) — a
-    * crashed create's committed manifest must not collide with the
-    * retry's (see create()).
-    */
-  private def nextManifestNumber(fsys: FileSystem, path: String): Int =
-    if (!fsys.exists(new HPath(path))) 0
-    else (manifestNumbers(fsys, path) :+ -1).max + 1
-
-  /** Deferred sweep: keep the `retainCycles + 1` newest manifests and
-    * every segment any of them references; delete the rest (superseded
-    * segments, old manifests). A reader that resolved any retained
-    * manifest still finds all its paths. A segment referenced by NO
-    * manifest could be a crashed append — or a LOCK-FREE IN-FLIGHT one
-    * between its build and its manifest claim, indistinguishable from
-    * outside — so unreferenced segments (and their claim markers, and
-    * stray claim tmps) are deleted only past `orphanGraceMs`.
-    */
-  private def sweep(fsys: FileSystem, path: String,
-                    retainCycles: Int, orphanGraceMs: Long): Unit = {
-    val keepManifests = manifestNumbers(fsys, path).sorted.reverse
-      .take(retainCycles + 1).toSet
-    val keepSegs = keepManifests.flatMap { n =>
-      val in = fsys.open(new HPath(s"$path/manifest-$n"))
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      s.trim.split(",").filter(_.nonEmpty).map(_.toInt)
-    }
-    // every segment any RETAINED OR SWEPT manifest referenced: committed
-    // history, safe to delete at once — only never-referenced segments
-    // need the grace window
-    val referenced = manifestNumbers(fsys, path).flatMap { n =>
-      val in = fsys.open(new HPath(s"$path/manifest-$n"))
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      s.trim.split(",").filter(_.nonEmpty).map(_.toInt)
-    }.toSet
-    val now = System.currentTimeMillis()
-    def pastGrace(p: HPath): Boolean =
-      scala.util.Try(
-        now - fsys.getFileStatus(p).getModificationTime > orphanGraceMs
-      ).getOrElse(false)
-    manifestNumbers(fsys, path).filterNot(keepManifests).foreach { n =>
-      fsys.delete(new HPath(s"$path/manifest-$n"), false)
-    }
-    fsys.listStatus(new HPath(path)).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.matches("seg-\\d+") => n.drop(4).toInt }
-      .filterNot(keepSegs)
-      .foreach { s =>
-        val dir = new HPath(s"$path/seg-$s")
-        if (referenced.contains(s) || pastGrace(dir)) {
-          fsys.delete(dir, true)
-          fsys.delete(new HPath(s"$path/_claims/seg-$s"), false)
-        }
-      }
-    // stray claim leftovers: markers whose segment never materialized,
-    // and tmp files whose rename never ran — grace-gated (a live claim
-    // sits in this window for milliseconds)
-    val claimsDir = new HPath(s"$path/_claims")
-    if (fsys.exists(claimsDir))
-      fsys.listStatus(claimsDir).toSeq.map(_.getPath).foreach { p =>
-        val name = p.getName
-        val stray =
-          (name.matches("seg-\\d+") &&
-            !fsys.exists(new HPath(s"$path/seg-${name.drop(4)}"))) ||
-          (name.startsWith(".") && name.endsWith(".tmp"))
-        if (stray && pastGrace(p)) fsys.delete(p, false)
-      }
+    val m = graft.SegmentLog.readMeta(fsys, path)
+    require(m.nonEmpty, s"no fts store at $path (missing meta.json)")
+    m.get.get("numBuckets").flatMap(_.toIntOption).getOrElse(
+      sys.error(s"malformed meta.json at $path: ${m.get}"))
   }
 }

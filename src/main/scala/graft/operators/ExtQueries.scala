@@ -371,10 +371,10 @@ object ExtQueries {
     * carries only signatures). Store build + append + probe all execute.
     *
     * Constant analysis (r18 `Prof dinc` at sf0.1, warm): store build
-    * ~4.8 s (minhash of the full corpus + the partitioned sigs/buckets/
-    * stats writes — the FIXTURE, measured by design), probe ~2.6-3.1 s
+    * ~4.8 s (minhash of the full corpus + the partitioned sigs/buckets
+    * writes — the FIXTURE, measured by design), probe ~2.6-3.1 s
     * (a fixed ~6-job chain: batch minhash, touched-keys collect, pruned
-    * bucket+stats reads, degenerate-cap join, candidate join, sig
+    * bucket read, degenerate-cap join, candidate join, sig
     * re-attach — each O(batch), the count is the floor). The store
     * never touches GraftScan's dir-listing cache, so the r17 "+8% LRU
     * thrash" suspicion is structurally impossible; the wobble was

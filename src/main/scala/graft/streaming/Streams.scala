@@ -405,13 +405,13 @@ object Streams {
     * one (the standard foreachBatch append caveat, stated honestly).
     *
     * `docsDir` must contain (doc_id long, text string) parquet; ids
-    * unique across the whole stream (the store contract). Each
-    * micro-batch append takes the store's single-writer `_lock`; a crash
-    * inside an append leaves the lock behind, so a restart fails FAST
-    * with the lock error instead of racing a possibly half-applied
-    * append — the operator removes the lock after confirming no writer
-    * is live, then the checkpoint replays the batch (at-least-once, per
-    * the sink-before-store note above).
+    * unique across the whole stream (the store contract). Store appends
+    * are lock-free segment commits: a crash inside an append leaves only
+    * an unreferenced claimed segment (the store reads as before the
+    * append, and a compaction grace-sweeps the segment), so a restart
+    * needs no operator step — the checkpoint replays the batch and
+    * re-appends it (at-least-once, per the sink-before-store note
+    * above).
     */
   def streamDedupAgainstStore(spark: SparkSession, docsDir: String,
                               storePath: String, sinkDir: String,

@@ -257,83 +257,93 @@ class DedupSpec extends AnyFunSuite {
     graft.Caches.releaseAll(spark)
   }
 
-  test("stats table merged across appends equals a full bucket recount") {
-    val store = graft.Caches.newTempDir("graft_sigstore_stats").toString
-    def gen(base: Long, n: Int) = spark.range(base, base + n)
-      .select(col("id").as("doc_id"),
-        concat_ws(" ", (0 until 9).map(j =>
-          concat(lit(s"s${j}t"), pmod(col("id") * 13 + j, lit(4999)))): _*).as("text"))
-    Dedup.appendSignatureStore(gen(0, 40), "doc_id", "text", store, storeParts = 4)
-    Dedup.appendSignatureStore(gen(5000, 25), "doc_id", "text", store, storeParts = 4)
-    Dedup.appendSignatureStore(gen(9000, 10), "doc_id", "text", store, storeParts = 4)
-    // the live manifest plus TWO retained predecessors (the compaction
-    // sweep honors all of them — two-generation reader headroom); older
-    // ones are deleted at commit
-    val manifests = new java.io.File(s"$store/stats").listFiles()
-      .filter(_.getName.startsWith("manifest-")).map(_.getName).sorted
-    assert(manifests.toSeq == Seq("manifest-1", "manifest-2", "manifest-3"),
-      s"live manifest + two retained predecessors: ${manifests.toSeq}")
-    // the union of manifest-routed live partitions == ground-truth recount
-    val (mv, segs, manifest) = Dedup.readStatsManifest(spark, store)
-    assert(mv == 3 && segs.size == 3 && manifest.nonEmpty)
-    val stats = manifest.toSeq
-      .map { case ((b, m), v) => spark.read
-        .option("basePath", s"$store/stats/v=$v")
-        .parquet(s"$store/stats/v=$v/band=$b/hmod=$m") }
-      .reduce(_ unionByName _)
-      .select("band", "band_hash", "cnt").collect()
-      .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val recount = segs.map(s => spark.read.parquet(s"$store/buckets/seg-$s"))
-      .reduce(_ unionByName _)
-      .groupBy("band", "band_hash").count().collect()
-      .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(stats == recount, "incrementally-merged stats == ground-truth recount")
-    assert(stats.values.sum == 75L * 16, "one bucket row per (doc, band)")
+  test("store probe's degenerate-bucket cap matches minhashDupPairs over store ∪ batch") {
+    val store = graft.Caches.newTempDir("graft_sigstore_cap").toString
+    // 30-word texts; a near-duplicate swaps the LAST word only (one
+    // shingle of 28), so it agrees with its original in most bands and
+    // differs in a few
+    def text(tag: String, last: String = "end") =
+      ((0 until 29).map(j => s"$tag${j}q") :+ last).mkString(" ")
+    val (a, b, c, e, f) = (text("a"), text("b"), text("c"), text("e"), text("f"))
+    // cap 3 — A: 4 exact copies in the store alone; B: 4 in the batch
+    // alone; C: 2 + 2, over the cap only combined; E: 2 + 1, at the cap;
+    // F: 2 + 2 where one batch copy is a near-dup, so only the bands it
+    // shares with the others exceed the cap; D: 1 + 1 near-dup
+    val app1 = Seq(1L -> a, 2L -> a, 3L -> c, 4L -> e, 5L -> f,
+      6L -> text("g"), 7L -> text("h"))
+    val app2 = Seq(11L -> a, 12L -> e, 13L -> text("d"), 14L -> text("b", "alt"),
+      15L -> text("i"))
+    val app3 = Seq(21L -> a, 22L -> c, 23L -> f, 24L -> text("j"))
+    val batch = Seq(101L -> text("a", "alt"), 102L -> b, 103L -> b, 104L -> b,
+      105L -> b, 106L -> c, 107L -> c, 108L -> e, 109L -> text("d", "alt"),
+      110L -> f, 111L -> text("f", "alt"), 112L -> text("k"))
+    def frame(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "text")
+    def append(rows: Seq[(Long, String)]) =
+      Dedup.appendSignatureStore(frame(rows), "doc_id", "text", store, storeParts = 4)
+    append(app1); append(app2)
+    Dedup.compactSignatureStore(spark, store)
+    append(app3)
+    val storeIds = (app1 ++ app2 ++ app3).map(_._1).toSet
+    def unordered(rows: Array[org.apache.spark.sql.Row]) =
+      rows.map(r => (r.getLong(0), r.getLong(1)))
+        .map { case (x, y) => (math.min(x, y), math.max(x, y)) }.toSet
+    def probe(cap: Int) = unordered(Dedup.dedupAgainstStore(spark, store,
+        frame(batch), "doc_id", "text", threshold = 0.5, maxBucketSize = cap,
+        storeParts = 4).collect())
+    def oracle(cap: Int) = unordered(Dedup.minhashDupPairs(
+        frame(app1 ++ app2 ++ app3 ++ batch), "doc_id", "text",
+        threshold = 0.5, maxBucketSize = cap)
+      .select("id_a", "id_b").collect())
+      .filterNot { case (x, y) => storeIds(x) && storeIds(y) }
+    val capped = probe(3)
+    assert(capped == oracle(3), s"capped probe ${capped.toSeq.sorted}")
+    assert(Set((4L, 108L), (12L, 108L)).subsetOf(capped),
+      s"a bucket AT the cap keeps its pairs: ${capped.toSeq.sorted}")
+    val capIds = Set(101L, 102L, 106L, 107L)
+    assert(!capped.exists { case (x, y) => capIds(x) || capIds(y) },
+      s"store-only, batch-only and combined over-cap buckets pair nothing: " +
+        s"${capped.toSeq.sorted}")
+    val uncapped = probe(200)
+    assert(Set((1L, 101L), (102L, 103L), (3L, 106L), (106L, 107L))
+      .subsetOf(uncapped), s"the same buckets pair once uncapped: ${uncapped.toSeq.sorted}")
     graft.Caches.releaseAll(spark)
   }
 
-  test("append rewrites only batch-touched stats partitions (O(batch keys), not O(store))") {
+  test("append adds only its segment, claim and manifest; no existing file is rewritten") {
     val store = graft.Caches.newTempDir("graft_sigstore_plocal").toString
-    // first append: 400 docs spread over all 16 bands x 16 hmods = 256
-    // stats partitions (uniform hashing, 6400 bucket rows)
     val corpus = spark.range(400).select(col("id").as("doc_id"),
       concat_ws(" ", (0 until 12).map(j =>
         concat(lit(s"p${j}y"), pmod(col("id") * 37 + j, lit(99991)))): _*).as("text"))
     Dedup.appendSignatureStore(corpus, "doc_id", "text", store)
-    def partsIn(v: Int): Set[(Int, Int)] = {
-      def walk(d: java.io.File): Seq[java.io.File] =
-        if (d.isDirectory) d.listFiles().toSeq.flatMap(walk) :+ d else Seq.empty
-      walk(new java.io.File(s"$store/stats/v=$v")).filter(_.isDirectory)
-        .filter(_.getName.startsWith("hmod="))
-        .map(f => (f.getParentFile.getName.drop(5).toInt, f.getName.drop(5).toInt))
-        .toSet
+    def snapshot(): Map[String, Long] = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(store))
+      try s.filter(java.nio.file.Files.isRegularFile(_))
+        .toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .map(p => p.toString ->
+          java.nio.file.Files.getLastModifiedTime(p).toMillis).toMap
+      finally s.close()
     }
-    // stats version dirs are keyed on the writing append's CLAIMED
-    // segment id: first append on a fresh store claims seg 0
-    val v1Parts = partsIn(0)
-    assert(v1Parts.size > 200, s"first append touches ~all 256 partitions: ${v1Parts.size}")
-    // second append: ONE doc -> exactly its 16 (band, hmod) keys
+    val before = snapshot()
     val one = spark.range(1).select((col("id") + 5000000L).as("doc_id"),
       lit("a lone second-append document with fresh tokens only").as("text"))
     Dedup.appendSignatureStore(one, "doc_id", "text", store)
-    val v2Parts = partsIn(1)
-    assert(v2Parts.size <= 16,
-      s"the append's stats WRITE must touch only the batch's <= bands keys, got ${v2Parts.size}")
-    // untouched partitions were NOT rewritten: their v=0 dirs survive and
-    // the manifest still routes them to v=0
-    val (mv, _, manifest) = Dedup.readStatsManifest(spark, store)
-    assert(mv == 2)
-    val untouched = v1Parts -- v2Parts
-    assert(untouched.nonEmpty && untouched.forall(manifest(_) == 0),
-      "untouched keys carry forward by manifest reference, no rewrite")
-    assert(v2Parts.forall(manifest(_) == 1), "touched keys re-routed to the new version")
-    // touched keys' superseded v=0 partitions are RETAINED (unreferenced
-    // by the live manifest, referenced by its retained predecessor) so a
-    // probe that resolved them pre-append still finds them; compaction
-    // sweeps them once no retained manifest references them
-    assert(v2Parts.subsetOf(partsIn(0)),
-      "superseded v=0 dirs are retained for in-flight readers after the manifest commit")
-    // probe correctness across the two-version layout: a copy of a
+    val after = snapshot()
+    // every pre-append file survives byte-for-byte (same path, same mtime)
+    before.foreach { case (p, m) =>
+      assert(after.get(p).contains(m), s"append touched $p") }
+    // additions confined to the new segment dir, its claim marker and
+    // one manifest (checksum sidecars are dot-files)
+    val added = (after.keySet -- before.keySet).filterNot(_.contains("/."))
+    assert(added.exists(_.contains("/seg-1/sigs/")) &&
+      added.exists(_.contains("/seg-1/buckets/")), s"segment files: $added")
+    assert(added.forall(p => p.contains("/seg-1/") ||
+        p.endsWith("/manifest-1") || p.endsWith("/_claims/seg-1")),
+      s"unexpected additions: $added")
+    // the one-doc segment holds exactly its 16 (band, hmod) bucket dirs
+    val segBuckets = added.filter(_.contains("/seg-1/buckets/band="))
+      .map(p => new java.io.File(p).getParentFile.toString)
+    assert(segBuckets.size <= 16, s"one doc touches <= bands keys: $segBuckets")
+    // probe correctness across the two segments: a copy of a
     // first-append doc AND of the second-append doc both surface
     val batch = corpus.filter(col("doc_id") === 3L)
       .select((col("doc_id") + 900000L).as("doc_id"), col("text"))
@@ -344,76 +354,56 @@ class DedupSpec extends AnyFunSuite {
     graft.Caches.releaseAll(spark)
   }
 
-  test("stats dirs without a manifest fail fast instead of reading as zero counts") {
-    val store = graft.Caches.newTempDir("graft_sigstore_noman").toString
-    val docs = Seq((1L, "a document whose stats will lose their manifest"))
+  test("a previous-layout store (stats/ or sigs/seg-*) is refused, never read as empty") {
+    val docs = Seq((1L, "a document probing a previous-layout store"))
       .toDF("doc_id", "text")
-    Dedup.appendSignatureStore(docs, "doc_id", "text", store)
-    // simulate a pre-manifest-layout store / a crashed first append:
-    // version dirs present, manifest gone
-    new java.io.File(s"$store/stats").listFiles()
-      .filter(_.getName.startsWith("manifest-")).foreach(f => assert(f.delete()))
-    val probe = Seq((2L, "probe text")).toDF("doc_id", "text")
-    val e = intercept[IllegalStateException] {
-      Dedup.dedupAgainstStore(spark, store, probe, "doc_id", "text").count()
-    }
-    assert(e.getMessage.contains("no manifest"))
-    intercept[IllegalStateException] {
-      Dedup.appendSignatureStore(probe, "doc_id", "text", store)
+    for (legacyDir <- Seq("stats/v=0/band=0/hmod=0", "sigs/seg-0/sid=0")) {
+      val store = graft.Caches.newTempDir("graft_sigstore_legacy").toString
+      assert(new java.io.File(s"$store/$legacyDir").mkdirs())
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$store/meta.json"),
+        """{"n":3,"numHashes":64,"bands":16,"storeParts":16}""".getBytes("UTF-8"))
+      def refused(op: => Any): Unit = {
+        val e = intercept[IllegalStateException](op)
+        assert(e.getMessage.contains("previous layout") &&
+          e.getMessage.contains("rebuild"), s"$legacyDir: ${e.getMessage}")
+      }
+      refused(Dedup.dedupAgainstStore(spark, store, docs, "doc_id", "text").count())
+      refused(Dedup.appendSignatureStore(docs, "doc_id", "text", store))
+      refused(Dedup.compactSignatureStore(spark, store))
+      assert(!new java.io.File(store).listFiles().exists(f =>
+        f.getName.startsWith("manifest-") || f.getName.startsWith("seg-")),
+        s"$legacyDir: a refused append must write nothing")
     }
     graft.Caches.releaseAll(spark)
   }
 
-  test("store is single-writer: a held lock makes append/compaction fail fast") {
+  test("a held lock fails compaction only; appends stay lock-free") {
     val store = graft.Caches.newTempDir("graft_sigstore_lock").toString
     val docs = Seq((1L, "some document text for the lock test")).toDF("doc_id", "text")
     Dedup.appendSignatureStore(docs, "doc_id", "text", store)
-    // simulate a concurrent writer (or a crashed one's stale lock)
+    // a concurrent compaction (or a crashed one's stale lock)
     val lock = new java.io.File(s"$store/_lock")
-    assert(lock.createNewFile(), "lock must be free after a clean append")
-    val e1 = intercept[IllegalStateException] {
-      Dedup.appendSignatureStore(
-        Seq((2L, "second doc")).toDF("doc_id", "text"), "doc_id", "text", store)
-    }
-    assert(e1.getMessage.contains("SINGLE-WRITER"))
-    intercept[IllegalStateException] { Dedup.compactSignatureStore(spark, store) }
-    assert(lock.delete())
-    // and the store works again once the lock is released
+    assert(lock.createNewFile(), "no append takes the lock")
+    val e = intercept[IllegalStateException] { Dedup.compactSignatureStore(spark, store) }
+    assert(e.getMessage.contains("SINGLE-WRITER"))
     Dedup.appendSignatureStore(
       Seq((2L, "an unrelated second document")).toDF("doc_id", "text"),
       "doc_id", "text", store)
+    assert(lock.exists(), "the append neither needs nor removes the lock")
+    val probe = Seq((3L, "an unrelated second document")).toDF("doc_id", "text")
+    assert(Dedup.dedupAgainstStore(spark, store, probe, "doc_id", "text")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet == Set((2L, 3L)))
+    assert(lock.delete())
+    Dedup.compactSignatureStore(spark, store)
     graft.Caches.releaseAll(spark)
   }
 
-  test("racing appenders: losers fail loud pre-publish, store equals the committed appends alone") {
-    // the recorded decision (appendSignatureStore scaladoc): two
-    // GENUINELY CONCURRENT appends — not a pre-held lock — must never
-    // produce an interleaved half-merge. Legal schedules on a
-    // non-atomic-create filesystem: one fails at the lock; both slip
-    // past the lock and exactly one wins the conditional manifest
-    // rename; or (vanishingly rare) they fully serialize and both
-    // commit cleanly. In EVERY schedule the store's readable state is
-    // exactly the seed plus the successful appends — a loser's claimed
-    // segment dirs are unreferenced names no reader resolves.
+  test("racing appenders both commit: the store equals the seed plus both batches") {
     val store = graft.Caches.newTempDir("graft_sigstore_race").toString
     Dedup.appendSignatureStore(
       Seq((1L, "seed document establishing the store"))
         .toDF("doc_id", "text"), "doc_id", "text", store)
-    def liveState: (Set[Long], Long) = {
-      val (_, segs, manifest) = Dedup.readStatsManifest(spark, store)
-      val ids = segs.map(s => spark.read.parquet(s"$store/sigs/seg-$s"))
-        .reduceOption(_ unionByName _)
-        .map(_.select("doc_id").collect().map(_.getLong(0)).toSet)
-        .getOrElse(Set.empty[Long])
-      val statsTotal = manifest.toSeq
-        .map { case ((b, m), v) => spark.read
-          .option("basePath", s"$store/stats/v=$v")
-          .parquet(s"$store/stats/v=$v/band=$b/hmod=$m") }
-        .reduceOption(_ unionByName _)
-        .map(_.agg(sum("cnt")).first().getLong(0)).getOrElse(0L)
-      (ids, statsTotal)
-    }
-    val results = new java.util.concurrent.ConcurrentHashMap[Int, Throwable]()
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val barrier = new java.util.concurrent.CyclicBarrier(2)
     val threads = (0 until 2).map { i =>
       new Thread(() => {
@@ -421,42 +411,46 @@ class DedupSpec extends AnyFunSuite {
           .toDF("doc_id", "text")
         barrier.await()
         try Dedup.appendSignatureStore(docs, "doc_id", "text", store)
-        catch { case t: Throwable => results.put(i, t): Unit }
+        catch { case t: Throwable => errors.add(t): Unit }
       })
     }
     threads.foreach(_.start()); threads.foreach(_.join(120000))
-    // every loser failed LOUD on the single-writer contract — at the
-    // lock, or past it at the first-committer-wins manifest claim —
-    // never with a partial write into a live dir
-    results.values.forEach { t =>
-      assert(t.isInstanceOf[IllegalStateException] &&
-        t.getMessage.contains("SINGLE-WRITER"),
-        s"losers must fail loud on the single-writer contract, got $t")
+    assert(errors.isEmpty, s"racing appends must both commit: $errors")
+    val segs = graft.SegmentLog.readManifest(graft.StoreLock.fs(spark, store), store)._2
+    assert(segs.size == 3, s"seed + two racing segments live: $segs")
+    def live(sub: String) = segs.map(s => spark.read.parquet(s"$store/seg-$s/$sub"))
+      .reduce(_ unionByName _)
+    assert(live("sigs").select("doc_id").collect().map(_.getLong(0)).toSet ==
+      Set(1L, 100L, 101L))
+    assert(live("buckets").count() == 16L * 3, "one bucket row per (doc, band)")
+    graft.Caches.releaseAll(spark)
+  }
+
+  test("racing first appends with different parameters: exactly one creates the store") {
+    val store = graft.Caches.newTempDir("graft_sigstore_metarace").toString
+    val errors = new java.util.concurrent.ConcurrentHashMap[Int, Throwable]()
+    val barrier = new java.util.concurrent.CyclicBarrier(2)
+    val bandsOf = Seq(16, 8)
+    val threads = (0 until 2).map { i =>
+      new Thread(() => {
+        val docs = Seq((100L + i, s"first batch $i of a fresh store"))
+          .toDF("doc_id", "text")
+        barrier.await()
+        try Dedup.appendSignatureStore(docs, "doc_id", "text", store,
+          bands = bandsOf(i))
+        catch { case t: Throwable => errors.put(i, t): Unit }
+      })
     }
-    val winners = (0 until 2).filterNot(results.containsKey(_))
-      .map(100L + _).toSet
-    val (ids, statsTotal) = liveState
-    assert(ids == Set(1L) ++ winners,
-      s"store must hold exactly the seed + committed docs, got $ids")
-    // no half-merge: the manifest-routed stats equal a full recount of
-    // the live docs (16 bands × one bucket row per doc)
-    assert(statsTotal == 16L * ids.size,
-      s"stats must recount the committed docs exactly: $statsTotal")
-    // a winner always releases the lock; when every racer aborted the
-    // lock can be stale by construction — apply the documented operator
-    // recovery (no writer is live: remove it)
-    val lockFile = new java.io.File(s"$store/_lock")
-    if (lockFile.exists()) {
-      assert(winners.isEmpty, "a completed winner must release the lock")
-      assert(lockFile.delete())
-    }
-    // every loser's clean retry lands normally
-    (0 until 2).filter(results.containsKey(_)).foreach { i =>
-      Dedup.appendSignatureStore(
-        Seq((100L + i, s"retried batch $i payload"))
-          .toDF("doc_id", "text"), "doc_id", "text", store)
-    }
-    assert(liveState._1 == Set(1L, 100L, 101L))
+    threads.foreach(_.start()); threads.foreach(_.join(120000))
+    assert(errors.size == 1, s"exactly one racer must lose: $errors")
+    errors.values.forEach(t => assert(t.isInstanceOf[IllegalArgumentException] &&
+      t.getMessage.contains("meta.json"), s"the loser fails the parameter pin: $t"))
+    val winner = (0 until 2).filterNot(errors.containsKey(_)).head
+    val meta = graft.SegmentLog.readMeta(graft.StoreLock.fs(spark, store), store)
+    assert(meta.flatMap(_.get("bands")).contains(bandsOf(winner).toString))
+    val segs = graft.SegmentLog.readManifest(graft.StoreLock.fs(spark, store), store)._2
+    assert(segs.size == 1 && spark.read.parquet(s"$store/seg-${segs.head}/sigs")
+      .select("doc_id").collect().map(_.getLong(0)).toSeq == Seq(100L + winner))
     graft.Caches.releaseAll(spark)
   }
 
@@ -486,17 +480,13 @@ class DedupSpec extends AnyFunSuite {
     Dedup.appendSignatureStore(gen(0), "doc_id", "text", store, storeParts = 4)
     Dedup.appendSignatureStore(gen(2000), "doc_id", "text", store, storeParts = 4)
     // PLAN a probe's store reads exactly the way dedupAgainstStore does:
-    // resolve the manifest (segment list + stats routing), then CREATE
-    // the DataFrames — Spark lists the concrete files here, so this is
-    // the reader state a compaction firing next could invalidate
-    val (_, segs, manifest) = Dedup.readStatsManifest(spark, store)
-    assert(segs.nonEmpty && manifest.nonEmpty)
+    // resolve the manifest's segment list, then CREATE the DataFrames —
+    // Spark lists the concrete files here, so this is the reader state a
+    // compaction firing next could invalidate
+    val (_, segs) = graft.SegmentLog.readManifest(graft.StoreLock.fs(spark, store), store)
+    assert(segs.nonEmpty)
     val plannedBuckets = segs
-      .map(s => spark.read.parquet(s"$store/buckets/seg-$s"))
-      .reduce(_ unionByName _)
-    val plannedStats = manifest.toSeq.map { case ((b, m), v) =>
-      spark.read.option("basePath", s"$store/stats/v=$v")
-        .parquet(s"$store/stats/v=$v/band=$b/hmod=$m") }
+      .map(s => spark.read.parquet(s"$store/seg-$s/buckets"))
       .reduce(_ unionByName _)
     // compaction fires BETWEEN the metadata read and the data read — the
     // exact interleaving the pre-r7 swap-aside + immediate sweep broke;
@@ -504,8 +494,6 @@ class DedupSpec extends AnyFunSuite {
     Dedup.compactSignatureStore(spark, store, orphanGraceMs = 0L)
     assert(plannedBuckets.count() == 100L * 16,
       "bucket read planned pre-compaction must be complete, never partial")
-    assert(plannedStats.agg(sum("cnt")).first().getLong(0) == 100L * 16,
-      "stats read planned pre-compaction must see every routed partition")
     // and a probe planned AFTER the compaction sees the same world
     val batch = gen(0).limit(2)
       .select((col("doc_id") + 800000L).as("doc_id"), col("text"))
@@ -523,14 +511,10 @@ class DedupSpec extends AnyFunSuite {
         concat(lit(s"g${j}x"), pmod(col("id") * 31 + j, lit(7919)))): _*).as("text"))
     Dedup.appendSignatureStore(gen(0), "doc_id", "text", store, storeParts = 4)
     Dedup.appendSignatureStore(gen(2000), "doc_id", "text", store, storeParts = 4)
-    // reader state a probe resolves: manifest segment list + routed stats
-    val (_, segs, manifest) = Dedup.readStatsManifest(spark, store)
+    // reader state a probe resolves: the manifest's segment list
+    val (_, segs) = graft.SegmentLog.readManifest(graft.StoreLock.fs(spark, store), store)
     val plannedBuckets = segs
-      .map(s => spark.read.parquet(s"$store/buckets/seg-$s"))
-      .reduce(_ unionByName _)
-    val plannedStats = manifest.toSeq.map { case ((b, m), v) =>
-      spark.read.option("basePath", s"$store/stats/v=$v")
-        .parquet(s"$store/stats/v=$v/band=$b/hmod=$m") }
+      .map(s => spark.read.parquet(s"$store/seg-$s/buckets"))
       .reduce(_ unionByName _)
     // a full probe planned now too — its signature re-attach executes
     // lazily, against the dirs resolved here
@@ -538,19 +522,14 @@ class DedupSpec extends AnyFunSuite {
       .select((col("doc_id") + 800000L).as("doc_id"), col("text"))
     val plannedProbe = Dedup.dedupAgainstStore(spark, store, batch,
       "doc_id", "text", storeParts = 4)
-    // GENERATION 1: an append that touches (and thus dereferences) the
-    // planned manifest entries; GENERATION 2: its successor compaction —
-    // whose sweep honors every RETAINED manifest generation, so the
-    // dirs plannedStats points at survive (pre-r9 it consulted only the
-    // post-append manifest and deleted exactly those dirs)
+    // GENERATION 1: an append (a new manifest); GENERATION 2: its
+    // successor compaction — whose sweep honors every RETAINED manifest
+    // generation, so the segments the planned reads point at survive
     Dedup.appendSignatureStore(gen(4000), "doc_id", "text", store, storeParts = 4)
     Dedup.compactSignatureStore(spark, store, orphanGraceMs = 0L)
     assert(plannedBuckets.filter(col("doc_id") < 4000)
       .select("doc_id").distinct().count() == 100,
       "bucket read planned two generations ago must still cover every doc")
-    assert(plannedStats.agg(sum("cnt")).first().getLong(0) == 100L * 16,
-      "stats dirs referenced by the pre-append manifest must survive the " +
-        "append's successor compaction")
     val pairs = plannedProbe.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((0L, 800000L), (1L, 800001L)), s"got $pairs")
@@ -594,12 +573,13 @@ class DedupSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val before = probe()
     assert(before.nonEmpty, "planted copies must match their originals")
-    def liveSegs: Seq[Int] = Dedup.readStatsManifest(spark, store)._2
+    def liveSegs: Seq[Int] =
+      graft.SegmentLog.readManifest(graft.StoreLock.fs(spark, store), store)._2
     def maxFilesPerDir(sub: String): Int = {
       def walk(d: java.io.File): Seq[java.io.File] =
         if (d.isDirectory) d.listFiles().toSeq.flatMap(walk) :+ d else Seq.empty
       liveSegs.map { s =>
-        walk(new java.io.File(s"$store/$sub/seg-$s")).filter(_.isDirectory)
+        walk(new java.io.File(s"$store/seg-$s/$sub")).filter(_.isDirectory)
           .map(_.listFiles().count(f => f.getName.endsWith(".parquet"))).max
       }.max
     }
@@ -612,13 +592,13 @@ class DedupSpec extends AnyFunSuite {
     // superseded segments stay referenced by the two retained
     // predecessor manifests, then are swept — deferred deletion is
     // bounded, not a leak
-    assert(new java.io.File(s"$store/buckets/seg-0").isDirectory,
+    assert(new java.io.File(s"$store/seg-0").isDirectory,
       "superseded segment retained for in-flight readers")
     Dedup.compactSignatureStore(spark, store, orphanGraceMs = 0L)
-    assert(new java.io.File(s"$store/buckets/seg-0").isDirectory,
+    assert(new java.io.File(s"$store/seg-0").isDirectory,
       "second compaction still retains the two-generations-old segment")
     Dedup.compactSignatureStore(spark, store, orphanGraceMs = 0L)
-    assert(!new java.io.File(s"$store/buckets/seg-0").exists(),
+    assert(!new java.io.File(s"$store/seg-0").exists(),
       "third compaction sweeps the segment past its retained-manifest window")
     assert(probe() == before, "probe unchanged by repeated compaction")
     graft.Caches.releaseAll(spark)
@@ -632,7 +612,7 @@ class DedupSpec extends AnyFunSuite {
       concat_ws(" ", (0 until 12).map(j =>
         concat(lit(s"w${j}x"), pmod(col("id") * 31 + j, lit(99991)))): _*).as("text"))
     Dedup.appendSignatureStore(corpus, "doc_id", "text", store)
-    val storeBucketRows = spark.read.parquet(s"$store/buckets/seg-0").count()
+    val storeBucketRows = spark.read.parquet(s"$store/seg-0/buckets").count()
     assert(storeBucketRows == 400L * 16)
     // a ONE-doc batch touches ≤ 16 (band, hmod) partitions of the 256 —
     // the observed store-side scan must read only those slices, i.e.

@@ -146,7 +146,7 @@ class FtsStoreSpec extends AnyFunSuite {
       "seg-0 should be swept after falling out of the retained manifests")
     assert(postingsSet(FtsStore.postings(spark, store)) == expected)
     // churn is gone: exactly one live segment now
-    val (_, segs) = FtsStore.readManifest(
+    val (_, segs) = graft.SegmentLog.readManifest(
       graft.StoreLock.fs(spark, store), store)
     assert(segs.size == 1)
   }
@@ -198,13 +198,13 @@ class FtsStoreSpec extends AnyFunSuite {
     // would make the OLD copy win supersession
     FtsStore.append(Seq((30L, "stale version")).toDF("doc_id", "text"),
       "doc_id", Seq("text"), store)
-    FtsStore.betweenBuildAndCommit = () => {
-      FtsStore.betweenBuildAndCommit = () => () // one shot
+    graft.SegmentLog.betweenBuildAndCommit = () => {
+      graft.SegmentLog.betweenBuildAndCommit = () => () // one shot
       FtsStore.compact(spark, store, orphanGraceMs = 3600000L)
     }
     try FtsStore.append(Seq((30L, "fresh version")).toDF("doc_id", "text"),
       "doc_id", Seq("text"), store)
-    finally FtsStore.betweenBuildAndCommit = () => ()
+    finally graft.SegmentLog.betweenBuildAndCommit = () => ()
     val terms = FtsStore.postings(spark, store)
       .filter(col("doc_id") === 30L).select("term")
       .collect().map(_.getString(0)).toSet
@@ -250,12 +250,12 @@ class FtsStoreSpec extends AnyFunSuite {
 
   test("empty append/delete batches are no-ops, not corrupt segments") {
     val (store, cur) = grownStore()
-    val before = FtsStore.readManifest(
+    val before = graft.SegmentLog.readManifest(
       graft.StoreLock.fs(spark, store), store)
     FtsStore.append(Seq.empty[(Long, String)].toDF("doc_id", "text"),
       "doc_id", Seq("text"), store)
     FtsStore.delete(Seq.empty[Long].toDF("doc_id"), "doc_id", store)
-    assert(FtsStore.readManifest(
+    assert(graft.SegmentLog.readManifest(
       graft.StoreLock.fs(spark, store), store) == before)
     assert(postingsSet(FtsStore.postings(spark, store)) ==
       postingsSet(Fts.buildPositionalIndex(cur, "doc_id", Seq("text"))))
@@ -324,11 +324,11 @@ class FtsStoreSpec extends AnyFunSuite {
     assert(postingsSet(FtsStore.postings(spark, store)) ==
       postingsSet(Fts.buildPositionalIndex(corpus, "doc_id", Seq("text"))))
     // checkpointed rerun replays nothing: no new segments appear
-    val segsBefore = FtsStore.readManifest(
+    val segsBefore = graft.SegmentLog.readManifest(
       graft.StoreLock.fs(spark, store), store)._2
     graft.streaming.Streams.streamFtsIngest(spark, src, store, ckpt,
       numBuckets = 4)
-    val segsAfter = FtsStore.readManifest(
+    val segsAfter = graft.SegmentLog.readManifest(
       graft.StoreLock.fs(spark, store), store)._2
     assert(segsBefore == segsAfter)
   }
@@ -338,7 +338,7 @@ class FtsStoreSpec extends AnyFunSuite {
     val fsys = graft.StoreLock.fs(spark, store)
     // postings-bearing segments only: the delete() tombstone segment has
     // no postings dir, hence nothing to range-map
-    val segs = FtsStore.readManifest(fsys, store)._2.filter(s =>
+    val segs = graft.SegmentLog.readManifest(fsys, store)._2.filter(s =>
       new java.io.File(s"${store.stripPrefix("file:")}/seg-$s/postings")
         .exists())
     assert(segs.size >= 3, s"fixture should have ≥3 postings segments: $segs")

@@ -178,7 +178,7 @@ class WikidFacadeSpec extends AnyFunSuite {
 
     // resume over an unchanged warehouse appends nothing...
     import graft.fts.FtsStore
-    def entitySegs() = FtsStore.readManifest(
+    def entitySegs() = graft.SegmentLog.readManifest(
       graft.StoreLock.fs(spark, s"$idxPath/entities"), s"$idxPath/entities")._2
     val before = entitySegs()
     Wikid.indexTexts(db, idxPath, resume = true)
