@@ -14,9 +14,7 @@ object Bench {
     * EntitiesJob + AliasesJob ingest materializing all three catalog
     * tables to parquet. Dump generation is excluded from the timing.
     */
-  /** The synthetic Wikidata dump lines used by [[wikiEtlThroughput]] (also
-    * reused by the Scratch profiler so profile and bench see the same data).
-    */
+  /** The synthetic Wikidata dump lines used by [[wikiEtlThroughput]]. */
   def etlDumpLines(spark: SparkSession, nLines: Long): DataFrame = {
     val id = col("id")
     val claim = (target: org.apache.spark.sql.Column, rank: org.apache.spark.sql.Column) =>

@@ -10,8 +10,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Currently one conf:
   *
-  *  - `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true`
-  *    (env-overridable via `SPARK_GRAFT_AQE_CACHE`): the engine stages
+  *  - `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true`:
+  *    the engine stages
   *    iteration-static and multiply-read frames (CC edge lists, FTS probe
   *    postings, merge sources); with this off, every downstream stage
   *    inherits the cache's raw shuffle width regardless of data size —
@@ -25,10 +25,9 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** The recommended conf map (env overrides applied). */
+  /** The recommended conf map. */
   def confs: Map[String, String] = Map(
-    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" ->
-      sys.env.getOrElse("SPARK_GRAFT_AQE_CACHE", "true"))
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
 
   /** Apply the engine confs to a session builder (library entry point —
     * `GraftSession.tune(SparkSession.builder()...).getOrCreate()`).

@@ -276,10 +276,9 @@ object MaterializedView {
     // two leaves a def-only stub that re-running create repairs (and
     // refresh rejects with a re-run hint) — the reverse order left an
     // orphan versioned table that blocked BOTH verbs with no remedy
-    val defJson = render(ViewDef(srcPath, groupCols, aggs0, srcHead,
-      where))
     val out = fsys.create(defP, hasDef)
-    try out.write(defJson.getBytes("UTF-8")) finally out.close()
+    try out.write(defJson(ViewDef(srcPath, groupCols, aggs0, srcHead, where)))
+    finally out.close()
     VersionedTable.commit(full, viewPath, partitionCols)
   }
 
@@ -608,77 +607,46 @@ object MaterializedView {
     require(fsys.exists(p),
       s"$viewPath is not a materialized view (no _view/def.json)")
     val in = fsys.open(p)
-    val raw = try {
-      val b = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { b.write(buf, 0, n); n = in.read(buf) }
-      b.toString("UTF-8")
-    } finally in.close()
-    parse(raw)
+    try parse(mapper.readTree(in)) finally in.close()
   }
 
-  // hand-rolled JSON for the tiny definition record (no JSON library
-  // on the classpath beyond Spark's internals; the shape is flat and
-  // the only free-form strings are escaped)
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-  private def unesc(s: String): String = {
-    val b = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'u' =>
-            b.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar)
-            i += 6
-          case e => b.append(e); i += 2
-        }
-      } else { b.append(c); i += 1 }
-    }
-    b.toString
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** The definition record, `{"version":1,"src",...,"baseVersion"[,
+    * "where"]}`.
+    */
+  private def defJson(d: ViewDef): Array[Byte] = {
+    val o = mapper.createObjectNode().put("version", 1).put("src", d.src)
+    val gs = o.putArray("groupCols")
+    d.groupCols.foreach(c => gs.add(c))
+    val as = o.putArray("aggs")
+    d.aggs.foreach(a =>
+      as.addObject().put("fn", a.fn).put("col", a.col).put("alias", a.alias))
+    o.put("baseVersion", d.baseVersion)
+    d.where.foreach(w => o.put("where", w))
+    mapper.writeValueAsBytes(o)
   }
-  private def render(d: ViewDef): String = {
-    val gs = d.groupCols.map(c => s""""${esc(c)}"""").mkString(",")
-    val as = d.aggs.map(a =>
-      s"""{"fn":"${esc(a.fn)}","col":"${esc(a.col)}","alias":"${esc(a.alias)}"}""")
-      .mkString(",")
-    s"""{"version":1,"src":"${esc(d.src)}","groupCols":[$gs],""" +
-      s""""aggs":[$as],"baseVersion":${d.baseVersion}""" +
-      d.where.map(w => s""","where":"${esc(w)}"""").getOrElse("") + "}"
-  }
+
   /** The source path of a raw definition document — [[VersionedTable
     * .cloneTable]] needs it to carry the watermark with a cloned view.
     */
-  private[catalog] def parseSrc(raw: String): String = parse(raw).src
+  private[catalog] def parseSrc(raw: String): String =
+    parse(mapper.readTree(raw)).src
 
-  private def parse(raw: String): ViewDef = {
-    def str(k: String): String = {
-      val m = (s""""$k":"((?:[^"\\\\]|\\\\.)*)"""").r
-        .findFirstMatchIn(raw)
-      require(m.isDefined, s"malformed view definition: missing $k")
-      unesc(m.get.group(1))
+  private def parse(n: com.fasterxml.jackson.databind.JsonNode): ViewDef = {
+    import scala.jdk.CollectionConverters._
+    def field(k: String) = {
+      val v = n.get(k)
+      require(v != null, s"malformed view definition: missing $k")
+      v
     }
-    def num(k: String): Int = {
-      val m = (s""""$k":(-?\\d+)""").r.findFirstMatchIn(raw)
-      require(m.isDefined, s"malformed view definition: missing $k")
-      m.get.group(1).toInt
-    }
-    val groups = ("\"groupCols\":\\[([^\\]]*)\\]").r
-      .findFirstMatchIn(raw).map(_.group(1)).getOrElse("")
-      .split(",").filter(_.nonEmpty).toSeq
-      .map(s => unesc(s.trim.stripPrefix("\"").stripSuffix("\"")))
-    val aggRe = """\{"fn":"((?:[^"\\]|\\.)*)","col":"((?:[^"\\]|\\.)*)","alias":"((?:[^"\\]|\\.)*)"\}""".r
-    val aggs = aggRe.findAllMatchIn(raw).map(m =>
-      AggDef(unesc(m.group(1)), unesc(m.group(2)), unesc(m.group(3)))).toSeq
-    val where = ("\"where\":\"((?:[^\"\\\\]|\\\\.)*)\"").r
-      .findFirstMatchIn(raw).map(m => unesc(m.group(1)))
-    ViewDef(str("src"), groups, aggs, num("baseVersion"), where)
+    def elems(k: String) =
+      Option(n.get(k)).toSeq.flatMap(_.elements().asScala)
+    ViewDef(field("src").asText,
+      elems("groupCols").map(_.asText),
+      elems("aggs").map(a =>
+        AggDef(a.get("fn").asText, a.get("col").asText, a.get("alias").asText)),
+      field("baseVersion").asInt,
+      Option(n.get("where")).map(_.asText))
   }
 }

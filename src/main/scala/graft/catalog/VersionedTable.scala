@@ -131,25 +131,31 @@ object VersionedTable {
     */
   private[catalog] var betweenWriteAndClaim: () => Unit = () => ()
 
+  // Size gates. Each is a constant; the vars are test seams, like the
+  // ones above, so specs can run both sides of a gate.
+
+  /** Plan-size floor for the single-task partitioned-commit fast path
+    * (see [[writeCommit]]): 32 MiB.
+    */
+  private[catalog] var smallCommitBytes: Long = 32L * 1024 * 1024
+
+  /** Plan-size floor under which a merge/delete batch's key probe
+    * collects the distinct keys and filters the scan with an IN list
+    * instead of a semi join (see [[probeKeys]]): 8 MiB.
+    */
+  private[catalog] var mergeInListBytes: Long = 8L * 1024 * 1024
+
+  /** The most distinct keys an IN list may carry; a larger batch takes
+    * the join path.
+    */
+  private[catalog] var mergeInListKeys: Int = 32768
+
   /** A checkpoint sidecar (full resolved file list) is written after
     * every this-many consecutive delta commits, bounding the manifest
     * reads a snapshot resolution can need. Checkpoints are derived and
     * advisory: a crash that loses one only lengthens the walk.
     */
   private val checkpointInterval = 10
-
-  /** Env-gated phase profiler (`GRAFT_PROF=1`): prints per-phase wall
-    * for the commit pipeline to stderr — the feedback loop for keeping
-    * per-verb constants down. Zero-cost when off.
-    */
-  private val profOn = sys.env.get("GRAFT_PROF").contains("1")
-  @inline private[catalog] def prof[T](label: => String)(body: => T): T =
-    if (!profOn) body
-    else {
-      val t0 = System.nanoTime()
-      try body finally System.err.println(
-        f"[vprof] ${(System.nanoTime() - t0) / 1e9}%7.3f s  $label")
-    }
 
   /** Full-table snapshot commit (optionally hive-partitioned): the new
     * version contains exactly `df`. Returns the committed version.
@@ -1077,7 +1083,8 @@ object VersionedTable {
         // the key scan runs in PHYSICAL space (stats sidecars and
         // footers carry physical names); the rewrite reads logical
         val pKey = physicalOf(cmap, keyCol)
-        touchedFiles(spark, path, cur, keys.toDF(pKey), pKey) match {
+        val pKeys = keys.toDF(pKey)
+        touchedFiles(spark, path, cur, pKeys, pKey, probeKeys(pKeys)) match {
           case None => prevVs.max // empty batch: no-op
           case Some((touched, bounds, inList)) =>
             val merged =
@@ -1300,8 +1307,9 @@ object VersionedTable {
         // merge, per micro-batch on the streaming path
         val keys = src.select(keyCol)
         val pKey = physicalOf(cmap, keyCol)
+        val pKeys = keys.toDF(pKey)
         val (srcEmpty, touchedM, bounds) =
-          touchedFiles(spark, path, cur, keys.toDF(pKey), pKey) match {
+          touchedFiles(spark, path, cur, pKeys, pKey, probeKeys(pKeys)) match {
             case None => (true, Set.empty[String], (null: Any, null: Any))
             case Some((t, b, _)) => (false, t, b)
           }
@@ -1755,30 +1763,16 @@ object VersionedTable {
         // ignores duplicate build rows — duplicate delete ids are
         // semantically free and not worth a full shuffle to dedup
         val keys = graft.Caches.stage(ids.select(keyCol))
+        // one probe serves both branches: the DV hit scan and, past the
+        // vector cap, the rewrite's touched-file scan
+        val probe = probeKeys(keys)
         if (dv) {
-          // same small-batch IN-list fold as [[touchedFiles]]: one agg
-          // returns bounds AND the key set, the hit scan filters by a
-          // pushed-down IN list instead of broadcast-semi-joining
-          val inListEligible = inListSafe(keys, keyCol) &&
-            keys.queryExecution.optimizedPlan.stats.sizeInBytes <=
-              mergeInListBytes
-          val bounds =
-            (if (inListEligible)
-               keys.agg(min(keyCol), max(keyCol), count(lit(1)),
-                 collect_set(keyCol))
-             else keys.agg(min(keyCol), max(keyCol), count(lit(1))))
-              .head()
-          if (bounds.getLong(2) == 0L || bounds.isNullAt(0))
+          val (lo, hi) = probe.bounds
+          if (probe.rows == 0L || lo == null)
             return prevVs.max // empty / all-null keys match nothing
-          val inList: Option[Seq[Any]] =
-            if (inListEligible) {
-              val ks = bounds.getSeq[Any](3)
-              if (ks.size <= mergeInListKeys) Some(ks) else None
-            } else None
           val scan = GraftScan.readTagged(spark, path, prevVs.max)
-            .filter(col(keyCol).between(
-              lit(bounds.get(0)), lit(bounds.get(1))))
-          val hits = inList match {
+            .filter(col(keyCol).between(lit(lo), lit(hi)))
+          val hits = probe.inList match {
             case Some(ks) => scan.filter(col(keyCol).isin(ks: _*))
             case None => scan.join(keys, Seq(keyCol), "left_semi")
           }
@@ -1788,7 +1782,7 @@ object VersionedTable {
           // match past the vector cap: fall through to the rewrite
         }
         val pKey = physicalOf(cmap, keyCol)
-        touchedFiles(spark, path, cur, keys.toDF(pKey), pKey) match {
+        touchedFiles(spark, path, cur, keys.toDF(pKey), pKey, probe) match {
           case None => prevVs.max                  // empty key set
           case Some((touched, _, _)) if touched.isEmpty =>
             prevVs.max // no match
@@ -1870,15 +1864,14 @@ object VersionedTable {
           case Some(pred) =>
             val (cmap, drops) = schemaMetaAt(fsys, path, prevVs.max)
             val entryOf = cur.map(e => baseOf(e) -> e).toMap
-            val touched = prof("delete_where: touched scan")(
-              GraftScan.read(spark, path, prevVs.max)
+            val touched = GraftScan.read(spark, path, prevVs.max)
               .filter(expr(pred))
               .select(input_file_name().as("__f")).distinct()
               .collect().map { r =>
                 val b = relativize(s"$path/data", r.getString(0))
                 entryOf.getOrElse(b, b)
               }
-              .toSet)
+              .toSet
             if (touched.isEmpty) prevVs.max
             else {
               val survivors = readFiles(spark, path, cur.filter(touched),
@@ -2024,7 +2017,7 @@ object VersionedTable {
             prevVs.max, cur, partitionCols, writerOptions)
             .foreach(v => return v)
         val (cmap, drops) = schemaMetaAt(fsys, path, prevVs.max)
-        val touched = prof("update_where: touched scan")(where match {
+        val touched = where match {
           case None => cur.toSet
           case Some(pred) =>
             val entryOf = cur.map(e => baseOf(e) -> e).toMap
@@ -2036,7 +2029,7 @@ object VersionedTable {
                 entryOf.getOrElse(b, b)
               }
               .toSet
-        })
+        }
         if (touched.isEmpty) prevVs.max
         else {
           val tgt = readFiles(spark, path, cur.filter(touched), cmap, drops)
@@ -2143,11 +2136,10 @@ object VersionedTable {
       graft.Caches.scoped {
         val prevVs = manifestNumbers(fsys, path)
         require(prevVs.nonEmpty, s"no versioned table at $path")
-        val df = prof("replace_where: fillDerived")(fillDerived(df0, path))
-        prof("replace_where: appendGate")(
-          appendGate(df, path, "replace_where", evolveSchema))
-        val stray = prof("replace_where: stray check")(
-          df.filter(!coalesce(expr(predicate), lit(false))).head(1))
+        val df = fillDerived(df0, path)
+        appendGate(df, path, "replace_where", evolveSchema)
+        val stray =
+          df.filter(!coalesce(expr(predicate), lit(false))).head(1)
         require(stray.isEmpty,
           s"replaceWhere batch has row(s) OUTSIDE the predicate " +
             s"'$predicate' (e.g. ${stray.headOption.getOrElse("")}) — " +
@@ -2164,7 +2156,7 @@ object VersionedTable {
           predCols.forall(c => layout.exists(_.equalsIgnoreCase(c)))
         val touched: Set[String] =
           if (cur.isEmpty) Set.empty
-          else if (partitionOnly) prof("replace_where: partition membership") {
+          else if (partitionOnly) {
             // decide membership from the path layout alone: build the
             // metadata-sized (file, partition values) frame and let the
             // predicate judge it — hive string values coerce under
@@ -2191,7 +2183,7 @@ object VersionedTable {
             spark.createDataFrame(rows.asJava, schema)
               .filter(expr(predicate))
               .select("__f").collect().map(_.getString(0)).toSet
-          } else prof("replace_where: touched scan") {
+          } else {
             val entryOf = cur.map(e => baseOf(e) -> e).toMap
             GraftScan.read(spark, path, prevVs.max)
               .filter(expr(predicate))
@@ -2288,49 +2280,60 @@ object VersionedTable {
     })
   }
 
-  /** Phase 1 of the file-pruned rewrite: the current files that contain
-    * any batch key — a KEY-COLUMN-ONLY scan, zone-map-bounded by the
-    * batch's [min, max] key, semi-joined against the keys, collecting
-    * distinct file names (O(touched) driver rows), returned WITH the
-    * batch key bounds (the commit's conflict predicate). None = empty
-    * batch.
+  /** A one-column key batch's probe summary: its row count, the
+    * [min, max] of its non-null keys (nulls when every key is null) and,
+    * for a small batch, its distinct non-null keys (see [[probeKeys]]).
     */
-  private def touchedFiles(spark: SparkSession, path: String,
-                           cur: Seq[String], keys: DataFrame, keyCol: String)
-      : Option[(Set[String], (Any, Any), Option[Seq[Any]])] = {
-    // r20: below a plan-size floor the bounds agg ALSO collects the
-    // distinct key set (collect_set, same single job), so the key scan
-    // filters by an IN list pushed into the parquet scan instead of
-    // broadcast-semi-joining the batch — the broadcast-build job and
-    // the join probe disappear from every micro-batch merge/delete.
-    // The floor is the optimizer's SIZE ESTIMATE of the (staged,
-    // key-only) batch, read before any job runs; estimates err large,
-    // i.e. toward the join path, which is the pre-r20 shape. A count
-    // guard caps the literal set a plan may carry; past it the already-
-    // computed bounds feed the join path unchanged.
-    val inListEligible = inListSafe(keys, keyCol) &&
+  private[catalog] case class KeyProbe(rows: Long, bounds: (Any, Any),
+                                       inList: Option[Seq[Any]])
+
+  /** The merge/delete key probe: ONE aggregation over the (staged,
+    * one-column) key batch. Below [[mergeInListBytes]] it also collects
+    * the distinct key set (collect_set, same single job), so the key
+    * scan filters by an IN list pushed into the parquet scan instead of
+    * broadcast-semi-joining the batch — the broadcast-build job and the
+    * join probe disappear from every micro-batch merge/delete. The floor
+    * is the optimizer's SIZE ESTIMATE of the batch, read before any job
+    * runs; estimates err large, i.e. toward the join path. Past
+    * [[mergeInListKeys]] distinct keys the literal set is dropped and
+    * the bounds feed the join path unchanged. collect_set drops nulls —
+    * matching the semi join, where a null key matches nothing. The
+    * result depends only on the key values, not the column's name.
+    */
+  private[catalog] def probeKeys(keys: DataFrame): KeyProbe = {
+    val k = keys.columns.head
+    val inListEligible = inListSafe(keys.schema.head.dataType) &&
       keys.queryExecution.optimizedPlan.stats.sizeInBytes <=
         mergeInListBytes
-    val bounds = prof("touchedFiles: bounds agg")(
-      (if (inListEligible)
-         keys.agg(min(keyCol), max(keyCol), count(lit(1)),
-           collect_set(keyCol))
-       else keys.agg(min(keyCol), max(keyCol), count(lit(1)))).head())
+    val r = (if (inListEligible)
+               keys.agg(min(k), max(k), count(lit(1)), collect_set(k))
+             else keys.agg(min(k), max(k), count(lit(1)))).head()
+    val inList =
+      if (inListEligible) Some(r.getSeq[Any](3)) else None
+    KeyProbe(r.getLong(2), (r.get(0), r.get(1)),
+      inList.filter(_.size <= mergeInListKeys))
+  }
+
+  /** Phase 1 of the file-pruned rewrite: the current files that contain
+    * any batch key — a KEY-COLUMN-ONLY scan, zone-map-bounded by the
+    * batch's [min, max] key, filtered by the probe's IN list or
+    * semi-joined against the keys, collecting distinct file names
+    * (O(touched) driver rows), returned WITH the batch key bounds (the
+    * commit's conflict predicate) and the IN list. None = empty batch.
+    */
+  private def touchedFiles(spark: SparkSession, path: String,
+                           cur: Seq[String], keys: DataFrame, keyCol: String,
+                           probe: KeyProbe)
+      : Option[(Set[String], (Any, Any), Option[Seq[Any]])] = {
     // empty batch = no-op; an all-NULL-key batch is NOT empty — null
     // keys match no existing row (SQL join semantics), so it touches no
     // file and merges as a pure insert, exactly like the null-keyed rows
     // of a mixed batch (consistent null-key semantics between the paths)
-    if (bounds.getLong(2) == 0L) None
-    else if (bounds.isNullAt(0)) Some((Set.empty, (null, null), None))
+    if (probe.rows == 0L) None
+    else if (probe.bounds._1 == null) Some((Set.empty, (null, null), None))
     else {
-      val (lo, hi) = (bounds.get(0), bounds.get(1))
-      // collect_set drops nulls — matching the semi join, where a null
-      // scan key matches nothing (and `between` already drops them)
-      val inList: Option[Seq[Any]] =
-        if (inListEligible) {
-          val ks = bounds.getSeq[Any](3)
-          if (ks.size <= mergeInListKeys) Some(ks) else None
-        } else None
+      val (lo, hi) = probe.bounds
+      val inList = probe.inList
       // file-skip the scan itself: files whose harvested key range
       // cannot intersect the batch bounds never even open (zero-file
       // current versions fall out as an empty candidate set)
@@ -2347,8 +2350,7 @@ object VersionedTable {
           case Some(ks) => scan.filter(col(keyCol).isin(ks: _*))
           case None => scan.join(keys, Seq(keyCol), "left_semi")
         }
-        Some((prof("touchedFiles: key scan")(
-          collectDistinctFiles(hits.select("__f"))).map { f =>
+        Some((collectDistinctFiles(hits.select("__f")).map { f =>
             val b = relativize(s"$path/data", f)
             entryOf.getOrElse(b, b)
           }
@@ -2362,9 +2364,10 @@ object VersionedTable {
     * join equality there, while nested/binary keys keep the join
     * (collect_set's driver-side dedup uses object equality).
     */
-  private def inListSafe(keys: DataFrame, keyCol: String): Boolean = {
+  private def inListSafe(keyType: org.apache.spark.sql.types.DataType)
+      : Boolean = {
     import org.apache.spark.sql.types._
-    keys.schema(keyCol).dataType match {
+    keyType match {
       case StringType | BooleanType | ByteType | ShortType |
            IntegerType | LongType | FloatType | DoubleType |
            DateType | TimestampType | TimestampNTZType => true
@@ -2605,13 +2608,7 @@ object VersionedTable {
     * outcome is today's over-delivery, never a silently skipped row).
     */
   private def opAt(fsys: FileSystem, path: String, v: Int): String =
-    scala.util.Try {
-      val in = fsys.open(new HPath(s"$path/_commits/v-$v.info"))
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      "\"op\":\"?([^,}\"]*)".r.findFirstMatchIn(s)
-        .map(_.group(1)).getOrElse("unknown")
-    }.getOrElse("unknown")
+    commitInfo(fsys, path, v).fold("unknown")(_.op)
 
   /** One incremental walk of `(since, to]` powering [[changes]] and
     * [[changeRemovals]]: classify each version as pure maintenance
@@ -4286,26 +4283,47 @@ object VersionedTable {
     }
   }
 
+  /** A commit's `_commits/v-N.info` sidecar:
+    * `{"op":...,"files":N,"bytes":N,"ts":millis}`.
+    */
+  private case class CommitInfo(op: String, files: Long, bytes: Long,
+                                ts: Long)
+
+  private val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  private def writeCommitInfo(fsys: FileSystem, path: String, v: Int,
+                              i: CommitInfo): Unit = {
+    val out = fsys.create(new HPath(s"$path/_commits/v-$v.info"), true)
+    try out.write(jsonMapper.writeValueAsBytes(jsonMapper.createObjectNode()
+      .put("op", i.op).put("files", i.files).put("bytes", i.bytes)
+      .put("ts", i.ts)))
+    finally out.close()
+  }
+
+  /** Version `v`'s sidecar, or None when it is absent, unreadable or
+    * incomplete — the sidecar is ADVISORY (written after the manifest),
+    * and a crash can truncate it mid-write.
+    */
+  private def commitInfo(fsys: FileSystem, path: String,
+                         v: Int): Option[CommitInfo] =
+    scala.util.Try {
+      val in = fsys.open(new HPath(s"$path/_commits/v-$v.info"))
+      val n = try jsonMapper.readTree(in) finally in.close()
+      def f(k: String) = Option(n.get(k)).get
+      CommitInfo(f("op").asText, f("files").asLong, f("bytes").asLong,
+        f("ts").asLong)
+    }.toOption
+
   /** DESCRIBE HISTORY: one row per commit — (version, op, files, bytes,
-    * ts_millis) from the commit sidecars (driver-side metadata).
+    * ts_millis) from the commit sidecars (driver-side metadata); a
+    * missing or crash-truncated sidecar reads as an `unknown` row.
     */
   def history(spark: SparkSession, path: String): DataFrame = {
     val fsys = fs(spark, path)
     import spark.implicits._
     versions(spark, path).map { v =>
-      val p = new HPath(s"$path/_commits/v-$v.info")
-      // a crash can truncate the ADVISORY sidecar mid-write — that must
-      // degrade to an 'unknown' row, never fail the history read
-      val parsed = scala.util.Try {
-        val in = fsys.open(p)
-        val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        def f(k: String): String =
-          ("\"" + k + "\":\"?([^,}\"]*)").r.findFirstMatchIn(s)
-            .map(_.group(1)).getOrElse("")
-        (v, f("op"), f("files").toLong, f("bytes").toLong, f("ts").toLong)
-      }
-      parsed.getOrElse((v, "unknown", -1L, -1L, -1L))
+      commitInfo(fsys, path, v).fold((v, "unknown", -1L, -1L, -1L))(i =>
+        (v, i.op, i.files, i.bytes, i.ts))
     }.toDF("version", "op", "files", "bytes", "ts_millis")
   }
 
@@ -4556,8 +4574,7 @@ object VersionedTable {
     // re-emission); a rename racing this commit declares WholeBase and
     // replans itself, so the map cannot change under a running write in
     // a way that would mis-name these files.
-    val preVs = prof(s"$op: pre-write manifest probe")(
-      manifestNumbers(fsys, path))
+    val preVs = manifestNumbers(fsys, path)
     // a FIRST commit is table creation: purge any cached listings /
     // sidecar verdicts a previous table at this path left behind
     if (preVs.isEmpty) purgePathCaches(fsys, path)
@@ -4654,13 +4671,9 @@ object VersionedTable {
         // layout
         dfP.write.partitionBy(partitionCols: _*)
       else dfP.write
-    prof(s"$op: parquet write") {
-      writer.options(writerOptions - "graft.constraintsPrechecked")
-        .parquet(commitDir)
-    }
-    val written0 = prof(s"$op: list written") {
-      listStatusRec(fsys, commitDir)
-    }
+    writer.options(writerOptions - "graft.constraintsPrechecked")
+      .parquet(commitDir)
+    val written0 = listStatusRec(fsys, commitDir)
     // bucket-arranged commits carry their bucket id IN THE FILE NAME
     // (Spark's own `_NNNNN` suffix): repartition(n, col) wrote one task
     // per bucket, and a plain write names files by task index — so the
@@ -4738,19 +4751,17 @@ object VersionedTable {
     // stats are keyed by the DATA DIR (already exclusively ours), so
     // they can be harvested BEFORE the version claim — a concurrent
     // merge's conflict predicate then always sees this commit's ranges
-    prof(s"$op: stats harvest (${newFiles.size} files)") {
-      writeFileStats(fsys, spark, path, dirOf(commitDir), newFiles)
-    }
+    writeFileStats(fsys, spark, path, dirOf(commitDir), newFiles)
     val bytes = written.map(_.getLen).sum
     betweenWriteAndClaim()
-    prof(s"$op: claim")(claimVersion(fsys, path, op, scope, newFiles, bytes, txn,
+    claimVersion(fsys, path, op, scope, newFiles, bytes, txn,
       colMapAdd = minted,
       schemaColsAdd = df.columns.toSeq,
       // a full-table rewrite's frame IS the whole current schema — safe
       // to seed a legacy table's declaration from it (a slim mergeWhen
       // insert or evolution batch is not, so other ops only ever widen)
       seedSchemaCols = Set("optimize", "compact").contains(op))(
-      prev => resolve(prev, newFiles)))
+      prev => resolve(prev, newFiles))
   }
 
   private def dirOf(commitDir: String): String =
@@ -4925,12 +4936,8 @@ object VersionedTable {
           // DESCRIBE HISTORY sidecar — advisory metadata, written after
           // the manifest (a crash between the two costs an 'unknown'
           // history row, never a wrong table state)
-          val info = fsys.create(new HPath(s"$path/_commits/v-$v.info"), true)
-          try info.write(
-            (s"""{"op":"$op","files":${newFiles.size},""" +
-              s""""bytes":$bytesWritten,""" +
-              s""""ts":${System.currentTimeMillis()}}""").getBytes("UTF-8"))
-          finally info.close()
+          writeCommitInfo(fsys, path, v, CommitInfo(op, newFiles.size,
+            bytesWritten, System.currentTimeMillis()))
           if (content.startsWith("#delta") &&
               deltaChainLen(fsys, path, v) >= checkpointInterval)
             writeCheckpoint(fsys, path, v, files)
@@ -5243,29 +5250,6 @@ object VersionedTable {
     * one on the driver.
     */
   private val statsDistributeThreshold = 16
-
-  /** Plan-size floor for the single-task partitioned-commit fast path
-    * (see [[writeCommit]]); env `SPARK_GRAFT_SMALL_COMMIT_BYTES`.
-    */
-  private def smallCommitBytes: Long =
-    sys.env.getOrElse("SPARK_GRAFT_SMALL_COMMIT_BYTES",
-      (32L * 1024 * 1024).toString).toLong
-
-  /** Plan-size floor under which a merge/delete batch's key probe
-    * collects the distinct keys and filters the scan with an IN list
-    * instead of a semi join (see [[touchedFiles]]); env
-    * `SPARK_GRAFT_MERGE_INLIST_BYTES`. The companion count guard caps
-    * the literal set a plan may carry (`SPARK_GRAFT_MERGE_INLIST_KEYS`).
-    */
-  private def mergeInListBytes: Long =
-    sys.props.get("graft.merge.inlist.bytes")
-      .orElse(sys.env.get("SPARK_GRAFT_MERGE_INLIST_BYTES"))
-      .getOrElse((8L * 1024 * 1024).toString).toLong
-
-  private def mergeInListKeys: Int =
-    sys.props.get("graft.merge.inlist.keys")
-      .orElse(sys.env.get("SPARK_GRAFT_MERGE_INLIST_KEYS"))
-      .getOrElse("32768").toInt
 
   /** Harvest per-file column statistics ([min, max] + null/row counts)
     * for every stats-friendly top-level column (strings, integers,

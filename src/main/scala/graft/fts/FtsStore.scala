@@ -64,19 +64,6 @@ object FtsStore {
   import graft.SegmentLog.{claimSeg, nextManifestNumber, readManifest,
     tryWriteManifest}
 
-  /** Env-gated phase profiler (`GRAFT_PROF=1`), the
-    * [[graft.catalog.VersionedTable]] discipline: per-phase wall for the
-    * append/probe pipeline to stderr. Zero-cost when off.
-    */
-  private val profOn = sys.env.get("GRAFT_PROF").contains("1")
-  @inline private def prof[T](label: => String)(body: => T): T =
-    if (!profOn) body
-    else {
-      val t0 = System.nanoTime()
-      try body finally System.err.println(
-        f"[fprof] ${(System.nanoTime() - t0) / 1e9}%7.3f s  $label")
-    }
-
   /** Postings files carry a parquet bloom filter on `term`: within a
     * bucket many terms share the file, and for a rare term the bloom
     * skips whole row groups where the sorted layout's min/max range
@@ -88,11 +75,11 @@ object FtsStore {
 
   /** Plan-size floor above which a segment build/pack keys its exchange
     * on (tb, doc_id) instead of tb alone — unbounded build parallelism
-    * at the cost of extra files per tb dir (see [[writeSegment]]).
+    * at the cost of extra files per tb dir (see [[writeSegment]]): 1 GiB.
+    * A test seam (specs run both sides of the gate); nothing else sets
+    * it.
     */
-  private def wideBuildBytes: Long =
-    sys.env.getOrElse("SPARK_GRAFT_FTS_WIDE_BUILD_BYTES",
-      (1L << 30).toString).toLong
+  private[fts] var wideBuildBytes: Long = 1L << 30
 
   /** Stable term→bucket hash, computable driver-side (partition-dir
     * pruning) and executor-side (write path) with no Spark-internal
@@ -151,7 +138,7 @@ object FtsStore {
     // an empty batch is a no-op, not an empty segment: a docs dir with
     // no parquet files cannot be schema-inferred at the next read (and
     // streaming replays may legitimately deliver empty batches)
-    if (prof("append: isEmpty probe")(docs.isEmpty)) return
+    if (docs.isEmpty) return
     val fsys = graft.StoreLock.fs(spark, path)
     val nb = readMeta(fsys, path)
     graft.SegmentLog.commitSegment(fsys, path, "fts append") { seg =>
@@ -350,7 +337,7 @@ object FtsStore {
     // appends (one exchange, one file per tb dir), wrong for a LARGE
     // initial create, which would push the whole corpus aggregation
     // through ≤numBuckets tasks regardless of cluster width. TIERED
-    // (r20, plan-size heuristic, env `SPARK_GRAFT_FTS_WIDE_BUILD_BYTES`):
+    // (r20, plan-size heuristic, [[wideBuildBytes]]):
     // past the floor the exchange keys on (tb, doc_id) — still ONE
     // exchange, HashPartitioning(tb, doc_id) ⊆ the aggregation's
     // clustering keys, AQE-sized reduce — accepting one file per
@@ -368,17 +355,15 @@ object FtsStore {
         .groupBy("tb", "doc_id", "term")
         .agg(count(lit(1)).as("tf"),
           sort_array(collect_list("pos")).as("positions")))
-    prof(s"seg-$seg: postings write")(
-      writeArrangedPostings(
-        post.filter(col("term").isNotNull)
-          .select("term", "doc_id", "tf", "positions", "tb"),
-        path, seg))
+    writeArrangedPostings(
+      post.filter(col("term").isNotNull)
+        .select("term", "doc_id", "tf", "positions", "tb"),
+      path, seg)
     // one doc-stats row per input doc, INCLUDING token-free docs (they
     // must be able to supersede older generations; BM25 statistics
     // filter them back out — see searchBm25): the null-term row keeps
     // them present in the staged frame, and never counts toward dl
-    prof(s"seg-$seg: doc stats write")(
-      post.groupBy("doc_id")
+    post.groupBy("doc_id")
       .agg(coalesce(sum(when(col("term").isNotNull, col("tf"))), lit(0L))
         .cast("double").as("dl"))
       .select(col("doc_id"), col("dl"), lit(false).as("deleted"))
@@ -392,7 +377,7 @@ object FtsStore {
       // and writes proportionally many files — r19's coalesce(1) folded
       // INTO the final aggregation and serialized the whole create-path
       // doc-stats reduce through one task at scale.
-      .write.parquet(s"$path/seg-$seg/docs"))
+      .write.parquet(s"$path/seg-$seg/docs")
   }
 
   /** Write a segment's postings dir plus its (bucket → min/max term)
@@ -439,12 +424,10 @@ object FtsStore {
     // term) sort satisfies the writer's requirement as a prefix: ONE
     // per-task sort, and the in-file term order the zone maps rely on
     // is guaranteed by construction instead of by sort stability.
-    prof(s"seg-$seg: postings job")(
-      post.sortWithinPartitions("tb", "term")
+    post.sortWithinPartitions("tb", "term")
       .write.options(postingsWriterOptions)
-      .partitionBy("tb").parquet(s"$path/seg-$seg/postings"))
-    prof(s"seg-$seg: termrange sidecar")(
-      writeTermRangeSidecar(post.sparkSession, path, seg))
+      .partitionBy("tb").parquet(s"$path/seg-$seg/postings")
+    writeTermRangeSidecar(post.sparkSession, path, seg)
   }
 
   /** Derive each bucket's [min, max] term from the column statistics in

@@ -370,7 +370,7 @@ object ExtQueries {
     * exactly 1.0 — while the historical text is never re-read (the store
     * carries only signatures). Store build + append + probe all execute.
     *
-    * Constant analysis (r18 `Prof dinc` at sf0.1, warm): store build
+    * Constant analysis (r18 statement-level profile at sf0.1, warm): store build
     * ~4.8 s (minhash of the full corpus + the partitioned sigs/buckets
     * writes — the FIXTURE, measured by design), probe ~2.6-3.1 s
     * (a fixed ~6-job chain: batch minhash, touched-keys collect, pruned
@@ -1685,7 +1685,7 @@ object ExtQueries {
     * so the maintenance path itself sits under the driver's hash gate:
     * compaction must preserve every posting, stat and score bit-exactly.
     *
-    * Constant analysis (r18 `Prof bm25` at sf0.1, warm): the row is the
+    * Constant analysis (r18 statement-level profile at sf0.1, warm): the row is the
     * full store LIFECYCLE — create ~2.4 s (tokenize 80% of the corpus +
     * bucket-partitioned postings write), two appends ~1.5-2.5 s each
     * (tokenize + 3 jobs: empty-probe, postings, doc-stats), delete

@@ -19,23 +19,24 @@ object Streams {
     * store per shuffle partition, fixed forever at a query's first
     * checkpoint; every micro-batch pays per-store open/commit/
     * maintenance, so the count is a fixed-cost knob, not a parallelism
-    * default to inherit. `SPARK_GRAFT_STATE_PARTITIONS` (r20, the
-    * documented knob VERDICT r19 asked for) sizes it explicitly: the
-    * harness queries carry ≤ ~1M keys of state, where 32 stores are pure
-    * overhead — 8 is the right local size — while a production
-    * deployment sizes this to its cluster BEFORE the first run against a
-    * checkpoint (it cannot be changed later).
+    * default to inherit. The session conf `spark.graft.statePartitions`
+    * (default 8) sizes it explicitly: the harness queries carry ≤ ~1M
+    * keys of state, where 32 stores are pure overhead — 8 is the right
+    * local size — while a production deployment sizes this to its
+    * cluster BEFORE the first run against a checkpoint (it cannot be
+    * changed later).
     */
-  private val statePartitions: Int =
-    sys.env.getOrElse("SPARK_GRAFT_STATE_PARTITIONS", "8").toInt
+  private def statePartitions(spark: SparkSession): Int =
+    spark.conf.getOption("spark.graft.statePartitions")
+      .map(_.toInt).getOrElse(8)
 
-  /** Run `f` with `spark.sql.shuffle.partitions` = n, restoring after
-    * (see [[statePartitions]] for why stateful starts pin this).
+  /** Run `f` with `spark.sql.shuffle.partitions` = [[statePartitions]],
+    * restoring after (see there for why stateful starts pin this).
     */
-  private def withStatePartitions[T](spark: SparkSession,
-                                     n: Int = statePartitions)(f: => T): T = {
+  private def withStatePartitions[T](spark: SparkSession)(f: => T): T = {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+    spark.conf.set("spark.sql.shuffle.partitions",
+      statePartitions(spark).toString)
     try f finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 

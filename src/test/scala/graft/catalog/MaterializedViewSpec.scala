@@ -680,4 +680,43 @@ class MaterializedViewSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("evolveSchema"))
   }
+
+  test("a definition in the legacy hand-rendered def.json form still reads") {
+    val d = newDir("legacy_def")
+    val src = s"$d/src"; val view = s"$d/view"
+    VersionedTable.commit(base, src)
+    // a quote and a backslash inside a SQL literal, and a newline (a
+    // control character) between the conjuncts
+    val where = "grp <> 'q\"\\\\z'\nAND v >= 0"
+    val aggs = Seq(AggDef("count", "*", "n"), AggDef("sum", "v", "s"),
+      AggDef("avg", "v", "a"))
+    MaterializedView.create(spark, src, view, Seq("grp"), aggs,
+      where = Some(where))
+    val written = MaterializedView.rewriteDefinition(spark, view)
+    assert(written.where == Some(where))
+    // the same record exactly as the pre-Jackson writer rendered it
+    def esc(s: String): String = s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    }
+    val legacy =
+      s"""{"version":1,"src":"${esc(src)}","groupCols":["grp"],""" +
+        aggs.map(a => s"""{"fn":"${a.fn}","col":"${esc(a.col)}",""" +
+          s""""alias":"${a.alias}"}""").mkString(""""aggs":[""", ",", "],") +
+        s""""baseVersion":${written.baseVersion},"where":"${esc(where)}"}"""
+    assert(legacy.contains("\\u000a") && legacy.contains("\\\\\\\\"))
+    val fsys = VersionedTable.fs(spark, view)
+    val out = fsys.create(
+      new org.apache.hadoop.fs.Path(s"$view/_view/def.json"), true)
+    try out.write(legacy.getBytes("UTF-8")) finally out.close()
+    assert(MaterializedView.rewriteDefinition(spark, view) == written)
+    // and the view stays maintainable from it
+    VersionedTable.append(Seq((6L, "d", 60L), (7L, "a", -1L))
+      .toDF("id", "grp", "v"), src)
+    MaterializedView.refresh(spark, view)
+    assert(got(view) == (want(src).filter(_._1 != "a") :+
+      (("a", 2L, Some(30L), Some(15.0)))).sortBy(_._1))
+  }
 }

@@ -2909,6 +2909,22 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(VersionedTable.read(spark, t, 0).count() == 5)
   }
 
+  /** Run `body` with the merge/delete key-probe gates set, restoring the
+    * defaults after.
+    */
+  private def withProbeGates[T](bytes: Long = VersionedTable.mergeInListBytes,
+                                keys: Int = VersionedTable.mergeInListKeys)(
+      body: => T): T = {
+    val (b0, k0) = (VersionedTable.mergeInListBytes,
+      VersionedTable.mergeInListKeys)
+    VersionedTable.mergeInListBytes = bytes
+    VersionedTable.mergeInListKeys = keys
+    try body finally {
+      VersionedTable.mergeInListBytes = b0
+      VersionedTable.mergeInListKeys = k0
+    }
+  }
+
   test("merge/delete key probe: in-list fold and join fallback agree") {
     // the r20 small-batch probe collects the batch keys and filters the
     // key scan + survivors with an IN list; above the floor (or for
@@ -2936,15 +2952,121 @@ class VersionedTableSpec extends AnyFunSuite {
       (got, VersionedTable.read(spark, t).count())
     }
     val inList = run() // default floor: tiny batches take the IN path
-    System.setProperty("graft.merge.inlist.bytes", "0")
-    try {
-      val joined = run() // floor 0: every batch takes the join path
-      assert(inList == joined,
-        s"probe paths disagree: in-list=$inList join=$joined")
-    } finally System.clearProperty("graft.merge.inlist.bytes")
+    val joined = withProbeGates(bytes = 0)(run()) // every batch joins
+    assert(inList == joined,
+      s"probe paths disagree: in-list=$inList join=$joined")
     assert(inList._2 == 99L) // 100 rows + 1 insert - 2 deletes
     assert(inList._1.contains((java.lang.Long.valueOf(10L), "m1")))
     assert(inList._1.contains((null, "ins")))
     assert(!inList._1.exists(_._1 == java.lang.Long.valueOf(55L)))
+  }
+
+  test("merge/delete key probe: string keys land the same table on both paths") {
+    def run(): Set[(String, String)] = {
+      val t = newTable()
+      VersionedTable.commit(spark.range(0, 50)
+        .select(format_string("k%03d", col("id")).as("id"), lit("a").as("v"))
+        .repartition(1), t)
+      VersionedTable.append(spark.range(50, 100)
+        .select(format_string("k%03d", col("id")).as("id"), lit("b").as("v"))
+        .repartition(1), t): Unit
+      val batch = Seq[(String, String)](
+        ("k010", "m1"), ("k011", "m2"), (null, "ins"), ("new", "n"))
+        .toDF("id", "v")
+      VersionedTable.merge(batch, t, "id")
+      VersionedTable.deleteRows(
+        Seq("k005", "k055", "missing").toDF("id"), t, "id")
+      VersionedTable.deleteRows(Seq("k060").toDF("id"), t, "id", dv = true)
+      VersionedTable.read(spark, t).collect()
+        .map(r => (r.getString(0), r.getString(1))).toSet
+    }
+    val probe = VersionedTable.probeKeys(Seq("b", "a", "b").toDF("id"))
+    assert(probe.rows == 3L && probe.bounds == (("a", "b")))
+    assert(probe.inList.map(_.toSet) == Some(Set("a", "b")))
+    val inList = run()
+    val joined = withProbeGates(bytes = 0)(run())
+    assert(inList == joined,
+      s"probe paths disagree: in-list=$inList join=$joined")
+    assert(inList.size == 100 + 2 - 3)
+    assert(inList.contains(("k010", "m1")) && inList.contains((null, "ins")))
+    assert(!inList.exists(r => Set("k005", "k055", "k060")(r._1)))
+  }
+
+  test("merge/delete key probe: a batch past the key cap joins and lands the same table") {
+    val cap = VersionedTable.mergeInListKeys
+    val batch = spark.range(0, cap + 100L).select(col("id"),
+      lit("m").as("v"))
+    // under the byte floor, but more distinct keys than an IN list may
+    // carry: the probe drops the literal set, so the scan joins
+    assert(VersionedTable.probeKeys(batch.select("id")).inList.isEmpty)
+    assert(VersionedTable.probeKeys(batch.select("id").limit(cap))
+      .inList.exists(_.size == cap))
+    def run(): Set[(Long, String)] = {
+      val t = newTable()
+      VersionedTable.commit(spark.range(0, 1000)
+        .select(col("id"), lit("a").as("v")).repartition(1), t)
+      VersionedTable.append(spark.range(cap + 1000L, cap + 1100L)
+        .select(col("id"), lit("b").as("v")).repartition(1), t): Unit
+      VersionedTable.merge(batch, t, "id")
+      VersionedTable.deleteRows(spark.range(500, cap + 1050L).toDF("id"),
+        t, "id")
+      VersionedTable.read(spark, t).collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSet
+    }
+    val overCap = run()
+    val inList = withProbeGates(keys = Int.MaxValue)(run())
+    assert(overCap == inList, "the key cap changed the merged table")
+    assert(overCap == (0L until 500L).map(i => (i, "m")).toSet ++
+      (cap + 1050L until cap + 1100L).map(i => (i, "b")))
+  }
+
+  test("small-commit floor: both sides land the same rows, one file per partition") {
+    val df = spark.range(0, 300)
+      .select(col("id"), concat(lit("d"), col("id") % 3).as("day"),
+        (col("id") * 1.5).as("value"))
+      .repartition(4)
+    def run(): (Set[(Long, String, Double)], Map[String, Int]) = {
+      val t = newTable()
+      VersionedTable.commit(df, t, Seq("day"))
+      val files = VersionedTable.read(spark, t).inputFiles.toSeq
+        .groupBy(f => f.substring(0, f.lastIndexOf('/'))).map {
+          case (dir, fs) => dir.substring(dir.lastIndexOf('/') + 1) -> fs.size }
+      (rows(VersionedTable.read(spark, t)), files)
+    }
+    val small = run() // a 300-row batch is far under the 32 MiB floor
+    val f0 = VersionedTable.smallCommitBytes
+    VersionedTable.smallCommitBytes = 0L
+    val arranged = try run() finally VersionedTable.smallCommitBytes = f0
+    assert(small == arranged)
+    assert(small._1.size == 300)
+    assert(small._2 == Map("day=d0" -> 1, "day=d1" -> 1, "day=d2" -> 1))
+  }
+
+  test("history and change consumers read a truncated or missing commit sidecar as unknown") {
+    val t = newTable()
+    VersionedTable.commit(base.repartition(1), t)                    // v0
+    VersionedTable.append(Seq((6L, "thu", 60.0)).toDF("id", "day", "value"),
+      t)                                                             // v1
+    VersionedTable.optimize(spark, t)                                // v2
+    def ops(): Seq[(Int, String, Long)] =
+      VersionedTable.history(spark, t).orderBy("version")
+        .select("version", "op", "files").collect()
+        .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
+    assert(ops().map(_._2) == Seq("commit", "append", "optimize"))
+    // a data-identical optimize is invisible to change consumers...
+    assert(VersionedTable.changes(spark, t, 1).count() == 0)
+    // v-2.info cut mid-write: the op name is intact, the record is not
+    val f = new java.io.File(s"$t/_commits/v-2.info")
+    val full = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    assert(full.startsWith("""{"op":"optimize","files":"""))
+    java.nio.file.Files.write(f.toPath,
+      full.take("""{"op":"optimize","fi""".length).getBytes("UTF-8"))
+    new java.io.File(s"$t/_commits/.v-2.info.crc").delete()
+    new java.io.File(s"$t/_commits/v-1.info").delete()
+    assert(ops() == Seq((0, "commit", 1L), (1, "unknown", -1L),
+      (2, "unknown", -1L)))
+    // ...but an unknown op counts as data-changing: the rewritten rows
+    // are re-delivered, never silently skipped
+    assert(VersionedTable.changes(spark, t, 1).count() > 0)
   }
 }

@@ -446,4 +446,22 @@ class FtsStoreSpec extends AnyFunSuite {
     assert(p.select("doc_id").distinct().collect()
       .map(_.getString(0)).toSet == Set("a1", "b2"))
   }
+
+  test("wide-build floor at 0: appends and compaction answer searchAll unchanged") {
+    def run(): (Set[Long], Set[Long], Set[(String, Long, Long, Seq[Int])]) = {
+      val (store, _) = grownStore()
+      def hits(): Set[Long] =
+        FtsStore.searchAll(spark, store, Seq("spark", "engine"))
+          .select("doc_id").as[Long].collect().toSet
+      val appended = hits()
+      FtsStore.compact(spark, store)
+      (appended, hits(), postingsSet(FtsStore.postings(spark, store)))
+    }
+    val narrow = run() // a few-row batch is far under the 1 GiB floor
+    val f0 = FtsStore.wideBuildBytes
+    FtsStore.wideBuildBytes = 0L // every build keys on (tb, doc_id)
+    val wide = try run() finally FtsStore.wideBuildBytes = f0
+    assert(wide == narrow)
+    assert(narrow._1 == Set(1L, 3L, 5L) && narrow._2 == narrow._1)
+  }
 }

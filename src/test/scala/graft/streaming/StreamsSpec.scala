@@ -383,4 +383,38 @@ class StreamsSpec extends AnyFunSuite {
     // next poll: nothing new
     assert(Streams.followTableChanges(spark, t, cur) { (_, _) => fail() } == 0)
   }
+
+  test("stateful starts size their state stores from spark.graft.statePartitions") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    // query name -> state-store count its first stateful progress reports
+    val stores = new java.util.concurrent.ConcurrentHashMap[String, Long]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        e.progress.stateOperators.headOption.foreach(op =>
+          stores.putIfAbsent(e.progress.name, op.numShufflePartitions))
+    }
+    def storesOf(name: String): Long = {
+      Streams.windowedEventCounts(spark,
+        "/root/testdata/sf0.001/events.parquet", queryName = name).count()
+      // progress events reach listeners asynchronously
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!stores.containsKey(name) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(stores.containsKey(name), s"no stateful progress for $name")
+      stores.get(name)
+    }
+    val shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.streams.addListener(listener)
+    try {
+      assert(storesOf("t_state_default") == 8L)
+      spark.conf.set("spark.graft.statePartitions", "3")
+      try assert(storesOf("t_state_3") == 3L)
+      finally spark.conf.unset("spark.graft.statePartitions")
+      // the start pins the count only for itself
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == shuffle)
+    } finally spark.streams.removeListener(listener)
+  }
 }
