@@ -3,6 +3,7 @@ package graft.catalog
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Versioned parquet tables: atomic commits, snapshot-isolated readers,
   * time travel, partition-level upsert and retention-based vacuum — the
@@ -75,7 +76,7 @@ import org.apache.spark.sql.functions._
   * verbs (commit, optimize) naturally write full manifests — for them
   * the full list IS the delta.
   */
-object VersionedTable {
+object VersionedTable extends org.apache.spark.internal.Logging {
 
   /** A concurrent commit invalidated this writer's plan (see the
     * conflict rules in the object scaladoc). Rebase-able verbs retry
@@ -883,8 +884,7 @@ object VersionedTable {
       if (smalls >= minSmall)
         compactSmallFiles(spark, path, targetFileBytes = target): Unit
     } catch { case e: Throwable =>
-      System.err.println(s"[vtable] autoCompact at $path skipped: " +
-        e.getMessage)
+      logWarning(s"autoCompact at $path skipped: ${e.getMessage}")
     }
   }
 
@@ -1089,33 +1089,17 @@ object VersionedTable {
           case Some((touched, bounds, inList)) =>
             val merged =
               if (touched.isEmpty) df
-              else {
-                val touchedRows =
-                  readFiles(spark, path, cur.filter(touched), cmap, drops)
-                // survivors: rows whose key is NOT batch-keyed. With the
-                // collected in-list this is a plain filter (null target
-                // keys survive under both shapes — the anti join keeps
-                // null build-side misses, isNull keeps them explicitly)
-                (inList match {
-                  case Some(ks) => touchedRows.filter(
-                    col(keyCol).isNull || !col(keyCol).isin(ks: _*))
-                  case None =>
-                    touchedRows.join(keys, Seq(keyCol), "left_anti")
-                })
-                  .unionByName(df, allowMissingColumns = evolveSchema)
-              }
-            writeCommit(sizeRewrite(merged, partitionCols, touched),
-              path, partitionCols, "merge",
-              arrange = true, writerOptions = writerOptions,
-              bucketArrange = true,
-              scope = FileSet(prevVs.max, cur, touched,
+              else keySurvivors(
+                  readFiles(spark, path, cur.filter(touched), cmap, drops),
+                  keyCol, keys, inList)
+                .unionByName(df, allowMissingColumns = evolveSchema)
+            rewriteCommit(merged, path, partitionCols, "merge",
+              writerOptions, FileSet(prevVs.max, cur, touched,
                 // all-null-key batch = pure insert, keyless: no
                 // concurrent add can collide with it (predicate column
                 // is PHYSICAL — conflict checks judge file stats)
                 if (bounds._1 == null) None
-                else Some((pKey, bounds._1, bounds._2)))) {
-              (prev, newFiles) => prev.filterNot(touched) ++ newFiles
-            }
+                else Some((pKey, bounds._1, bounds._2))))
         }
       }
     }
@@ -1331,44 +1315,29 @@ object VersionedTable {
               val scan = GraftScan.read(spark, path, prevVs.max)
                 .filter(orCond)
                 .select(col(keyCol), input_file_name().as("__f"))
-              val entryOf = cur.map(e => baseOf(e) -> e).toMap
-              collectDistinctFiles(
+              entriesOf(path, cur, collectDistinctFiles(
                 (if (srcEmpty) scan
                  else scan.join(keys, Seq(keyCol), "left_anti"))
-                  .select("__f"))
-                .map { f =>
-                  val b = relativize(s"$path/data", f)
-                  entryOf.getOrElse(b, b)
-                }
-                .toSet
+                  .select("__f")))
             }
           val touched = touchedM ++ touchedB
           if (touched.isEmpty && notMatched.isEmpty) prevVs.max
           else {
-            val boundsOpt =
+            val scope = FileSet(prevVs.max, cur, touched,
               if (bounds._1 == null) None
-              else Some((pKey, bounds._1, bounds._2))
+              else Some((pKey, bounds._1, bounds._2)))
             // merge-on-read: affected rows become a deletion vector +
             // appended images/inserts — zero base-file rewrites. None =
-            // past the vector cap / evolution / nothing to vector —
-            // fall through to the rewrite branch.
+            // past the vector cap or under evolution — fall through to
+            // the rewrite branch.
             if (dv && touched.nonEmpty)
-              mergeDv(spark, fsys, path, src, keyCol,
-                matched, notMatched, bySource, prevVs.max, cur, touched,
-                cmap, drops, partitionCols, writerOptions, boundsOpt,
-                txn, evolveSchema)
+              mergeDv(path, src, keyCol, matched, notMatched, bySource,
+                scope, partitionCols, writerOptions, txn, evolveSchema)
                 .foreach(v => return v)
-            val rewritten = mergeRewrite(spark, path, src, keyCol,
-              matched, notMatched, bySource, cur, touched, cmap, drops,
-              evolveSchema)
-            writeCommit(sizeRewrite(rewritten, partitionCols, touched),
-              path, partitionCols, "merge_when",
-              arrange = true, writerOptions = writerOptions,
-              bucketArrange = true,
-              scope = FileSet(prevVs.max, cur, touched, boundsOpt),
-              txn = txn) {
-              (prev, newFiles) => prev.filterNot(touched) ++ newFiles
-            }
+            rewriteCommit(mergeRewrite(spark, path, src, keyCol,
+                matched, notMatched, bySource, cur, touched, cmap, drops,
+                evolveSchema),
+              path, partitionCols, "merge_when", writerOptions, scope, txn)
           }
         }
       }
@@ -1596,30 +1565,24 @@ object VersionedTable {
     * position-exactly: vectored rows as deletes, images/inserts as
     * inserts — the update_dv contract.
     *
-    * None (caller falls back to the rewrite branch) when: the source
+    * None (caller falls back to the rewrite branch) when the source
     * evolves the schema (image files must carry the full post-merge
-    * schema; rewrite owns evolution), or the affected-row count exceeds
-    * [[dvMaxPositions]] (vectors are broadcast-sized by contract).
-    * Returns `Some(baseV)` — no commit — when NOTHING changes (no
-    * clause fires and no insert row): unlike a rewrite, nothing was
-    * replaced, so no version is needed.
+    * schema; rewrite owns evolution) or under [[vectorCommit]]'s
+    * DV-vs-rewrite policy. Returns `Some(baseV)` — no commit — when
+    * NOTHING changes (no clause fires and no insert row).
     */
-  private def mergeDv(spark: SparkSession, fsys: FileSystem,
-                      path: String, source: DataFrame, keyCol: String,
+  private def mergeDv(path: String, source: DataFrame, keyCol: String,
                       matched: Seq[MergeMatched],
                       notMatched: Seq[MergeInsert],
                       bySource: Seq[MergeBySource],
-                      baseV: Int, cur: Seq[String], touched: Set[String],
-                      cmap: Seq[(String, String)], drops: Seq[String],
-                      partitionCols: Seq[String],
+                      scope: FileSet, partitionCols: Seq[String],
                       writerOptions: Map[String, String],
-                      boundsOpt: Option[(String, Any, Any)],
-                      txn: Option[(String, Long)] = None,
-                      evolveSchema: Boolean = false)
-      : Option[Int] = {
+                      txn: Option[(String, Long)],
+                      evolveSchema: Boolean): Option[Int] = {
+    val spark = source.sparkSession
     val srcCols = source.columns.toSeq
-    val tagged = GraftScan.readTagged(spark, path, baseV,
-      Some(touched.map(baseOf)))
+    val tagged = GraftScan.readTagged(spark, path, scope.baseV,
+      Some(scope.removed.map(baseOf)))
     val tblCols = tagged.columns.toSeq
       .filterNot(Set("__gfile", "__gpos"))
     // schema EVOLUTION = image files need the post-merge superset
@@ -1633,61 +1596,22 @@ object VersionedTable {
       tblCols, keyCol, outType)
     val joined = tagged.alias("t").join(source.alias("s"),
       col(s"t.`$keyCol`") === col(s"s.`$keyCol`"), "left_outer")
-    val aff = graft.Caches.stage(joined.filter(casc.fires).select(
+    val aff = joined.filter(casc.fires).select(
       col("t.`__gfile`").as("__gfile") +:
         col("t.`__gpos`").as("__gpos") +:
         casc.del.as("__gdel") +:
-        tblCols.map(c => casc.out(c).as(c)): _*))
-    val nAff = aff.count()
-    if (nAff > dvMaxPositions(spark)) {
-      System.err.println(s"[vtable] merge at $path affects $nAff rows — " +
-        "past spark.graft.dv.maxPositions, falling back to the " +
-        "file-pruned rewrite")
-      return None
-    }
-    val images = aff.filter(!col("__gdel"))
-      .select(tblCols.map(col): _*)
-    val inserts = mergeInserts(source, notMatched,
-      Some(tagged.select(keyCol)), keyCol, srcCols, tblCols, outType)
-    val newData = graft.Caches.stage(inserts match {
-      case Some(ins) => images.unionByName(ins)
-      case None => images
-    })
-    val nNew = newData.count()
-    // nothing fires, nothing inserts: nothing was replaced either —
-    // no version needed (a REWRITE commits here because it re-lands
-    // files; the vector branch touched no bytes)
-    if (nAff == 0L && nNew == 0L) return Some(baseV)
-    val hits = aff.select(col("__gfile").as("file"),
-      col("__gpos").as("pos"))
-    val (retag, dvBytes) =
-      if (nAff == 0L) (Map.empty[String, String], 0L)
-      else {
-        val touchedAff = dvTouched(hits.select("file"), cur)
-        val (dvName, bytes) =
-          writeDvSidecar(spark, fsys, path, touchedAff, hits)
-        (touchedAff.map(e => e -> s"${baseOf(e)}@dv=$dvName").toMap,
-          bytes)
-      }
-    if (nNew == 0L) {
-      // pure vectored delete — metadata-only commit, delete_dv-shaped
-      betweenPlanAndCommit()
-      Some(claimVersion(fsys, path, "merge_dv",
-        scope = FileSet(baseV, cur, touched, boundsOpt),
-        newFiles = Seq.empty, bytesWritten = dvBytes, txn = txn)(
-        prev => prev.map(e => retag.getOrElse(e, e))))
-    } else {
-      val touchedForSize =
-        if (retag.isEmpty) touched else retag.keySet
-      Some(writeCommit(
-        sizeRewrite(newData, partitionCols, touchedForSize),
-        path, partitionCols, "merge_dv",
-        arrange = true, writerOptions = writerOptions,
-        bucketArrange = true,
-        scope = FileSet(baseV, cur, touched, boundsOpt), txn = txn) {
-        (prev, newFiles) =>
-          prev.map(e => retag.getOrElse(e, e)) ++ newFiles
+        tblCols.map(c => casc.out(c).as(c)): _*)
+    vectorCommit(aff, path, "merge_dv", scope, partitionCols,
+      writerOptions, txn) { (staged, _) =>
+      val images = staged.filter(!col("__gdel"))
+        .select(tblCols.map(col): _*)
+      val inserts = mergeInserts(source, notMatched,
+        Some(tagged.select(keyCol)), keyCol, srcCols, tblCols, outType)
+      val newData = graft.Caches.stage(inserts match {
+        case Some(ins) => images.unionByName(ins)
+        case None => images
       })
+      if (newData.count() == 0L) None else Some(newData)
     }
   }
 
@@ -1726,8 +1650,8 @@ object VersionedTable {
         if (left <= 0) throw new ConcurrentCommitException(
           s"$what at $path lost $attempts consecutive conflict checks " +
             s"to concurrent commits; last: ${e.getMessage}")
-        System.err.println(s"[vtable] $what at $path replanning after " +
-          s"conflict: ${e.getMessage}")
+        logWarning(s"$what at $path replanning after conflict: " +
+          e.getMessage)
       }
     }
     -1 // unreachable
@@ -1745,7 +1669,8 @@ object VersionedTable {
     * commit as a deletion vector (zero data files written — the
     * right-to-be-forgotten point delete at 100 TB costs O(matched
     * keys), not a file rewrite); the key scan is still zone-map-bounded
-    * by the batch's [min, max] through the indexed snapshot.
+    * by the batch's [min, max] through the indexed snapshot. See
+    * [[vectorCommit]] for when it rewrites instead.
     */
   def deleteRows(ids: DataFrame, path: String, keyCol: String,
                  partitionCols: Seq[String] = Nil,
@@ -1772,14 +1697,12 @@ object VersionedTable {
             return prevVs.max // empty / all-null keys match nothing
           val scan = GraftScan.readTagged(spark, path, prevVs.max)
             .filter(col(keyCol).between(lit(lo), lit(hi)))
-          val hits = probe.inList match {
-            case Some(ks) => scan.filter(col(keyCol).isin(ks: _*))
-            case None => scan.join(keys, Seq(keyCol), "left_semi")
-          }
-          dvCommit(spark, fsys, path, prevVs.max, cur,
-            hits.select(col("__gfile").as("file"), col("__gpos").as("pos")))
+          // None = past the vector cap — fall through to the rewrite
+          vectorCommit(keyHits(scan, keyCol, keys, probe.inList)
+              .select("__gfile", "__gpos"),
+            path, "delete_dv", FileSet(prevVs.max, cur, Set.empty, None))(
+            (_, _) => None)
             .foreach(v => return v)
-          // match past the vector cap: fall through to the rewrite
         }
         val pKey = physicalOf(cmap, keyCol)
         touchedFiles(spark, path, cur, keys.toDF(pKey), pKey, probe) match {
@@ -1787,24 +1710,12 @@ object VersionedTable {
           case Some((touched, _, _)) if touched.isEmpty =>
             prevVs.max // no match
           case Some((touched, bounds, inList)) =>
-            val touchedRows = readFiles(spark, path, cur.filter(touched),
-              cmap, drops)
-            // survivors: rows whose key is NOT in the delete set (null
-            // target keys survive under both shapes)
-            val survivors = inList match {
-              case Some(ks) => touchedRows.filter(
-                col(keyCol).isNull || !col(keyCol).isin(ks: _*))
-              case None =>
-                touchedRows.join(keys, Seq(keyCol), "left_anti")
-            }
-            writeCommit(sizeRewrite(survivors, partitionCols, touched),
-              path, partitionCols, "delete_rows",
-              arrange = true, writerOptions = writerOptions,
-              bucketArrange = true,
-              scope = FileSet(prevVs.max, cur, touched,
-                Some((pKey, bounds._1, bounds._2)))) {
-              (prev, newFiles) => prev.filterNot(touched) ++ newFiles
-            }
+            rewriteCommit(keySurvivors(
+                readFiles(spark, path, cur.filter(touched), cmap, drops),
+                keyCol, keys, inList),
+              path, partitionCols, "delete_rows", writerOptions,
+              FileSet(prevVs.max, cur, touched,
+                Some((pKey, bounds._1, bounds._2))))
         }
       }
     }
@@ -1830,10 +1741,10 @@ object VersionedTable {
     * touched manifest entries are re-tagged `@dv=...` in a
     * metadata-only commit — ZERO data files written, cost O(matched
     * positions), the 100 TB point-delete shape. Reads, CDC and
-    * maintenance apply/fold the vector transparently. A match past
-    * `spark.graft.dv.maxPositions` (default 10 M — vectors are
-    * broadcast-sized by contract) falls back to the rewrite
-    * automatically: the DV-vs-rewrite policy.
+    * maintenance apply/fold the vector transparently. A touched file
+    * that already carries a vector gets a new sidecar holding the
+    * union of positions. See [[vectorCommit]] for when it rewrites
+    * instead.
     */
   def deleteWhere(spark: SparkSession, path: String,
                   where: Option[String],
@@ -1846,15 +1757,15 @@ object VersionedTable {
         val prevVs = manifestNumbers(fsys, path)
         require(prevVs.nonEmpty, s"no versioned table at $path")
         val cur = resolveFiles(fsys, path, prevVs.max)
-        // merge-on-read attempt first: None = the delete matched more
-        // positions than a vector should hold — fall through to the
-        // file-pruned rewrite below (the DV-vs-rewrite policy)
-        val viaDv: Option[Int] =
-          if (dv && where.isDefined)
-            deleteWhereDv(spark, fsys, path, where.get, prevVs.max, cur)
-          else None
-        if (viaDv.isDefined) viaDv.get
-        else where match {
+        // merge-on-read attempt first: None = past the vector cap — fall
+        // through to the file-pruned rewrite below
+        if (dv && where.isDefined)
+          vectorCommit(GraftScan.readTagged(spark, path, prevVs.max)
+              .filter(expr(where.get)).select("__gfile", "__gpos"),
+            path, "delete_dv", FileSet(prevVs.max, cur, Set.empty, None))(
+            (_, _) => None)
+            .foreach(v => return v)
+        where match {
           case None =>
             // truncate: one manifest line set, no data read or written
             betweenPlanAndCommit()
@@ -1863,89 +1774,92 @@ object VersionedTable {
               newFiles = Seq.empty, bytesWritten = 0L)(_ => Seq.empty)
           case Some(pred) =>
             val (cmap, drops) = schemaMetaAt(fsys, path, prevVs.max)
-            val entryOf = cur.map(e => baseOf(e) -> e).toMap
-            val touched = GraftScan.read(spark, path, prevVs.max)
-              .filter(expr(pred))
-              .select(input_file_name().as("__f")).distinct()
-              .collect().map { r =>
-                val b = relativize(s"$path/data", r.getString(0))
-                entryOf.getOrElse(b, b)
-              }
-              .toSet
+            val touched = filesMatching(spark, path, prevVs.max, cur, pred)
             if (touched.isEmpty) prevVs.max
-            else {
-              val survivors = readFiles(spark, path, cur.filter(touched),
-                  cmap, drops)
-                .filter(!coalesce(expr(pred), lit(false)))
-              writeCommit(sizeRewrite(survivors, partitionCols, touched),
-                path, partitionCols, "delete_where",
-                arrange = true, writerOptions = writerOptions,
-                bucketArrange = true,
-                scope = FileSet(prevVs.max, cur, touched, None)) {
-                (prev, newFiles) => prev.filterNot(touched) ++ newFiles
-              }
-            }
+            else rewriteCommit(
+              readFiles(spark, path, cur.filter(touched), cmap, drops)
+                .filter(!coalesce(expr(pred), lit(false))),
+              path, partitionCols, "delete_where", writerOptions,
+              FileSet(prevVs.max, cur, touched, None))
         }
       }
     }
 
-  /** The merge-on-read branch of [[deleteWhere]]: write the matched
-    * rows' (file, position) pairs as a `_dv/` parquet sidecar and
-    * re-tag the touched manifest entries — a metadata-only commit,
-    * zero data files written. A touched file that already carries a
-    * vector gets a NEW sidecar holding the union of positions (its old
-    * reference is replaced; the old sidecar lives until no retained
-    * manifest names it, [[vacuum]]'s job). The touched-file scan plans
-    * through the indexed snapshot like the rewrite branch, so
-    * stats/partition-boundable predicates prune. None when the match
-    * is past [[dvMaxPositions]] (caller rewrites instead).
-    */
-  private def deleteWhereDv(spark: SparkSession, fsys: FileSystem,
-                            path: String, pred: String, baseV: Int,
-                            cur: Seq[String]): Option[Int] =
-    dvCommit(spark, fsys, path, baseV, cur,
-      GraftScan.readTagged(spark, path, baseV)
-        .filter(expr(pred))
-        .select(col("__gfile").as("file"), col("__gpos").as("pos")))
-
   /** Deletion vectors are BROADCAST-SIZED by contract (every read
-    * loads the version's positions); a delete matching more rows than
-    * this cap is a bulk delete wearing the wrong shape — the verb
-    * falls back to the file-pruned REWRITE automatically (the
-    * DV-vs-rewrite policy). Override per session with
-    * `spark.graft.dv.maxPositions`.
+    * loads the version's positions): the most positions one
+    * [[vectorCommit]] may vector, `spark.graft.dv.maxPositions`
+    * (default 10 M).
     */
   private def dvMaxPositions(spark: SparkSession): Long =
     spark.conf.getOption("spark.graft.dv.maxPositions")
       .map(_.toLong).getOrElse(10000000L)
 
-  /** Commit a deletion vector for the rows of `hits` — a (file, pos)
-    * frame over the base version's live rows (see [[deleteWhereDv]]).
-    * None when the matched-position count exceeds
-    * [[dvMaxPositions]] — the caller then runs its rewrite branch.
+  /** The merge-on-read commit tail of every row-level verb, and the one
+    * home of the DV-vs-rewrite POLICY. `hits` (the base version's live
+    * rows to vector, carrying their `__gfile`/`__gpos` tags) is staged
+    * and counted once. A count past [[dvMaxPositions]] is a bulk change
+    * wearing the wrong shape: the tail logs a warning and returns None,
+    * and the caller runs its file-pruned rewrite instead. Otherwise the
+    * positions go to ONE `_dv/` sidecar — unioned with the touched
+    * entries' prior vectors, so a file carries at most one vector per
+    * version — the touched manifest entries are re-tagged `@dv=...`,
+    * and the version commits in one manifest swap: metadata-only when
+    * `newRows` yields nothing, else with those rows' fresh files.
+    *
+    * `newRows(stagedHits, count)` builds the rows the commit lands
+    * (update images, merge images and inserts, a replace batch); None
+    * means none. With zero hits and no new rows nothing changed and
+    * nothing commits (`Some(baseV)`); zero hits with new rows is a plain
+    * addition, recorded as `plainOp` when given. The claim's read scope
+    * is `scope` plus the vectored entries, so a concurrent commit that
+    * removed one of them invalidates the position plan. The version's
+    * `history()` bytes are the sidecar's plus the new data files'.
     */
-  private def dvCommit(spark: SparkSession, fsys: FileSystem,
-                       path: String, baseV: Int, cur: Seq[String],
-                       hits0: DataFrame): Option[Int] = {
-    val hits = graft.Caches.stage(hits0)
-    val n = hits.count()
-    if (n == 0L) return Some(baseV)
+  private def vectorCommit(hits: DataFrame, path: String, op: String,
+                           scope: FileSet,
+                           partitionCols: Seq[String] = Nil,
+                           writerOptions: Map[String, String] = Map.empty,
+                           txn: Option[(String, Long)] = None,
+                           plainOp: Option[String] = None)(
+      newRows: (DataFrame, Long) => Option[DataFrame]): Option[Int] = {
+    val spark = hits.sparkSession
+    val fsys = fs(spark, path)
+    val staged = graft.Caches.stage(hits)
+    val n = staged.count()
     if (n > dvMaxPositions(spark)) {
-      System.err.println(s"[vtable] delete at $path matched $n rows — " +
-        "past spark.graft.dv.maxPositions, falling back to the " +
-        "file-pruned rewrite")
+      logWarning(s"$op at $path matched $n rows — past " +
+        "spark.graft.dv.maxPositions, falling back to the file-pruned " +
+        "rewrite")
       return None
     }
-    val touched = dvTouched(hits, cur)
-    val (dvName, bytes) = writeDvSidecar(spark, fsys, path, touched, hits)
-    val retag = touched.map(e => e -> s"${baseOf(e)}@dv=$dvName").toMap
-    betweenPlanAndCommit()
-    // same conflict contract as the rewrite branch: a concurrent commit
-    // that removed a touched entry invalidates the position plan
-    Some(claimVersion(fsys, path, "delete_dv",
-      scope = FileSet(baseV, cur, touched, None),
-      newFiles = Seq.empty, bytesWritten = bytes)(
-      prev => prev.map(e => retag.getOrElse(e, e))))
+    val rows = newRows(staged, n)
+    if (n == 0L && rows.isEmpty) return Some(scope.baseV)
+    val (retag, dvBytes) =
+      if (n == 0L) (Map.empty[String, String], 0L)
+      else {
+        val pos = staged.select(col("__gfile").as("file"),
+          col("__gpos").as("pos"))
+        val vectored = dvTouched(pos, scope.baseFiles)
+        val (dvName, bytes) =
+          writeDvSidecar(spark, fsys, path, vectored, pos)
+        (vectored.map(e => e -> s"${baseOf(e)}@dv=$dvName").toMap, bytes)
+      }
+    val claimScope = scope.copy(removed = scope.removed ++ retag.keySet)
+    val retagged = (prev: Seq[String]) => prev.map(e => retag.getOrElse(e, e))
+    Some(rows match {
+      case None =>
+        betweenPlanAndCommit()
+        claimVersion(fsys, path, op, claimScope, newFiles = Seq.empty,
+          bytesWritten = dvBytes, txn = txn)(retagged)
+      case Some(r) =>
+        writeCommit(sizeRewrite(r, partitionCols, retag.keySet),
+          path, partitionCols,
+          if (n == 0L) plainOp.getOrElse(op) else op,
+          writerOptions = writerOptions, scope = claimScope, txn = txn,
+          bucketArrange = true, dvBytes = dvBytes) {
+          (prev, newFiles) => retagged(prev) ++ newFiles
+        }
+    })
   }
 
   /** The manifest entries of the files a (file, pos) frame touches. */
@@ -2013,22 +1927,13 @@ object VersionedTable {
         val cur = resolveFiles(fsys, path, prevVs.max)
         if (dv && where.isDefined)
           // None = past the vector cap — fall through to the rewrite
-          updateWhereDv(spark, fsys, path, set, where.get,
+          updateWhereDv(spark, path, set, where.get,
             prevVs.max, cur, partitionCols, writerOptions)
             .foreach(v => return v)
         val (cmap, drops) = schemaMetaAt(fsys, path, prevVs.max)
         val touched = where match {
           case None => cur.toSet
-          case Some(pred) =>
-            val entryOf = cur.map(e => baseOf(e) -> e).toMap
-            GraftScan.read(spark, path, prevVs.max)
-              .filter(expr(pred))
-              .select(input_file_name().as("__f")).distinct()
-              .collect().map { r =>
-                val b = relativize(s"$path/data", r.getString(0))
-                entryOf.getOrElse(b, b)
-              }
-              .toSet
+          case Some(pred) => filesMatching(spark, path, prevVs.max, cur, pred)
         }
         if (touched.isEmpty) prevVs.max
         else {
@@ -2046,66 +1951,45 @@ object VersionedTable {
               case None => col(c)
             }).as(c)
           }: _*)
-          writeCommit(sizeRewrite(rewritten, partitionCols, touched),
-            path, partitionCols, "update_where",
-            arrange = true, writerOptions = writerOptions,
-            bucketArrange = true,
-            scope = FileSet(prevVs.max, cur, touched, None)) {
-            (prev, newFiles) => prev.filterNot(touched) ++ newFiles
-          }
+          rewriteCommit(rewritten, path, partitionCols, "update_where",
+            writerOptions, FileSet(prevVs.max, cur, touched, None))
         }
       }
     }
 
-  /** The merge-on-read branch of [[updateWhere]]: the matched rows'
-    * positions become a deletion vector and their UPDATED images land
-    * as fresh data files — one atomic commit re-tagging the touched
-    * entries and adding the new files, so readers flip from old rows
-    * to new in the same manifest swap. Assignments cast to the target
-    * column types (store assignment) exactly like the rewrite branch;
-    * constraints gate the updated rows post-write pre-claim.
+  /** The merge-on-read branch of [[updateWhere]]: the matched rows
+    * (with their position tags) are the vector's hits, and their
+    * UPDATED images land as fresh data files in the same commit
+    * ([[vectorCommit]]), so readers flip from old rows to new in one
+    * manifest swap. Assignments cast to the target column types (store
+    * assignment) exactly like the rewrite branch; constraints gate the
+    * updated rows post-write pre-claim.
     */
-  private def updateWhereDv(spark: SparkSession, fsys: FileSystem,
-                            path: String, set: Seq[(String, String)],
-                            pred: String, baseV: Int, cur: Seq[String],
+  private def updateWhereDv(spark: SparkSession, path: String,
+                            set: Seq[(String, String)], pred: String,
+                            baseV: Int, cur: Seq[String],
                             partitionCols: Seq[String],
                             writerOptions: Map[String, String])
-      : Option[Int] = {
-    val hits = graft.Caches.stage(
-      GraftScan.readTagged(spark, path, baseV).filter(expr(pred)))
-    val n = hits.count()
-    if (n == 0L) return Some(baseV)
-    if (n > dvMaxPositions(spark)) {
-      System.err.println(s"[vtable] update at $path matched $n rows — " +
-        "past spark.graft.dv.maxPositions, falling back to the " +
-        "file-pruned rewrite")
-      return None
+      : Option[Int] =
+    vectorCommit(GraftScan.readTagged(spark, path, baseV).filter(expr(pred)),
+      path, "update_dv", FileSet(baseV, cur, Set.empty, None),
+      partitionCols, writerOptions) { (hits, n) =>
+      if (n == 0L) None
+      else {
+        val assign = set.toMap
+        val dataCols = hits.columns.toSeq
+          .filterNot(Set("__gfile", "__gpos"))
+        require(set.forall(a => dataCols.contains(a._1)),
+          "UPDATE assigns to non-table column(s): " +
+            set.map(_._1).filterNot(dataCols.contains).mkString(","))
+        Some(hits.select(dataCols.map { c =>
+          (assign.get(c) match {
+            case Some(e) => expr(e).cast(hits.schema(c).dataType)
+            case None => col(c)
+          }).as(c)
+        }: _*))
+      }
     }
-    val touched = dvTouched(
-      hits.select(col("__gfile").as("file")), cur)
-    val (dvName, _) = writeDvSidecar(spark, fsys, path, touched,
-      hits.select(col("__gfile").as("file"), col("__gpos").as("pos")))
-    val retag = touched.map(e => e -> s"${baseOf(e)}@dv=$dvName").toMap
-    val assign = set.toMap
-    val dataCols = hits.columns.toSeq
-      .filterNot(Set("__gfile", "__gpos"))
-    require(set.forall(a => dataCols.contains(a._1)),
-      "UPDATE assigns to non-table column(s): " +
-        set.map(_._1).filterNot(dataCols.contains).mkString(","))
-    val updated = hits.select(dataCols.map { c =>
-      (assign.get(c) match {
-        case Some(e) => expr(e).cast(hits.schema(c).dataType)
-        case None => col(c)
-      }).as(c)
-    }: _*)
-    Some(writeCommit(sizeRewrite(updated, partitionCols, touched),
-      path, partitionCols, "update_dv",
-      arrange = true, writerOptions = writerOptions,
-      bucketArrange = true,
-      scope = FileSet(baseV, cur, touched, None)) {
-      (prev, newFiles) => prev.map(e => retag.getOrElse(e, e)) ++ newFiles
-    })
-  }
 
   /** Predicate-scoped overwrite (the Delta `replaceWhere` shape): ONE
     * atomic commit that removes every current row matching `predicate`
@@ -2183,23 +2067,13 @@ object VersionedTable {
             spark.createDataFrame(rows.asJava, schema)
               .filter(expr(predicate))
               .select("__f").collect().map(_.getString(0)).toSet
-          } else {
-            val entryOf = cur.map(e => baseOf(e) -> e).toMap
-            GraftScan.read(spark, path, prevVs.max)
-              .filter(expr(predicate))
-              .select(input_file_name().as("__f")).distinct()
-              .collect().map { r =>
-                val b = relativize(s"$path/data", r.getString(0))
-                entryOf.getOrElse(b, b)
-              }
-              .toSet
-          }
+          } else filesMatching(spark, path, prevVs.max, cur, predicate)
         // merge-on-read: a DATA-predicate replace vectors the matched
         // positions and appends the batch — zero survivor rewrites (a
         // partition-only replace is already metadata-only whole-file
         // swaps, strictly better than leaving dead rows under a vector)
         if (dv && !partitionOnly && touched.nonEmpty)
-          replaceWhereDv(spark, fsys, path, df, predicate,
+          replaceWhereDv(df, path, predicate,
             prevVs.max, cur, touched, layout, writerOptions)
             .foreach(v => return v)
         val survivors =
@@ -2207,13 +2081,8 @@ object VersionedTable {
           else readFiles(spark, path, cur.filter(touched), cmap, drops)
             .filter(!coalesce(expr(predicate), lit(false)))
             .unionByName(df, allowMissingColumns = true)
-        writeCommit(sizeRewrite(survivors, layout, touched),
-          path, layout, "replace_where",
-          arrange = true, writerOptions = writerOptions,
-          bucketArrange = true,
-          scope = FileSet(prevVs.max, cur, touched, None)) {
-          (prev, newFiles) => prev.filterNot(touched) ++ newFiles
-        }
+        rewriteCommit(survivors, path, layout, "replace_where",
+          writerOptions, FileSet(prevVs.max, cur, touched, None))
       }
     }
 
@@ -2223,62 +2092,27 @@ object VersionedTable {
     * touched files' surviving rows are never read or rewritten, so a
     * narrow backfill into wide files costs O(matched + batch), not a
     * rewrite of every touched file. CDC replays position-exact deletes
-    * plus the batch as inserts. None when the match is past
-    * [[dvMaxPositions]] (the caller's rewrite branch runs instead).
+    * plus the batch as inserts. When the candidate `touched` files hold
+    * no actually-matching row, no sidecar is written and the batch
+    * lands as a plain `replace_where` addition (an empty batch is a full
+    * no-op). None when [[vectorCommit]]'s policy sends the replace to
+    * the caller's rewrite.
     */
-  private[catalog] def replaceWhereDv(spark: SparkSession, fsys: FileSystem,
-                             path: String, df: DataFrame, pred: String,
-                             baseV: Int, cur: Seq[String],
-                             touched: Set[String], layout: Seq[String],
-                             writerOptions: Map[String, String])
-      : Option[Int] = {
-    val hits = graft.Caches.stage(
-      GraftScan.readTagged(spark, path, baseV, Some(touched.map(baseOf)))
-        .filter(expr(pred))
-        .select(col("__gfile").as("file"), col("__gpos").as("pos")))
-    val n = hits.count()
-    if (n == 0L) {
-      // the candidate files held no actually-matching row: nothing to
-      // vector — never write an empty orphan sidecar or an empty-retag
-      // replace_dv version (mirrors dvCommit). The batch still lands
-      // (replaceWhere with zero matches is a plain addition); an empty
-      // batch is a full no-op.
+  private[catalog] def replaceWhereDv(df: DataFrame, path: String,
+                                      pred: String, baseV: Int,
+                                      cur: Seq[String],
+                                      touched: Set[String],
+                                      layout: Seq[String],
+                                      writerOptions: Map[String, String])
+      : Option[Int] =
+    vectorCommit(GraftScan.readTagged(df.sparkSession, path, baseV,
+        Some(touched.map(baseOf)))
+        .filter(expr(pred)).select("__gfile", "__gpos"),
+      path, "replace_dv", FileSet(baseV, cur, touched, None), layout,
+      writerOptions, plainOp = Some("replace_where")) { (_, _) =>
       val batch = graft.Caches.stage(df)
-      if (batch.isEmpty) return Some(baseV)
-      return Some(writeCommit(sizeRewrite(batch, layout, Set.empty),
-        path, layout, "replace_where",
-        arrange = true, writerOptions = writerOptions,
-        bucketArrange = true,
-        scope = FileSet(baseV, cur, touched, None)) {
-        (prev, newFiles) => prev ++ newFiles
-      })
+      if (batch.isEmpty) None else Some(batch)
     }
-    if (n > dvMaxPositions(spark)) {
-      System.err.println(s"[vtable] replaceWhere at $path matched $n " +
-        "rows — past spark.graft.dv.maxPositions, falling back to the " +
-        "file-pruned rewrite")
-      return None
-    }
-    val touchedAff = dvTouched(hits, cur)
-    val (dvName, dvBytes) =
-      writeDvSidecar(spark, fsys, path, touchedAff, hits)
-    val retag = touchedAff.map(e => e -> s"${baseOf(e)}@dv=$dvName").toMap
-    val batch = graft.Caches.stage(df)
-    if (batch.isEmpty) {
-      // empty batch = pure predicate delete — metadata-only commit
-      betweenPlanAndCommit()
-      Some(claimVersion(fsys, path, "replace_dv",
-        scope = FileSet(baseV, cur, touched, None),
-        newFiles = Seq.empty, bytesWritten = dvBytes)(
-        prev => prev.map(e => retag.getOrElse(e, e))))
-    } else Some(writeCommit(sizeRewrite(batch, layout, touchedAff),
-      path, layout, "replace_dv",
-      arrange = true, writerOptions = writerOptions,
-      bucketArrange = true,
-      scope = FileSet(baseV, cur, touched, None)) {
-      (prev, newFiles) => prev.map(e => retag.getOrElse(e, e)) ++ newFiles
-    })
-  }
 
   /** A one-column key batch's probe summary: its row count, the
     * [min, max] of its non-null keys (nulls when every key is null) and,
@@ -2340,23 +2174,63 @@ object VersionedTable {
       val candidates = skipFiles(fs(spark, path), path, cur, keyCol, lo, hi)
       if (candidates.isEmpty) Some((Set.empty, (lo, hi), inList))
       else {
-        // the scan names BASE data files; the touched set must hold the
-        // MANIFEST ENTRIES (a DV'd file's entry carries its suffix)
-        val entryOf = candidates.map(e => baseOf(e) -> e).toMap
         val scan = readFiles(spark, path, candidates)
           .select(col(keyCol), input_file_name().as("__f"))
           .filter(col(keyCol).between(lit(lo), lit(hi)))
-        val hits = inList match {
-          case Some(ks) => scan.filter(col(keyCol).isin(ks: _*))
-          case None => scan.join(keys, Seq(keyCol), "left_semi")
-        }
-        Some((collectDistinctFiles(hits.select("__f")).map { f =>
-            val b = relativize(s"$path/data", f)
-            entryOf.getOrElse(b, b)
-          }
-          .toSet, (lo, hi), inList))
+        Some((entriesOf(path, candidates, collectDistinctFiles(
+          keyHits(scan, keyCol, keys, inList).select("__f"))),
+          (lo, hi), inList))
       }
     }
+  }
+
+  /** The rows of `rows` whose `keyCol` is in the key batch: filtered by
+    * the probe's IN list when it collected one, else semi-joined
+    * against `keys`.
+    */
+  private def keyHits(rows: DataFrame, keyCol: String, keys: DataFrame,
+                      inList: Option[Seq[Any]]): DataFrame =
+    inList match {
+      case Some(ks) => rows.filter(col(keyCol).isin(ks: _*))
+      case None => rows.join(keys, Seq(keyCol), "left_semi")
+    }
+
+  /** The complement of [[keyHits]]: the rows whose key is NOT in the
+    * batch — the survivors of a keyed merge or delete. Null target keys
+    * survive under both shapes (the anti join keeps null build-side
+    * misses, isNull keeps them explicitly).
+    */
+  private def keySurvivors(rows: DataFrame, keyCol: String,
+                           keys: DataFrame,
+                           inList: Option[Seq[Any]]): DataFrame =
+    inList match {
+      case Some(ks) =>
+        rows.filter(col(keyCol).isNull || !col(keyCol).isin(ks: _*))
+      case None => rows.join(keys, Seq(keyCol), "left_anti")
+    }
+
+  /** The manifest entries of the files a predicate verb touches: those
+    * of the base version holding a row that satisfies `pred`, found by
+    * a scan planned through the indexed snapshot ([[GraftScan]]), so
+    * stats and hive partition values prune it.
+    */
+  private def filesMatching(spark: SparkSession, path: String, baseV: Int,
+                            cur: Seq[String], pred: String): Set[String] =
+    entriesOf(path, cur, collectDistinctFiles(
+      GraftScan.read(spark, path, baseV).filter(expr(pred))
+        .select(input_file_name().as("__f"))))
+
+  /** The manifest entries of scanned data files: a scan names BASE data
+    * files by absolute path, while a DV'd file's manifest entry carries
+    * its `@dv=` suffix.
+    */
+  private def entriesOf(path: String, cur: Seq[String],
+                        files: Seq[String]): Set[String] = {
+    val entryOf = cur.map(e => baseOf(e) -> e).toMap
+    files.map { f =>
+      val b = relativize(s"$path/data", f)
+      entryOf.getOrElse(b, b)
+    }.toSet
   }
 
   /** The IN-list fold only replaces the key join for ATOMIC,
@@ -2386,6 +2260,22 @@ object VersionedTable {
     files.rdd
       .mapPartitions(it => it.map(_.getString(0)).toSet.iterator)
       .collect().distinct.toSeq
+
+  /** The rewrite commit tail of every row-level verb: land `rows` (the
+    * touched files' survivors plus any new rows) as fresh files and, in
+    * the same manifest swap, drop the touched entries (`scope.removed`);
+    * every other file carries forward by reference.
+    */
+  private def rewriteCommit(rows: DataFrame, path: String,
+                            partitionCols: Seq[String], op: String,
+                            writerOptions: Map[String, String],
+                            scope: FileSet,
+                            txn: Option[(String, Long)] = None): Int =
+    writeCommit(sizeRewrite(rows, partitionCols, scope.removed),
+      path, partitionCols, op, writerOptions = writerOptions,
+      scope = scope, txn = txn, bucketArrange = true) {
+      (prev, newFiles) => prev.filterNot(scope.removed) ++ newFiles
+    }
 
   /** Flat tables: size the rewrite to the touched file count (the anti
     * join's 32 shuffle partitions would scatter a 2-file rewrite into 32
@@ -3418,8 +3308,8 @@ object VersionedTable {
         val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
           .mkString.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
         finally in.close()
-        System.err.println(s"[vtable] completing crashed CONVERT at " +
-          s"$path (${lines.size - 1} planned file(s))")
+        logWarning(s"completing crashed CONVERT at $path " +
+          s"(${lines.size - 1} planned file(s))")
         (lines.head, lines.tail)
       } else {
         val rootUri = fsys.makeQualified(new HPath(path)).toString
@@ -4562,7 +4452,8 @@ object VersionedTable {
                           writerOptions: Map[String, String] = Map.empty,
                           scope: ReadScope,
                           txn: Option[(String, Long)] = None,
-                          bucketArrange: Boolean = false)(
+                          bucketArrange: Boolean = false,
+                          dvBytes: Long = 0L)(
       resolve: (Seq[String], Seq[String]) => Seq[String]): Int = {
     val spark = df.sparkSession
     val fsys = fs(spark, path)
@@ -4752,7 +4643,8 @@ object VersionedTable {
     // they can be harvested BEFORE the version claim — a concurrent
     // merge's conflict predicate then always sees this commit's ranges
     writeFileStats(fsys, spark, path, dirOf(commitDir), newFiles)
-    val bytes = written.map(_.getLen).sum
+    // a vector commit's deletion-vector sidecar counts too
+    val bytes = written.map(_.getLen).sum + dvBytes
     betweenWriteAndClaim()
     claimVersion(fsys, path, op, scope, newFiles, bytes, txn,
       colMapAdd = minted,
@@ -5297,9 +5189,8 @@ object VersionedTable {
         try out.write(lines.mkString("\n").getBytes("UTF-8"))
         finally out.close()
       }
-    } catch { case e: Throwable =>
-      System.err.println(
-        s"[vtable] stats harvest skipped for $dir: ${e.getMessage}")
+    } catch { case NonFatal(e) =>
+      logWarning(s"stats harvest skipped for $dir: ${e.getMessage}")
     }
 
   /** One file's stat lines (the harvest kernel — static and

@@ -6,33 +6,15 @@ import org.apache.spark.sql.SparkSession
 
 /** Contention-immune A/B meter: runs named bench queries and reports the
   * DETERMINISTIC execution-shape counters — jobs, stages, tasks, shuffle
-  * bytes read/written, input bytes — via a SparkListener, plus the
-  * Hadoop filesystem's metadata/read and write op deltas (the per-verb
-  * FS constants commit-heavy rows pay). Wall time on a co-tenant host
-  * swings 3x with steal; these counters do not. Diagnostic only; not
-  * part of the driver contract.
+  * bytes read/written, input bytes — via a SparkListener. Wall time on
+  * a co-tenant host swings 3x with steal; these counters do not.
+  * Diagnostic only; not part of the driver contract.
   *
   * `runMain graft.tools.Jobs <query>...` (default `graph_pagerank`);
   * `SPARK_GRAFT_SF_DIR` picks the data, `SPARK_GRAFT_CPUS` the local
   * core count.
   */
 object Jobs {
-
-  /** Cumulative (read, write) filesystem op counts of this JVM: reads
-    * are list/stat/exists/open, writes are create/rename/delete.
-    */
-  private def fsOps(): (Long, Long) = {
-    import scala.jdk.CollectionConverters._
-    var r = 0L; var w = 0L
-    org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics
-      .iterator().asScala.foreach { s =>
-        def op(name: String): Long = Option(s.getLong(name)).fold(0L)(_.longValue)
-        r += op("op_list_status") + op("op_get_file_status") +
-          op("op_exists") + op("op_open")
-        w += op("op_create") + op("op_rename") + op("op_delete")
-      }
-    (r, w)
-  }
 
   private class Meter extends SparkListener {
     @volatile var jobs = 0L
@@ -87,15 +69,12 @@ object Jobs {
       // settle listener events from the warm rep before resetting
       Thread.sleep(300)
       meter.reset()
-      val (r0, w0) = fsOps()
       val t0 = System.nanoTime()
       fn(spark, sfDir).count()
       val dt = (System.nanoTime() - t0) / 1e9
-      val (r1, w1) = fsOps()
       graft.Caches.releaseAll(spark)
       Thread.sleep(300)
-      println(f"[jobs] $n%-32s ${meter.snapshot} " +
-        f"fsReads=+${r1 - r0}%-6d fsWrites=+${w1 - w0}%-6d wall=$dt%6.2f s")
+      println(f"[jobs] $n%-32s ${meter.snapshot} wall=$dt%6.2f s")
       meter.reset()
     }
     spark.stop()

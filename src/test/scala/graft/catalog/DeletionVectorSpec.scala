@@ -74,19 +74,20 @@ class DeletionVectorSpec extends AnyFunSuite {
     // drive the DV branch directly with candidate files that hold NO
     // actually-matching row (the zone-map-pruned-but-empty shape): an
     // empty batch must be a full no-op — no sidecar, no version
-    val r1 = VersionedTable.replaceWhereDv(spark, fsys, t,
-      base.filter(lit(false)), "id > 1000000", 0, cur, cur.toSet,
-      Seq.empty, Map.empty)
+    val r1 = VersionedTable.replaceWhereDv(base.filter(lit(false)), t,
+      "id > 1000000", 0, cur, cur.toSet, Seq.empty, Map.empty)
     assert(r1 == Some(0), "empty batch + no matches must be a no-op")
     assert(VersionedTable.versions(spark, t) == Seq(0),
       "a no-op must not commit an empty replace_dv version")
     assert(!fsys.exists(new org.apache.hadoop.fs.Path(s"$t/_dv")),
       "no deletion-vector sidecar may be written for zero matches")
     // a non-empty batch lands as a PLAIN commit (no vector, no retag)
-    val r2 = VersionedTable.replaceWhereDv(spark, fsys, t,
-      Seq((7L, "thu", 70.0)).toDF("id", "day", "value"),
+    val r2 = VersionedTable.replaceWhereDv(
+      Seq((7L, "thu", 70.0)).toDF("id", "day", "value"), t,
       "id > 1000000", 0, cur, cur.toSet, Seq.empty, Map.empty)
     assert(r2.isDefined && r2.get == 1)
+    assert(VersionedTable.history(spark, t)
+      .filter($"version" === 1).head().getString(1) == "replace_where")
     assert(!fsys.exists(new org.apache.hadoop.fs.Path(s"$t/_dv")))
     assert(!headManifest(t).contains("@dv="),
       "zero matches must not retag any entry")
@@ -396,7 +397,104 @@ class DeletionVectorSpec extends AnyFunSuite {
         dv = true) == 4)
       assert(!VersionedTable.hasDeletionVectors(spark, t))
       assert(ids(VersionedTable.read(spark, t)) == Set(3L, 4L, 5L))
+      // and for a data-predicate replace
+      assert(VersionedTable.replaceWhere(
+        Seq((4L, "tue", 44.0), (5L, "wed", 55.0)).toDF("id", "day", "value"),
+        t, "id >= 4", dv = true) == 5)
+      assert(VersionedTable.history(spark, t)
+        .filter($"version" === 5).head().getString(1) == "replace_where")
+      assert(!VersionedTable.hasDeletionVectors(spark, t))
+      assert(VersionedTable.read(spark, t).orderBy("id").collect()
+        .map(r => (r.getLong(0), r.getDouble(2))).toSeq ==
+        Seq((3L, 0.0), (4L, 44.0), (5L, 55.0)))
     } finally spark.conf.unset("spark.graft.dv.maxPositions")
+  }
+
+  test("DV cap boundary: a cap of n vectors an n-row match, n - 1 rewrites it, same rows") {
+    val day = Map(2L -> "mon", 4L -> "tue", 6L -> "thu")
+    def batch(ks: Long*) =
+      ks.map(k => (k, day(k), k * 100.0)).toDF("id", "day", "value")
+    // every call below matches n = 2 rows (ids 2 and 4)
+    val n = 2
+    // (verb, vector op, rewrite op, the call)
+    val verbs: Seq[(String, String, String, String => Int)] = Seq(
+      ("deleteWhere", "delete_dv", "delete_where", t =>
+        VersionedTable.deleteWhere(spark, t, Some("id IN (2, 4)"),
+          dv = true)),
+      ("deleteRows", "delete_dv", "delete_rows", t =>
+        VersionedTable.deleteRows(Seq(2L, 4L).toDF("id"), t, "id",
+          dv = true)),
+      ("updateWhere", "update_dv", "update_where", t =>
+        VersionedTable.updateWhere(spark, t, Seq("value" -> "value + 1"),
+          Some("id IN (2, 4)"), dv = true)),
+      ("replaceWhere", "replace_dv", "replace_where", t =>
+        VersionedTable.replaceWhere(batch(2L, 4L), t, "id IN (2, 4)",
+          dv = true)),
+      ("mergeWhen", "merge_dv", "merge_when", t =>
+        VersionedTable.mergeWhen(batch(2L, 4L, 6L), t, "id", dv = true)))
+    def run(cap: Int, call: String => Int) = {
+      val t = newTable()
+      VersionedTable.commit(base.repartition(1), t)                 // v0
+      spark.conf.set("spark.graft.dv.maxPositions", cap.toString)
+      try assert(call(t) == 1)
+      finally spark.conf.unset("spark.graft.dv.maxPositions")
+      (VersionedTable.history(spark, t)
+        .filter($"version" === 1).head().getString(1),
+        VersionedTable.hasDeletionVectors(spark, t),
+        VersionedTable.read(spark, t).collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet)
+    }
+    verbs.foreach { case (verb, dvOp, rewriteOp, call) =>
+      val (atCap, vectored, rowsAtCap) = run(n, call)
+      assert(atCap == dvOp && vectored,
+        s"$verb: a cap of $n must vector $n matched rows, got $atCap")
+      val (belowCap, vectoredBelow, rowsBelow) = run(n - 1, call)
+      assert(belowCap == rewriteOp && !vectoredBelow,
+        s"$verb: a cap of ${n - 1} must rewrite, got $belowCap")
+      assert(rowsAtCap == rowsBelow,
+        s"$verb: both sides of the cap must leave the same rows")
+    }
+  }
+
+  test("every vector commit counts its sidecar in history().bytes") {
+    // what listStatusRec counts: no hidden (_SUCCESS, .crc) files
+    def visibleBytes(f: java.io.File): Long =
+      if (f.getName.startsWith("_") || f.getName.startsWith(".")) 0L
+      else if (f.isDirectory) f.listFiles().map(visibleBytes).sum
+      else f.length()
+    def check(t: String, op: String): Unit = {
+      val v = VersionedTable.versions(spark, t).max
+      val h = VersionedTable.history(spark, t)
+        .filter($"version" === v).head()
+      assert(h.getString(1) == op)
+      val newData = (VersionedTable.read(spark, t).inputFiles.toSet --
+          VersionedTable.read(spark, t, v - 1).inputFiles)
+        .toSeq.map(f => new java.io.File(new java.net.URI(f)).length()).sum
+      val sidecars = new java.io.File(s"$t/_dv").listFiles()
+        .filterNot(_.getName.startsWith("."))
+      assert(sidecars.length == 1, s"$op: one sidecar")
+      assert(h.getLong(3) == newData + visibleBytes(sidecars.head),
+        s"$op: bytes must be the new data files plus the sidecar")
+    }
+    val t1 = newTable()
+    VersionedTable.commit(base.repartition(2, col("id")), t1)
+    VersionedTable.deleteWhere(spark, t1, Some("id = 2"), dv = true)
+    check(t1, "delete_dv")
+    val t2 = newTable()
+    VersionedTable.commit(base.repartition(1), t2)
+    VersionedTable.updateWhere(spark, t2, Seq("value" -> "value + 1"),
+      Some("id >= 4"), dv = true)
+    check(t2, "update_dv")
+    val t3 = newTable()
+    VersionedTable.commit(base.repartition(1), t3)
+    VersionedTable.mergeWhen(Seq((2L, "mon", 200.0), (6L, "thu", 60.0))
+      .toDF("id", "day", "value"), t3, "id", dv = true)
+    check(t3, "merge_dv")
+    val t4 = newTable()
+    VersionedTable.commit(base.repartition(1), t4)
+    VersionedTable.replaceWhere(Seq((2L, "mon", 21.0))
+      .toDF("id", "day", "value"), t4, "id IN (2, 3)", dv = true)
+    check(t4, "replace_dv")
   }
 
   test("clone carries vectors; concurrent rewrite of a touched file forces a replan") {
@@ -543,6 +641,16 @@ class DeletionVectorSpec extends AnyFunSuite {
       matched = Seq(
         VersionedTable.MatchedUpdate(Some("s.value > 1000"), None)),
       dv = true) == 1)
+    // no clause fires but a row inserts: the insert lands as merge_dv,
+    // with no new vector
+    val sidecars = new java.io.File(s"$t/_dv").list().length
+    assert(VersionedTable.mergeWhen(
+      Seq((1L, "mon", 5.0), (8L, "fri", 80.0)).toDF("id", "day", "value"),
+      t, "id", updateWhen = Some("s.value > 1000"), dv = true) == 2)
+    assert(VersionedTable.history(spark, t)
+      .filter($"version" === 2).head().getString(1) == "merge_dv")
+    assert(new java.io.File(s"$t/_dv").list().length == sidecars)
+    assert(ids(VersionedTable.read(spark, t)) == Set(1L, 3L, 4L, 8L))
   }
 
   test("DV merge: pure matched-delete is metadata-only (zero files written)") {
