@@ -632,8 +632,8 @@ object GraftScan {
   }
 
   /** A resolved snapshot's scan ingredients: files, schema metadata,
-    * footer-derived PHYSICAL fields (first-seen superset, commit
-    * order), and the path-layout partition column names.
+    * PHYSICAL fields ([[VersionedTable.snapshotFields]]), and the
+    * path-layout partition column names.
     */
   private case class Snapshot(
       files: Seq[String],
@@ -672,27 +672,7 @@ object GraftScan {
       s"version $v of $path has no files — use VersionedTable.read " +
         "for empty snapshots")
     val (cmap, drops) = VersionedTable.schemaMetaAt(fsys, path, v)
-    // physical schema: first-seen superset across commit groups — the
-    // readFiles contract — at one footer read per commit dir, amortized
-    // across the process by the write-once dir-schema cache
-    val groups = files.groupBy(_.split("/").head).toSeq
-      .sortBy { case (d, _) => (VersionedTable.dirSeq(d), d) }
-    val fields = {
-      // numeric types widen across commit groups (VersionedTable
-      // .widenType — the readFiles rule, kept in lockstep so the
-      // indexed and explicit read paths can never disagree on a
-      // version's schema)
-      val m = scala.collection.mutable.LinkedHashMap[String, StructField]()
-      groups.foreach { case (c, fsOfCommit) =>
-        VersionedTable.readDirGroup(spark, path, c, fsOfCommit)
-          .schema.fields.foreach(f => m.get(f.name) match {
-            case None => m += f.name -> f
-            case Some(prev) => m += f.name -> prev.copy(dataType =
-              VersionedTable.widenType(prev.dataType, f.dataType))
-          })
-      }
-      m.values.toSeq
-    }
+    val fields = VersionedTable.snapshotFields(spark, path, files)
     // partition columns come from the path layout (`k=v` segments
     // between commit dir and file name), typed by the scan inference.
     // A table legally mixing partitioned and unpartitioned commits
@@ -767,7 +747,8 @@ object GraftScan {
   }
 
   /** [[readWithIndex]]'s frame with the scanned rows' identity exposed
-    * — `__gfile` (the data-root-relative file path) and `__gpos` (the
+    * — `__gfile` (the data-root-relative file path in the scan's encoded
+    * form, [[VersionedTable.scanRel]]) and `__gpos` (the
     * absolute row index within that file) — the deletion-vector write
     * path's scan: positions are captured AT the source, before any
     * projection or join could lose `_metadata`. Deletion vectors
@@ -777,12 +758,12 @@ object GraftScan {
   def readTagged(spark: SparkSession, path: String,
                  version: Int = -1,
                  onlyBases: Option[Set[String]] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col, regexp_extract}
+    import org.apache.spark.sql.functions.col
     val (rel, _, snap, entries) =
       snapshotHfs(spark, path, version, onlyBases)
     val tagged = spark.baseRelationToDataFrame(rel)
       .withColumn("__gfile",
-        regexp_extract(col("_metadata.file_path"), "^.*/data/(.*)$", 1))
+        VersionedTable.scanRel(col("_metadata.file_path")))
       .withColumn("__gpos", col("_metadata.row_index"))
     val dv = VersionedTable.dvPositionsOf(spark, path, entries)
     val kept =

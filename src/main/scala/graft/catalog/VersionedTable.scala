@@ -589,7 +589,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       // retried next time — caching it would pin an extra exchange
       // onto a genuinely bucketed table for the JVM's lifetime
       case _: java.io.FileNotFoundException => None
-      case _: Throwable => return None
+      case NonFatal(_) => return None
     }
     dirBucketCache.synchronized(dirBucketCache.put(key, v): Unit)
     v
@@ -883,7 +883,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
         .count(_ < target / 2)
       if (smalls >= minSmall)
         compactSmallFiles(spark, path, targetFileBytes = target): Unit
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       logWarning(s"autoCompact at $path skipped: ${e.getMessage}")
     }
   }
@@ -1315,10 +1315,10 @@ object VersionedTable extends org.apache.spark.internal.Logging {
               val scan = GraftScan.read(spark, path, prevVs.max)
                 .filter(orCond)
                 .select(col(keyCol), input_file_name().as("__f"))
-              entriesOf(path, cur, collectDistinctFiles(
+              entriesOf(cur, countFiles(
                 (if (srcEmpty) scan
                  else scan.join(keys, Seq(keyCol), "left_anti"))
-                  .select("__f")))
+                  .select("__f"))._2)
             }
           val touched = touchedM ++ touchedB
           if (touched.isEmpty && notMatched.isEmpty) prevVs.max
@@ -1796,8 +1796,9 @@ object VersionedTable extends org.apache.spark.internal.Logging {
 
   /** The merge-on-read commit tail of every row-level verb, and the one
     * home of the DV-vs-rewrite POLICY. `hits` (the base version's live
-    * rows to vector, carrying their `__gfile`/`__gpos` tags) is staged
-    * and counted once. A count past [[dvMaxPositions]] is a bulk change
+    * rows to vector, carrying their `__gfile`/`__gpos` tags) is staged,
+    * and one pass over it counts the hits and collects the files they
+    * touch. A count past [[dvMaxPositions]] is a bulk change
     * wearing the wrong shape: the tail logs a warning and returns None,
     * and the caller runs its file-pruned rewrite instead. Otherwise the
     * positions go to ONE `_dv/` sidecar — unioned with the touched
@@ -1825,7 +1826,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     val spark = hits.sparkSession
     val fsys = fs(spark, path)
     val staged = graft.Caches.stage(hits)
-    val n = staged.count()
+    val (n, scanned) = countFiles(staged.select("__gfile"))
     if (n > dvMaxPositions(spark)) {
       logWarning(s"$op at $path matched $n rows — past " +
         "spark.graft.dv.maxPositions, falling back to the file-pruned " +
@@ -1837,9 +1838,11 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     val (retag, dvBytes) =
       if (n == 0L) (Map.empty[String, String], 0L)
       else {
-        val pos = staged.select(col("__gfile").as("file"),
-          col("__gpos").as("pos"))
-        val vectored = dvTouched(pos, scope.baseFiles)
+        // the sidecar stores MANIFEST base names, not the scan's form
+        val nameOf = scanned.map(s => s -> manifestName(s)).toMap
+        val pos = staged.select(udf((s: String) => nameOf(s))
+          .apply(col("__gfile")).as("file"), col("__gpos").as("pos"))
+        val vectored = entriesOf(scope.baseFiles, scanned)
         val (dvName, bytes) =
           writeDvSidecar(spark, fsys, path, vectored, pos)
         (vectored.map(e => e -> s"${baseOf(e)}@dv=$dvName").toMap, bytes)
@@ -1860,14 +1863,6 @@ object VersionedTable extends org.apache.spark.internal.Logging {
           (prev, newFiles) => retagged(prev) ++ newFiles
         }
     })
-  }
-
-  /** The manifest entries of the files a (file, pos) frame touches. */
-  private def dvTouched(hits: DataFrame, cur: Seq[String]): Set[String] = {
-    val touchedBases = hits.select("file").distinct()
-      .collect().map(_.getString(0)).toSet
-    val entryOf = cur.map(e => baseOf(e) -> e).toMap
-    touchedBases.map(b => entryOf.getOrElse(b, b))
   }
 
   /** Write a fresh DV sidecar holding `hits` (file, pos) UNIONED with
@@ -2048,19 +2043,10 @@ object VersionedTable extends org.apache.spark.internal.Logging {
             import org.apache.spark.sql.types.{StringType, StructField, StructType}
             val schema = StructType(StructField("__f", StringType) +:
               layout.map(c => StructField(c, StringType)))
-            val pcmap = cmap // logical layout name -> physical segment
             val rows = cur.map { f =>
-              val segs = f.split("/").drop(1).dropRight(1)
-                .filter(_.contains("="))
-                .map(s => s.takeWhile(_ != '=') ->
-                  org.apache.spark.sql.catalyst.catalog
-                    .ExternalCatalogUtils.unescapePathName(
-                      s.drop(s.takeWhile(_ != '=').length + 1)))
-                .toMap
+              val segs = partitionValues(f).toMap
               org.apache.spark.sql.Row.fromSeq(f +: layout.map { c =>
-                val phys = physicalOf(pcmap, c)
-                segs.get(phys).filterNot(_ == "__HIVE_DEFAULT_PARTITION__")
-                  .orNull
+                segs.get(physicalOf(cmap, c)).orNull
               })
             }
             import scala.jdk.CollectionConverters._
@@ -2177,8 +2163,8 @@ object VersionedTable extends org.apache.spark.internal.Logging {
         val scan = readFiles(spark, path, candidates)
           .select(col(keyCol), input_file_name().as("__f"))
           .filter(col(keyCol).between(lit(lo), lit(hi)))
-        Some((entriesOf(path, candidates, collectDistinctFiles(
-          keyHits(scan, keyCol, keys, inList).select("__f"))),
+        Some((entriesOf(candidates, countFiles(
+          keyHits(scan, keyCol, keys, inList).select("__f"))._2),
           (lo, hi), inList))
       }
     }
@@ -2216,20 +2202,23 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     */
   private def filesMatching(spark: SparkSession, path: String, baseV: Int,
                             cur: Seq[String], pred: String): Set[String] =
-    entriesOf(path, cur, collectDistinctFiles(
+    entriesOf(cur, countFiles(
       GraftScan.read(spark, path, baseV).filter(expr(pred))
-        .select(input_file_name().as("__f"))))
+        .select(input_file_name().as("__f")))._2)
 
   /** The manifest entries of scanned data files: a scan names BASE data
-    * files by absolute path, while a DV'd file's manifest entry carries
-    * its `@dv=` suffix.
+    * files URI-encoded ([[manifestName]] decodes them), while a DV'd
+    * file's manifest entry carries its `@dv=` suffix. A scanned file the
+    * manifest does not hold fails loud — a silent miss would drop a
+    * touched file from the commit.
     */
-  private def entriesOf(path: String, cur: Seq[String],
-                        files: Seq[String]): Set[String] = {
+  private def entriesOf(cur: Seq[String],
+                        files: Iterable[String]): Set[String] = {
     val entryOf = cur.map(e => baseOf(e) -> e).toMap
     files.map { f =>
-      val b = relativize(s"$path/data", f)
-      entryOf.getOrElse(b, b)
+      val b = manifestName(f)
+      entryOf.getOrElse(b, throw new IllegalStateException(
+        s"scanned file $f (manifest name $b) is not in the scanned version"))
     }.toSet
   }
 
@@ -2250,16 +2239,23 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** Collect a one-string-column frame's distinct values without the
-    * final-aggregation exchange a `.distinct().collect()` plans: the
-    * values are FILE NAMES (each task emits at most the handful of
-    * files it read), so a per-partition distinct plus a driver union
-    * does the same dedup minus one shuffle round per probe.
+  /** A one-string-column frame's row count and distinct values (FILE
+    * NAMES: each task emits its row count and the handful of files it
+    * read), in one pass and without the final-aggregation exchange a
+    * `.distinct().collect()` plans — a per-partition distinct plus a
+    * driver union does the same dedup minus one shuffle round.
     */
-  private def collectDistinctFiles(files: DataFrame): Seq[String] =
+  private def countFiles(files: DataFrame): (Long, Set[String]) =
     files.rdd
-      .mapPartitions(it => it.map(_.getString(0)).toSet.iterator)
-      .collect().distinct.toSeq
+      .mapPartitions { it =>
+        var n = 0L
+        val names = scala.collection.mutable.HashSet.empty[String]
+        it.foreach { r => n += 1; names += r.getString(0) }
+        Iterator((n, names.toSet))
+      }
+      .collect()
+      .foldLeft((0L, Set.empty[String])) { case ((n, s), (m, t)) =>
+        (n + m, s ++ t) }
 
   /** The rewrite commit tail of every row-level verb: land `rows` (the
     * touched files' survivors plus any new rows) as fresh files and, in
@@ -2424,12 +2420,9 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     if (vs.isEmpty) return Nil
     def compute: Seq[String] = {
       val (cmap, _) = schemaMetaAt(fsys, path, vs.max)
-      resolveFiles(fsys, path, vs.max).headOption.toSeq.flatMap { rel =>
-        // rel = c-<nonce>/[pcol=v/...]part-*.parquet
-        rel.split("/").drop(1).dropRight(1).filter(_.contains("="))
-          .map(_.takeWhile(_ != '='))
-          .map(p => cmap.find(_._2 == p).map(_._1).getOrElse(p)).toSeq
-      }
+      // rel = c-<nonce>/[pcol=v/...]part-*.parquet
+      resolveFiles(fsys, path, vs.max).headOption.toSeq.flatMap(rel =>
+        partitionValues(rel).map(pv => logicalOf(cmap, pv._1)))
     }
     val mp = new HPath(s"$path/_commits/v-${vs.max}")
     scala.util.Try(fsys.getFileStatus(mp)).toOption match {
@@ -2459,10 +2452,24 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       .map(_.split("/").drop(1).dropRight(1).filter(_.contains("="))
         .map { seg =>
           val p = seg.takeWhile(_ != '=')
-          cmap.find(_._2 == p).map(_._1).getOrElse(p) + seg.drop(p.length)
+          logicalOf(cmap, p) + seg.drop(p.length)
         }.mkString("/"))
       .filter(_.nonEmpty).distinct.sorted
   }
+
+  /** The hive partition segments of a manifest entry (between commit
+    * dir and file name) as (physical column, value): the value
+    * unescaped, null for the default partition.
+    */
+  private def partitionValues(entry: String): Seq[(String, String)] =
+    entry.split("/").drop(1).dropRight(1).filter(_.contains("=")).toSeq
+      .map { seg =>
+        val p = seg.takeWhile(_ != '=')
+        val raw = seg.drop(p.length + 1)
+        p -> (if (raw == "__HIVE_DEFAULT_PARTITION__") null
+              else org.apache.spark.sql.catalyst.catalog
+                .ExternalCatalogUtils.unescapePathName(raw))
+      }
 
   /** Incremental consumption (CDC-lite): the rows ADDED between
     * `sinceVersion` and `toVersion` (default latest) — the files in the
@@ -2476,9 +2483,11 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   def changes(spark: SparkSession, path: String, sinceVersion: Int,
               toVersion: Int = -1): DataFrame = {
     val (fsys, to) = changeWindow(spark, path, sinceVersion, toVersion)
-    val (newLive, _) = walkChanges(spark, fsys, path, sinceVersion, to)
+    val (newLive, _) = walkChanges(fsys, path, sinceVersion, to)
     val (cmap, drops) = schemaMetaAt(fsys, path, to)
-    readFiles(spark, path, newLive, cmap, drops)
+    if (newLive.isEmpty) spark.emptyDataFrame
+    else readFiles(spark, path, newLive, cmap, drops,
+      changeTypes(spark, fsys, path, to, newLive))
   }
 
   /** The commit ops that are DATA-IDENTICAL by construction — the
@@ -2500,12 +2509,58 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   private def opAt(fsys: FileSystem, path: String, v: Int): String =
     commitInfo(fsys, path, v).fold("unknown")(_.op)
 
-  /** One incremental walk of `(since, to]` powering [[changes]] and
-    * [[changeRemovals]]: classify each version as pure maintenance
-    * ([[dataIdenticalOps]] whose removals all come from files holding
-    * only already-delivered rows) or data-changing, threading the
-    * delivered-rows equivalence through maintenance rewrites. Returns
-    * (newLive, removedCount):
+  /** One version's change set as its manifest records it: the entries
+    * it added and removed, with its deletion-vector TRANSITIONS — a
+    * base file whose vector changed, as (base file, old entry, new
+    * entry) — split out of both sides ([[splitChanges]]).
+    */
+  private case class VersionEvents(v: Int, op: String,
+                                   added: Seq[String], removed: Seq[String],
+                                   trans: Seq[(String, String, String)])
+
+  /** Split a file-set diff into plain additions, plain removals and
+    * deletion-vector transitions (one base file on both sides: same
+    * file, different vector).
+    */
+  private def splitChanges(added0: Seq[String], removed0: Seq[String])
+      : (Seq[String], Seq[String], Seq[(String, String, String)]) = {
+    val remB = removed0.map(e => baseOf(e) -> e).toMap
+    val addB = added0.map(e => baseOf(e) -> e).toMap
+    val trans = remB.keySet.intersect(addB.keySet)
+    (added0.filterNot(e => trans(baseOf(e))),
+      removed0.filterNot(e => trans(baseOf(e))),
+      trans.toSeq.sorted.map(b => (b, remB(b), addB(b))))
+  }
+
+  /** THE incremental manifest walk behind every per-version change
+    * reader: the events of each version in `(from, to]`, starting from
+    * version `from`'s file set (empty for `from` = -1). A delta manifest
+    * based on its predecessor applies in O(changed files); only another
+    * manifest shape costs a resolve.
+    */
+  private def versionEvents(fsys: FileSystem, path: String,
+                            from: Int, to: Int): Seq[VersionEvents] = {
+    var files: Set[String] =
+      if (from < 0) Set.empty else resolveFiles(fsys, path, from).toSet
+    ((from + 1) to to).map { v =>
+      val next: Set[String] = readManifest(fsys, path, v) match {
+        case DeltaManifest(base, added, removed) if base == v - 1 =>
+          files -- removed ++ added
+        case _ => resolveFiles(fsys, path, v).toSet
+      }
+      val (added, removed, trans) =
+        splitChanges((next -- files).toSeq.sorted, (files -- next).toSeq.sorted)
+      files = next
+      VersionEvents(v, opAt(fsys, path, v), added, removed, trans)
+    }
+  }
+
+  /** The [[versionEvents]] consumer powering [[changes]] and
+    * [[changeRemovals]]: classify each version of `(since, to]` as pure
+    * maintenance ([[dataIdenticalOps]] whose removals all come from
+    * files holding only already-delivered rows) or data-changing,
+    * threading the delivered-rows equivalence through maintenance
+    * rewrites. Returns (newLive, removedCount):
     *
     *  - `newLive`  — live files at `to` holding rows the window added
     *    (what an append-only follower ingests); a maintenance rewrite
@@ -2525,22 +2580,15 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * `ignoreChanges` semantics). Per-version admission
     * (`maxVersionsPerTrigger = 1`) never hits that case.
     */
-  private def walkChanges(spark: SparkSession, fsys: FileSystem,
-                          path: String, since: Int, to: Int)
-      : (Seq[String], Int) = {
-    var files: Set[String] = resolveFiles(fsys, path, since).toSet
-    var equiv: Set[String] = files
+  private def walkChanges(fsys: FileSystem, path: String,
+                          since: Int, to: Int): (Seq[String], Int) = {
+    var equiv: Set[String] = resolveFiles(fsys, path, since).toSet
     var newLive = Set.empty[String]
     var removedCount = 0
-    ((since + 1) to to).foreach { v =>
-      val next: Set[String] = readManifest(fsys, path, v) match {
-        case DeltaManifest(base, added, removed) if base == v - 1 =>
-          files -- removed ++ added
-        case _ => resolveFiles(fsys, path, v).toSet
-      }
-      val add0 = next -- files
-      val rem0 = files -- next
-      val maintenance = dataIdenticalOps.contains(opAt(fsys, path, v))
+    versionEvents(fsys, path, since, to).foreach { ev =>
+      val add0 = ev.added ++ ev.trans.map(_._3)
+      val rem0 = ev.removed ++ ev.trans.map(_._2)
+      val maintenance = dataIdenticalOps.contains(ev.op)
       if (maintenance && rem0.forall(equiv)) {
         equiv = equiv -- rem0 ++ add0
       } else if (maintenance && rem0.forall(newLive)) {
@@ -2552,25 +2600,17 @@ object VersionedTable extends org.apache.spark.internal.Logging {
         // removals
         newLive = newLive -- rem0 ++ add0
       } else {
-        val remB = rem0.map(e => baseOf(e) -> e).toMap
-        val addB = add0.map(e => baseOf(e) -> e).toMap
-        val trans = remB.keySet.intersect(addB.keySet)
         removedCount += rem0.size
-        rem0.foreach { e =>
-          if (trans(baseOf(e))) {
-            // DV retag: the base file's surviving rows stay where they
-            // were — delivered files stay delivered, window-added files
-            // stay pending (the new vector applies on read)
-            val post = addB(baseOf(e))
-            if (equiv(e)) equiv += post
-            else if (newLive(e)) newLive += post
-          }
+        // DV retag: the base file's surviving rows stay where they
+        // were — delivered files stay delivered, window-added files
+        // stay pending (the new vector applies on read)
+        ev.trans.foreach { case (_, old, post) =>
+          if (equiv(old)) equiv += post
+          else if (newLive(old)) newLive += post
         }
         equiv = equiv -- rem0
-        newLive = newLive -- rem0 ++
-          add0.filterNot(e => trans(baseOf(e)))
+        newLive = newLive -- rem0 ++ ev.added
       }
-      files = next
     }
     (newLive.toSeq.sorted, removedCount)
   }
@@ -2591,57 +2631,66 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     val (fsys, to) = changeWindow(spark, path, sinceVersion, toVersion)
     val base = resolveFiles(fsys, path, sinceVersion)
     val target = resolveFiles(fsys, path, to)
-    val added0 = target.filterNot(base.toSet)
-    val removed0 = base.filterNot(target.toSet)
-    // a DELETION-VECTOR TRANSITION (same base file, different vector)
-    // surfaces as exactly the POSITION DIFF — the rows the window
-    // deleted as `delete` (new − old positions), any rows a restore
-    // resurrected as `insert` (old − new) — never the whole file
-    val remB = removed0.map(e => baseOf(e) -> e).toMap
-    val addB = added0.map(e => baseOf(e) -> e).toMap
-    val trans = remB.keySet.intersect(addB.keySet)
-    val added = added0.filterNot(e => trans(baseOf(e)))
-    val removed = removed0.filterNot(e => trans(baseOf(e)))
+    // the window's NETTED diff; a deletion-vector transition surfaces as
+    // its position diff ([[dvTransitionRows]]), never the whole file
+    val (added, removed, trans) = splitChanges(
+      target.filterNot(base.toSet), base.filterNot(target.toSet))
     // both change sides translate through the TO version's column map:
     // the follower consumes one coherent frame in current names, even
     // across a rename inside the window
     val (cmap, drops) = schemaMetaAt(fsys, path, to)
+    lazy val types =
+      changeTypes(spark, fsys, path, to, added ++ removed ++ trans.map(_._1))
     def tag(files: Seq[String], t: String): Option[DataFrame] =
       if (files.isEmpty) None
-      else Some(readFiles(spark, path, files, cmap, drops)
+      else Some(readFiles(spark, path, files, cmap, drops, types)
         .withColumn("_change_type", lit(t)))
-    val transPieces: Seq[DataFrame] = trans.toSeq.sorted.flatMap { b =>
-      val oldPos = dvPositions(spark, path, Seq(remB(b)))
-        .getOrElse(b, Array.empty[Long]).toSet
-      val newPos = dvPositions(spark, path, Seq(addB(b)))
-        .getOrElse(b, Array.empty[Long]).toSet
-      def slice(pos: Set[Long], t: String): Option[DataFrame] =
-        if (pos.isEmpty) None
-        else Some(dvSliceRows(spark, path, b, pos.toArray.sorted,
-          cmap, drops).withColumn("_change_type", lit(t)))
-      slice(newPos -- oldPos, "delete") ++ slice(oldPos -- newPos, "insert")
-    }
-    val pieces =
-      tag(added, "insert").toSeq ++ tag(removed, "delete") ++ transPieces
-    if (pieces.isEmpty) spark.emptyDataFrame
-    else pieces.reduce(_.unionByName(_, allowMissingColumns = true))
+    (tag(added, "insert").toSeq ++ tag(removed, "delete") ++
+      trans.flatMap(dvTransitionRows(spark, path, _, cmap, drops, types)))
+      .reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .getOrElse(spark.emptyDataFrame)
+  }
+
+  /** The change rows of one deletion-vector transition (base file, old
+    * entry, new entry): exactly its POSITION DIFF — the rows the new
+    * vector deletes (new − old positions) tagged `delete`, any rows it
+    * resurrects (old − new, a restore) tagged `insert` — read from the
+    * base file, never the whole file.
+    */
+  private def dvTransitionRows(spark: SparkSession, path: String,
+                               t: (String, String, String),
+                               cmap: Seq[(String, String)],
+                               drops: Seq[String],
+                               types: ChangeTypes): Seq[DataFrame] = {
+    val (b, oldE, newE) = t
+    def positions(e: String): Set[Long] =
+      dvPositions(spark, path, Seq(e)).getOrElse(b, Array.empty[Long]).toSet
+    val (oldPos, newPos) = (positions(oldE), positions(newE))
+    Seq((newPos -- oldPos) -> "delete", (oldPos -- newPos) -> "insert")
+      .collect { case (pos, change) if pos.nonEmpty =>
+        dvSliceRows(spark, path, b, pos.toArray.sorted, cmap, drops, types)
+          .withColumn("_change_type", lit(change))
+      }
   }
 
   /** The rows of ONE base data file at the given positions — the
     * deletion-vector CDC slice: one single-file scan filtered by row
-    * index, logical-translated like any snapshot read. Partition
-    * columns materialize from the file's own path (basePath read).
+    * index, cast to the window's [[changeTypes]] and logical-translated
+    * like any snapshot read. Partition columns materialize from the
+    * file's own path (basePath read).
     */
   private def dvSliceRows(spark: SparkSession, path: String,
                           baseFile: String, pos: Array[Long],
                           cmap: Seq[(String, String)],
-                          drops: Seq[String]): DataFrame = {
+                          drops: Seq[String],
+                          types: ChangeTypes): DataFrame = {
     val dir = baseFile.split("/").head
     val g = readDirGroup(spark, path, dir, Seq(baseFile))
     val bc = spark.sparkContext.broadcast(pos)
     val hit = udf((idx: Long) =>
       java.util.Arrays.binarySearch(bc.value, idx) >= 0)
     val sliced = g.filter(hit(col("_metadata.row_index")))
+      .select(g.columns.toSeq.map(typedCol(_, types)): _*)
     toLogical(drops.foldLeft(sliced) { (d, p) =>
       if (d.columns.contains(p)) d.drop(p) else d }, cmap)
   }
@@ -2659,14 +2708,12 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * (a poller reading consecutive windows hits those legitimately).
     *
     * Scale shape: ONE file-set diff walked incrementally across the
-    * window (per-version delta manifests apply in O(changed files);
-    * only a full-manifest commit inside the window costs a resolve),
-    * then one scan per SCHEMA EPOCH — versions sharing a column
-    * mapping — with the per-file (version, change, ts) attribution
-    * joined on via a broadcast of the metadata-sized event list. Plan
-    * width is O(schema epochs) (1 for the common no-rename window),
-    * never O(versions); a 10 000-commit backfill reads each involved
-    * file exactly once per epoch.
+    * window ([[versionEvents]]), then one scan per SCHEMA EPOCH —
+    * versions sharing a column mapping — with the per-file (version,
+    * change, ts) attribution joined on via a broadcast of the
+    * metadata-sized event list. Plan width is O(schema epochs) (1 for
+    * the common no-rename window), never O(versions); a 10 000-commit
+    * backfill reads each involved file exactly once per epoch.
     */
   def changeFeed(spark: SparkSession, path: String, startVersion: Int,
                  endVersion: Int = -1): DataFrame = {
@@ -2693,173 +2740,81 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     val tsOf = history(spark, path)
       .select("version", "ts_millis").collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    // one incremental file-set walk over the window, events grouped by
-    // schema epoch (identical column mapping + drop set)
-    var files: Set[String] =
-      if (startVersion == 0) Set.empty
-      else resolveFiles(fsys, path, startVersion - 1).toSet
-    val epochs = scala.collection.mutable.LinkedHashMap.empty[
-      (Seq[(String, String)], Seq[String]),
-      scala.collection.mutable.Buffer[(String, String, Int, Long)]]
-    // deletion-vector transitions (same base file, new vector inside
-    // one version) replay as POSITION-DIFF rows, not whole-file events
-    val transEvents = scala.collection.mutable.Buffer.empty[
-      ((Seq[(String, String)], Seq[String]), (String, String, String, Int, Long))]
-    (startVersion to end).foreach { v =>
-      val next: Set[String] = readManifest(fsys, path, v) match {
-        case DeltaManifest(base, added, removed) if base == v - 1 =>
-          files -- removed ++ added
-        case _ => resolveFiles(fsys, path, v).toSet
+    def ts(v: Int): Long = tsOf.getOrElse(v, -1L)
+    // per-version replay makes DATA-IDENTICAL maintenance exactly
+    // invisible: every row of the v-1 state was already replayed under
+    // its original file, and the rewrite adds/removes no live row —
+    // emit NOTHING (Delta's dataChange=false contract). An OPTIMIZE
+    // inside a follower's window never replays the table as churn.
+    val events = versionEvents(fsys, path, startVersion - 1, end)
+      .filterNot(e => dataIdenticalOps.contains(e.op))
+      .map(e => schemaMetaAt(fsys, path, e.v) -> e)
+    lazy val types = changeTypes(spark, fsys, path, end, events.flatMap {
+      case (_, e) => e.added ++ e.removed ++ e.trans.map(_._1) })
+    // whole-file events grouped by schema epoch (identical column
+    // mapping + drop set), one scan each
+    val epochs = events
+      .filter { case (_, e) => e.added.nonEmpty || e.removed.nonEmpty }
+      .groupBy(_._1).toSeq.sortBy(_._2.head._2.v)
+      .map { case ((cmap, drops), evs) =>
+        changeFeedEpoch(spark, path, cmap, drops, types,
+          evs.flatMap { case (_, e) =>
+            e.added.map((_, "insert", e.v, ts(e.v))) ++
+              e.removed.map((_, "delete", e.v, ts(e.v)))
+          })
       }
-      // per-version replay makes DATA-IDENTICAL maintenance exactly
-      // invisible: every row of the v-1 state was already replayed
-      // under its original file, and the rewrite adds/removes no live
-      // row — emit NOTHING (Delta's dataChange=false contract), just
-      // advance the cursor. An OPTIMIZE inside a follower's window no
-      // longer replays the whole table as delete+insert churn.
-      if (dataIdenticalOps.contains(opAt(fsys, path, v))) {
-        files = next
-      } else {
-      val added0 = next -- files
-      val removed0 = files -- next
-      val remB = removed0.map(e => baseOf(e) -> e).toMap
-      val addB = added0.map(e => baseOf(e) -> e).toMap
-      val trans = remB.keySet.intersect(addB.keySet)
-      val added = added0.filterNot(e => trans(baseOf(e)))
-      val removed = removed0.filterNot(e => trans(baseOf(e)))
-      val ts = tsOf.getOrElse(v, -1L)
-      if (added.nonEmpty || removed.nonEmpty) {
-        val buf = epochs.getOrElseUpdate(schemaMetaAt(fsys, path, v),
-          scala.collection.mutable.Buffer.empty)
-        added.toSeq.sorted.foreach(f => buf += ((f, "insert", v, ts)))
-        removed.toSeq.sorted.foreach(f => buf += ((f, "delete", v, ts)))
-      }
-      trans.toSeq.sorted.foreach { b =>
-        transEvents += ((schemaMetaAt(fsys, path, v),
-          (b, remB(b), addB(b), v, ts)))
-      }
-      files = next
-      }
+    val transitions = events.flatMap { case ((cmap, drops), e) =>
+      e.trans.flatMap(dvTransitionRows(spark, path, _, cmap, drops, types))
+        .map(_.withColumn("_commit_version", lit(e.v))
+          .withColumn("_commit_ts_millis", lit(ts(e.v))))
     }
-    val pieces = epochs.toSeq.map { case ((cmap, drops), evs) =>
-      changeFeedEpoch(spark, path, cmap, evs.toSeq, drops)
-    } ++ transEvents.toSeq.flatMap {
-      case ((cmap, drops), (b, oldE, newE, v, ts)) =>
-        val oldPos = dvPositions(spark, path, Seq(oldE))
-          .getOrElse(b, Array.empty[Long]).toSet
-        val newPos = dvPositions(spark, path, Seq(newE))
-          .getOrElse(b, Array.empty[Long]).toSet
-        def slice(pos: Set[Long], t: String): Option[DataFrame] =
-          if (pos.isEmpty) None
-          else Some(dvSliceRows(spark, path, b, pos.toArray.sorted,
-            cmap, drops)
-            .withColumn("_change_type", lit(t))
-            .withColumn("_commit_version", lit(v))
-            .withColumn("_commit_ts_millis", lit(ts)))
-        slice(newPos -- oldPos, "delete") ++
-          slice(oldPos -- newPos, "insert")
-    }
-    if (pieces.isEmpty)
+    (epochs ++ transitions)
+      .reduceOption(_.unionByName(_, allowMissingColumns = true)).getOrElse(
       read(spark, path, end).limit(0)
         .withColumn("_change_type", lit(null).cast("string"))
         .withColumn("_commit_version", lit(null).cast("int"))
-        .withColumn("_commit_ts_millis", lit(null).cast("long"))
-    else pieces.reduce(_.unionByName(_, allowMissingColumns = true))
+        .withColumn("_commit_ts_millis", lit(null).cast("long")))
   }
 
   /** One schema epoch of [[changeFeed]] as ONE scan: the epoch's files
-    * read as an explicit list under one explicit PHYSICAL schema (one
-    * merged-footer inference over the epoch's files; a per-commit-dir
-    * union, [[readFiles]]'s shape, would put the plan width back at
-    * O(versions) for an append-per-commit window). A file missing a
-    * later-appended column reads null (union-by-name semantics); hive
-    * partition values live only in dir names, so they travel WITH the
-    * metadata-sized event rows and rejoin on the file key, typed by
-    * hive-style value inference.
+    * read as an explicit list under one explicit PHYSICAL schema, the
+    * epoch files' [[snapshotFields]] (a per-commit-dir union of scans,
+    * [[readFiles]]'s shape, would put the plan width back at
+    * O(versions) for an append-per-commit window), then cast to the
+    * window's [[changeTypes]]. A file missing a later-appended column
+    * reads null (union-by-name semantics); hive partition values live
+    * only in dir names, so they travel WITH the metadata-sized event
+    * rows and rejoin on the file key.
     */
   private def changeFeedEpoch(spark: SparkSession, path: String,
                               cmap: Seq[(String, String)],
-                              evs: Seq[(String, String, Int, Long)],
-                              drops: Seq[String]): DataFrame = {
+                              drops: Seq[String],
+                              types: ChangeTypes,
+                              evs: Seq[(String, String, Int, Long)]): DataFrame = {
     import org.apache.spark.sql.types._
     val rels = evs.map(_._1).distinct
-    def partSegs(rel: String): Seq[String] =
-      rel.split("/").drop(1).dropRight(1).filter(_.contains("=")).toSeq
-    val partPhys = rels.flatMap(partSegs(_).map(_.takeWhile(_ != '=')))
-      .distinct
-    val partLogical = partPhys.map(p =>
-      cmap.find(_._2 == p).map(_._1).getOrElse(p))
-    // the epoch's PHYSICAL schema: merged per COMMIT DIR through the
-    // dir-schema cache (commit dirs are write-once, so a warm feed read
-    // costs ZERO footer I/O here; a cold dir pays one inference and
-    // seeds the cache), first-seen type pinning in commit order — the
-    // same resolution [[readFiles]] applies, so the feed and the
-    // snapshot read agree on types. Within an epoch — fixed column
-    // mapping + drop set — the schema only widens by appends, so the
-    // field union covers every file. A full `read(path, v).schema`
-    // here would build one relation per live commit dir just for a
-    // schema: O(commit dirs) planning per epoch, exactly the width
-    // this path exists to avoid.
-    val inferred = {
-      val m = scala.collection.mutable.LinkedHashMap[String, StructField]()
-      rels.groupBy(_.split("/").head).toSeq
-        .sortBy { case (c, _) => (dirSeq(c), c) }
-        .foreach { case (c, dirFiles) =>
-          readDirGroup(spark, path, c, dirFiles).schema.foreach(f =>
-            if (!m.contains(f.name)) m += f.name -> f)
-        }
-      StructType(m.values.toSeq)
-    }
-    // partition values live only in dir names — type them the way hive
-    // inference would (int → long → double → date → string), from the
-    // metadata-sized value set
-    def rawPv(seg: String): String = {
-      val raw = org.apache.spark.sql.catalyst.catalog
-        .ExternalCatalogUtils.unescapePathName(
-          seg.drop(seg.takeWhile(_ != '=').length + 1))
-      if (raw == "__HIVE_DEFAULT_PARTITION__") null else raw
-    }
-    def partType(p: String): DataType = {
-      val vals = rels.flatMap(partSegs(_).filter(_.startsWith(p + "="))
-        .map(rawPv)).filter(_ != null)
-      if (vals.isEmpty) StringType
-      else if (vals.forall(_.toIntOption.isDefined)) IntegerType
-      else if (vals.forall(_.toLongOption.isDefined)) LongType
-      else if (vals.forall(_.toDoubleOption.isDefined)) DoubleType
-      else if (vals.forall(v =>
-        scala.util.Try(java.time.LocalDate.parse(v)).isSuccess)) DateType
-      else StringType
-    }
-    val logical = StructType(inferred.fields.toSeq
-      .filterNot(f => drops.contains(f.name) || partPhys.contains(f.name))
-      .map(f => f.copy(name = cmap.find(_._2 == f.name)
-        .map(_._1).getOrElse(f.name)))
-      ++ partPhys.zip(partLogical).map { case (p, pl) =>
-        StructField(pl, partType(p)) })
-    val physSchema = StructType(logical.fields.toSeq
-      .filterNot(f => partLogical.contains(f.name))
-      .map(f => f.copy(name = physicalOf(cmap, f.name))))
-    // __rel matches [[relativize]]: greedy prefix = LAST "/data/" (the
-    // user's table path may itself contain /data/; inside the layout
-    // no segment is a bare "data"). DV'd entries (a vector-carrying
+    val fields = snapshotFields(spark, path, rels)
+    val partPhys = rels.flatMap(partitionValues(_).map(_._1)).distinct
+    // partition columns stay in the read schema: a file of a flat commit
+    // in a mixed-layout window stores them as data (a partitioned file
+    // reads them null and takes its dir value below)
+    val physSchema = StructType(fields.filterNot(f => drops.contains(f.name)))
+    // the join key is the file's scan-reported name in the scan's own
+    // form ([[scanRel]] / [[scanForm]]). DV'd entries (a vector-carrying
     // file added or fully removed inside the window) read their base
-    // file with the vector applied, one small per-entry relation —
-    // plan width O(DV'd entries in the window), and the event key IS
-    // the entry, so two states of one base file never conflate.
+    // file with the vector applied, one small per-entry relation — plan
+    // width O(DV'd entries in the window), keyed by the ENTRY, so two
+    // states of one base file never conflate.
     val (dvRels, plainRels) = rels.partition(e => dvSplit(e)._2.isDefined)
     val plainScan =
       if (plainRels.isEmpty) None
-      else Some(toLogical(
-        spark.read.schema(physSchema)
-          .parquet(plainRels.map(f => s"$path/data/$f"): _*), cmap)
-        .withColumn("__rel",
-          regexp_extract(input_file_name(), "^.*/data/(.*)$", 1)))
+      else Some(spark.read.schema(physSchema)
+        .parquet(plainRels.map(f => s"$path/data/$f"): _*)
+        .withColumn("__rel", scanRel(input_file_name())))
     val dvScans = dvRels.map { e =>
-      val dv = dvPositions(spark, path, Seq(e))
-      toLogical(applyDv(
-        spark.read.schema(physSchema).parquet(s"$path/data/${baseOf(e)}"),
-        dv), cmap)
-        .withColumn("__rel", lit(e))
+      applyDv(spark.read.schema(physSchema).parquet(s"$path/data/${baseOf(e)}"),
+        dvPositions(spark, path, Seq(e)))
+        .withColumn("__rel", lit(scanForm(e)))
     }
     val scan = (plainScan.toSeq ++ dvScans).reduce(_ unionByName _)
     val evSchema = StructType(
@@ -2869,23 +2824,23 @@ object VersionedTable extends org.apache.spark.internal.Logging {
         StructField("_commit_ts_millis", LongType, nullable = false)) ++
         partPhys.map(p => StructField(s"__pv_$p", StringType)))
     val evRows = evs.map { case (rel, ch, v, ts) =>
-      val pvals = partSegs(rel)
-        .map(seg => seg.takeWhile(_ != '=') -> rawPv(seg)).toMap
-      org.apache.spark.sql.Row.fromSeq(
-        Seq(rel, ch, v, ts) ++ partPhys.map(pvals.getOrElse(_, null)))
+      val pvals = partitionValues(rel).toMap
+      org.apache.spark.sql.Row.fromSeq(Seq(scanForm(rel), ch, v, ts) ++
+        partPhys.map(pvals.getOrElse(_, null)))
     }
     import scala.jdk.CollectionConverters._
     val evDf = spark.createDataFrame(evRows.asJava, evSchema)
     val joined = scan.join(broadcast(evDf), Seq("__rel"))
-    val withParts = partPhys.zip(partLogical).foldLeft(joined) {
-      case (df, (p, pl)) =>
-        val tpe = logical.find(_.name == pl).map(_.dataType)
-          .getOrElse(StringType)
-        df.withColumn(pl, col(s"__pv_$p").cast(tpe)).drop(s"__pv_$p")
+    val withParts = partPhys.foldLeft(joined) { (df, p) =>
+      val tpe = types.getOrElse(p, StringType)
+      df.withColumn(p, coalesce(col(p).cast(tpe), col(s"__pv_$p").cast(tpe)))
+        .drop(s"__pv_$p")
     }
-    withParts.select((logical.fieldNames.toSeq.map(col) ++
-      Seq(col("_change_type"), col("_commit_version"),
-        col("_commit_ts_millis"))): _*)
+    toLogical(withParts.select(
+      physSchema.fieldNames.toSeq.filterNot(partPhys.contains)
+        .map(typedCol(_, types)) ++ partPhys.map(col) ++
+        Seq("_change_type", "_commit_version", "_commit_ts_millis").map(col): _*),
+      cmap)
   }
 
   /** How many files the window `(sinceVersion, toVersion]` REMOVED —
@@ -2897,7 +2852,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   def changeRemovals(spark: SparkSession, path: String, sinceVersion: Int,
                      toVersion: Int = -1): Int = {
     val (fsys, to) = changeWindow(spark, path, sinceVersion, toVersion)
-    walkChanges(spark, fsys, path, sinceVersion, to)._2
+    walkChanges(fsys, path, sinceVersion, to)._2
   }
 
   private def changeWindow(spark: SparkSession, path: String,
@@ -2918,11 +2873,15 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * (every commit lands under a fresh nonce-named dir; nothing ever
     * adds files to an existing one), so its parquet schema is immutable
     * and one inference per dir per JVM suffices — every later
-    * [[readFiles]] group and [[GraftScan]] snapshot resolve skips the
-    * footer read by passing the known schema to the reader. First
-    * inference wins; like the first-seen type pinning across commit
-    * groups, any per-subset partition-type wobble is resolved once and
-    * stays consistent for the process. Bounded LRU.
+    * [[readFiles]] group skips the footer read by passing the known
+    * schema to the reader, and [[snapshotFields]] reads it without
+    * planning a scan at all. A FULL-dir inference is keyed by the dir
+    * and serves every subset of it; a subset's (a dir a DML left partly
+    * live) is keyed by the dir plus a digest of exactly that subset
+    * ([[subsetKey]]), so a partly-live dir infers once per live subset,
+    * not once per read. First inference wins; like the first-seen type
+    * pinning across commit groups, any per-subset partition-type wobble
+    * is resolved once and stays consistent for the process. Bounded LRU.
     */
   private val dirSchemaCache =
     new java.util.LinkedHashMap[String,
@@ -2938,26 +2897,130 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * schema-cached. Deletion vectors are NOT applied at this level —
     * [[readFiles]] does, while `_metadata` is still resolvable.
     */
-  private[catalog] def readDirGroup(spark: SparkSession, path: String,
-                                    c: String,
-                                    groupFiles: Seq[String]): DataFrame = {
+  private def readDirGroup(spark: SparkSession, path: String,
+                           c: String,
+                           groupFiles: Seq[String]): DataFrame = {
     val base = s"$path/data/$c"
     val paths = groupFiles.map(f => s"$path/data/${baseOf(f)}")
-    dirSchemaCache.synchronized(Option(dirSchemaCache.get(base))) match {
+    cachedDirSchema(path, c, groupFiles) match {
       case Some(sch) =>
         spark.read.schema(sch).option("basePath", base).parquet(paths: _*)
       case None =>
         val df = spark.read.option("basePath", base).parquet(paths: _*)
-        // cache only a FULL-dir inference: a subset's hive partition
-        // TYPE inference can come out narrower than the whole dir's
-        // (day=1 alone infers int; the dir may also hold day=x), and a
-        // sticky narrow type would mis-parse the other values later
-        if (listFilesRec(fs(spark, path), base).size == groupFiles.size)
-          dirSchemaCache.synchronized(
-            dirSchemaCache.put(base, df.schema): Unit)
+        // a subset's inference serves only that subset: its hive
+        // partition TYPE inference can come out narrower than the whole
+        // dir's (day=1 alone infers int; the dir may also hold day=x),
+        // and a sticky narrow type would mis-parse the other values later
+        val full = listFilesRec(fs(spark, path), base).size == groupFiles.size
+        dirSchemaCache.synchronized(dirSchemaCache.put(
+          if (full) base else subsetKey(base, groupFiles), df.schema): Unit)
         df
     }
   }
+
+  private def cachedDirSchema(path: String, c: String, files: Seq[String])
+      : Option[org.apache.spark.sql.types.StructType] = {
+    val base = s"$path/data/$c"
+    dirSchemaCache.synchronized(Option(dirSchemaCache.get(base))
+      .orElse(Option(dirSchemaCache.get(subsetKey(base, files)))))
+  }
+
+  /** The cache key of one subset of a commit dir: the dir plus a
+    * SHA-256 of the subset's sorted base files (manifest entries, any
+    * deletion-vector suffix stripped).
+    */
+  private def subsetKey(base: String, files: Seq[String]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    files.map(baseOf).distinct.sorted
+      .foreach(f => md.update((f + "\n").getBytes("UTF-8")))
+    base + "#" + md.digest().map("%02x".format(_)).mkString
+  }
+
+  /** An explicit file set's commit-dir groups, in COMMIT order (numeric:
+    * c-10 after c-2 — first-seen resolution follows commits, not
+    * lexicographic accident).
+    */
+  private def commitGroups(files: Seq[String]): Seq[(String, Seq[String])] =
+    files.groupBy(_.split("/").head).toSeq
+      .sortBy { case (d, _) => (dirSeq(d), d) }
+
+  /** THE snapshot schema of an explicit file set, one rule for [[read]],
+    * the indexed scan ([[GraftScan]]) and every change reader: the
+    * first-seen union of the commit dirs' PHYSICAL fields in commit
+    * order — a column a commit lacks reads as null for its rows
+    * (mergeSchema semantics) — with numeric types WIDENED across
+    * commits ([[widenType]]: an int column later appended as long reads
+    * long). Non-numeric type wobble keeps the first-seen type (per-group
+    * partition-value inference could otherwise type `day=1` as int in a
+    * patch commit and string in the base one). A version whose files all
+    * predate a new column keeps its historical schema — time travel
+    * travels the schema too. Each dir's schema comes from the write-once
+    * dir-schema cache; a cold dir pays one inference (and seeds it).
+    */
+  private[catalog] def snapshotFields(spark: SparkSession, path: String,
+                                      files: Seq[String])
+      : Seq[org.apache.spark.sql.types.StructField] =
+    unionFields(dirSchemas(spark, path, files))
+
+  /** Each commit dir's PHYSICAL schema for an explicit file set, in
+    * commit order, from the dir-schema cache (a cold dir pays one
+    * inference and seeds it).
+    */
+  private def dirSchemas(spark: SparkSession, path: String,
+                         files: Seq[String])
+      : Seq[org.apache.spark.sql.types.StructType] =
+    commitGroups(files).map { case (c, fsOfCommit) =>
+      cachedDirSchema(path, c, fsOfCommit)
+        .getOrElse(readDirGroup(spark, path, c, fsOfCommit).schema)
+    }
+
+  /** The union of per-dir schemas in commit order, each disagreement
+    * resolved by [[widenType]] — or, `lossless`, by the first of (that
+    * widening, either side's type, string) both sides up-cast into, so
+    * no value of either side is ever cast narrower.
+    */
+  private def unionFields(dirs: Seq[org.apache.spark.sql.types.StructType],
+                          lossless: Boolean = false)
+      : Seq[org.apache.spark.sql.types.StructField] = {
+    import org.apache.spark.sql.catalyst.expressions.Cast.canUpCast
+    val m = scala.collection.mutable.LinkedHashMap[String,
+      org.apache.spark.sql.types.StructField]()
+    dirs.foreach(_.fields.foreach(f => m.get(f.name) match {
+      case None => m += f.name -> f
+      case Some(prev) =>
+        val (a, b) = (prev.dataType, f.dataType)
+        val w = widenType(a, b)
+        val t = if (!lossless) w
+          else Seq(w, b, a, org.apache.spark.sql.types.StringType)
+            .find(t => canUpCast(a, t) && canUpCast(b, t)).getOrElse(w)
+        m += f.name -> prev.copy(dataType = t)
+    }))
+    m.values.toSeq
+  }
+
+  /** A change window's column types by PHYSICAL name. */
+  private type ChangeTypes = Map[String, org.apache.spark.sql.types.DataType]
+
+  /** THE column types of a change window's frame, by physical name: the
+    * types `read(path, to)` gives (the TO snapshot's [[snapshotFields]]),
+    * met LOSSLESSLY ([[unionFields]]) with every type the window's own
+    * `files` carry. A change row takes its TO snapshot's type unless
+    * that type would narrow one of the window's values — a long column
+    * a later full commit retyped int stays long, a string partition
+    * value under later int partitions stays string. Every change reader
+    * casts to these types where it reads, so one rule types a change
+    * row. O(dirs of the TO snapshot) cache lookups.
+    */
+  private def changeTypes(spark: SparkSession, fsys: FileSystem,
+                          path: String, to: Int,
+                          files: Seq[String]): ChangeTypes =
+    unionFields(dirSchemas(spark, path, resolveFiles(fsys, path, to)) ++
+      dirSchemas(spark, path, files), lossless = true)
+      .map(f => f.name -> f.dataType).toMap
+
+  /** Column `n` cast to its [[ChangeTypes]] entry, if it has one. */
+  private def typedCol(n: String, types: ChangeTypes) =
+    types.get(n).fold(col(n))(t => col(n).cast(t).as(n))
 
   /** Widest-type resolution for a column whose commits disagree on a
     * NUMERIC type — the published type-widening promotion chain
@@ -2981,7 +3044,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * never be float-typed in any commit (use decimal, whose meet with
     * floats deliberately stays fail-loud below).
     */
-  private[catalog] def widenType(
+  private def widenType(
       a: org.apache.spark.sql.types.DataType,
       b: org.apache.spark.sql.types.DataType)
       : org.apache.spark.sql.types.DataType = {
@@ -3083,53 +3146,36 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   /** Read an explicit file set. `cmap` (logical → physical) translates
     * the result back to LOGICAL column names; omit it for physical-space
     * internals (key scans against stats/footers, compaction rewrites).
+    * `types` is a change reader's [[changeTypes]].
     */
   private def readFiles(spark: SparkSession, path: String,
                         files: Seq[String],
                         cmap: Seq[(String, String)] = Seq.empty,
-                        drops: Seq[String] = Seq.empty): DataFrame = {
+                        drops: Seq[String] = Seq.empty,
+                        types: ChangeTypes = Map.empty): DataFrame = {
     if (files.isEmpty)
       return spark.emptyDataFrame
     // one scan per contributing commit dir: partition discovery needs a
     // basePath whose children are uniformly `pcol=value` dirs, and the
     // c-N commit level breaks that for a multi-commit file set. Commits
     // contributing to a version are bounded (retention + full-commit
-    // snapshots reset the set), so the union stays small. Numeric order
-    // (c-10 after c-2): first-seen schema pinning below must follow
-    // commit order, not lexicographic accident.
+    // snapshots reset the set), so the union stays small.
     // Deletion vectors apply HERE, per group, while `_metadata` is
     // still resolvable — groups without a DV'd entry plan unchanged.
     val dv = dvPositions(spark, path, files)
-    val groups = files.groupBy(_.split("/").head).toSeq
-      .sortBy { case (d, _) => (dirSeq(d), d) }
-      .map { case (c, fsOfCommit) =>
-        val g = readDirGroup(spark, path, c, fsOfCommit)
-        if (hasDv(fsOfCommit)) applyDv(g, dv) else g
-      }
-    // schema evolution across commits: the version's schema is the
-    // first-seen superset — a column a commit lacks reads as null for
-    // its rows (mergeSchema semantics). Numeric types WIDEN across
-    // commits ([[widenType]] — an int column later appended as long
-    // reads long, narrow groups upcast losslessly); non-numeric type
-    // wobble keeps the first-seen type (per-group partition-value
-    // inference could otherwise type `day=1` as int in a patch commit
-    // and string in the base one). A version whose files all predate a
-    // new column keeps its historical schema — time travel travels the
-    // schema too.
-    val colTypes = {
-      val m = scala.collection.mutable.LinkedHashMap[
-        String, org.apache.spark.sql.types.DataType]()
-      groups.foreach(_.schema.fields.foreach(f =>
-        m.get(f.name) match {
-          case None => m += f.name -> f.dataType
-          case Some(t) => m += f.name -> widenType(t, f.dataType)
-        }))
-      m.toSeq
+    val groups = commitGroups(files).map { case (c, fsOfCommit) =>
+      val g = readDirGroup(spark, path, c, fsOfCommit)
+      if (hasDv(fsOfCommit)) applyDv(g, dv) else g
     }
+    // each group cast to the snapshot schema ([[snapshotFields]]' rule,
+    // over the groups just built: a cold dir infers once), a change
+    // reader's columns to its window's [[changeTypes]]
+    val fields = unionFields(groups.map(_.schema)).map(f =>
+      f.copy(dataType = types.getOrElse(f.name, f.dataType)))
     val unioned = groups.map { g =>
-      g.select(colTypes.map { case (c, t) =>
-        (if (g.columns.contains(c)) col(c).cast(t)
-         else lit(null).cast(t)).as(c)
+      g.select(fields.map { f =>
+        (if (g.columns.contains(f.name)) col(f.name).cast(f.dataType)
+         else lit(null).cast(f.dataType)).as(f.name)
       }: _*)
     }.reduce(_ unionByName _)
     // dropped storage is hidden BEFORE logical translation (drops are
@@ -3566,6 +3612,9 @@ object VersionedTable extends org.apache.spark.internal.Logging {
 
   private[catalog] def physicalOf(cmap: Seq[(String, String)], logical: String): String =
     cmap.find(_._1 == logical).map(_._2).getOrElse(logical)
+
+  private def logicalOf(cmap: Seq[(String, String)], physical: String): String =
+    cmap.find(_._2 == physical).map(_._1).getOrElse(physical)
 
   /** Translate a LOGICAL-space frame to physical column names for the
     * write path. A batch column that equals a RETIRED physical name
@@ -4358,7 +4407,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       val sweptRel = scala.collection.mutable.Set.empty[String]
       if (fsys.exists(dataDir)) {
         listFilesRec(fsys, s"$path/data").foreach { f =>
-          val rel = relativize(s"$path/data", f)
+          val rel = relativize(f)
           if (!liveBases.contains(rel) &&
               (referencedBases.contains(rel) || pastGrace(new HPath(f)))) {
             sweptRel += rel
@@ -4401,7 +4450,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
         if (!dryRun) !fsys.exists(new HPath(s"$path/data/$d"))
         else !fsys.exists(new HPath(s"$path/data/$d")) ||
           listFilesRec(fsys, s"$path/data/$d")
-            .map(relativize(s"$path/data", _)).forall(sweptRel)
+            .map(relativize).forall(sweptRel)
       // the same dead-dir rule reclaims both per-dir sidecar kinds:
       // stats and bucket-layout proofs (a swept commit dir must not
       // leak its `.bucket` file into `_commits/` forever)
@@ -4590,7 +4639,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       }
     }
     val newFiles = written.map(st =>
-      relativize(s"$path/data", st.getPath.toString))
+      relativize(st.getPath.toString))
     // CHECK-constraint gate, post-write pre-claim: re-read the written
     // files column-pruned to the constraint columns (no second compute
     // of the batch plan), abort + drop the orphan dir on violation —
@@ -4680,7 +4729,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   /** Leading sequence number of a commit-dir name (`c-12-ab3f` → 12;
     * legacy `c-12` → 12).
     */
-  private[catalog] def dirSeq(dir: String): Int = {
+  private def dirSeq(dir: String): Int = {
     val digits = dir.stripPrefix("c-").takeWhile(_.isDigit)
     if (digits.isEmpty) -1 else digits.toInt
   }
@@ -5097,17 +5146,17 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       col("_metadata.file_path"), col("_metadata.row_index")))
 
   /** The keep-this-row judgment of a DV map as a broadcast-backed
-    * predicate over (file path or data-root-relative name, row index)
-    * — binary search per row, map-miss keeps.
+    * predicate over (scan-reported file path or its [[scanRel]] part,
+    * row index) — the map's keys are put in the scan's form once, so
+    * each row costs one substring and a binary search; map-miss keeps.
     */
   private[catalog] def dvKeep(spark: SparkSession,
                               dv: Map[String, Array[Long]])
       : org.apache.spark.sql.expressions.UserDefinedFunction = {
-    val bc = spark.sparkContext.broadcast(dv)
+    val bc = spark.sparkContext.broadcast(
+      dv.map { case (b, pos) => scanForm(b) -> pos })
     udf((fp: String, idx: Long) => {
-      val i = fp.lastIndexOf("/data/")
-      val rel = if (i >= 0) fp.substring(i + "/data/".length) else fp
-      bc.value.get(rel) match {
+      bc.value.get(scanRel(fp)) match {
         case Some(pos) => java.util.Arrays.binarySearch(pos, idx) < 0
         case None => true
       }
@@ -5659,7 +5708,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
           }
         }
       } finally reader.close()
-    } catch { case _: Throwable => true } // unreadable metadata: keep
+    } catch { case NonFatal(_) => true } // unreadable metadata: keep
   }
 
   /** Read a snapshot restricted to `column IS NULL`, file-skipped
@@ -5864,15 +5913,52 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     buf.toSeq
   }
 
-  /** Relative path of `file` under `base`, scheme-robust (the listing
-    * returns fully-qualified file: URIs on local fs).
+  // ---------------- scanned-file identity ----------------
+  //
+  // A scan reports its files URI-ENCODED (`input_file_name()`,
+  // `_metadata.file_path`): partition dir `city=new york` reads
+  // `city=new%20york`, and the hive-escaped `city=a%3Ab` reads
+  // `city=a%253Ab`. Manifest entries hold the RAW data-root-relative
+  // path. These helpers are the one mapping between the two: collected
+  // scan names decode on the driver ([[manifestName]]), and manifest
+  // names encode once into the scan's form ([[scanForm]]) for per-row
+  // predicates, which then compare with one substring ([[scanRel]]).
+
+  /** The data-root-relative part of a scan-reported file name, still in
+    * the scan's encoded form; a name without a "/data/" is already
+    * relative. The LAST "/data/": the user's table path may itself
+    * contain /data/, while inside the layout no segment can be a bare
+    * "data" (commit dirs are c-N, partition dirs contain '='). Cheap
+    * enough per row.
     */
-  private def relativize(base: String, file: String): String = {
-    // last occurrence: the user's table path may itself contain /data/,
-    // while inside the layout no segment can be a bare "data" (commit
-    // dirs are c-N, partition dirs contain '=')
-    val i = file.lastIndexOf("/data/")
-    require(i >= 0, s"data file outside table layout: $file")
-    file.substring(i + "/data/".length)
+  private[catalog] def scanRel(fp: String): String = {
+    val i = fp.lastIndexOf("/data/")
+    if (i >= 0) fp.substring(i + "/data/".length) else fp
   }
+
+  /** The data-root-relative path of a LISTED data file (a listing's
+    * `Path.toString` is already decoded, unlike a scan's name).
+    */
+  private def relativize(file: String): String = {
+    require(file.contains("/data/"), s"data file outside table layout: $file")
+    scanRel(file)
+  }
+
+  /** [[scanRel]] over a column of scan-reported file names. */
+  private[catalog] def scanRel(fp: org.apache.spark.sql.Column)
+      : org.apache.spark.sql.Column =
+    regexp_extract(fp, "^.*/data/(.*)$", 1)
+
+  /** The manifest name of a collected scan-reported file name: its
+    * [[scanRel]] part URI-decoded, as `new Path(new URI(s))` decodes.
+    */
+  private[catalog] def manifestName(scanned: String): String =
+    new java.net.URI(scanRel(scanned)).getPath
+
+  /** The scan's encoded form of a manifest name — what [[scanRel]]
+    * yields for that file (Hadoop's `Path.toUri` quoting, which the scan
+    * reports).
+    */
+  private[catalog] def scanForm(entry: String): String =
+    new HPath("/" + entry).toUri.getRawPath.drop(1)
 }
