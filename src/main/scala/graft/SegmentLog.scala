@@ -268,14 +268,20 @@ private[graft] object SegmentLog {
   /** Write `path/meta.json` once ([[writeOnce]]) and return the meta that
     * is on disk afterwards: this writer's, or a racing creator's that
     * renamed first. Callers compare it with their own, so two racing
-    * first writers with different parameters cannot both proceed.
+    * first writers with different parameters cannot both proceed. The
+    * write and its re-read run under the store's monitor: a local
+    * filesystem checks the rename target and renames in two steps, so
+    * two same-JVM creators could otherwise both rename and each read
+    * back its own meta.
     */
   def createMeta(fs: FileSystem, path: String,
                  fields: Seq[(String, Any)]): Map[String, String] = {
     val json = new java.util.LinkedHashMap[String, Any]()
     fields.foreach { case (k, v) => json.put(k, v) }
-    writeOnce(fs, path, "meta.json", mapper.writeValueAsBytes(json)): Unit
-    readMeta(fs, path).getOrElse(throw new IllegalStateException(
-      s"meta.json at $path vanished right after its creation"))
+    claimMonitor(path).synchronized {
+      writeOnce(fs, path, "meta.json", mapper.writeValueAsBytes(json)): Unit
+      readMeta(fs, path).getOrElse(throw new IllegalStateException(
+        s"meta.json at $path vanished right after its creation"))
+    }
   }
 }

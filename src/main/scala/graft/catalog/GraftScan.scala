@@ -3,6 +3,7 @@ package graft.catalog
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{Add, And, AttributeReference, BoundReference, Cast, Ceil, Divide, EqualNullSafe, EqualTo, Expression, Floor, GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, Multiply, Predicate, StartsWith, Substring, Subtract, TruncDate, TruncTimestamp, Year}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -10,7 +11,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Transparent data skipping for versioned tables: a manifest-backed
-  * Spark [[FileIndex]] planted under a `HadoopFsRelation`, so ANY
+  * Spark [[FileIndex]] planted under every `HadoopFsRelation` a read of
+  * a versioned table plans ([[GraftScan]]'s one builder), so ANY
   * Catalyst-pushed predicate — `df.filter`, a SQL WHERE over a view, a
   * join's pushed-down bound — reaches the commit stats sidecars at
   * PLANNING time, without the caller ever naming the explicit
@@ -22,8 +24,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Two pruning levels run inside `listFiles`:
   *
   *  1. hive-partition pruning on the pushed `partitionFilters`
-  *     (evaluated against path-parsed partition values — no
-  *     filesystem listing of pruned partitions ever happens);
+  *     (evaluated against path-parsed partition values, each cast by
+  *     Spark's own string cast to the partition field's inferred type
+  *     — no filesystem listing of pruned partitions ever happens);
   *  2. stats skipping on the pushed `dataFilters`: each conjunct that
   *     fits the skippable algebra (=, <, <=, >, >=, IN, IS NULL,
   *     IS NOT NULL, prefix) is judged against the sidecar-harvested
@@ -40,24 +43,35 @@ import org.apache.spark.unsafe.types.UTF8String
 class GraftFileIndex(
     spark: SparkSession,
     val tablePath: String,
-    files: Seq[String],
+    private val files: Seq[String],
     override val partitionSchema: StructType,
     nameMap: Map[String, String] = Map.empty,
     bucketPrune: Option[org.apache.spark.sql.catalyst.catalog.BucketSpec]
       = None,
     // the snapshot VERSION this index was planned against (−1 when the
-    // caller resolved files without one) — the identity seam plan-level
-    // rewrites key on (e.g. [[graft.plans.MvRewrite]]'s freshness gate:
-    // a view may substitute for a scan only when it reflects EXACTLY
-    // this version, head movement notwithstanding)
+    // caller chose the files itself: a verb's explicit entry set, which
+    // its caller already pruned, so no stats judgment runs) — the
+    // identity seam plan-level rewrites key on (e.g.
+    // [[graft.plans.MvRewrite]]'s freshness gate: a view may substitute
+    // for a scan only when it reflects EXACTLY this version, head
+    // movement notwithstanding)
     val snapshotVersion: Int = -1) extends FileIndex {
+
+  @volatile private var listed: Int = -1
+
+  /** The other relations' indexes of a read planned as several
+    * relations ([[GraftScan.readWithIndex]]); the counts below sum over
+    * them.
+    */
+  @volatile private[catalog] var peers: Seq[GraftFileIndex] = Nil
 
   /** Files returned by the most recent `listFiles` — the in-query
     * observability seam pruning asserts (specs, oracle rows) read.
     */
-  @volatile var lastListedCount: Int = -1
+  def lastListedCount: Int = (this +: peers).map(_.listed).filter(_ >= 0)
+    .reduceOption(_ + _).getOrElse(-1)
 
-  val totalFiles: Int = files.size
+  def totalFiles: Int = (this +: peers).map(_.files.size).sum
 
   private val fsys = VersionedTable.fs(spark, tablePath)
 
@@ -77,8 +91,11 @@ class GraftFileIndex(
 
   override def rootPaths: Seq[HPath] = Seq(new HPath(s"$tablePath/data"))
 
-  override def inputFiles: Array[String] =
-    files.map(f => s"$tablePath/data/$f").toArray
+  // the qualified form a filesystem listing reports
+  override def inputFiles: Array[String] = {
+    val root = fsys.makeQualified(new HPath(s"$tablePath/data")).toString
+    files.map(f => s"$root/$f").toArray
+  }
 
   override def refresh(): Unit = ()
 
@@ -92,22 +109,16 @@ class GraftFileIndex(
       }.getOrElse(sys.error(s"file $f lacks partition segment ${fld.name}"))
     }
 
+  private val zone = spark.sessionState.conf.sessionLocalTimeZone
+
   /** Path-escaped hive partition value → catalyst value of the
-    * partition column's inferred type.
+    * partition column's inferred type, by Spark's own string cast
+    * (under the session zone, as partition inference typed it).
     */
-  private def toCatalyst(raw: String, dt: DataType): Any = {
-    val s = GraftScan.unescapePath(raw)
-    if (raw == "__HIVE_DEFAULT_PARTITION__") null
-    else dt match {
-      case StringType => UTF8String.fromString(s)
-      case IntegerType => s.toInt
-      case LongType => s.toLong
-      case DoubleType => s.toDouble
-      case DateType => java.time.LocalDate.parse(s).toEpochDay.toInt
-      case other =>
-        sys.error(s"unsupported partition column type $other for value $raw")
-    }
-  }
+  private def toCatalyst(raw: String, dt: DataType): Any =
+    if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
+    else Cast(Literal(ExternalCatalogUtils.unescapePathName(raw)), dt,
+      Some(zone)).eval()
 
   private type St = (String, Option[(String, String)], Long, Long)
 
@@ -423,7 +434,7 @@ class GraftFileIndex(
       if (gj.isEmpty) partKept0
       else partKept0.filter { case (vals, _) =>
         gj.forall { case (i, judge) =>
-          vals(i) == "__HIVE_DEFAULT_PARTITION__" ||
+          vals(i) == ExternalCatalogUtils.DEFAULT_PARTITION_NAME ||
             judge(toCatalyst(vals(i), partitionSchema.fields(i).dataType))
         }
       }
@@ -432,7 +443,8 @@ class GraftFileIndex(
     // relation surfaces LOGICAL names (the `graft` format on a renamed
     // table), `nameMap` translates each judged attribute to the
     // PHYSICAL name the sidecars record; identity otherwise.
-    val judgments = dataFilters.flatMap(skipJudgment)
+    val judgments = (if (snapshotVersion < 0) Nil else dataFilters)
+      .flatMap(skipJudgment)
       .map { case (c, j) => nameMap.getOrElse(c, c) -> j }
     val pruned =
       if (judgments.isEmpty) partKept
@@ -470,7 +482,7 @@ class GraftFileIndex(
         }
       case _ => pruned
     }
-    lastListedCount = bucketKept.map(_._2.size).sum
+    listed = bucketKept.map(_._2.size).sum
     bucketKept.map { case (vals, fsOfPart) =>
       val row = InternalRow.fromSeq(
         vals.zip(partitionSchema.fields).map { case (r, f) =>
@@ -480,7 +492,16 @@ class GraftFileIndex(
   }
 }
 
-/** Entry points for the indexed (transparently-skipped) scan. */
+/** THE read of a versioned table's data files. Every reader — a
+  * snapshot ([[read]], time travel, SQL and the `graft` format through
+  * [[servedFrame]]), the deletion-vector write path's tagged scan
+  * ([[readTagged]]), and the explicit entry sets of the mutating verbs,
+  * the maintenance rewrites, the stats-pruned reads and the change
+  * readers ([[VersionedTable]]'s `readEntries`) — plans through one
+  * builder ([[plan]]) over one
+  * relation constructor, so pruning, deletion vectors, schema evolution
+  * and column mapping behave the same on every path.
+  */
 object GraftScan {
 
   /** The bucket ids a pushed conjunction confines a composite bucket
@@ -612,247 +633,291 @@ object GraftScan {
     a.length < b.length
   }
 
-  private[catalog] def unescapePath(s: String): String = {
-    // hive path escaping: %xx for the reserved characters
-    if (!s.contains('%')) s
-    else {
-      val b = new StringBuilder
-      var i = 0
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (c == '%' && i + 3 <= s.length) {
-          try {
-            b += Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar
-            i += 3
-          } catch { case _: NumberFormatException => b += c; i += 1 }
-        } else { b += c; i += 1 }
-      }
-      b.toString
-    }
-  }
-
-  /** A resolved snapshot's scan ingredients: files, schema metadata,
-    * PHYSICAL fields ([[VersionedTable.snapshotFields]]), and the
-    * path-layout partition column names.
+  /** A snapshot resolved for reading: its version, manifest entries,
+    * schema metadata and PHYSICAL fields
+    * ([[VersionedTable.snapshotFields]]).
     */
-  private case class Snapshot(
-      files: Seq[String],
-      cmap: Seq[(String, String)],
-      drops: Seq[String],
-      fields: Seq[StructField],
-      partNames: Seq[String],
-      version: Int) {
-    def partSchema: StructType = {
-      val byName = fields.map(f => f.name -> f).toMap
-      StructType(partNames.flatMap(byName.get))
+  private case class Snapshot(version: Int, entries: Seq[String],
+                              cmap: Seq[(String, String)],
+                              drops: Seq[String],
+                              fields: Seq[StructField])
+
+  private def snapshot(spark: SparkSession, path: String,
+                       version: Int): Snapshot = {
+    val fsys = VersionedTable.fs(spark, path)
+    val v = if (version >= 0) version else {
+      val vs = VersionedTable.manifestNumbers(fsys, path)
+      require(vs.nonEmpty, s"no versioned table at $path")
+      vs.max
     }
+    val entries = VersionedTable.resolveFiles(fsys, path, v)
+    val (cmap, drops) = VersionedTable.schemaMetaAt(fsys, path, v)
+    Snapshot(v, entries, cmap, drops,
+      VersionedTable.snapshotFields(spark, path, entries))
   }
 
   /** The snapshot's read types by PHYSICAL field name — what the bucket
     * claim's type gate compares the per-dir written types against
-    * (DESCRIBE DETAIL's status walk; the scan paths read them off their
-    * own resolved snapshot).
+    * (DESCRIBE DETAIL's status walk, the compaction convergence check).
     */
   private[catalog] def fieldTypesAt(spark: SparkSession, path: String,
                                     version: Int)
       : Map[String, org.apache.spark.sql.types.DataType] =
-    resolveSnapshot(spark, path, version).fields
+    snapshot(spark, path, version).fields
       .map(f => f.name -> f.dataType).toMap
 
-  private def resolveSnapshot(spark: SparkSession, path: String,
-                              version: Int): Snapshot = {
-    val fsys = VersionedTable.fs(spark, path)
-    val v = if (version >= 0) version else {
-      val vs = VersionedTable.manifestNumbers(fsys, path)
-      require(vs.nonEmpty, s"no versioned table at $path")
-      vs.max
+  /** One relation's entries: commit dirs sharing one hive layout (the
+    * `k=v` segment names between commit dir and file name) and one
+    * PHYSICAL dir schema (partition fields included, typed as the dir's
+    * partition inference typed them), so the parquet reader never reads
+    * a file under a type it would have to convert.
+    */
+  private case class Group(layout: Seq[String], schema: StructType,
+                           entries: Seq[String]) {
+    def partSchema: StructType = StructType(layout.map(n => schema(n)))
+  }
+
+  private def groupsOf(spark: SparkSession, path: String,
+                       entries: Seq[String]): Seq[Group] = {
+    def layoutOf(e: String): Seq[String] = VersionedTable.baseOf(e)
+      .split("/").toSeq.drop(1).dropRight(1).map(_.takeWhile(_ != '='))
+    val dirs = VersionedTable.dirGroups(spark, path, entries)
+      .map { case (sch, es) =>
+        (layoutOf(es.head), StructType(sch.map(_.copy(nullable = true)))) -> es
+      }
+    dirs.map(_._1).distinct.map { k =>
+      Group(k._1, k._2, dirs.collect { case (`k`, es) => es }.flatten)
     }
-    val files = VersionedTable.resolveFiles(fsys, path, v)
-    require(files.nonEmpty,
-      s"version $v of $path has no files — use VersionedTable.read " +
-        "for empty snapshots")
-    val (cmap, drops) = VersionedTable.schemaMetaAt(fsys, path, v)
-    val fields = VersionedTable.snapshotFields(spark, path, files)
-    // partition columns come from the path layout (`k=v` segments
-    // between commit dir and file name), typed by the scan inference.
-    // A table legally mixing partitioned and unpartitioned commits
-    // (append with partitionCols = Nil after a partitioned commit) has
-    // no single hive layout — fail with a clear error up front instead
-    // of a per-file sys.error at planning time.
-    def layoutOf(f: String): Seq[String] = f.split("/").drop(1)
-      .dropRight(1).map(_.takeWhile(_ != '=')).toSeq
-    val partNames = layoutOf(files.head)
-    files.find(f => layoutOf(f) != partNames).foreach { f =>
-      throw new IllegalStateException(
-        s"mixed partition layout at $path version $v: " +
-          s"'${files.head}' lays out as ${partNames.mkString("[", ",", "]")} " +
-          s"but '$f' as ${layoutOf(f).mkString("[", ",", "]")} — the " +
-          "indexed scan needs one hive layout per snapshot; read mixed " +
-          "tables through VersionedTable.read, or OPTIMIZE onto one " +
-          "layout first")
+  }
+
+  /** THE relation constructor: one `HadoopFsRelation` over a
+    * [[GraftFileIndex]] of `entries` (base files; deletion vectors are
+    * the caller's). `live` (logical → physical renames) is empty for a
+    * PHYSICAL relation; otherwise `dataSchema` is logical-named and the
+    * [[GraftParquetFileFormat]] translates at reader-build time.
+    */
+  private def relation(spark: SparkSession, path: String, version: Int,
+                       entries: Seq[String], partSchema: StructType,
+                       dataSchema: StructType,
+                       spec: Option[org.apache.spark.sql.catalyst.catalog.BucketSpec],
+                       live: Seq[(String, String)])
+      : (HadoopFsRelation, GraftFileIndex) = {
+    val idx = new GraftFileIndex(spark, path,
+      entries.map(VersionedTable.baseOf), partSchema, nameMap = live.toMap,
+      bucketPrune = spec, snapshotVersion = version)
+    val fmt =
+      if (live.isEmpty) new ParquetFileFormat
+      else new GraftParquetFileFormat(live)
+    (HadoopFsRelation(idx, partSchema, dataSchema, spec, fmt,
+      Map.empty)(spark), idx)
+  }
+
+  /** THE read of an explicit set of a versioned table's manifest entries
+    * (distinct base files — a snapshot, or a change window's files):
+    *
+    *  - the entries split into [[Group]]s, each ONE relation over a
+    *    [[GraftFileIndex]] with that group's own partition and data
+    *    schema — in the steady state (one layout, one schema) exactly
+    *    one relation, and only then, for a snapshot read (`version` >=
+    *    0), with the table's bucket claim;
+    *  - deletion vectors apply per group through `_metadata`, the one
+    *    place a vector is applied to a scan;
+    *  - `tag` exposes each row's identity, `__gfile` (the
+    *    data-root-relative file path in the scan's encoded form,
+    *    [[VersionedTable.scanRel]]) and `__gpos` (the row index within
+    *    that file) — the deletion-vector write path's and the change
+    *    feed's scan;
+    *  - each group is cast to `fields` (PHYSICAL; the snapshot's
+    *    [[VersionedTable.snapshotFields]] or a change reader's types)
+    *    minus the dropped storage, a group lacking a field reading it
+    *    null; a group already in that shape plans with no projection;
+    *  - the groups union by name, then renames translate to LOGICAL
+    *    names.
+    *
+    * Catalyst-pushed predicates prune each group's files by hive
+    * partition values at planning time, and a snapshot read's also
+    * through the stats sidecars (an explicit entry set, `version` -1, is
+    * already its caller's pruned choice — [[GraftFileIndex]]). Returns
+    * the frame and its indexes (empty for no entries, which read as the
+    * empty frame).
+    */
+  private[catalog] def plan(spark: SparkSession, path: String,
+                            entries: Seq[String],
+                            cmap: Seq[(String, String)], drops: Seq[String],
+                            fields: Seq[StructField], tag: Boolean,
+                            version: Int): (DataFrame, Seq[GraftFileIndex]) = {
+    import org.apache.spark.sql.functions.{col, lit}
+    if (entries.isEmpty) return (spark.emptyDataFrame, Nil)
+    val groups = groupsOf(spark, path, entries)
+    val target = fields.filterNot(f => drops.contains(f.name))
+      .map(f => f.name -> f.dataType)
+    lazy val keep = VersionedTable.dvKeep(spark,
+      VersionedTable.dvPositions(spark, path, entries))
+    def q(n: String) = col("`" + n.replace("`", "``") + "`")
+    val tags = if (tag) Seq(col("__gfile"), col("__gpos")) else Nil
+    val built = groups.map { g =>
+      val dataSchema = StructType(g.schema.filterNot(f =>
+        g.layout.contains(f.name) || drops.contains(f.name)))
+      // an explicit entry set (a verb's rewrite input, version -1)
+      // claims no buckets: under a claim Spark drops the bucket-arranging
+      // write's repartition onto the scan's partitioning, then un-buckets
+      // the scan (no operator needs it), and rows land under the wrong
+      // bucket ids
+      val spec =
+        if (groups.size > 1 || version < 0) None
+        else VersionedTable.bucketSpecFor(spark, path, g.entries,
+          Some(fields.map(f => f.name -> f.dataType).toMap))
+      val (rel, idx) = relation(spark, path, version, g.entries,
+        g.partSchema, dataSchema, spec, Nil)
+      val scan = spark.baseRelationToDataFrame(rel)
+      val dv = VersionedTable.hasDv(g.entries)
+      val kept =
+        if (tag) {
+          val t = scan
+            .withColumn("__gfile",
+              VersionedTable.scanRel(col("_metadata.file_path")))
+            .withColumn("__gpos", col("_metadata.row_index"))
+          if (dv) t.filter(keep(col("__gfile"), col("__gpos"))) else t
+        } else if (dv)
+          scan.filter(keep(col("_metadata.file_path"),
+            col("_metadata.row_index")))
+        else scan
+      val shaped =
+        if ((dataSchema ++ g.partSchema).map(f => f.name -> f.dataType)
+            == target) kept
+        else kept.select(target.map { case (n, t) =>
+          (if (dataSchema.fieldNames.contains(n) ||
+               g.layout.contains(n)) q(n).cast(t)
+           else lit(null).cast(t)).as(n)
+        } ++ tags: _*)
+      (shaped, idx)
     }
-    Snapshot(files, cmap, drops, fields, partNames, v)
+    (VersionedTable.toLogical(built.map(_._1).reduce(_ unionByName _), cmap),
+      built.map(_._2))
   }
 
   /** [[read]] plus the planted index, for callers that assert pruning
-    * (specs, oracle rows) through its `lastListedCount` seam. A
-    * version carrying deletion vectors gets a row-position Filter
-    * between the scan and the logical rename — a plain single-source
-    * Filter, so pushdown, pruning and `input_file_name()` above all
-    * survive; a DV-free version plans exactly as before.
+    * (specs, oracle rows) through its `lastListedCount` seam — summed
+    * over the relations of a snapshot that plans as several.
     */
   def readWithIndex(spark: SparkSession, path: String,
                     version: Int = -1): (DataFrame, GraftFileIndex) = {
-    val (rel, idx, snap, entries) = snapshotHfs(spark, path, version)
-    (VersionedTable.toLogical(
-      VersionedTable.applyDvFor(spark, path, entries,
-        spark.baseRelationToDataFrame(rel)),
-      snap.cmap), idx)
+    val s = snapshot(spark, path, version)
+    require(s.entries.nonEmpty,
+      s"version ${s.version} of $path has no files, so no index")
+    val (df, idxs) = plan(spark, path, s.entries, s.cmap, s.drops,
+      s.fields, tag = false, s.version)
+    idxs.head.peers = idxs.tail
+    (df, idxs.head)
   }
 
-  /** Shared relation assembly for the indexed snapshot — ONE
-    * construction (snapshot resolve, partition/data schema split,
-    * pruned file index, HadoopFsRelation) behind both the read path
-    * ([[readWithIndex]]) and the tagged write-path scan
-    * ([[readTagged]]), so schema and index resolution can never
-    * diverge between them. `onlyBases` subsets the file index at
-    * PLANNING time (the DV merge branch's touched-file scan).
-    */
-  private def snapshotHfs(spark: SparkSession, path: String,
-                          version: Int,
-                          onlyBases: Option[Set[String]] = None)
-      : (HadoopFsRelation, GraftFileIndex, Snapshot, Seq[String]) = {
-    val snap = resolveSnapshot(spark, path, version)
-    val entries = onlyBases match {
-      case Some(bs) => snap.files.filter(e => bs(VersionedTable.baseOf(e)))
-      case None => snap.files
-    }
-    val partSchema = snap.partSchema
-    val dataSchema = StructType(snap.fields.filterNot(f =>
-      snap.partNames.contains(f.name) || snap.drops.contains(f.name)))
-    // a declared-bucketed snapshot whose files all carry in-range
-    // bucket ids (arranged under the declared columns, count AND the
-    // snapshot's read types, per the dir sidecars) claims
-    // HashPartitioning(cols, n): co-bucketed joins then plan with NO
-    // exchange on either side — plus the declared SortOrder when every
-    // dir proves the sort
-    val spec = VersionedTable.bucketSpecFor(spark, path, entries,
-      Some(snap.fields.map(f => f.name -> f.dataType).toMap))
-    val idx = new GraftFileIndex(spark, path,
-      entries.map(VersionedTable.baseOf), partSchema,
-      bucketPrune = spec, snapshotVersion = snap.version)
-    val rel = HadoopFsRelation(idx, partSchema, dataSchema, spec,
-      new ParquetFileFormat, Map.empty)(spark)
-    (rel, idx, snap, entries)
-  }
-
-  /** [[readWithIndex]]'s frame with the scanned rows' identity exposed
-    * — `__gfile` (the data-root-relative file path in the scan's encoded
-    * form, [[VersionedTable.scanRel]]) and `__gpos` (the
-    * absolute row index within that file) — the deletion-vector write
-    * path's scan: positions are captured AT the source, before any
-    * projection or join could lose `_metadata`. Deletion vectors
-    * already present on the version are applied (an already-deleted
-    * row can never re-match).
+  /** The snapshot with each row's `__gfile`/`__gpos` identity ([[plan]]'s
+    * tag) — the deletion-vector write path's scan: positions are
+    * captured AT the source, before any projection or join could lose
+    * `_metadata`, and vectors already on the version apply (an
+    * already-deleted row can never re-match). `onlyBases` subsets the
+    * entries at PLANNING time (the DV merge branch's touched-file scan);
+    * the columns stay the whole snapshot's.
     */
   def readTagged(spark: SparkSession, path: String,
                  version: Int = -1,
                  onlyBases: Option[Set[String]] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val (rel, _, snap, entries) =
-      snapshotHfs(spark, path, version, onlyBases)
-    val tagged = spark.baseRelationToDataFrame(rel)
-      .withColumn("__gfile",
-        VersionedTable.scanRel(col("_metadata.file_path")))
-      .withColumn("__gpos", col("_metadata.row_index"))
-    val dv = VersionedTable.dvPositionsOf(spark, path, entries)
-    val kept =
-      if (dv.isEmpty) tagged
-      else tagged.filter(VersionedTable.dvKeep(spark, dv)(
-        col("__gfile"), col("__gpos")))
-    VersionedTable.toLogical(kept, snap.cmap)
+    val s = snapshot(spark, path, version)
+    val entries = onlyBases.fold(s.entries)(bs =>
+      s.entries.filter(e => bs(VersionedTable.baseOf(e))))
+    plan(spark, path, entries, s.cmap, s.drops, s.fields, tag = true,
+      s.version)._1
   }
 
-  /** The snapshot as a DataFrame with deletion vectors applied — what
-    * SQL reads and the `graft` format serve for a DV-carrying version
-    * (a DV-free version should serve [[snapshotRelation]] directly:
-    * same plan, no wrapper).
+  /** The snapshot as a DataFrame with deletion vectors applied — the
+    * same frame as [[read]].
     */
   def snapshotDataFrame(spark: SparkSession, path: String,
-                        version: Int = -1): DataFrame = {
-    // pin the head ONCE: the relation and the DV map must describe the
-    // same version (a commit racing two independent "latest" resolves
-    // could otherwise pair them across versions)
-    val fsys = VersionedTable.fs(spark, path)
-    val v = if (version >= 0) version else {
-      val vs = VersionedTable.manifestNumbers(fsys, path)
-      require(vs.nonEmpty, s"no versioned table at $path")
-      vs.max
-    }
-    val (rel, _) = snapshotRelation(spark, path, v)
-    VersionedTable.applyDvFor(spark, path,
-      VersionedTable.resolveFiles(fsys, path, v),
-      spark.baseRelationToDataFrame(rel))
-  }
+                        version: Int = -1): DataFrame =
+    read(spark, path, version)
 
   /** The snapshot as a `BaseRelation` whose OUTPUT schema is already
-    * LOGICAL — what `spark.read.format("graft")` must hand Spark, since
-    * a DSv1 relation cannot wrap itself in the rename `select` that
-    * [[readWithIndex]] applies on top. On a never-renamed table this is
-    * the stock parquet relation; with live renames the relation's
+    * LOGICAL — what `spark.read.format("graft")` hands Spark, since a
+    * DSv1 relation cannot wrap itself in the rename `select` that
+    * [[read]] applies on top. On a never-renamed table this is the stock
+    * parquet relation; with live renames the relation's
     * [[GraftParquetFileFormat]] translates the required schema and
     * pushed filters back to PHYSICAL names at reader-build time
     * (`InternalRow`s are positional, so renaming a field is free), and
     * the file index translates pushed predicates before consulting the
     * stats sidecars — transparent skipping is preserved either way.
+    * Deletion vectors are NOT applied, and the snapshot must plan as ONE
+    * relation: [[servedFrame]] picks this or [[read]].
     */
   def snapshotRelation(spark: SparkSession, path: String,
                        version: Int = -1)
       : (HadoopFsRelation, GraftFileIndex) = {
-    val snap = resolveSnapshot(spark, path, version)
-    val partSchema = snap.partSchema
-    val live = snap.cmap.filter { case (l, p) => l != p }
+    val s = snapshot(spark, path, version)
+    groupsOf(spark, path, s.entries) match {
+      case Seq(g) => logicalRelation(spark, path, s, g)
+      case gs => throw new IllegalStateException(
+        s"version ${s.version} of $path plans as ${gs.size} relations " +
+          "(commits with different layouts or schemas); read it as a " +
+          "DataFrame instead")
+    }
+  }
+
+  private def logicalRelation(spark: SparkSession, path: String,
+                              s: Snapshot, g: Group)
+      : (HadoopFsRelation, GraftFileIndex) = {
+    val live = s.cmap.filter { case (l, p) => l != p }
     val logicalOf = live.map { case (l, p) => p -> l }.toMap
-    val dataSchema = StructType(snap.fields
-      .filterNot(f => snap.partNames.contains(f.name) ||
-        snap.drops.contains(f.name))
+    val dataSchema = StructType(g.schema
+      .filterNot(f => g.layout.contains(f.name) || s.drops.contains(f.name))
       .map(f => f.copy(name = logicalOf.getOrElse(f.name, f.name))))
-    val fmt =
-      if (live.isEmpty) new ParquetFileFormat
-      else new GraftParquetFileFormat(live)
     // bucket claim only when NO bucket column is renamed (checked on
     // BOTH map sides: the declaration may hold the pre- or post-rename
     // name): the spec must name this relation's (logical) output
     // columns, and the v1 contract is bucket-column renames drop the
     // layout claim; a rename touching only a SORT column drops just
     // the ordering claim
-    val spec = VersionedTable.bucketSpecFor(spark, path, snap.files,
-        Some(snap.fields.map(f => f.name -> f.dataType).toMap))
-      .filterNot(s => live.exists(p =>
-        s.bucketColumnNames.contains(p._1) ||
-          s.bucketColumnNames.contains(p._2)))
-      .map(s => if (live.exists(p => s.sortColumnNames.contains(p._1) ||
-          s.sortColumnNames.contains(p._2)))
-        s.copy(sortColumnNames = Nil) else s)
-    val idx = new GraftFileIndex(spark, path,
-      snap.files.map(VersionedTable.baseOf), partSchema,
-      nameMap = live.toMap, bucketPrune = spec,
-      snapshotVersion = snap.version)
-    (HadoopFsRelation(idx, partSchema, dataSchema, spec, fmt,
-      Map.empty)(spark), idx)
+    val spec = VersionedTable.bucketSpecFor(spark, path, s.entries,
+        Some(s.fields.map(f => f.name -> f.dataType).toMap))
+      .filterNot(b => live.exists(p =>
+        b.bucketColumnNames.contains(p._1) ||
+          b.bucketColumnNames.contains(p._2)))
+      .map(b => if (live.exists(p => b.sortColumnNames.contains(p._1) ||
+          b.sortColumnNames.contains(p._2)))
+        b.copy(sortColumnNames = Nil) else b)
+    relation(spark, path, s.version, g.entries, g.partSchema, dataSchema,
+      spec, live)
   }
 
-  /** Read a versioned-table snapshot through the manifest-backed
-    * [[GraftFileIndex]]: Catalyst-pushed filters prune files through
-    * the stats sidecars and hive partition values at planning time —
-    * `readWhere`-grade skipping for free on every downstream
-    * `.filter`/WHERE/join bound. Column mapping (rename/drop) and
-    * schema evolution resolve exactly as [[VersionedTable.read]].
+  /** THE read plan SQL and the `graft` format serve for a snapshot: the
+    * bare logical relation ([[snapshotRelation]]) when the snapshot is
+    * one relation without deletion vectors, else [[read]]'s frame.
     */
-  def read(spark: SparkSession, path: String, version: Int = -1): DataFrame =
-    readWithIndex(spark, path, version)._1
-}
+  private[graft] def servedFrame(spark: SparkSession, path: String,
+                                 version: Int = -1): DataFrame = {
+    val s = snapshot(spark, path, version)
+    groupsOf(spark, path, s.entries) match {
+      case Seq(g) if !VersionedTable.hasDv(s.entries) =>
+        spark.baseRelationToDataFrame(logicalRelation(spark, path, s, g)._1)
+      case _ =>
+        plan(spark, path, s.entries, s.cmap, s.drops, s.fields,
+          tag = false, s.version)._1
+    }
+  }
 
+  /** Read a versioned-table snapshot (the latest version, or an exact
+    * historical one) through [[plan]]: Catalyst-pushed filters prune
+    * files through the stats sidecars and hive partition values at
+    * planning time — `readWhere`-grade skipping for free on every
+    * downstream `.filter`/WHERE/join bound. Column mapping (rename/drop)
+    * and schema evolution resolve by [[VersionedTable.snapshotFields]].
+    * An empty snapshot reads as the empty frame.
+    */
+  def read(spark: SparkSession, path: String, version: Int = -1): DataFrame = {
+    val s = snapshot(spark, path, version)
+    plan(spark, path, s.entries, s.cmap, s.drops, s.fields, tag = false,
+      s.version)._1
+  }
+}
 /** [[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat]]
   * that resolves a versioned table's LOGICAL column names to the
   * PHYSICAL names its parquet files store (a rename is manifest

@@ -912,7 +912,8 @@ object VersionedTable extends org.apache.spark.internal.Logging {
         if (cur.isEmpty) return
         val (cmap, drops) = schemaMetaAt(fsys, path, vs.max)
         evolutionGate(what, evolve,
-          readFiles(spark, path, cur, cmap, drops).columns, df.columns)
+          logicalFields(spark, path, cur, cmap, drops).map(_.name),
+          df.columns)
     }
   }
 
@@ -1072,7 +1073,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
         if (cur.nonEmpty)
           evolutionGate("merge", evolveSchema,
             declaredColsAt(fsys, path, prevVs.max).getOrElse(
-              readFiles(spark, path, cur, cmap, drops).columns.toSeq),
+              logicalFields(spark, path, cur, cmap, drops).map(_.name)),
             df.columns)
         // NO distinct: duplicate keys are the caller's bug by contract,
         // and the semi/anti joins below ignore duplicate build rows —
@@ -1090,7 +1091,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
             val merged =
               if (touched.isEmpty) df
               else keySurvivors(
-                  readFiles(spark, path, cur.filter(touched), cmap, drops),
+                  readEntries(spark, path, cur.filter(touched), cmap, drops),
                   keyCol, keys, inList)
                 .unionByName(df, allowMissingColumns = evolveSchema)
             rewriteCommit(merged, path, partitionCols, "merge",
@@ -1273,7 +1274,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
         if (cur.nonEmpty && (starClause || evolveSchema))
           evolutionGate("merge_when", evolveSchema,
             declaredColsAt(fsys, path, prevVs.max).getOrElse(
-              readFiles(spark, path, cur, cmap, drops).columns.toSeq),
+              logicalFields(spark, path, cur, cmap, drops).map(_.name)),
             source.columns,
             allowSlim = true)
         // materialize the source ONCE (r19, the Delta-style merge-source
@@ -1377,7 +1378,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     // footers, dir-schema-cached); an empty table inserts source-shaped
     val tblSchema: Seq[(String, org.apache.spark.sql.types.DataType)] =
       if (cur.isEmpty) Seq.empty
-      else readFiles(spark, path, cur, cmap, drops).schema.fields.toSeq
+      else logicalFields(spark, path, cur, cmap, drops)
         .map(f => f.name -> f.dataType)
     val tblCols = tblSchema.map(_._1)
     // under evolution (opt-in), brand-new source columns join the
@@ -1404,7 +1405,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
 
     val tgtTouched: Option[DataFrame] =
       if (touched.isEmpty) None
-      else Some(readFiles(spark, path, cur.filter(touched), cmap, drops))
+      else Some(readEntries(spark, path, cur.filter(touched), cmap, drops))
 
     val survivors: Option[DataFrame] =
       tgtTouched.map { tgt =>
@@ -1711,7 +1712,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
             prevVs.max // no match
           case Some((touched, bounds, inList)) =>
             rewriteCommit(keySurvivors(
-                readFiles(spark, path, cur.filter(touched), cmap, drops),
+                readEntries(spark, path, cur.filter(touched), cmap, drops),
                 keyCol, keys, inList),
               path, partitionCols, "delete_rows", writerOptions,
               FileSet(prevVs.max, cur, touched,
@@ -1777,7 +1778,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
             val touched = filesMatching(spark, path, prevVs.max, cur, pred)
             if (touched.isEmpty) prevVs.max
             else rewriteCommit(
-              readFiles(spark, path, cur.filter(touched), cmap, drops)
+              readEntries(spark, path, cur.filter(touched), cmap, drops)
                 .filter(!coalesce(expr(pred), lit(false))),
               path, partitionCols, "delete_where", writerOptions,
               FileSet(prevVs.max, cur, touched, None))
@@ -1932,7 +1933,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
         }
         if (touched.isEmpty) prevVs.max
         else {
-          val tgt = readFiles(spark, path, cur.filter(touched), cmap, drops)
+          val tgt = readEntries(spark, path, cur.filter(touched), cmap, drops)
           val assign = set.toMap
           require(set.forall(a => tgt.columns.contains(a._1)),
             "UPDATE assigns to non-table column(s): " +
@@ -2064,7 +2065,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
             .foreach(v => return v)
         val survivors =
           if (touched.isEmpty || partitionOnly) df
-          else readFiles(spark, path, cur.filter(touched), cmap, drops)
+          else readEntries(spark, path, cur.filter(touched), cmap, drops)
             .filter(!coalesce(expr(predicate), lit(false)))
             .unionByName(df, allowMissingColumns = true)
         rewriteCommit(survivors, path, layout, "replace_where",
@@ -2160,7 +2161,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       val candidates = skipFiles(fs(spark, path), path, cur, keyCol, lo, hi)
       if (candidates.isEmpty) Some((Set.empty, (lo, hi), inList))
       else {
-        val scan = readFiles(spark, path, candidates)
+        val scan = readEntries(spark, path, candidates)
           .select(col(keyCol), input_file_name().as("__f"))
           .filter(col(keyCol).between(lit(lo), lit(hi)))
         Some((entriesOf(candidates, countFiles(
@@ -2359,34 +2360,17 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       }
     }
 
-  /** Read a snapshot: the latest version, or an exact historical one.
-    * The scan is planned over the manifest's explicit file list with
-    * `data/` as basePath, so hive partition columns come back AND
-    * partition pruning on them still works (PartitionFilters in the
-    * plan) — time travel costs no pruning.
+  /** Read a snapshot: the latest version, or an exact historical one,
+    * planned over the manifest's explicit file list through the
+    * manifest-backed [[GraftFileIndex]] ([[GraftScan.read]]): hive
+    * partition columns come back typed, and every Catalyst-pushed
+    * predicate on the result prunes files through the hive partition
+    * values and the stats sidecars at planning time — time travel costs
+    * no pruning. Deletion vectors apply; column mapping (rename/drop)
+    * and schema evolution resolve by [[snapshotFields]].
     */
   def read(spark: SparkSession, path: String,
-           version: Int = -1): DataFrame = {
-    val fsys = fs(spark, path)
-    val v = if (version >= 0) version else {
-      val vs = versions(spark, path)
-      require(vs.nonEmpty, s"no versioned table at $path")
-      vs.max
-    }
-    val (cmap, drops) = schemaMetaAt(fsys, path, v)
-    readFiles(spark, path, resolveFiles(fsys, path, v), cmap, drops)
-  }
-
-  /** [[read]] through the manifest-backed [[GraftFileIndex]]: every
-    * Catalyst-pushed predicate on the result prunes files through the
-    * stats sidecars and hive partition values at planning time —
-    * `readWhere`-grade data skipping transparently, on any filter
-    * shape, without naming the explicit APIs. Prefer this for query
-    * workloads; [[read]] remains the schema-inference-exact path the
-    * mutating verbs plan against.
-    */
-  def readIndexed(spark: SparkSession, path: String,
-                  version: Int = -1): DataFrame =
+           version: Int = -1): DataFrame =
     GraftScan.read(spark, path, version)
 
   /** The table's hive partition columns (LOGICAL names, layout order),
@@ -2486,8 +2470,8 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     val (newLive, _) = walkChanges(fsys, path, sinceVersion, to)
     val (cmap, drops) = schemaMetaAt(fsys, path, to)
     if (newLive.isEmpty) spark.emptyDataFrame
-    else readFiles(spark, path, newLive, cmap, drops,
-      changeTypes(spark, fsys, path, to, newLive))
+    else readEntries(spark, path, newLive, cmap, drops,
+      types = changeTypes(spark, fsys, path, to, newLive))
   }
 
   /** The commit ops that are DATA-IDENTICAL by construction — the
@@ -2643,7 +2627,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       changeTypes(spark, fsys, path, to, added ++ removed ++ trans.map(_._1))
     def tag(files: Seq[String], t: String): Option[DataFrame] =
       if (files.isEmpty) None
-      else Some(readFiles(spark, path, files, cmap, drops, types)
+      else Some(readEntries(spark, path, files, cmap, drops, types)
         .withColumn("_change_type", lit(t)))
     (tag(added, "insert").toSeq ++ tag(removed, "delete") ++
       trans.flatMap(dvTransitionRows(spark, path, _, cmap, drops, types)))
@@ -2674,25 +2658,19 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   }
 
   /** The rows of ONE base data file at the given positions — the
-    * deletion-vector CDC slice: one single-file scan filtered by row
-    * index, cast to the window's [[changeTypes]] and logical-translated
-    * like any snapshot read. Partition columns materialize from the
-    * file's own path (basePath read).
+    * deletion-vector CDC slice: the file's tagged scan filtered by row
+    * index, cast to the window's [[changeTypes]].
     */
   private def dvSliceRows(spark: SparkSession, path: String,
                           baseFile: String, pos: Array[Long],
                           cmap: Seq[(String, String)],
                           drops: Seq[String],
                           types: ChangeTypes): DataFrame = {
-    val dir = baseFile.split("/").head
-    val g = readDirGroup(spark, path, dir, Seq(baseFile))
     val bc = spark.sparkContext.broadcast(pos)
     val hit = udf((idx: Long) =>
       java.util.Arrays.binarySearch(bc.value, idx) >= 0)
-    val sliced = g.filter(hit(col("_metadata.row_index")))
-      .select(g.columns.toSeq.map(typedCol(_, types)): _*)
-    toLogical(drops.foldLeft(sliced) { (d, p) =>
-      if (d.columns.contains(p)) d.drop(p) else d }, cmap)
+    readEntries(spark, path, Seq(baseFile), cmap, drops, types, tag = true)
+      .filter(hit(col("__gpos"))).drop("__gfile", "__gpos")
   }
 
   /** The CHANGE FEED over a version window `[startVersion, endVersion]`
@@ -2708,12 +2686,11 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * (a poller reading consecutive windows hits those legitimately).
     *
     * Scale shape: ONE file-set diff walked incrementally across the
-    * window ([[versionEvents]]), then one scan per SCHEMA EPOCH —
+    * window ([[versionEvents]]), then one read per SCHEMA EPOCH —
     * versions sharing a column mapping — with the per-file (version,
     * change, ts) attribution joined on via a broadcast of the
-    * metadata-sized event list. Plan width is O(schema epochs) (1 for
-    * the common no-rename window), never O(versions); a 10 000-commit
-    * backfill reads each involved file exactly once per epoch.
+    * metadata-sized event list. A 10 000-commit backfill reads each
+    * involved base file exactly once per epoch.
     */
   def changeFeed(spark: SparkSession, path: String, startVersion: Int,
                  endVersion: Int = -1): DataFrame = {
@@ -2776,15 +2753,13 @@ object VersionedTable extends org.apache.spark.internal.Logging {
         .withColumn("_commit_ts_millis", lit(null).cast("long")))
   }
 
-  /** One schema epoch of [[changeFeed]] as ONE scan: the epoch's files
-    * read as an explicit list under one explicit PHYSICAL schema, the
-    * epoch files' [[snapshotFields]] (a per-commit-dir union of scans,
-    * [[readFiles]]'s shape, would put the plan width back at
-    * O(versions) for an append-per-commit window), then cast to the
-    * window's [[changeTypes]]. A file missing a later-appended column
-    * reads null (union-by-name semantics); hive partition values live
-    * only in dir names, so they travel WITH the metadata-sized event
-    * rows and rejoin on the file key.
+  /** One schema epoch of [[changeFeed]]: ONE tagged read of the
+    * epoch's distinct base files ([[readEntries]], cast to the
+    * window's [[changeTypes]]), stamped by a join on the file key with
+    * the metadata-sized event rows. An event of a vector-carrying entry
+    * (a DV'd file added or fully removed inside the window) keeps only
+    * the rows its OWN vector leaves live, judged per event row, so two
+    * states of one base file never conflate.
     */
   private def changeFeedEpoch(spark: SparkSession, path: String,
                               cmap: Seq[(String, String)],
@@ -2792,55 +2767,24 @@ object VersionedTable extends org.apache.spark.internal.Logging {
                               types: ChangeTypes,
                               evs: Seq[(String, String, Int, Long)]): DataFrame = {
     import org.apache.spark.sql.types._
-    val rels = evs.map(_._1).distinct
-    val fields = snapshotFields(spark, path, rels)
-    val partPhys = rels.flatMap(partitionValues(_).map(_._1)).distinct
-    // partition columns stay in the read schema: a file of a flat commit
-    // in a mixed-layout window stores them as data (a partitioned file
-    // reads them null and takes its dir value below)
-    val physSchema = StructType(fields.filterNot(f => drops.contains(f.name)))
-    // the join key is the file's scan-reported name in the scan's own
-    // form ([[scanRel]] / [[scanForm]]). DV'd entries (a vector-carrying
-    // file added or fully removed inside the window) read their base
-    // file with the vector applied, one small per-entry relation — plan
-    // width O(DV'd entries in the window), keyed by the ENTRY, so two
-    // states of one base file never conflate.
-    val (dvRels, plainRels) = rels.partition(e => dvSplit(e)._2.isDefined)
-    val plainScan =
-      if (plainRels.isEmpty) None
-      else Some(spark.read.schema(physSchema)
-        .parquet(plainRels.map(f => s"$path/data/$f"): _*)
-        .withColumn("__rel", scanRel(input_file_name())))
-    val dvScans = dvRels.map { e =>
-      applyDv(spark.read.schema(physSchema).parquet(s"$path/data/${baseOf(e)}"),
-        dvPositions(spark, path, Seq(e)))
-        .withColumn("__rel", lit(scanForm(e)))
-    }
-    val scan = (plainScan.toSeq ++ dvScans).reduce(_ unionByName _)
-    val evSchema = StructType(
-      Seq(StructField("__rel", StringType, nullable = false),
-        StructField("_change_type", StringType, nullable = false),
-        StructField("_commit_version", IntegerType, nullable = false),
-        StructField("_commit_ts_millis", LongType, nullable = false)) ++
-        partPhys.map(p => StructField(s"__pv_$p", StringType)))
-    val evRows = evs.map { case (rel, ch, v, ts) =>
-      val pvals = partitionValues(rel).toMap
-      org.apache.spark.sql.Row.fromSeq(Seq(scanForm(rel), ch, v, ts) ++
-        partPhys.map(pvals.getOrElse(_, null)))
+    val scan = readEntries(spark, path, evs.map(e => baseOf(e._1)).distinct,
+      cmap, drops, types, tag = true)
+    val dvOf = evs.map(_._1).distinct.filter(e => dvSplit(e)._2.isDefined)
+      .map(e => e -> dvPositions(spark, path, Seq(e))
+        .getOrElse(baseOf(e), Array.empty[Long])).toMap
+    val evSchema = StructType(Seq("__gfile", "__gentry", "_change_type")
+        .map(StructField(_, StringType, nullable = false)) ++
+      Seq(StructField("_commit_version", IntegerType, nullable = false),
+        StructField("_commit_ts_millis", LongType, nullable = false)))
+    val evRows = evs.map { case (e, ch, v, ts) =>
+      org.apache.spark.sql.Row(scanForm(baseOf(e)), scanForm(e), ch, v, ts)
     }
     import scala.jdk.CollectionConverters._
-    val evDf = spark.createDataFrame(evRows.asJava, evSchema)
-    val joined = scan.join(broadcast(evDf), Seq("__rel"))
-    val withParts = partPhys.foldLeft(joined) { (df, p) =>
-      val tpe = types.getOrElse(p, StringType)
-      df.withColumn(p, coalesce(col(p).cast(tpe), col(s"__pv_$p").cast(tpe)))
-        .drop(s"__pv_$p")
-    }
-    toLogical(withParts.select(
-      physSchema.fieldNames.toSeq.filterNot(partPhys.contains)
-        .map(typedCol(_, types)) ++ partPhys.map(col) ++
-        Seq("_change_type", "_commit_version", "_commit_ts_millis").map(col): _*),
-      cmap)
+    val joined = scan.join(
+      broadcast(spark.createDataFrame(evRows.asJava, evSchema)), "__gfile")
+    (if (dvOf.isEmpty) joined
+     else joined.filter(dvKeep(spark, dvOf)(col("__gentry"), col("__gpos"))))
+      .drop("__gfile", "__gentry", "__gpos")
   }
 
   /** How many files the window `(sinceVersion, toVersion]` REMOVED —
@@ -2872,11 +2816,10 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   /** Per-commit-dir PHYSICAL schema cache. A commit dir is write-once
     * (every commit lands under a fresh nonce-named dir; nothing ever
     * adds files to an existing one), so its parquet schema is immutable
-    * and one inference per dir per JVM suffices — every later
-    * [[readFiles]] group skips the footer read by passing the known
-    * schema to the reader, and [[snapshotFields]] reads it without
-    * planning a scan at all. A FULL-dir inference is keyed by the dir
-    * and serves every subset of it; a subset's (a dir a DML left partly
+    * and one inference per dir per JVM suffices — every later read
+    * ([[GraftScan]]) and [[snapshotFields]] take it from here without
+    * opening a footer. A FULL-dir inference is keyed by the dir and
+    * serves every subset of it; a subset's (a dir a DML left partly
     * live) is keyed by the dir plus a digest of exactly that subset
     * ([[subsetKey]]), so a partly-live dir infers once per live subset,
     * not once per read. First inference wins; like the first-seen type
@@ -2892,37 +2835,30 @@ object VersionedTable extends org.apache.spark.internal.Logging {
         size() > 2048
     }
 
-  /** One commit-dir group of an explicit file set (manifest entries —
-    * any `@dv=` suffix is stripped to the base data file here),
-    * schema-cached. Deletion vectors are NOT applied at this level —
-    * [[readFiles]] does, while `_metadata` is still resolvable.
+  /** The PHYSICAL schema of one commit dir's group of an explicit file
+    * set (manifest entries — any `@dv=` suffix is stripped to the base
+    * data file), partition columns typed by Spark's partition inference
+    * under the commit dir: from the cache, or by the one cold-dir
+    * inference (a schema-only plan, no data read), which seeds it.
     */
-  private def readDirGroup(spark: SparkSession, path: String,
-                           c: String,
-                           groupFiles: Seq[String]): DataFrame = {
+  private def dirSchema(spark: SparkSession, path: String, c: String,
+                        groupFiles: Seq[String])
+      : org.apache.spark.sql.types.StructType = {
     val base = s"$path/data/$c"
-    val paths = groupFiles.map(f => s"$path/data/${baseOf(f)}")
-    cachedDirSchema(path, c, groupFiles) match {
-      case Some(sch) =>
-        spark.read.schema(sch).option("basePath", base).parquet(paths: _*)
-      case None =>
-        val df = spark.read.option("basePath", base).parquet(paths: _*)
+    dirSchemaCache.synchronized(Option(dirSchemaCache.get(base))
+        .orElse(Option(dirSchemaCache.get(subsetKey(base, groupFiles)))))
+      .getOrElse {
+        val sch = spark.read.option("basePath", base)
+          .parquet(groupFiles.map(f => s"$path/data/${baseOf(f)}"): _*).schema
         // a subset's inference serves only that subset: its hive
         // partition TYPE inference can come out narrower than the whole
         // dir's (day=1 alone infers int; the dir may also hold day=x),
         // and a sticky narrow type would mis-parse the other values later
         val full = listFilesRec(fs(spark, path), base).size == groupFiles.size
         dirSchemaCache.synchronized(dirSchemaCache.put(
-          if (full) base else subsetKey(base, groupFiles), df.schema): Unit)
-        df
-    }
-  }
-
-  private def cachedDirSchema(path: String, c: String, files: Seq[String])
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val base = s"$path/data/$c"
-    dirSchemaCache.synchronized(Option(dirSchemaCache.get(base))
-      .orElse(Option(dirSchemaCache.get(subsetKey(base, files)))))
+          if (full) base else subsetKey(base, groupFiles), sch): Unit)
+        sch
+      }
   }
 
   /** The cache key of one subset of a commit dir: the dir plus a
@@ -2936,16 +2872,20 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     base + "#" + md.digest().map("%02x".format(_)).mkString
   }
 
-  /** An explicit file set's commit-dir groups, in COMMIT order (numeric:
-    * c-10 after c-2 — first-seen resolution follows commits, not
-    * lexicographic accident).
+  /** An explicit file set's commit-dir groups with each dir's PHYSICAL
+    * schema ([[dirSchema]]), in COMMIT order (numeric: c-10 after c-2 —
+    * first-seen resolution follows commits, not lexicographic accident).
     */
-  private def commitGroups(files: Seq[String]): Seq[(String, Seq[String])] =
+  private[catalog] def dirGroups(spark: SparkSession, path: String,
+                                 files: Seq[String])
+      : Seq[(org.apache.spark.sql.types.StructType, Seq[String])] =
     files.groupBy(_.split("/").head).toSeq
       .sortBy { case (d, _) => (dirSeq(d), d) }
+      .map { case (c, fsOfCommit) =>
+        dirSchema(spark, path, c, fsOfCommit) -> fsOfCommit }
 
-  /** THE snapshot schema of an explicit file set, one rule for [[read]],
-    * the indexed scan ([[GraftScan]]) and every change reader: the
+  /** THE snapshot schema of an explicit file set, one rule for [[read]]
+    * and every other [[GraftScan]] read, and every change reader: the
     * first-seen union of the commit dirs' PHYSICAL fields in commit
     * order — a column a commit lacks reads as null for its rows
     * (mergeSchema semantics) — with numeric types WIDENED across
@@ -2960,19 +2900,37 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   private[catalog] def snapshotFields(spark: SparkSession, path: String,
                                       files: Seq[String])
       : Seq[org.apache.spark.sql.types.StructField] =
-    unionFields(dirSchemas(spark, path, files))
+    unionFields(dirGroups(spark, path, files).map(_._1))
 
-  /** Each commit dir's PHYSICAL schema for an explicit file set, in
-    * commit order, from the dir-schema cache (a cold dir pays one
-    * inference and seeds it).
+  /** The LOGICAL fields of an explicit file set — what [[read]] of it
+    * would show: its [[snapshotFields]] with dropped storage hidden and
+    * renames applied, no Dataset built.
     */
-  private def dirSchemas(spark: SparkSession, path: String,
-                         files: Seq[String])
-      : Seq[org.apache.spark.sql.types.StructType] =
-    commitGroups(files).map { case (c, fsOfCommit) =>
-      cachedDirSchema(path, c, fsOfCommit)
-        .getOrElse(readDirGroup(spark, path, c, fsOfCommit).schema)
+  private def logicalFields(spark: SparkSession, path: String,
+                            files: Seq[String],
+                            cmap: Seq[(String, String)],
+                            drops: Seq[String])
+      : Seq[org.apache.spark.sql.types.StructField] = {
+    val live = cmap.filter { case (l, p) => l != p }
+    snapshotFields(spark, path, files).filterNot(f => drops.contains(f.name))
+      .map(f => live.find(_._2 == f.name)
+        .fold(f)(lp => f.copy(name = lp._1)))
+  }
+
+  /** The head snapshot's LOGICAL schema (empty for an empty or
+    * not-yet-created table), for the SQL layer's schema checks.
+    */
+  private[graft] def logicalSchema(spark: SparkSession, path: String)
+      : org.apache.spark.sql.types.StructType = {
+    val fsys = fs(spark, path)
+    val vs = manifestNumbers(fsys, path)
+    if (vs.isEmpty) new org.apache.spark.sql.types.StructType()
+    else {
+      val (cmap, drops) = schemaMetaAt(fsys, path, vs.max)
+      org.apache.spark.sql.types.StructType(logicalFields(spark, path,
+        resolveFiles(fsys, path, vs.max), cmap, drops))
     }
+  }
 
   /** The union of per-dir schemas in commit order, each disagreement
     * resolved by [[widenType]] — or, `lossless`, by the first of (that
@@ -3014,13 +2972,9 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   private def changeTypes(spark: SparkSession, fsys: FileSystem,
                           path: String, to: Int,
                           files: Seq[String]): ChangeTypes =
-    unionFields(dirSchemas(spark, path, resolveFiles(fsys, path, to)) ++
-      dirSchemas(spark, path, files), lossless = true)
+    unionFields((dirGroups(spark, path, resolveFiles(fsys, path, to)) ++
+      dirGroups(spark, path, files)).map(_._1), lossless = true)
       .map(f => f.name -> f.dataType).toMap
-
-  /** Column `n` cast to its [[ChangeTypes]] entry, if it has one. */
-  private def typedCol(n: String, types: ChangeTypes) =
-    types.get(n).fold(col(n))(t => col(n).cast(t).as(n))
 
   /** Widest-type resolution for a column whose commits disagree on a
     * NUMERIC type — the published type-widening promotion chain
@@ -3143,47 +3097,21 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     out
   }
 
-  /** Read an explicit file set. `cmap` (logical → physical) translates
-    * the result back to LOGICAL column names; omit it for physical-space
-    * internals (key scans against stats/footers, compaction rewrites).
-    * `types` is a change reader's [[changeTypes]].
+  /** [[GraftScan.plan]]'s frame of an explicit entry set under that
+    * set's own [[snapshotFields]], a change reader's columns typed by its
+    * window's [[changeTypes]]. `cmap` (logical → physical) translates the
+    * result to LOGICAL names; omit it for physical-space internals (key
+    * scans against stats/footers).
     */
-  private def readFiles(spark: SparkSession, path: String,
-                        files: Seq[String],
-                        cmap: Seq[(String, String)] = Seq.empty,
-                        drops: Seq[String] = Seq.empty,
-                        types: ChangeTypes = Map.empty): DataFrame = {
-    if (files.isEmpty)
-      return spark.emptyDataFrame
-    // one scan per contributing commit dir: partition discovery needs a
-    // basePath whose children are uniformly `pcol=value` dirs, and the
-    // c-N commit level breaks that for a multi-commit file set. Commits
-    // contributing to a version are bounded (retention + full-commit
-    // snapshots reset the set), so the union stays small.
-    // Deletion vectors apply HERE, per group, while `_metadata` is
-    // still resolvable — groups without a DV'd entry plan unchanged.
-    val dv = dvPositions(spark, path, files)
-    val groups = commitGroups(files).map { case (c, fsOfCommit) =>
-      val g = readDirGroup(spark, path, c, fsOfCommit)
-      if (hasDv(fsOfCommit)) applyDv(g, dv) else g
-    }
-    // each group cast to the snapshot schema ([[snapshotFields]]' rule,
-    // over the groups just built: a cold dir infers once), a change
-    // reader's columns to its window's [[changeTypes]]
-    val fields = unionFields(groups.map(_.schema)).map(f =>
-      f.copy(dataType = types.getOrElse(f.name, f.dataType)))
-    val unioned = groups.map { g =>
-      g.select(fields.map { f =>
-        (if (g.columns.contains(f.name)) col(f.name).cast(f.dataType)
-         else lit(null).cast(f.dataType)).as(f.name)
-      }: _*)
-    }.reduce(_ unionByName _)
-    // dropped storage is hidden BEFORE logical translation (drops are
-    // physical names; a re-added column of the same logical name maps
-    // to fresh storage and is untouched here)
-    toLogical(drops.foldLeft(unioned) { (d, p) =>
-      if (d.columns.contains(p)) d.drop(p) else d }, cmap)
-  }
+  private def readEntries(spark: SparkSession, path: String,
+                          entries: Seq[String],
+                          cmap: Seq[(String, String)] = Seq.empty,
+                          drops: Seq[String] = Seq.empty,
+                          types: ChangeTypes = Map.empty,
+                          tag: Boolean = false): DataFrame =
+    GraftScan.plan(spark, path, entries, cmap, drops,
+      snapshotFields(spark, path, entries).map(f =>
+        f.copy(dataType = types.getOrElse(f.name, f.dataType))), tag, -1)._1
 
   /** Deep clone: byte-copy `version`'s (default latest) data files into
     * a FRESH table at `dst` and commit them as its v0. No recompute and
@@ -3328,8 +3256,8 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * for the stats sidecars (`harvestStats = false` skips even that —
     * skipping is advisory), never a byte of parquet I/O. Hidden files
     * (_SUCCESS, .crc, dotfiles) and non-parquet files are left where
-    * they are, untouched. Fails loud on a mixed partition layout or an
-    * existing versioned table. Returns the committed version (0).
+    * they are, untouched. Fails loud on a tree mixing hive layouts or
+    * an existing versioned table. Returns the committed version (0).
     */
   def convertToGraft(spark: SparkSession, path: String,
                      harvestStats: Boolean = true): Int = {
@@ -3380,17 +3308,17 @@ object VersionedTable extends org.apache.spark.internal.Logging {
                 "root or a hive layout first")
           }
         }
-        // one hive layout across the tree — the indexed scan's contract
+        // one hive layout across the tree: the tree becomes ONE commit
+        // dir, and a dir's schema inference and relation assume one
         def layoutOf(rel: String): Seq[String] =
           rel.split("/").dropRight(1).filter(_.contains("="))
             .map(_.takeWhile(_ != '=')).toSeq
         val layout = layoutOf(listed.head)
         listed.find(f => layoutOf(f) != layout).foreach { f =>
           throw new IllegalArgumentException(
-            s"mixed partition layout under $path: '${listed.head}' lays out " +
-              s"as ${layout.mkString("[", ",", "]")} but '$f' as " +
-              s"${layoutOf(f).mkString("[", ",", "]")} — CONVERT needs one " +
-              "hive layout")
+            s"CONVERT needs one hive layout under $path: '${listed.head}' " +
+              s"lays out as ${layout.mkString("[", ",", "]")} but '$f' as " +
+              s"${layoutOf(f).mkString("[", ",", "]")}")
         }
         val d = newDirName(fsys, path)
         val tmp = new HPath(s"$path/_commits/.convert-plan." +
@@ -3472,7 +3400,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       // only legacy tables fall back to the footer union
       val logicalCols = declaredColsAt(fsys, path, head).getOrElse(
         if (files.isEmpty) cmap.map(_._1)
-        else readFiles(spark, path, files, cmap, drops).columns.toSeq)
+        else logicalFields(spark, path, files, cmap, drops).map(_.name))
       require(logicalCols.contains(oldName),
         s"no column '$oldName' at $path (have ${logicalCols.mkString(", ")})")
       require(!logicalCols.contains(newName),
@@ -3522,7 +3450,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       // declared-schema fast path, like renameColumn
       val logicalCols = declaredColsAt(fsys, path, head).getOrElse(
         if (files.isEmpty) cmap.map(_._1)
-        else readFiles(spark, path, files, cmap, drops).columns.toSeq)
+        else logicalFields(spark, path, files, cmap, drops).map(_.name))
       require(logicalCols.contains(name),
         s"no column '$name' at $path (have ${logicalCols.mkString(", ")})")
       require(logicalCols.size > 1,
@@ -3913,8 +3841,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   }
 
   /** Does `version` (default head) carry any deletion vector?
-    * Manifest metadata only — the probe read paths use to keep the
-    * no-DV plan byte-identical to the pre-DV one.
+    * Manifest metadata only.
     */
   def hasDeletionVectors(spark: SparkSession, path: String,
                          version: Int = -1): Boolean = {
@@ -4073,7 +4000,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     val touched = touchedSeq.toSet
     val sizes = fileSizes(fsys, path, touchedSeq)
     val (cmapO, dropsO) = schemaMetaAt(fsys, path, prevVs.max)
-    val part = readFiles(spark, path, touchedSeq, cmapO, dropsO)
+    val part = readEntries(spark, path, touchedSeq, cmapO, dropsO)
     val sized =
       if (zorderCols.nonEmpty)
         // cluster WITHIN each partition on the Morton key (partition dir
@@ -4117,7 +4044,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
         val touched = touchedSeq.toSet
         val layout = layoutPartitionCols(spark, path)
         val (cmap, drops) = schemaMetaAt(fsys, path, prevVs.max)
-        val survivors = readFiles(spark, path, touchedSeq, cmap, drops)
+        val survivors = readEntries(spark, path, touchedSeq, cmap, drops)
         val sizes = fileSizes(fsys, path, touchedSeq)
         val sized =
           if (layout.isEmpty) survivors.repartition(
@@ -4202,7 +4129,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       // packed rewrite (incremental space reclaim), and writeCommit
       // translates live columns back to their physical names
       val (cmapC, dropsC) = schemaMetaAt(fsys, path, prevVs.max)
-      val packed = readFiles(spark, path, packable, cmapC, dropsC)
+      val packed = readEntries(spark, path, packable, cmapC, dropsC)
       val sized =
         if (packCols.isEmpty) packed.repartition(
           nFilesFor(packable.map(sizes).sum, targetFileBytes))
@@ -4658,10 +4585,8 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       val prechecked = writerOptions.get("graft.constraintsPrechecked")
         .contains(constraintsFingerprint(allChecks))
       if (allChecks.nonEmpty && !prechecked) {
-        // constraints are authored against LOGICAL names — translate
-        // the raw (physical) file read back before judging
-        val written = toLogical(spark.read.option("basePath", commitDir)
-          .parquet(commitDir), cmapW)
+        // constraints are authored against LOGICAL names
+        val written = readEntries(spark, path, newFiles, cmapW)
         // a constraint on a column these files LACK passes vacuously
         // (missing column reads null; NULL passes SQL CHECK)
         val checks = evaluableChecks(spark, allChecks, written.columns)
@@ -5087,8 +5012,8 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   // handles it unchanged; only reads, CDC, vacuum and size probes
   // split the suffix off.
   //
-  // Reads apply the vector transparently: a scan over a version with
-  // DVs filters (file, `_metadata.row_index`) pairs against the
+  // Reads apply the vector transparently, in one place ([[GraftScan]]'s
+  // builder, per relation): a scan over a version with DVs filters (file, `_metadata.row_index`) pairs against the
   // broadcast position map — a plain Filter over the single file
   // source, so predicate pushdown, partition pruning and
   // `input_file_name()` above it all keep working, and a version with
@@ -5117,8 +5042,9 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * cover many files; only the entry-referenced (file, dv) pairs
     * load).
     */
-  private def dvPositions(spark: SparkSession, path: String,
-                          entries: Seq[String]): Map[String, Array[Long]] = {
+  private[catalog] def dvPositions(spark: SparkSession, path: String,
+                                   entries: Seq[String])
+      : Map[String, Array[Long]] = {
     val refs = entries.flatMap { e =>
       val (b, d) = dvSplit(e); d.map(b -> _)
     }
@@ -5134,21 +5060,11 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     }.toMap
   }
 
-  /** Filter the DV'd positions out of a FRESH file-source frame (one
-    * whose `_metadata` column is still resolvable — apply before any
-    * projection). A plain Filter over the single source: pushdown and
-    * `input_file_name()` survive. No-op for an empty map.
-    */
-  private def applyDv(df: DataFrame,
-                      dv: Map[String, Array[Long]]): DataFrame =
-    if (dv.isEmpty) df
-    else df.filter(dvKeep(df.sparkSession, dv)(
-      col("_metadata.file_path"), col("_metadata.row_index")))
-
   /** The keep-this-row judgment of a DV map as a broadcast-backed
     * predicate over (scan-reported file path or its [[scanRel]] part,
-    * row index) — the map's keys are put in the scan's form once, so
-    * each row costs one substring and a binary search; map-miss keeps.
+    * row index) — the map's keys (base files, or the change feed's
+    * vector-carrying entries) are put in the scan's form once, so each
+    * row costs one substring and a binary search; map-miss keeps.
     */
   private[catalog] def dvKeep(spark: SparkSession,
                               dv: Map[String, Array[Long]])
@@ -5162,22 +5078,6 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       }
     })
   }
-
-  /** The (base file → sorted positions) DV map of a version's entry
-    * set, package-visible for [[GraftScan]]'s tagged scan.
-    */
-  private[catalog] def dvPositionsOf(spark: SparkSession, path: String,
-                                     entries: Seq[String])
-      : Map[String, Array[Long]] = dvPositions(spark, path, entries)
-
-  /** [[applyDv]] for an indexed-scan frame, package-visible for
-    * [[GraftScan]]: loads the version's DV map and wraps the frame —
-    * identity (no plan change) when the version carries no DV.
-    */
-  private[catalog] def applyDvFor(spark: SparkSession, path: String,
-                                  entries: Seq[String],
-                                  df: DataFrame): DataFrame =
-    applyDv(df, dvPositions(spark, path, entries))
 
   /** Do any of these manifest entries carry a deletion vector? */
   private[catalog] def hasDv(entries: Seq[String]): Boolean =
@@ -5541,7 +5441,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     // every file skipped (contradictory bounds): the schemaless empty
     // frame cannot resolve the residual filters — it IS the answer
     if (kept.isEmpty) return spark.emptyDataFrame
-    bounds.foldLeft(readFiles(spark, path, kept, cmap, drops)) {
+    bounds.foldLeft(readEntries(spark, path, kept, cmap, drops)) {
       case (df, (c, lo, hi)) => (Option(lo), Option(hi)) match {
         case (Some(l), Some(h)) => df.filter(col(c).between(lit(l), lit(h)))
         case (Some(l), None) => df.filter(col(c) >= lit(l))
@@ -5663,7 +5563,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
         finally bconf.destroy()
       }
     if (kept.isEmpty) return spark.emptyDataFrame
-    readFiles(spark, path, kept, cmap, drops)
+    readEntries(spark, path, kept, cmap, drops)
       .filter(col(column).isin(values.map(lit(_)): _*))
   }
 
@@ -5735,7 +5635,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       }
     }
     if (kept.isEmpty) return spark.emptyDataFrame
-    readFiles(spark, path, kept, cmap, drops).filter(col(column).isNull)
+    readEntries(spark, path, kept, cmap, drops).filter(col(column).isNull)
   }
 
   /** The `pcol=value` path segment of a relative data-file path. */

@@ -3,6 +3,7 @@ package graft.sources
 import java.time.{Instant, LocalDate, LocalDateTime, ZoneId}
 
 import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.streaming.{Offset, Sink, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.functions.{col, lit}
@@ -125,26 +126,20 @@ class GraftFormat extends RelationProvider with CreatableRelationProvider
       new DataFrameRelation(
         VersionedTable.changeFeed(spark, path, s, end), sqlContext)
     } else {
-      // pin the head once: the DV probe and the served relation must
-      // describe the same version even under a racing commit
-      val v0 = versionOf(spark, path, parameters)
-      val v = if (v0 >= 0) v0
-        else {
-          val vs = VersionedTable.versions(spark, path)
-          require(vs.nonEmpty, s"no versioned table at $path")
-          vs.max
-        }
-      if (VersionedTable.hasDeletionVectors(spark, path, v))
-        // a DSv1 HadoopFsRelation cannot carry the row-position filter
-        // a DV'd version needs — serve the filtered frame through the
-        // pruned/filtered contract instead (requested filters still
-        // push into the indexed scan underneath, so file skipping is
-        // preserved; Spark re-evaluates every filter above, so the
-        // translation is layout, never correctness)
-        new PrunedDataFrameRelation(
-          GraftScan.snapshotDataFrame(spark, path, v), sqlContext)
-      else
-        GraftScan.snapshotRelation(spark, path, v)._1
+      // the bare relation when the snapshot plans as one; otherwise a
+      // DSv1 HadoopFsRelation cannot carry the row-position filter or
+      // the union of several relations — serve the frame through the
+      // pruned/filtered contract instead (requested filters still push
+      // into the indexed scans underneath, so file skipping is
+      // preserved; Spark re-evaluates every filter above, so the
+      // translation is layout, never correctness)
+      val df = GraftScan.servedFrame(spark, path,
+        versionOf(spark, path, parameters))
+      df.queryExecution.logical match {
+        case lr: LogicalRelation if lr.relation.isInstanceOf[HadoopFsRelation] =>
+          lr.relation
+        case _ => new PrunedDataFrameRelation(df, sqlContext)
+      }
     }
   }
 

@@ -346,7 +346,7 @@ case class GraftInsertCommand(path: String, query: LogicalPlan,
     val exists = scala.util.Try(VersionedTable.versions(spark, path))
       .toOption.exists(_.nonEmpty)
     if (exists) {
-      val table = VersionedTable.read(spark, path).schema
+      val table = VersionedTable.logicalSchema(spark, path)
       // IDENTITY/GENERATED columns are DERIVED by the append path — a
       // positional INSERT doesn't count them, and an unlisted derived
       // column is left ABSENT (never null-filled) so the commit

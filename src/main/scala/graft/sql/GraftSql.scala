@@ -252,25 +252,11 @@ object GraftSqlParser {
           "instant, or yyyy-MM-dd[ HH:mm:ss] in the session timezone"))
   }
 
-  /** A snapshot's read plan: the indexed relation, wrapped in the
-    * row-position filter when the version carries deletion vectors
-    * (a DV-free version plans byte-identically to before).
-    */
+  /** A snapshot's read plan ([[graft.catalog.GraftScan.servedFrame]]). */
   private def snapshotPlan(session: SparkSession, path: String,
-                           v: Int = -1): LogicalPlan = {
-    // pin the head once: the DV probe and the relation must describe
-    // the SAME version even under a racing commit
-    val vr = if (v >= 0) v
-      else VersionedTable.versions(session, path).max
-    if (VersionedTable.hasDeletionVectors(session, path, vr))
-      graft.catalog.GraftScan.snapshotDataFrame(session, path, vr)
-        .queryExecution.logical
-    else {
-      val (rel, _) = graft.catalog.GraftScan
-        .snapshotRelation(session, path, vr)
-      session.baseRelationToDataFrame(rel).queryExecution.logical
-    }
-  }
+                           v: Int = -1): LogicalPlan =
+    graft.catalog.GraftScan.servedFrame(session, path, v)
+      .queryExecution.logical
 
   def resolveGraftPaths(session: SparkSession,
                         plan: LogicalPlan): LogicalPlan =
@@ -481,7 +467,7 @@ private object GraftCommands {
                   nameParts: Option[Seq[String]]): Unit =
     nameParts.foreach { parts =>
       SqlBridge.syncCatalogSchema(spark, parts,
-        VersionedTable.read(spark, path).schema)
+        VersionedTable.logicalSchema(spark, path))
     }
 }
 

@@ -42,21 +42,18 @@ class ChangeWalkSweepSpec extends AnyFunSuite {
   }
 
   // a flat OPTIMIZE of a partitioned table leaves a mixed layout once a
-  // partitioned append follows, and the predicate verbs plan through
-  // the indexed scan, which refuses a mixed layout — pending until the
-  // scan (or the verbs) handle one
+  // partitioned append follows; the predicate verbs find their files
+  // through the same scan as read, one relation per layout
   test("a predicate delete after a flat OPTIMIZE and a partitioned append") {
     val t = graft.Caches.newTempDir("walk_mixed").toString + "/t"
     VersionedTable.commit(Seq((1L, "a"), (2L, "new york")).toDF("id", "p"),
       t, Seq("p"))
     VersionedTable.optimize(spark, t)
     VersionedTable.append(Seq((3L, "a")).toDF("id", "p"), t, Seq("p"))
-    pendingUntilFixed {
-      VersionedTable.deleteWhere(spark, t, Some("id = 1"))
-      assert(VersionedTable.read(spark, t).select("id", "p")
-        .as[(Long, String)].collect().toSet ==
-        Set((2L, "new york"), (3L, "a")))
-    }
+    VersionedTable.deleteWhere(spark, t, Some("id = 1"))
+    assert(VersionedTable.read(spark, t).select("id", "p")
+      .as[(Long, String)].collect().toSet ==
+      Set((2L, "new york"), (3L, "a")))
   }
 
   private def sweep(partitioned: Boolean): Unit =

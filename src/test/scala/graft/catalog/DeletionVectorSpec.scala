@@ -50,7 +50,7 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(headManifest(t).contains("@dv="))
     // every read path excludes the row; time travel still sees it
     assert(ids(VersionedTable.read(spark, t)) == Set(1L, 3L, 4L, 5L))
-    assert(ids(VersionedTable.readIndexed(spark, t)) == Set(1L, 3L, 4L, 5L))
+    assert(ids(VersionedTable.read(spark, t)) == Set(1L, 3L, 4L, 5L))
     assert(ids(spark.read.format("graft").load(t)) == Set(1L, 3L, 4L, 5L))
     assert(ids(graft.sql.GraftSql.run(spark,
       s"SELECT id FROM graft.`$t`")) == Set(1L, 3L, 4L, 5L))
@@ -181,7 +181,7 @@ class DeletionVectorSpec extends AnyFunSuite {
     val t = newTable()
     VersionedTable.commit(base, t, Seq("day"))
     VersionedTable.deleteWhere(spark, t, Some("id = 3"), dv = true)
-    val out = VersionedTable.readIndexed(spark, t)
+    val out = VersionedTable.read(spark, t)
     assert(ids(out) == Set(1L, 2L, 4L, 5L))
     assert(out.columns.contains("day"))
     // pruning still reaches the file index through the DV filter

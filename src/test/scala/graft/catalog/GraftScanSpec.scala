@@ -7,7 +7,7 @@ import graft.TestSpark
 
 /** The manifest-backed FileIndex: transparent stats skipping and
   * partition pruning on Catalyst-pushed predicates, result parity with
-  * the inference-exact [[VersionedTable.read]] path.
+  * [[VersionedTable.read]] over the same snapshots.
   */
 class GraftScanSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -33,7 +33,7 @@ class GraftScanSpec extends AnyFunSuite {
       Seq((6L, "thu", 60.0, "x")).toDF("id", "day", "value", "tag"),
       t, Seq("day"), evolveSchema = true)
     VersionedTable.renameColumn(spark, t, "value", "amount")
-    val idxDf = VersionedTable.readIndexed(spark, t)
+    val idxDf = VersionedTable.read(spark, t)
     val refDf = VersionedTable.read(spark, t)
     assert(idxDf.columns.sorted.toSeq == refDf.columns.sorted.toSeq)
     assert(idxDf.columns.contains("amount"))
@@ -194,8 +194,8 @@ class GraftScanSpec extends AnyFunSuite {
     VersionedTable.commit(base, t, Seq("day"))
     VersionedTable.append(Seq((6L, "thu", 60.0)).toDF("id", "day", "value"),
       t, Seq("day"))
-    assert(rows(VersionedTable.readIndexed(spark, t, 0)) == rows(base))
-    assert(rows(VersionedTable.readIndexed(spark, t)) ==
+    assert(rows(VersionedTable.read(spark, t, 0)) == rows(base))
+    assert(rows(VersionedTable.read(spark, t)) ==
       rows(base) + ((6L, "thu", 60.0)))
   }
 
@@ -237,24 +237,24 @@ class GraftScanSpec extends AnyFunSuite {
     assert(df.filter($"s".startsWith("zzz")).count() == 0)
   }
 
-  test("mixed partition layout fails loud at snapshot resolution") {
+  test("a mixed partition layout plans one relation per layout") {
     val t = newTable()
     VersionedTable.commit(base, t, Seq("day"))
     VersionedTable.append(Seq((9L, "fri", 90.0)).toDF("id", "day", "value"),
       t, Nil) // unpartitioned append onto a partitioned table
-    val e = intercept[IllegalStateException] {
-      GraftScan.readWithIndex(spark, t)
-    }
-    assert(e.getMessage.contains("mixed partition layout"))
-    // the explicit read path still serves the mixed table
-    assert(VersionedTable.read(spark, t).count() == 6)
+    val (df, idx) = GraftScan.readWithIndex(spark, t)
+    assert(df.count() == 6)
+    assert(idx.totalFiles == VersionedTable.read(spark, t).inputFiles.length)
+    // the partitioned relation prunes by path, the flat one by its stats
+    assert(rows(df.filter($"day" === "fri")) == Set((9L, "fri", 90.0)))
+    assert(idx.lastListedCount == 1)
   }
 
   test("dropped columns stay hidden; unsupported predicates keep every file") {
     val t = newTable()
     VersionedTable.commit(base, t)
     VersionedTable.dropColumn(spark, t, "value")
-    val df = VersionedTable.readIndexed(spark, t)
+    val df = VersionedTable.read(spark, t)
     assert(!df.columns.contains("value"))
     assert(df.select("id", "day").count() == 5)
     // a non-algebra predicate (contains) must not prune anything away
