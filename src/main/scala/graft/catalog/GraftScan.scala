@@ -59,19 +59,12 @@ class GraftFileIndex(
 
   @volatile private var listed: Int = -1
 
-  /** The other relations' indexes of a read planned as several
-    * relations ([[GraftScan.readWithIndex]]); the counts below sum over
-    * them.
-    */
-  @volatile private[catalog] var peers: Seq[GraftFileIndex] = Nil
-
   /** Files returned by the most recent `listFiles` — the in-query
     * observability seam pruning asserts (specs, oracle rows) read.
     */
-  def lastListedCount: Int = (this +: peers).map(_.listed).filter(_ >= 0)
-    .reduceOption(_ + _).getOrElse(-1)
+  def lastListedCount: Int = listed
 
-  def totalFiles: Int = (this +: peers).map(_.files.size).sum
+  def totalFiles: Int = files.size
 
   private val fsys = VersionedTable.fs(spark, tablePath)
 
@@ -758,11 +751,9 @@ object GraftScan {
     val built = groups.map { g =>
       val dataSchema = StructType(g.schema.filterNot(f =>
         g.layout.contains(f.name) || drops.contains(f.name)))
-      // an explicit entry set (a verb's rewrite input, version -1)
-      // claims no buckets: under a claim Spark drops the bucket-arranging
-      // write's repartition onto the scan's partitioning, then un-buckets
-      // the scan (no operator needs it), and rows land under the wrong
-      // bucket ids
+      // only a whole one-group snapshot claims buckets; an explicit
+      // entry set (version -1: a verb's rewrite input, a pre-pruned
+      // lookup) plans unclaimed
       val spec =
         if (groups.size > 1 || version < 0) None
         else VersionedTable.bucketSpecFor(spark, path, g.entries,
@@ -796,19 +787,32 @@ object GraftScan {
       built.map(_._2))
   }
 
-  /** [[read]] plus the planted index, for callers that assert pruning
-    * (specs, oracle rows) through its `lastListedCount` seam — summed
-    * over the relations of a snapshot that plans as several.
+  /** The file indexes of one read's relations: the pruning seam,
+    * summed over a snapshot that plans as several relations.
+    */
+  final case class Indexes(all: Seq[GraftFileIndex]) {
+    /** Files the relations' most recent `listFiles` returned; -1 before
+      * any listed.
+      */
+    def lastListedCount: Int = all.map(_.lastListedCount).filter(_ >= 0)
+      .reduceOption(_ + _).getOrElse(-1)
+
+    def totalFiles: Int = all.map(_.totalFiles).sum
+
+    def inputFiles: Array[String] = all.flatMap(_.inputFiles).toArray
+  }
+
+  /** [[read]] plus its planted indexes, for callers that assert pruning
+    * (specs, oracle rows) through the `lastListedCount` seam.
     */
   def readWithIndex(spark: SparkSession, path: String,
-                    version: Int = -1): (DataFrame, GraftFileIndex) = {
+                    version: Int = -1): (DataFrame, Indexes) = {
     val s = snapshot(spark, path, version)
     require(s.entries.nonEmpty,
       s"version ${s.version} of $path has no files, so no index")
     val (df, idxs) = plan(spark, path, s.entries, s.cmap, s.drops,
       s.fields, tag = false, s.version)
-    idxs.head.peers = idxs.tail
-    (df, idxs.head)
+    (df, Indexes(idxs))
   }
 
   /** The snapshot with each row's `__gfile`/`__gpos` identity ([[plan]]'s
@@ -829,42 +833,21 @@ object GraftScan {
       s.version)._1
   }
 
-  /** The snapshot as a DataFrame with deletion vectors applied — the
-    * same frame as [[read]].
-    */
-  def snapshotDataFrame(spark: SparkSession, path: String,
-                        version: Int = -1): DataFrame =
-    read(spark, path, version)
-
-  /** The snapshot as a `BaseRelation` whose OUTPUT schema is already
-    * LOGICAL — what `spark.read.format("graft")` hands Spark, since a
-    * DSv1 relation cannot wrap itself in the rename `select` that
-    * [[read]] applies on top. On a never-renamed table this is the stock
-    * parquet relation; with live renames the relation's
+  /** A one-group snapshot as a `BaseRelation` whose OUTPUT schema is
+    * already LOGICAL — what `spark.read.format("graft")` hands Spark,
+    * since a DSv1 relation cannot wrap itself in the rename `select`
+    * that [[read]] applies on top. On a never-renamed table this is the
+    * stock parquet relation; with live renames the relation's
     * [[GraftParquetFileFormat]] translates the required schema and
     * pushed filters back to PHYSICAL names at reader-build time
     * (`InternalRow`s are positional, so renaming a field is free), and
     * the file index translates pushed predicates before consulting the
     * stats sidecars — transparent skipping is preserved either way.
-    * Deletion vectors are NOT applied, and the snapshot must plan as ONE
-    * relation: [[servedFrame]] picks this or [[read]].
+    * Deletion vectors are NOT applied: [[servedFrame]] picks this or
+    * [[read]].
     */
-  def snapshotRelation(spark: SparkSession, path: String,
-                       version: Int = -1)
-      : (HadoopFsRelation, GraftFileIndex) = {
-    val s = snapshot(spark, path, version)
-    groupsOf(spark, path, s.entries) match {
-      case Seq(g) => logicalRelation(spark, path, s, g)
-      case gs => throw new IllegalStateException(
-        s"version ${s.version} of $path plans as ${gs.size} relations " +
-          "(commits with different layouts or schemas); read it as a " +
-          "DataFrame instead")
-    }
-  }
-
   private def logicalRelation(spark: SparkSession, path: String,
-                              s: Snapshot, g: Group)
-      : (HadoopFsRelation, GraftFileIndex) = {
+                              s: Snapshot, g: Group): HadoopFsRelation = {
     val live = s.cmap.filter { case (l, p) => l != p }
     val logicalOf = live.map { case (l, p) => p -> l }.toMap
     val dataSchema = StructType(g.schema
@@ -885,11 +868,11 @@ object GraftScan {
           b.sortColumnNames.contains(p._2)))
         b.copy(sortColumnNames = Nil) else b)
     relation(spark, path, s.version, g.entries, g.partSchema, dataSchema,
-      spec, live)
+      spec, live)._1
   }
 
   /** THE read plan SQL and the `graft` format serve for a snapshot: the
-    * bare logical relation ([[snapshotRelation]]) when the snapshot is
+    * bare logical relation ([[logicalRelation]]) when the snapshot is
     * one relation without deletion vectors, else [[read]]'s frame.
     */
   private[graft] def servedFrame(spark: SparkSession, path: String,
@@ -897,7 +880,7 @@ object GraftScan {
     val s = snapshot(spark, path, version)
     groupsOf(spark, path, s.entries) match {
       case Seq(g) if !VersionedTable.hasDv(s.entries) =>
-        spark.baseRelationToDataFrame(logicalRelation(spark, path, s, g)._1)
+        spark.baseRelationToDataFrame(logicalRelation(spark, path, s, g))
       case _ =>
         plan(spark, path, s.entries, s.cmap, s.drops, s.fields,
           tag = false, s.version)._1

@@ -4415,6 +4415,27 @@ object VersionedTable extends org.apache.spark.internal.Logging {
 
   // ------------------------------------------------------------------
 
+  /** `df` with its file scans' bucket claims dropped (the files and
+    * their pruning stay). A bucket-arranging write needs its
+    * `repartition(n, cols)` to run: over a scan claiming that same
+    * `HashPartitioning`, Spark drops the repartition as redundant, then
+    * un-buckets the scan (no operator needs its partitioning), and
+    * rows would land in files named for the wrong bucket.
+    */
+  private def unclaimBuckets(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
+    val plan = df.queryExecution.analyzed
+    val unclaimed = plan.transformDown {
+      case lr @ LogicalRelation(h: HadoopFsRelation, _, _, _, _)
+          if h.bucketSpec.isDefined =>
+        lr.copy(relation = h.copy(bucketSpec = None)(h.sparkSession))
+    }
+    if (unclaimed eq plan) df
+    else org.apache.spark.sql.graft.SqlBridge.ofRows(df.sparkSession,
+      unclaimed)
+  }
+
   /** Shared write path: land `df`'s files under a fresh NONCE-NAMED
     * `data/` dir (unique without coordination — no other writer can
     * pick it), then claim a version for them via [[claimVersion]]. A
@@ -4497,7 +4518,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
         // sort destroys the arrangement); the sort columns last keep
         // every split file internally sorted by them (SORTED BY when
         // declared, the bucket columns otherwise).
-        dfP0.repartition(d.n, pcs.map(col): _*)
+        unclaimBuckets(dfP0).repartition(d.n, pcs.map(col): _*)
           .sortWithinPartitions((partitionCols ++
             actualSort.map(c => physicalOf(cmapW, c))).map(col): _*)
       case None => dfP0

@@ -50,7 +50,6 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(headManifest(t).contains("@dv="))
     // every read path excludes the row; time travel still sees it
     assert(ids(VersionedTable.read(spark, t)) == Set(1L, 3L, 4L, 5L))
-    assert(ids(VersionedTable.read(spark, t)) == Set(1L, 3L, 4L, 5L))
     assert(ids(spark.read.format("graft").load(t)) == Set(1L, 3L, 4L, 5L))
     assert(ids(graft.sql.GraftSql.run(spark,
       s"SELECT id FROM graft.`$t`")) == Set(1L, 3L, 4L, 5L))

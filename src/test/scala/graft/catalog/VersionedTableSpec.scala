@@ -952,6 +952,31 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(VersionedTable.bucketClaimStatus(spark, t) == Some("claimed"))
   }
 
+  test("a bucketed table rewritten from its own read keeps every row in its bucket") {
+    val d = graft.Caches.newTempDir("vt_bucket_self").toString
+    val t = s"$d/t"
+    VersionedTable.setBucketing(spark, t, "user_id", 4)
+    val rows = (1L to 4000L).map(i => (i % 100, i, (i % 31).toDouble))
+    VersionedTable.commit(rows.toDF("user_id", "event_id", "value"), t)
+    // the input scan claims HashPartitioning(user_id, 4) — the write's
+    // own bucket arrangement must still decide which file a row lands in
+    VersionedTable.commit(
+      VersionedTable.read(spark, t).filter($"event_id" % 3 =!= 0), t)
+    assert(VersionedTable.bucketClaimStatus(spark, t) == Some("claimed"))
+    val kept = rows.filter(_._2 % 3 != 0)
+    // bucket-pruned lookups find every row of every key
+    (0L until 100L).foreach { k =>
+      assert(VersionedTable.read(spark, t).filter($"user_id" === k).count()
+        == kept.count(_._1 == k), s"user_id $k")
+    }
+    // a bucket-pruned delete removes every matching row
+    VersionedTable.deleteWhere(spark, t, Some("user_id = 42"))
+    assert(VersionedTable.read(spark, t).collect()
+      .count(_.getLong(0) == 42L) == 0)
+    assert(VersionedTable.read(spark, t).count() ==
+      kept.count(_._1 != 42L))
+  }
+
   test("bucketed-sorted tables: zero exchange AND zero sort; the sort claim degrades independently") {
     val d = graft.Caches.newTempDir("vt_bucket_sorted").toString
     val t1 = s"$d/facts"; val t2 = s"$d/dim"
