@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.fts.FtsStore
 import graft.wiki._
@@ -29,16 +30,17 @@ object Wikid {
 
   /** A connected per-language table set — the `establish_db_connection`
     * analogue. Plain DataFrame accessors over the warehouse paths; reads
-    * are lazy, so holding a Db costs nothing.
+    * are lazy and carry the declared [[Schemas]], so holding a Db costs
+    * nothing and a read runs no schema-inference job.
     */
   final case class Db(spark: SparkSession, warehouse: String, lang: String) {
-    private def table(name: String): DataFrame =
-      spark.read.parquet(s"$warehouse/$lang/$name")
-    def entities: DataFrame = table("entities")
-    def properties: DataFrame = table("properties")
-    def aliases: DataFrame = table("aliases")
-    def articles: DataFrame = table("articles")
-    def annotations: DataFrame = table("annotations")
+    private def table(name: String, schema: StructType): DataFrame =
+      spark.read.schema(schema).parquet(s"$warehouse/$lang/$name")
+    def entities: DataFrame = table("entities", Schemas.entities)
+    def properties: DataFrame = table("properties", Schemas.properties)
+    def aliases: DataFrame = table("aliases", Schemas.aliases)
+    def articles: DataFrame = table("articles", Schemas.articles)
+    def annotations: DataFrame = table("annotations", Schemas.annotations)
   }
 
   /** `establish_db_connection` — fails fast (like the reference's missing-
@@ -90,8 +92,9 @@ object Wikid {
     val resuming = resume &&
       fs.exists(new org.apache.hadoop.fs.Path(s"$base/entities")) &&
       fs.exists(new org.apache.hadoop.fs.Path(s"$base/alias_pages_seen"))
+    val db = Db(spark, warehouse, lang)
     val existingIds =
-      if (resuming) Some(spark.read.parquet(s"$base/entities").select("id"))
+      if (resuming) Some(db.entities.select("id"))
       else None
     val ents = EntitiesJob.run(WikidataSource.read(spark, wikidataDump), lang,
       existingIds = existingIds, singleScan = true)
@@ -102,7 +105,7 @@ object Wikid {
       val mode = if (resuming) "append" else "overwrite"
       ents.entities.write.mode(mode).parquet(s"$base/entities")
       ents.properties.write.mode(mode).parquet(s"$base/properties")
-      val titleMap = Queries.titleMap(spark.read.parquet(s"$base/entities"))
+      val titleMap = Queries.titleMap(db.entities)
       val pages = WikipediaSource.read(spark, wikipediaDump)
       if (!resuming) {
         AliasesJob.run(ents.aliases, pages, titleMap)
@@ -113,17 +116,17 @@ object Wikid {
         arts.articles.write.mode("overwrite").parquet(s"$base/articles")
         arts.annotations.write.mode("overwrite").parquet(s"$base/annotations")
       } else {
-        val existingArticleIds = spark.read.parquet(s"$base/articles")
-          .select("article_id")
+        val existingArticleIds = db.articles.select("article_id")
         // pages whose anchors are already in the aliases table — gated
         // by the SIDECAR seen-set, not the articles table (non-article
         // pages count links too); only uncounted pages and the new
         // entities' declared aliases contribute increments
-        val seenPageIds = spark.read.parquet(s"$base/alias_pages_seen")
+        val seenPageIds = spark.read.schema(Schemas.aliasPagesSeen)
+          .parquet(s"$base/alias_pages_seen")
         val newPages = pages
           .join(seenPageIds, Seq("article_id"), "left_anti")
         val merged = AliasesJob.aggregate(
-          spark.read.parquet(s"$base/aliases")
+          db.aliases
             .unionByName(ents.aliases.select("alias", "entity_id", "count")),
           AliasesJob.linkCounts(newPages, titleMap))
         // the merge reads the table it replaces: stage beside it and
@@ -142,7 +145,7 @@ object Wikid {
         arts.annotations.write.mode("append").parquet(s"$base/annotations")
       }
     } finally ents.release()
-    Db(spark, warehouse, lang)
+    db
   }
 
   /** `load_entities(language, qids)` — the J1/A4 KB join; empty `qids`

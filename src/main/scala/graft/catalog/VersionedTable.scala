@@ -1319,7 +1319,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
               entriesOf(cur, countFiles(
                 (if (srcEmpty) scan
                  else scan.join(keys, Seq(keyCol), "left_anti"))
-                  .select("__f"))._2)
+                  .select("__f"))._2.keys)
             }
           val touched = touchedM ++ touchedB
           if (touched.isEmpty && notMatched.isEmpty) prevVs.max
@@ -1799,12 +1799,14 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * home of the DV-vs-rewrite POLICY. `hits` (the base version's live
     * rows to vector, carrying their `__gfile`/`__gpos` tags) is staged,
     * and one pass over it counts the hits and collects the files they
-    * touch. A count past [[dvMaxPositions]] is a bulk change
-    * wearing the wrong shape: the tail logs a warning and returns None,
-    * and the caller runs its file-pruned rewrite instead. Otherwise the
-    * positions go to ONE `_dv/` sidecar — unioned with the touched
-    * entries' prior vectors, so a file carries at most one vector per
-    * version — the touched manifest entries are re-tagged `@dv=...`,
+    * touch, with each file's hit positions while the count is within
+    * [[dvMaxPositions]]. A count past that cap is a bulk change wearing
+    * the wrong shape: the tail logs a warning and returns None, and the
+    * caller runs its file-pruned rewrite instead. Otherwise the
+    * positions go to ONE `_dv/` sidecar written on the driver —
+    * unioned with the touched entries' prior vectors, so a file carries
+    * at most one vector per version — the touched manifest entries are
+    * re-tagged `@dv=...`,
     * and the version commits in one manifest swap: metadata-only when
     * `newRows` yields nothing, else with those rows' fresh files.
     *
@@ -1827,8 +1829,10 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     val spark = hits.sparkSession
     val fsys = fs(spark, path)
     val staged = graft.Caches.stage(hits)
-    val (n, scanned) = countFiles(staged.select("__gfile"))
-    if (n > dvMaxPositions(spark)) {
+    val cap = dvMaxPositions(spark)
+    val (n, hitPositions) =
+      countFiles(staged.select("__gfile", "__gpos"), positionsUpTo = Some(cap))
+    if (n > cap) {
       logWarning(s"$op at $path matched $n rows — past " +
         "spark.graft.dv.maxPositions, falling back to the file-pruned " +
         "rewrite")
@@ -1840,12 +1844,9 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       if (n == 0L) (Map.empty[String, String], 0L)
       else {
         // the sidecar stores MANIFEST base names, not the scan's form
-        val nameOf = scanned.map(s => s -> manifestName(s)).toMap
-        val pos = staged.select(udf((s: String) => nameOf(s))
-          .apply(col("__gfile")).as("file"), col("__gpos").as("pos"))
-        val vectored = entriesOf(scope.baseFiles, scanned)
-        val (dvName, bytes) =
-          writeDvSidecar(spark, fsys, path, vectored, pos)
+        val vectored = entriesOf(scope.baseFiles, hitPositions.keys)
+        val (dvName, bytes) = writeDvSidecar(spark, fsys, path, vectored,
+          hitPositions.map { case (s, p) => manifestName(s) -> p })
         (vectored.map(e => e -> s"${baseOf(e)}@dv=$dvName").toMap, bytes)
       }
     val claimScope = scope.copy(removed = scope.removed ++ retag.keySet)
@@ -1866,28 +1867,48 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     })
   }
 
-  /** Write a fresh DV sidecar holding `hits` (file, pos) UNIONED with
-    * the touched entries' prior vectors (at most one DV reference per
-    * file per version — a new delete on an already-DV'd file replaces
-    * its reference). Returns (sidecar name, bytes written).
+  /** Write a fresh DV sidecar holding `hits` (manifest file name →
+    * positions) UNIONED with the touched entries' prior vectors (at
+    * most one DV reference per file per version — a new delete on an
+    * already-DV'd file replaces its reference). The priors come from
+    * [[dvPositions]]; the sidecar is one parquet file (`file` string,
+    * `pos` long, sorted by file then position) written on the driver
+    * with parquet-hadoop's writer — no Spark job — and seeds
+    * [[DvCache]], so the commit's own reads never decode it. Returns
+    * (sidecar name, bytes written).
     */
   private def writeDvSidecar(spark: SparkSession, fsys: FileSystem,
                              path: String, touched: Set[String],
-                             hits: DataFrame): (String, Long) = {
-    val priors = touched.toSeq.flatMap { e =>
-      val (b, d) = dvSplit(e); d.map(b -> _)
+                             hits: Map[String, Array[Long]]): (String, Long) = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    val priors = dvPositions(spark, path, touched.toSeq)
+    val none = Array.emptyLongArray
+    val rows = (priors.keySet ++ hits.keySet).toSeq.sorted.map { f =>
+      f -> sortedDistinct(priors.getOrElse(f, none) ++ hits.getOrElse(f, none))
     }
-    val rows = priors.groupBy(_._2).toSeq.map { case (d, fs0) =>
-      spark.read.parquet(s"$path/_dv/$d")
-        .filter(col("file").isInCollection(fs0.map(_._1).toSet))
-        .select(col("file"), col("pos"))
-    }.foldLeft(hits)(_ unionByName _)
     val dvName = f"dv-${System.currentTimeMillis()}%x-" +
       f"${scala.util.Random.nextInt()}%08x"
-    // positions are metadata-sized; a handful of write tasks suffices
-    rows.repartition(1).write.parquet(s"$path/_dv/$dvName")
-    val bytes = listStatusRec(fsys, s"$path/_dv/$dvName").map(_.getLen).sum
-    (dvName, bytes)
+    val part = new HPath(s"$path/_dv/$dvName/part-00000.parquet")
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message spark_schema { required binary file (STRING); " +
+        "required int64 pos; }")
+    val writer = ExampleParquetWriter.builder(
+        org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(part,
+          spark.sparkContext.hadoopConfiguration))
+      .withType(schema)
+      .withCompressionCodec(
+        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
+      .build()
+    val groups = new SimpleGroupFactory(schema)
+    try rows.foreach { case (f, ps) =>
+      val file = org.apache.parquet.io.api.Binary.fromString(f)
+      ps.foreach(p => writer.write(groups.newGroup()
+        .append("file", file).append("pos", p)))
+    } finally writer.close()
+    val st = fsys.getFileStatus(part)
+    DvCache.put(st, rows.toMap)
+    (dvName, st.getLen)
   }
 
   /** Row-level update by PREDICATE — the `UPDATE t SET ... WHERE ...`
@@ -2165,7 +2186,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
           .select(col(keyCol), input_file_name().as("__f"))
           .filter(col(keyCol).between(lit(lo), lit(hi)))
         Some((entriesOf(candidates, countFiles(
-          keyHits(scan, keyCol, keys, inList).select("__f"))._2),
+          keyHits(scan, keyCol, keys, inList).select("__f"))._2.keys),
           (lo, hi), inList))
       }
     }
@@ -2205,7 +2226,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
                             cur: Seq[String], pred: String): Set[String] =
     entriesOf(cur, countFiles(
       GraftScan.read(spark, path, baseV).filter(expr(pred))
-        .select(input_file_name().as("__f")))._2)
+        .select(input_file_name().as("__f")))._2.keys)
 
   /** The manifest entries of scanned data files: a scan names BASE data
     * files URI-encoded ([[manifestName]] decodes them), while a DV'd
@@ -2240,23 +2261,46 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** A one-string-column frame's row count and distinct values (FILE
-    * NAMES: each task emits its row count and the handful of files it
-    * read), in one pass and without the final-aggregation exchange a
-    * `.distinct().collect()` plans — a per-partition distinct plus a
-    * driver union does the same dedup minus one shuffle round.
+  /** A frame's row count and its first (string) column's distinct
+    * values (FILE NAMES: each task emits its row count and the handful
+    * of files it read), in one pass and without the final-aggregation
+    * exchange a `.distinct().collect()` plans — a per-partition distinct
+    * plus a driver union does the same dedup minus one shuffle round.
+    * With `positionsUpTo`, the second column is a row position and each
+    * file also brings back its positions while the total count stays
+    * within that bound; past it every position array is empty, so the
+    * driver never holds more than about twice the bound.
     */
-  private def countFiles(files: DataFrame): (Long, Set[String]) =
-    files.rdd
-      .mapPartitions { it =>
-        var n = 0L
-        val names = scala.collection.mutable.HashSet.empty[String]
-        it.foreach { r => n += 1; names += r.getString(0) }
-        Iterator((n, names.toSet))
+  private def countFiles(files: DataFrame,
+                         positionsUpTo: Option[Long] = None)
+      : (Long, Map[String, Array[Long]]) = {
+    import scala.collection.mutable.{ArrayBuilder, HashMap}
+    val cap = positionsUpTo.getOrElse(-1L)
+    val perTask = files.rdd.mapPartitions { it =>
+      var n = 0L
+      val byFile = HashMap.empty[String, ArrayBuilder.ofLong]
+      it.foreach { r =>
+        n += 1
+        val b = byFile.getOrElseUpdate(r.getString(0), new ArrayBuilder.ofLong)
+        if (n <= cap) b += r.getLong(1)
       }
-      .collect()
-      .foldLeft((0L, Set.empty[String])) { case ((n, s), (m, t)) =>
-        (n + m, s ++ t) }
+      Iterator((n, byFile.map { case (f, b) =>
+        f -> (if (n <= cap) b.result() else Array.emptyLongArray) }.toMap))
+    }
+    var total = 0L
+    val byFile = HashMap.empty[String, ArrayBuilder.ofLong]
+    files.sparkSession.sparkContext.runJob(perTask,
+      (it: Iterator[(Long, Map[String, Array[Long]])]) => it.next(),
+      (_: Int, task: (Long, Map[String, Array[Long]])) => {
+        total += task._1
+        task._2.foreach { case (f, p) =>
+          val b = byFile.getOrElseUpdate(f, new ArrayBuilder.ofLong)
+          if (total <= cap) b ++= p
+        }
+      })
+    (total, byFile.map { case (f, b) =>
+      f -> (if (total <= cap) b.result() else Array.emptyLongArray) }.toMap)
+  }
 
   /** The rewrite commit tail of every row-level verb: land `rows` (the
     * touched files' survivors plus any new rows) as fresh files and, in
@@ -2839,7 +2883,8 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * set (manifest entries — any `@dv=` suffix is stripped to the base
     * data file), partition columns typed by Spark's partition inference
     * under the commit dir: from the cache, or by the one cold-dir
-    * inference (a schema-only plan, no data read), which seeds it.
+    * resolution (one footer read on the driver, partition values typed
+    * from the paths; no Spark job), which seeds it.
     */
   private def dirSchema(spark: SparkSession, path: String, c: String,
                         groupFiles: Seq[String])
@@ -2848,8 +2893,13 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     dirSchemaCache.synchronized(Option(dirSchemaCache.get(base))
         .orElse(Option(dirSchemaCache.get(subsetKey(base, groupFiles)))))
       .getOrElse {
+        // the data schema from the one footer Spark's inference would
+        // read (the first file by path), on the driver; the partition
+        // columns from the paths — no Spark job either way
+        val files = groupFiles.map(f => s"$path/data/${baseOf(f)}")
         val sch = spark.read.option("basePath", base)
-          .parquet(groupFiles.map(f => s"$path/data/${baseOf(f)}"): _*).schema
+          .schema(footerSchema(spark, new HPath(files.min)))
+          .parquet(files: _*).schema
         // a subset's inference serves only that subset: its hive
         // partition TYPE inference can come out narrower than the whole
         // dir's (day=1 alone infers int; the dir may also hold day=x),
@@ -2859,6 +2909,26 @@ object VersionedTable extends org.apache.spark.internal.Logging {
           if (full) base else subsetKey(base, groupFiles), sch): Unit)
         sch
       }
+  }
+
+  /** What `spark.read.parquet(file).schema` infers for one parquet
+    * file, from its footer read on the driver (the inference runs a
+    * Spark job): Spark's own footer rule — the row schema Spark stored
+    * in the footer, else the parquet type conversion — made nullable,
+    * as a file source's schema always is.
+    */
+  private[graft] def footerSchema(spark: SparkSession, file: HPath)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file,
+        spark.sparkContext.hadoopConfiguration))
+    val footer = try reader.getFooter finally reader.close()
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(file, footer),
+      new ParquetToSparkSchemaConverter(
+        org.apache.spark.sql.internal.SQLConf.get)).toNullable
   }
 
   /** The cache key of one subset of a commit dir: the dir plus a
@@ -5046,6 +5116,17 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   // fold. A further delete on an already-DV'd file replaces the
   // reference with a new sidecar holding the UNION of positions (at
   // most one DV per file per version, the Delta contract).
+  //
+  // Sidecars are metadata, so no Spark job ever touches one: the
+  // commit that vectors rows collects their positions in the same pass
+  // that counts them and writes the sidecar on the driver with
+  // parquet-hadoop's writer; a read decodes it on the driver with
+  // parquet-hadoop's reader. Sidecars are write-once, so the decoded
+  // positions are cached process-wide ([[DvCache]]) and every later
+  // resolution of any version naming them — reads, time travel, the
+  // change feed, the next delete's priors — costs a directory listing.
+  // Sidecars written by Spark's own parquet writer (several part files,
+  // `_SUCCESS`) read the same way.
 
   /** Split a manifest entry into (base data file, DV sidecar name). */
   private[catalog] def dvSplit(entry: String): (String, Option[String]) = {
@@ -5058,10 +5139,11 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   private[catalog] def baseOf(entry: String): String = dvSplit(entry)._1
 
   /** (base file → sorted deleted positions) for the DV'd entries of a
-    * file set — empty for the common no-DV version, else one parquet
-    * read per distinct sidecar (a sidecar written by one DELETE can
-    * cover many files; only the entry-referenced (file, dv) pairs
-    * load).
+    * file set — empty for the common no-DV version. Each referenced
+    * sidecar is read on the driver, never by a Spark job
+    * ([[sidecarPositions]]); a sidecar written by one DELETE can cover
+    * many files, and only the entry-referenced (file, dv) pairs come
+    * back.
     */
   private[catalog] def dvPositions(spark: SparkSession, path: String,
                                    entries: Seq[String])
@@ -5070,15 +5152,120 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       val (b, d) = dvSplit(e); d.map(b -> _)
     }
     if (refs.isEmpty) return Map.empty
-    refs.groupBy(_._2).toSeq.flatMap { case (d, fs) =>
-      val want = fs.map(_._1).toSet
-      spark.read.parquet(s"$path/_dv/$d")
-        .filter(col("file").isInCollection(want))
-        .select("file", "pos").collect()
-        .groupBy(_.getString(0))
-        .map { case (f, rows) =>
-          f -> rows.map(_.getLong(1)).distinct.sorted.toArray }
+    val fsys = fs(spark, path)
+    val conf = spark.sparkContext.hadoopConfiguration
+    refs.groupBy(_._2).toSeq.flatMap { case (d, fs0) =>
+      val all = sidecarPositions(fsys, conf, s"$path/_dv/$d")
+      fs0.flatMap { case (b, _) => all.get(b).map(b -> _) }
     }.toMap
+  }
+
+  /** Every (file → sorted positions) of ONE sidecar dir: the union of
+    * its part files (this engine writes one; a sidecar from Spark's
+    * writer may hold several, some empty, beside a `_SUCCESS` marker),
+    * each served by [[DvCache]] or read on the driver.
+    */
+  private def sidecarPositions(fsys: FileSystem,
+                               conf: org.apache.hadoop.conf.Configuration,
+                               dir: String): Map[String, Array[Long]] =
+    fsys.listStatus(new HPath(dir)).toSeq
+      .filter { st =>
+        val n = st.getPath.getName
+        st.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }
+      .map(st => DvCache.getOrRead(st)(readDvPart(conf, st))) match {
+      case Seq(one) => one
+      case parts => parts.flatMap(_.toSeq)
+        .groupMapReduce(_._1)(_._2)(_ ++ _)
+        .map { case (f, p) => f -> sortedDistinct(p) }
+    }
+
+  /** One sidecar part file's (file → sorted positions), decoded on the
+    * driver with parquet-hadoop's record reader (columns `file` string,
+    * `pos` long; a null in either skips the row).
+    */
+  private def readDvPart(conf: org.apache.hadoop.conf.Configuration,
+                         st: FileStatus): Map[String, Array[Long]] = {
+    import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+    import scala.collection.mutable.{ArrayBuilder, HashMap}
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+    try {
+      val schema = reader.getFooter.getFileMetaData.getSchema
+      val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(schema)
+      val byFile = HashMap.empty[String, ArrayBuilder.ofLong]
+      var pages = reader.readNextRowGroup()
+      while (pages != null) {
+        val records =
+          io.getRecordReader(pages, new GroupRecordConverter(schema))
+        var i = 0L
+        while (i < pages.getRowCount) {
+          val g = records.read()
+          if (g.getFieldRepetitionCount("file") > 0 &&
+              g.getFieldRepetitionCount("pos") > 0)
+            byFile.getOrElseUpdate(g.getString("file", 0),
+              new ArrayBuilder.ofLong) += g.getLong("pos", 0)
+          i += 1
+        }
+        pages = reader.readNextRowGroup()
+      }
+      byFile.map { case (f, b) => f -> sortedDistinct(b.result()) }.toMap
+    } finally reader.close()
+  }
+
+  /** `a`'s values ascending, duplicates dropped. */
+  private def sortedDistinct(a: Array[Long]): Array[Long] = {
+    val s = a.sorted
+    val out = new scala.collection.mutable.ArrayBuilder.ofLong
+    var i = 0
+    while (i < s.length) {
+      if (i == 0 || s(i) != s(i - 1)) out += s(i)
+      i += 1
+    }
+    out.result()
+  }
+
+  /** Process-wide deletion-vector position cache: one sidecar part
+    * file's (file → sorted positions), keyed like [[manifestTextCache]]
+    * by the part's (path, mtime, length). Sidecars are write-once, so
+    * an entry never goes stale, and the (mtime, length) key keeps a
+    * table deleted and re-created at the same path from serving the
+    * old positions. LRU, bounded by the total POSITIONS held rather than
+    * by entry count (one sidecar may hold up to
+    * `spark.graft.dv.maxPositions`); a part larger than the whole bound
+    * is never cached.
+    */
+  private object DvCache {
+    private val maxHeld = 1L << 23 // 8 Mi positions, 64 MiB of longs
+    private val parts = new java.util.LinkedHashMap[
+      (String, Long, Long), Map[String, Array[Long]]](16, 0.75f, true)
+    private var held = 0L
+
+    private def keyOf(st: FileStatus) =
+      (st.getPath.toString, st.getModificationTime, st.getLen)
+
+    private def sizeOf(m: Map[String, Array[Long]]): Long =
+      m.valuesIterator.map(_.length.toLong).sum
+
+    def getOrRead(st: FileStatus)(
+        read: => Map[String, Array[Long]]): Map[String, Array[Long]] =
+      synchronized(Option(parts.get(keyOf(st)))).getOrElse {
+        val m = read
+        put(st, m)
+        m
+      }
+
+    def put(st: FileStatus, m: Map[String, Array[Long]]): Unit =
+      synchronized {
+        val n = sizeOf(m)
+        if (n <= maxHeld) {
+          Option(parts.put(keyOf(st), m)).foreach(old => held -= sizeOf(old))
+          held += n
+          // eldest first; the entry just put is the newest and fits
+          val it = parts.values.iterator
+          while (held > maxHeld) { held -= sizeOf(it.next()); it.remove() }
+        }
+      }
   }
 
   /** The keep-this-row judgment of a DV map as a broadcast-backed

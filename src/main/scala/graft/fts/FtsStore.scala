@@ -676,8 +676,9 @@ object FtsStore {
     }
 
   /** The store-constant file schema for `kind` ("postings-files" /
-    * "docs-files"), inferred once per store per JVM from `sampleDir` (a
-    * leaf dir: no partition discovery, so the schema is the files' own).
+    * "docs-files"), derived once per store per JVM from `sampleDir` (a
+    * leaf dir: no partition discovery, so the schema is the files' own)
+    * by [[footerSchema]].
     */
   private def leafSchema(spark: SparkSession, path: String, kind: String,
                          sampleDir: String)
@@ -698,11 +699,27 @@ object FtsStore {
     val cached = key.flatMap(k =>
       segSchemaCache.synchronized(Option(segSchemaCache.get(k))))
     cached.getOrElse {
-      val sch = spark.read.parquet(sampleDir).schema
+      val sch = footerSchema(spark, sampleDir)
       key.foreach(k => segSchemaCache.synchronized(
         segSchemaCache.put(k, sch): Unit))
       sch
     }
+  }
+
+  /** What `spark.read.parquet(dir).schema` infers for a leaf dir of
+    * same-schema files: the footer schema of its first file by path,
+    * the one file that inference reads, read on the driver.
+    */
+  private[fts] def footerSchema(spark: SparkSession, dir: String)
+      : org.apache.spark.sql.types.StructType = {
+    val files = graft.StoreLock.fs(spark, dir).listStatus(new HPath(dir))
+      .map(_.getPath)
+      .filter { p =>
+        !p.getName.startsWith("_") && !p.getName.startsWith(".")
+      }
+    require(files.nonEmpty, s"no parquet file in $dir")
+    graft.catalog.VersionedTable.footerSchema(spark,
+      files.minBy(_.toString))
   }
 
   /** Every live segment's doc stats as ONE scan relation (r20, the

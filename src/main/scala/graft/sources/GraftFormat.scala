@@ -219,13 +219,9 @@ class GraftFormat extends RelationProvider with CreatableRelationProvider
     require(schema.isEmpty,
       "graft streaming source derives its schema from the table — " +
         "drop the user-specified schema")
-    val spark = sqlContext.sparkSession
-    val table = VersionedTable.read(spark, pathOf(parameters)).schema
-    val out =
-      if (parameters.get("readChangeFeed").exists(_.toBoolean))
-        table.add("_change_type", StringType, nullable = false)
-      else table
-    ("graft", out)
+    ("graft", GraftFormat.streamSchema(sqlContext.sparkSession,
+      pathOf(parameters),
+      parameters.get("readChangeFeed").exists(_.toBoolean)))
   }
 
   override def createSource(sqlContext: SQLContext, metadataPath: String,
@@ -259,6 +255,18 @@ object GraftFormat {
     parameters.get("partitionCols").orElse(parameters.get("partitionCol"))
       .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
       .getOrElse(Nil)
+
+  /** A stream's schema: the head snapshot's LOGICAL schema, read from
+    * table metadata with no Dataset built, plus the change-type column
+    * of a `readChangeFeed` stream.
+    */
+  private[sources] def streamSchema(spark: SparkSession, path: String,
+                                    changeFeed: Boolean): StructType = {
+    val table = VersionedTable.logicalSchema(spark, path)
+    require(table.nonEmpty, s"no versioned table at $path")
+    if (changeFeed) table.add("_change_type", StringType, nullable = false)
+    else table
+  }
 }
 
 /** A computed DataFrame served through the DSv1 relation contract —
@@ -409,12 +417,8 @@ class GraftStreamSource(spark: SparkSession, path: String,
       else Some(v - 1)
   }
 
-  override val schema: StructType = {
-    val table = VersionedTable.read(spark, path).schema
-    if (readChangeFeed)
-      table.add("_change_type", StringType, nullable = false)
-    else table
-  }
+  override val schema: StructType =
+    GraftFormat.streamSchema(spark, path, readChangeFeed)
 
   private val maxVersionsPerTrigger: Option[Long] =
     options.get("maxVersionsPerTrigger").map { s =>

@@ -67,6 +67,20 @@ object Schemas {
     StructField("entity_id", StringType, nullable = false),
     StructField("count", LongType, nullable = false)))
 
+  val annotations: StructType = StructType(Seq(
+    StructField("entity_id", StringType, nullable = false),
+    StructField("article_id", StringType, nullable = false),
+    StructField("mention", StringType),
+    StructField("target_entity_id", StringType, nullable = false),
+    StructField("start_pos", IntegerType),
+    StructField("end_pos", IntegerType)))
+
+  /** The resume bookkeeping table: ids of the pages whose links the
+    * alias counts already hold (`AliasesJob.countedPageIds`).
+    */
+  val aliasPagesSeen: StructType = StructType(Seq(
+    StructField("article_id", StringType, nullable = false)))
+
   val properties: StructType = StructType(Seq(
     StructField("property_id", StringType, nullable = false),
     StructField("from_entity_id", StringType, nullable = false),

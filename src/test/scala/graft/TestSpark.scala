@@ -19,6 +19,32 @@ object PlanDig {
     }.flatten
 }
 
+/** The Spark jobs a block runs, by the call site Spark names each
+  * after (`parquet at X.scala:12`). Every job that starts while the
+  * block runs counts, on any thread: a fork's suites run one at a
+  * time, so nothing else submits jobs meanwhile.
+  */
+object JobCount {
+  def apply[T](spark: SparkSession)(body: => T): (T, Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        sites.add(j.stageInfos.sortBy(_.stageId).lastOption
+          .map(_.name).getOrElse(s"job ${j.jobId}"))
+    }
+    org.apache.spark.GraftTestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.GraftTestBus.drain(sc)
+      import scala.jdk.CollectionConverters._
+      (out, sites.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+}
+
 /** One shared local SparkSession for the whole test JVM. */
 object TestSpark {
   lazy val spark: SparkSession = {

@@ -3,7 +3,7 @@ package graft.catalog
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.TestSpark
+import graft.{JobCount, TestSpark}
 
 /** Deletion vectors (merge-on-read row deletes): a point DELETE
   * commits positions, never a rewrite; every read path applies the
@@ -32,6 +32,21 @@ class DeletionVectorSpec extends AnyFunSuite {
     val src = scala.io.Source.fromFile(s"$t/_commits/v-$v", "UTF-8")
     try src.mkString finally src.close()
   }
+
+  /** Version `v`'s deletion vectors as the scan applies them. */
+  private def dvAt(t: String, v: Int): Map[String, Seq[Long]] =
+    VersionedTable.dvPositions(spark, t,
+      VersionedTable.resolveFiles(VersionedTable.fs(spark, t), t, v))
+      .map { case (f, p) => f -> p.toSeq }
+
+  /** The sidecar names version `v`'s manifest entries reference. */
+  private def sidecarsAt(t: String, v: Int): Seq[String] =
+    VersionedTable.resolveFiles(VersionedTable.fs(spark, t), t, v)
+      .flatMap(e => VersionedTable.dvSplit(e)._2).distinct
+
+  private def changeRows(df: DataFrame): Set[(Long, String)] =
+    df.select("id", "_change_type").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSet
 
   test("DV delete is metadata-only: zero data files written, all read paths apply it") {
     val t = newTable()
@@ -780,5 +795,125 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(!VersionedTable.hasDeletionVectors(spark, t))
     assert(ids(VersionedTable.read(spark, t)) ==
       Set(2L, 3L, 4L, 5L, 9L))
+  }
+
+  test("a sidecar laid out by Spark's own parquet writer reads the same") {
+    val t = newTable()
+    VersionedTable.commit(base.repartition(1), t)                   // v0
+    VersionedTable.deleteWhere(spark, t, Some("id IN (2, 4)"), dv = true) // v1
+    val written = dvAt(t, 1)
+    val Seq((file, pos)) = written.toSeq
+    assert(pos.size == 2)
+    // re-lay the sidecar the way Spark's writer did: several part
+    // files, one of them empty, beside a _SUCCESS marker
+    val dir = s"$t/_dv/${sidecarsAt(t, 1).head}"
+    VersionedTable.fs(spark, t).delete(new org.apache.hadoop.fs.Path(dir), true)
+    Seq((file, pos(0))).toDF("file", "pos").write.parquet(dir)
+    Seq((file, pos(1))).toDF("file", "pos").write.mode("append").parquet(dir)
+    Seq.empty[(String, Long)].toDF("file", "pos")
+      .write.mode("append").parquet(dir)
+    val parts = new java.io.File(dir).listFiles().map(_.getName)
+      .filter(_.startsWith("part-")).toSeq
+    assert(new java.io.File(s"$dir/_SUCCESS").exists())
+    assert(parts.map(p => spark.read.parquet(s"$dir/$p").count()).sorted ==
+      Seq(0L, 1L, 1L))
+    assert(dvAt(t, 1) == written)
+    assert(ids(VersionedTable.read(spark, t)) == Set(1L, 3L, 5L))
+    assert(changeRows(VersionedTable.tableChanges(spark, t, 0, 1)) ==
+      Set((2L, "delete"), (4L, "delete")))
+    // a further delete on that file unions the Spark-written positions
+    VersionedTable.deleteWhere(spark, t, Some("id = 5"), dv = true) // v2
+    assert(ids(VersionedTable.read(spark, t)) == Set(1L, 3L))
+    assert(dvAt(t, 2)(file).size == 3)
+    assert(changeRows(VersionedTable.tableChanges(spark, t, 1, 2)) ==
+      Set((5L, "delete")))
+    assert(changeRows(VersionedTable.tableChanges(spark, t, 0, 2)) ==
+      Set((2L, "delete"), (4L, "delete"), (5L, "delete")))
+  }
+
+  test("resolving a DV'd version runs only its data scan's jobs") {
+    val t = newTable()
+    VersionedTable.commit(base.repartition(1), t)                   // v0
+    VersionedTable.deleteWhere(spark, t, Some("id = 2"), dv = true) // v1
+    VersionedTable.deleteWhere(spark, t, Some("id = 4"), dv = true) // v2
+    // cold position cache: move each sidecar's part to a new file name
+    val fsys = VersionedTable.fs(spark, t)
+    (sidecarsAt(t, 1) ++ sidecarsAt(t, 2)).distinct.foreach { d =>
+      val dir = new org.apache.hadoop.fs.Path(s"$t/_dv/$d")
+      fsys.listStatus(dir).map(_.getPath)
+        .filter(_.getName.startsWith("part-")).foreach { p =>
+          assert(fsys.rename(p, new org.apache.hadoop.fs.Path(dir,
+            "moved-" + p.getName)))
+        }
+    }
+    val ts = VersionedTable.history(spark, t)
+      .filter($"version" === 1).head().getAs[Long]("ts_millis")
+    // the control: the same file read at v0, which has no vector
+    VersionedTable.read(spark, t, 0).collect()
+    val (_, control) = JobCount(spark)(VersionedTable.read(spark, t, 0).collect())
+    def resolvedThenRun(df: => DataFrame): (Seq[String], Seq[String]) = {
+      val (frame, resolve) = JobCount(spark)(df)
+      (resolve, JobCount(spark)(frame.collect())._2)
+    }
+    val reads = Seq(
+      "read" -> resolvedThenRun(VersionedTable.read(spark, t)),
+      "read at v1" -> resolvedThenRun(VersionedTable.read(spark, t, 1)),
+      "readAsOf" -> resolvedThenRun(
+        VersionedTable.readAsOf(spark, t, ts)))
+    reads.foreach { case (what, (resolve, run)) =>
+      assert(resolve.isEmpty, s"$what resolved with jobs: $resolve")
+      assert(run.size == control.size, s"$what ran $run, control $control")
+    }
+    val (resolve, run) =
+      resolvedThenRun(VersionedTable.tableChanges(spark, t, 0, 2))
+    assert(resolve.isEmpty, s"tableChanges resolved with jobs: $resolve")
+    assert(run.nonEmpty && run.forall(_.contains("DeletionVectorSpec")),
+      s"tableChanges ran engine-side jobs: $run")
+    assert(changeRows(VersionedTable.tableChanges(spark, t, 0, 2)) ==
+      Set((2L, "delete"), (4L, "delete")))
+  }
+
+  test("a DV delete runs no write job for its sidecar") {
+    val t = newTable()
+    VersionedTable.commit(base.repartition(2, col("id")), t)       // v0
+    VersionedTable.read(spark, t).collect()
+    val (_, sites) = JobCount(spark)(
+      VersionedTable.deleteWhere(spark, t, Some("id = 2"), dv = true))
+    assert(sites.nonEmpty && !sites.exists(_.startsWith("parquet at")),
+      s"a sidecar write job ran: $sites")
+    assert(sidecarsAt(t, 1).size == 1)
+    // a further delete on the vectored file unions the cached priors
+    val (_, again) = JobCount(spark)(
+      VersionedTable.deleteWhere(spark, t, Some("id IN (1, 3)"), dv = true))
+    assert(again.nonEmpty && !again.exists(_.startsWith("parquet at")),
+      s"a sidecar read or write job ran: $again")
+    assert(ids(VersionedTable.read(spark, t)) == Set(4L, 5L))
+  }
+
+  test("a table re-created at the same path never reads the old cached positions") {
+    val t = newTable()
+    val fsys = VersionedTable.fs(spark, t)
+    VersionedTable.commit(base.repartition(1), t)                   // v0
+    VersionedTable.deleteWhere(spark, t, Some("id = 2"), dv = true) // v1
+    assert(ids(VersionedTable.read(spark, t)) == Set(1L, 3L, 4L, 5L))
+    val Seq(oldName) = sidecarsAt(t, 1)
+    // vacuum everything away, then re-create the table at the same path
+    fsys.delete(new org.apache.hadoop.fs.Path(t), true)
+    VersionedTable.commit(base.repartition(1), t)                   // v0
+    VersionedTable.deleteWhere(spark, t, Some("id = 4"), dv = true) // v1
+    // give the new sidecar the old one's name, so its part file sits at
+    // exactly the path the cache saw before
+    val Seq(newName) = sidecarsAt(t, 1)
+    assert(fsys.rename(new org.apache.hadoop.fs.Path(s"$t/_dv/$newName"),
+      new org.apache.hadoop.fs.Path(s"$t/_dv/$oldName")))
+    val manifest = new org.apache.hadoop.fs.Path(s"$t/_commits/v-1")
+    val in = fsys.open(manifest)
+    val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    assert(text.contains(newName))
+    val out = fsys.create(manifest, true)
+    try out.write(text.replace(newName, oldName).getBytes("UTF-8"))
+    finally out.close()
+    assert(sidecarsAt(t, 1) == Seq(oldName))
+    assert(ids(VersionedTable.read(spark, t)) == Set(1L, 2L, 3L, 5L))
   }
 }

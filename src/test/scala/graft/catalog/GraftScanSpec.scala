@@ -265,4 +265,18 @@ class GraftScanSpec extends AnyFunSuite {
     assert(d2.filter($"day".contains("on")).count() == 2)
     assert(idx2.lastListedCount == idx2.totalFiles)
   }
+
+  test("a cold commit dir's schema resolves with no Spark job, as inference types it") {
+    val t = newTable()
+    // a two-level layout whose levels infer as int and string
+    VersionedTable.commit(base.withColumn("wk", lit(7)), t, Seq("wk", "day"))
+    val files = VersionedTable.resolveFiles(VersionedTable.fs(spark, t), t,
+      0).map(f => s"$t/data/$f")
+    val dir = files.head.substring(0, files.head.indexOf("/wk="))
+    val inferred = spark.read.option("basePath", dir).parquet(files: _*).schema
+    val (df, jobs) = graft.JobCount(spark)(VersionedTable.read(spark, t))
+    assert(jobs.isEmpty, s"resolving a cold dir ran $jobs")
+    assert(df.schema == inferred)
+    assert(rows(df) == rows(base))
+  }
 }

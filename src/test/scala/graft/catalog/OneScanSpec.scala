@@ -16,7 +16,8 @@ class OneScanSpec extends AnyFunSuite {
   private val inference = "dirSchema"
 
   /** The sources that lay out versioned tables: any parquet read there
-    * that is not a deletion-vector sidecar read is a table data read.
+    * is a table data read. A deletion-vector sidecar read is an
+    * offender wherever it sits: sidecars are decoded on the driver.
     */
   private val tableSources = Set("catalog/VersionedTable.scala",
     "catalog/GraftScan.scala")
@@ -51,8 +52,9 @@ class OneScanSpec extends AnyFunSuite {
       stmt = lines.slice(math.max(0, i - 3), i + 1).mkString(" ")
       isRead = !stmt.contains(".write") && !stmt.contains("readStream")
       dataRoot = line.contains("$path/data")
-      tableRead = tableSources(rel) && isRead && !stmt.contains("/_dv/")
-      if isRead && (dataRoot || tableRead)
+      tableRead = tableSources(rel) && isRead
+      dvRead = stmt.contains("/_dv/")
+      if isRead && (dataRoot || tableRead || dvRead)
       enclosing = lines.take(i + 1).reverse
         .flatMap(l => defLine.findFirstMatchIn(l).map(_.group(1)))
         .headOption

@@ -464,4 +464,28 @@ class FtsStoreSpec extends AnyFunSuite {
     assert(wide == narrow)
     assert(narrow._1 == Set(1L, 3L, 5L) && narrow._2 == narrow._1)
   }
+
+  test("segment schemas from one footer equal Spark's inference") {
+    val (store, _) = grownStore()
+    // a string-keyed store too: the doc_id type travels in the footer
+    val keyed = newStore()
+    FtsStore.create(corpus.select($"doc_id".cast("string").as("doc_id"),
+      $"text"), "doc_id", Seq("text"), keyed, numBuckets = 2)
+    val leafDirs = for {
+      s <- Seq(store, keyed)
+      seg <- new java.io.File(s).listFiles().toSeq
+        if seg.getName.startsWith("seg-")
+      docs = new java.io.File(seg, "docs")
+      leaf <- docs +: Option(new java.io.File(seg, "postings").listFiles())
+        .toSeq.flatten.filter(_.getName.startsWith("tb="))
+      if leaf.isDirectory &&
+        leaf.listFiles().exists(_.getName.startsWith("part-"))
+    } yield leaf.toString
+    assert(leafDirs.exists(_.endsWith("/docs")) &&
+      leafDirs.exists(_.contains("/postings/tb=")))
+    leafDirs.foreach { dir =>
+      assert(FtsStore.footerSchema(spark, dir) ==
+        spark.read.parquet(dir).schema, dir)
+    }
+  }
 }

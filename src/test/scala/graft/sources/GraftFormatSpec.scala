@@ -714,4 +714,26 @@ class GraftFormatSpec extends AnyFunSuite {
       "a skipped write must not redeclare the layout")
     assert(VersionedTable.read(spark, t).count() == 200L)
   }
+
+  test("the stream schema is every batch's schema, nullability included") {
+    import org.apache.spark.sql.execution.streaming.runtime.LongOffset
+    val t = newTable("schema")
+    VersionedTable.commit(base.coalesce(1), t)                      // v0
+    VersionedTable.append(Seq((6L, "thu", 60.0))
+      .toDF("id", "day", "value"), t)                               // v1
+    VersionedTable.deleteWhere(spark, t, Some("id = 2"), dv = true) // v2
+    Seq(Map("ignoreChanges" -> "true"), Map("readChangeFeed" -> "true"))
+      .foreach { opts =>
+        val src = new GraftStreamSource(spark, t, opts)
+        val (_, provided) = new GraftFormat().sourceSchema(spark.sqlContext,
+          None, "graft", opts + ("path" -> t))
+        assert(provided == src.schema, opts)
+        Seq(None -> 0L, Some(0L) -> 1L, Some(1L) -> 2L, Some(0L) -> 2L)
+          .foreach { case (start, end) =>
+            val batch = src.getBatch(start.map(LongOffset(_)), LongOffset(end))
+            assert(batch.schema == src.schema,
+              s"$opts ($start, $end]: ${batch.schema} vs ${src.schema}")
+          }
+      }
+  }
 }
