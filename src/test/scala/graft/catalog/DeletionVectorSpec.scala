@@ -897,7 +897,8 @@ class DeletionVectorSpec extends AnyFunSuite {
     VersionedTable.deleteWhere(spark, t, Some("id = 2"), dv = true) // v1
     assert(ids(VersionedTable.read(spark, t)) == Set(1L, 3L, 4L, 5L))
     val Seq(oldName) = sidecarsAt(t, 1)
-    // vacuum everything away, then re-create the table at the same path
+    // remove the whole table tree, then re-create the table at the same
+    // path
     fsys.delete(new org.apache.hadoop.fs.Path(t), true)
     VersionedTable.commit(base.repartition(1), t)                   // v0
     VersionedTable.deleteWhere(spark, t, Some("id = 4"), dv = true) // v1
