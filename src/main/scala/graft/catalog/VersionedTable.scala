@@ -1319,7 +1319,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
               entriesOf(cur, countFiles(
                 (if (srcEmpty) scan
                  else scan.join(keys, Seq(keyCol), "left_anti"))
-                  .select("__f"))._2.keys)
+                  .select("__f"))._2)
             }
           val touched = touchedM ++ touchedB
           if (touched.isEmpty && notMatched.isEmpty) prevVs.max
@@ -1798,9 +1798,9 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   /** The merge-on-read commit tail of every row-level verb, and the one
     * home of the DV-vs-rewrite POLICY. `hits` (the base version's live
     * rows to vector, carrying their `__gfile`/`__gpos` tags) is staged,
-    * and one pass over it counts the hits and collects the files they
-    * touch, with each file's hit positions while the count is within
-    * [[dvMaxPositions]]. A count past that cap is a bulk change wearing
+    * and one pass over it counts the hits and collects each touched
+    * file's hit positions while the count is within [[dvMaxPositions]]
+    * ([[hitPositions]]). A count past that cap is a bulk change wearing
     * the wrong shape: the tail logs a warning and returns None, and the
     * caller runs its file-pruned rewrite instead. Otherwise the
     * positions go to ONE `_dv/` sidecar written on the driver —
@@ -1830,8 +1830,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     val fsys = fs(spark, path)
     val staged = graft.Caches.stage(hits)
     val cap = dvMaxPositions(spark)
-    val (n, hitPositions) =
-      countFiles(staged.select("__gfile", "__gpos"), positionsUpTo = Some(cap))
+    val (n, positions) = hitPositions(staged, cap)
     if (n > cap) {
       logWarning(s"$op at $path matched $n rows — past " +
         "spark.graft.dv.maxPositions, falling back to the file-pruned " +
@@ -1844,9 +1843,9 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       if (n == 0L) (Map.empty[String, String], 0L)
       else {
         // the sidecar stores MANIFEST base names, not the scan's form
-        val vectored = entriesOf(scope.baseFiles, hitPositions.keys)
+        val vectored = entriesOf(scope.baseFiles, positions.keys)
         val (dvName, bytes) = writeDvSidecar(spark, fsys, path, vectored,
-          hitPositions.map { case (s, p) => manifestName(s) -> p })
+          positions.map { case (s, p) => manifestName(s) -> p })
         (vectored.map(e => e -> s"${baseOf(e)}@dv=$dvName").toMap, bytes)
       }
     val claimScope = scope.copy(removed = scope.removed ++ retag.keySet)
@@ -1907,7 +1906,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
         .append("file", file).append("pos", p)))
     } finally writer.close()
     val st = fsys.getFileStatus(part)
-    DvCache.put(st, rows.toMap)
+    DvCache.put(st, rows.toMap, dvMaxPositions(spark))
     (dvName, st.getLen)
   }
 
@@ -2186,7 +2185,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
           .select(col(keyCol), input_file_name().as("__f"))
           .filter(col(keyCol).between(lit(lo), lit(hi)))
         Some((entriesOf(candidates, countFiles(
-          keyHits(scan, keyCol, keys, inList).select("__f"))._2.keys),
+          keyHits(scan, keyCol, keys, inList).select("__f"))._2),
           (lo, hi), inList))
       }
     }
@@ -2226,7 +2225,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
                             cur: Seq[String], pred: String): Set[String] =
     entriesOf(cur, countFiles(
       GraftScan.read(spark, path, baseV).filter(expr(pred))
-        .select(input_file_name().as("__f")))._2.keys)
+        .select(input_file_name().as("__f")))._2)
 
   /** The manifest entries of scanned data files: a scan names BASE data
     * files URI-encoded ([[manifestName]] decodes them), while a DV'd
@@ -2261,45 +2260,57 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** A frame's row count and its first (string) column's distinct
-    * values (FILE NAMES: each task emits its row count and the handful
-    * of files it read), in one pass and without the final-aggregation
-    * exchange a `.distinct().collect()` plans — a per-partition distinct
-    * plus a driver union does the same dedup minus one shuffle round.
-    * With `positionsUpTo`, the second column is a row position and each
-    * file also brings back its positions while the total count stays
-    * within that bound; past it every position array is empty, so the
-    * driver never holds more than about twice the bound.
+  /** A one-string-column frame's row count and distinct values (FILE
+    * NAMES: each task emits its row count and the handful of files it
+    * read), in one pass and without the final-aggregation exchange a
+    * `.distinct().collect()` plans — a per-partition distinct plus a
+    * driver union does the same dedup minus one shuffle round.
     */
-  private def countFiles(files: DataFrame,
-                         positionsUpTo: Option[Long] = None)
+  private def countFiles(files: DataFrame): (Long, Set[String]) =
+    files.rdd
+      .mapPartitions { it =>
+        var n = 0L
+        val names = scala.collection.mutable.HashSet.empty[String]
+        it.foreach { r => n += 1; names += r.getString(0) }
+        Iterator((n, names.toSet))
+      }
+      .collect()
+      .foldLeft((0L, Set.empty[String])) { case ((n, s), (m, t)) =>
+        (n + m, s ++ t) }
+
+  /** The row count of staged deletion-vector hits (`__gfile`,
+    * `__gpos`) and, when it is within `cap`, each hit file's positions
+    * (empty past it). One pass counts the rows, and each task also
+    * sends back its positions while its own count is within its share
+    * of the cap (`cap` over the task count), so no pass ever brings
+    * more than `cap` positions to the driver. Only when the total is
+    * within the cap but some task went past its share does a second
+    * pass over the (cached) hits collect them all.
+    */
+  private def hitPositions(staged: DataFrame, cap: Long)
       : (Long, Map[String, Array[Long]]) = {
-    import scala.collection.mutable.{ArrayBuilder, HashMap}
-    val cap = positionsUpTo.getOrElse(-1L)
-    val perTask = files.rdd.mapPartitions { it =>
+    val rdd = staged.select("__gfile", "__gpos").rdd
+    // each task's count, and its positions while the count is <= upTo
+    def pass(upTo: Long) = rdd.mapPartitions { it =>
+      import scala.collection.mutable.{ArrayBuilder, HashMap}
       var n = 0L
       val byFile = HashMap.empty[String, ArrayBuilder.ofLong]
       it.foreach { r =>
         n += 1
-        val b = byFile.getOrElseUpdate(r.getString(0), new ArrayBuilder.ofLong)
-        if (n <= cap) b += r.getLong(1)
+        if (n <= upTo) byFile.getOrElseUpdate(r.getString(0),
+          new ArrayBuilder.ofLong) += r.getLong(1)
+        else if (byFile.nonEmpty) byFile.clear()
       }
-      Iterator((n, byFile.map { case (f, b) =>
-        f -> (if (n <= cap) b.result() else Array.emptyLongArray) }.toMap))
-    }
-    var total = 0L
-    val byFile = HashMap.empty[String, ArrayBuilder.ofLong]
-    files.sparkSession.sparkContext.runJob(perTask,
-      (it: Iterator[(Long, Map[String, Array[Long]])]) => it.next(),
-      (_: Int, task: (Long, Map[String, Array[Long]])) => {
-        total += task._1
-        task._2.foreach { case (f, p) =>
-          val b = byFile.getOrElseUpdate(f, new ArrayBuilder.ofLong)
-          if (total <= cap) b ++= p
-        }
-      })
-    (total, byFile.map { case (f, b) =>
-      f -> (if (total <= cap) b.result() else Array.emptyLongArray) }.toMap)
+      Iterator((n, if (n <= upTo)
+        Some(byFile.map { case (f, b) => f -> b.result() }.toMap) else None))
+    }.collect()
+    val first = pass(math.max(1L, cap / math.max(1, rdd.getNumPartitions)))
+    val n = first.map(_._1).sum
+    val tasks =
+      if (n > cap) Array.empty[(Long, Option[Map[String, Array[Long]]])]
+      else if (first.forall(_._2.isDefined)) first
+      else pass(Long.MaxValue)
+    (n, tasks.flatMap(_._2.get).groupMapReduce(_._1)(_._2)(_ ++ _))
   }
 
   /** The rewrite commit tail of every row-level verb: land `rows` (the
@@ -5155,7 +5166,8 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     val fsys = fs(spark, path)
     val conf = spark.sparkContext.hadoopConfiguration
     refs.groupBy(_._2).toSeq.flatMap { case (d, fs0) =>
-      val all = sidecarPositions(fsys, conf, s"$path/_dv/$d")
+      val all = sidecarPositions(fsys, conf, s"$path/_dv/$d",
+        dvMaxPositions(spark))
       fs0.flatMap { case (b, _) => all.get(b).map(b -> _) }
     }.toMap
   }
@@ -5163,17 +5175,20 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   /** Every (file → sorted positions) of ONE sidecar dir: the union of
     * its part files (this engine writes one; a sidecar from Spark's
     * writer may hold several, some empty, beside a `_SUCCESS` marker),
-    * each served by [[DvCache]] or read on the driver.
+    * each served by [[DvCache]] (bounded at `cacheBound` positions) or
+    * read on the driver.
     */
   private def sidecarPositions(fsys: FileSystem,
                                conf: org.apache.hadoop.conf.Configuration,
-                               dir: String): Map[String, Array[Long]] =
+                               dir: String, cacheBound: Long)
+      : Map[String, Array[Long]] =
     fsys.listStatus(new HPath(dir)).toSeq
       .filter { st =>
         val n = st.getPath.getName
         st.isFile && !n.startsWith("_") && !n.startsWith(".")
       }
-      .map(st => DvCache.getOrRead(st)(readDvPart(conf, st))) match {
+      .map(st => DvCache.getOrRead(st, cacheBound)(readDvPart(conf, st)))
+      match {
       case Seq(one) => one
       case parts => parts.flatMap(_.toSeq)
         .groupMapReduce(_._1)(_._2)(_ ++ _)
@@ -5231,12 +5246,13 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * an entry never goes stale, and the (mtime, length) key keeps a
     * table deleted and re-created at the same path from serving the
     * old positions. LRU, bounded by the total POSITIONS held rather than
-    * by entry count (one sidecar may hold up to
-    * `spark.graft.dv.maxPositions`); a part larger than the whole bound
-    * is never cached.
+    * by entry count: each call passes the bound, the calling session's
+    * `spark.graft.dv.maxPositions` (default 10 M positions, 80 MB of
+    * longs), so any sidecar one commit may write fits. A part larger
+    * than the bound (a vector unioned over several deletes past the
+    * cap, or one written under a larger cap) is never cached.
     */
   private object DvCache {
-    private val maxHeld = 1L << 23 // 8 Mi positions, 64 MiB of longs
     private val parts = new java.util.LinkedHashMap[
       (String, Long, Long), Map[String, Array[Long]]](16, 0.75f, true)
     private var held = 0L
@@ -5247,15 +5263,16 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     private def sizeOf(m: Map[String, Array[Long]]): Long =
       m.valuesIterator.map(_.length.toLong).sum
 
-    def getOrRead(st: FileStatus)(
+    def getOrRead(st: FileStatus, maxHeld: Long)(
         read: => Map[String, Array[Long]]): Map[String, Array[Long]] =
       synchronized(Option(parts.get(keyOf(st)))).getOrElse {
         val m = read
-        put(st, m)
+        put(st, m, maxHeld)
         m
       }
 
-    def put(st: FileStatus, m: Map[String, Array[Long]]): Unit =
+    def put(st: FileStatus, m: Map[String, Array[Long]],
+            maxHeld: Long): Unit =
       synchronized {
         val n = sizeOf(m)
         if (n <= maxHeld) {

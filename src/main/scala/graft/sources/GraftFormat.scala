@@ -257,13 +257,15 @@ object GraftFormat {
       .getOrElse(Nil)
 
   /** A stream's schema: the head snapshot's LOGICAL schema, read from
-    * table metadata with no Dataset built, plus the change-type column
-    * of a `readChangeFeed` stream.
+    * table metadata with no Dataset built (no columns for a table whose
+    * head holds no files, e.g. after a truncate), plus the change-type
+    * column of a `readChangeFeed` stream.
     */
   private[sources] def streamSchema(spark: SparkSession, path: String,
                                     changeFeed: Boolean): StructType = {
+    require(VersionedTable.versions(spark, path).nonEmpty,
+      s"no versioned table at $path")
     val table = VersionedTable.logicalSchema(spark, path)
-    require(table.nonEmpty, s"no versioned table at $path")
     if (changeFeed) table.add("_change_type", StringType, nullable = false)
     else table
   }

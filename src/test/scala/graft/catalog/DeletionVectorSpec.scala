@@ -470,6 +470,73 @@ class DeletionVectorSpec extends AnyFunSuite {
     }
   }
 
+  test("the DV cap bounds the positions sent to the driver in total, not per task") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val t = newTable()
+    VersionedTable.commit(spark.range(0L, 100000L, 1L, 4)
+      .select(col("id"), lit("mon").as("day"),
+        col("id").cast("double").as("value")), t)                 // v0
+    assert(VersionedTable.read(spark, t).inputFiles.length == 4)
+    // 75k matched rows, ~19k per file: every task holds fewer hits
+    // than the cap, all of them together more
+    val sizes = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => sizes.add(m.resultSize))
+    }
+    val sc = spark.sparkContext
+    spark.conf.set("spark.graft.dv.maxPositions", "60000")
+    org.apache.spark.GraftTestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      assert(VersionedTable.deleteWhere(spark, t, Some("id % 4 != 3"),
+        dv = true) == 1)
+      org.apache.spark.GraftTestBus.drain(sc)
+    } finally {
+      sc.removeSparkListener(listener)
+      spark.conf.unset("spark.graft.dv.maxPositions")
+    }
+    assert(VersionedTable.history(spark, t)
+      .filter($"version" === 1).head().getString(1) == "delete_where")
+    assert(!VersionedTable.hasDeletionVectors(spark, t))
+    assert(VersionedTable.read(spark, t).count() == 25000L)
+    // one file's ~19k positions are ~150 KB of longs: no task sent them
+    import scala.jdk.CollectionConverters._
+    assert(sizes.asScala.nonEmpty && sizes.asScala.max < 64L * 1024,
+      s"task result sizes: ${sizes.asScala.toSeq.sorted.reverse.take(4)}")
+  }
+
+  test("a task past its share of the DV cap costs a second pass, not a wrong vector") {
+    // 4 files of 10 ids each; both deletes below match 12 rows in all 4
+    def table(): String = {
+      val t = newTable()
+      VersionedTable.commit((1L to 40L).map(i => (i, "mon", i * 1.0))
+        .toDF("id", "day", "value").repartitionByRange(4, col("id")), t)
+      assert(VersionedTable.read(spark, t).inputFiles.length == 4)
+      t
+    }
+    def delete(ids: Seq[Long]): (String, Seq[String]) = {
+      val t = table()
+      spark.conf.set("spark.graft.dv.maxPositions", "12")
+      val (_, sites) =
+        try JobCount(spark)(VersionedTable.deleteWhere(spark, t,
+          Some(s"id IN (${ids.mkString(", ")})"), dv = true))
+        finally spark.conf.unset("spark.graft.dv.maxPositions")
+      assert(VersionedTable.history(spark, t)
+        .filter($"version" === 1).head().getString(1) == "delete_dv")
+      assert(dvAt(t, 1).values.map(_.size).sum == 12)
+      assert(this.ids(VersionedTable.read(spark, t)) ==
+        (1L to 40L).toSet -- ids)
+      (t, sites)
+    }
+    // 3 hits per file: every task within its share (12 / 4)
+    val (_, even) = delete(Seq(1L, 2L, 3L, 11L, 12L, 13L,
+      21L, 22L, 23L, 31L, 32L, 33L))
+    // 9 hits in the first file: past its share, within the cap
+    val (_, uneven) = delete((1L to 9L) ++ Seq(11L, 21L, 31L))
+    assert(uneven.size == even.size + 1, s"$even vs $uneven")
+  }
+
   test("every vector commit counts its sidecar in history().bytes") {
     // what listStatusRec counts: no hidden (_SUCCESS, .crc) files
     def visibleBytes(f: java.io.File): Long =

@@ -736,4 +736,25 @@ class GraftFormatSpec extends AnyFunSuite {
           }
       }
   }
+
+  test("a stream over an emptied table starts; a stream over no table fails as such") {
+    val t = newTable("emptied")
+    VersionedTable.commit(base.coalesce(1), t)                      // v0
+    VersionedTable.deleteWhere(spark, t, None)                      // v1
+    assert(VersionedTable.read(spark, t).columns.isEmpty)
+    Seq(Map.empty[String, String] -> Seq.empty[String],
+        Map("readChangeFeed" -> "true") -> Seq("_change_type"))
+      .foreach { case (opts, cols) =>
+        val (_, provided) = new GraftFormat().sourceSchema(spark.sqlContext,
+          None, "graft", opts + ("path" -> t))
+        assert(provided.fieldNames.toSeq == cols, opts)
+        assert(new GraftStreamSource(spark, t, opts).schema == provided, opts)
+      }
+    val missing = newTable("missing")
+    val e = intercept[IllegalArgumentException] {
+      new GraftFormat().sourceSchema(spark.sqlContext, None, "graft",
+        Map("path" -> missing))
+    }
+    assert(e.getMessage.contains("no versioned table"), e.getMessage)
+  }
 }
