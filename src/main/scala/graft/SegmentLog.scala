@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.StructType
 
 /** The commit protocol of the persisted incremental stores — the FTS
   * segment store ([[graft.fts.FtsStore]]) and the MinHash signature
@@ -36,6 +38,9 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
   *    retained manifest keeps valid paths; never-committed segments are
   *    deleted only past a grace window (an in-flight lock-free append is
   *    indistinguishable from a crashed one).
+  *  - '''reads''' take each kind of file's store-constant schema from one
+  *    driver-side footer read ([[leafSchema]]), never from a Spark
+  *    schema-inference job.
   */
 private[graft] object SegmentLog {
 
@@ -252,6 +257,70 @@ private[graft] object SegmentLog {
           (name.startsWith(".") && name.endsWith(".tmp"))
         if (stray && pastGrace(p)) fs.delete(p, false)
       }
+  }
+
+  /** Per-store schema cache for segment reads: every segment of a store
+    * is written by the same pipeline, so each `kind` of file (the FTS
+    * store's postings and docs, the signature store's sigs and buckets)
+    * has a store-constant schema — one footer read per store per JVM
+    * instead of one schema-inference job per read. Keyed by the store's
+    * `meta.json` CREATION NONCE (written once at creation, ~60 bytes —
+    * reading the content costs the same one FS op as a status probe), so
+    * a store deleted and re-created at the same path can never be read
+    * with the old store's schema, even when the new meta.json lands in
+    * the same mtime tick with the same byte length. A store without a
+    * nonce (the signature store, pre-nonce FTS stores) keys on the whole
+    * meta content plus its (mtime, length), the identity the nonce
+    * replaced. Bounded LRU. Holds FILE schemas: leaf-dir reads carry no
+    * partition column, and a partitioned read takes its partition
+    * columns from the paths.
+    */
+  private val schemaCache =
+    new java.util.LinkedHashMap[String, StructType](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, StructType]): Boolean =
+        size() > 256
+    }
+
+  /** The store-constant file schema of `kind`, derived once per store
+    * per JVM from `sampleDir` (a leaf dir of that kind: no partition
+    * discovery, so the schema is the files' own) by [[footerSchema]];
+    * `sampleDir` is evaluated only on a cache miss.
+    */
+  def leafSchema(spark: SparkSession, path: String, kind: String,
+                 sampleDir: => String): StructType = {
+    val metaId = scala.util.Try {
+      val fs = StoreLock.fs(spark, path)
+      val meta = readMeta(fs, path).get
+      meta.get("nonce").getOrElse {
+        val st = fs.getFileStatus(new HPath(s"$path/meta.json"))
+        s"$meta@${st.getModificationTime}:${st.getLen}"
+      }
+    }.toOption
+    val key = metaId.map(id => s"$path#$kind#$id")
+    val cached = key.flatMap(k =>
+      schemaCache.synchronized(Option(schemaCache.get(k))))
+    cached.getOrElse {
+      val sch = footerSchema(spark, sampleDir)
+      key.foreach(k => schemaCache.synchronized(
+        schemaCache.put(k, sch): Unit))
+      sch
+    }
+  }
+
+  /** What `spark.read.parquet(dir).schema` infers for a leaf dir of
+    * same-schema files: the footer schema of its first file by path,
+    * the one file that inference reads, read on the driver.
+    */
+  def footerSchema(spark: SparkSession, dir: String): StructType = {
+    val files = StoreLock.fs(spark, dir).listStatus(new HPath(dir))
+      .map(_.getPath)
+      .filter { p =>
+        !p.getName.startsWith("_") && !p.getName.startsWith(".")
+      }
+    require(files.nonEmpty, s"no parquet file in $dir")
+    graft.catalog.VersionedTable.footerSchema(spark,
+      files.minBy(_.toString))
   }
 
   /** `path/meta.json` as field -> text value; None if absent. */

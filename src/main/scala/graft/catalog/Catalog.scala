@@ -77,13 +77,13 @@ object Catalog {
 
   /** Z-order (Morton) clustered parquet write — multi-dimensional
     * clustering, the lakehouse `OPTIMIZE ZORDER BY` reduced to its
-    * Spark-expressible core. The two columns are min-max scaled to
+    * Spark-expressible core. The columns are min-max scaled to
     * `bits`-bit integers whose bits are interleaved into one sort key;
     * range-partitioning + sorting by that key lays rows out in Z-curve
-    * tiles, so parquet row-group min/max stats become selective on BOTH
-    * columns at once and a predicate on EITHER prunes row groups (a
-    * single-column sort only ever prunes its own column). ScaleSpec
-    * proves the effect on scan metrics.
+    * tiles, so parquet row-group min/max stats become selective on EVERY
+    * clustered column at once and a predicate on ANY of them prunes row
+    * groups (a single-column sort only ever prunes its own column).
+    * ScaleSpec proves the effect on scan metrics.
     *
     * Min-max scaling assumes roughly uniform value spread; heavily skewed
     * columns want rank-based binning (approxQuantile cut points) before
@@ -91,35 +91,17 @@ object Catalog {
     * agg is one 1-row collect (quantizer-style driver material, not
     * data).
     */
-  def writeZOrdered(df: DataFrame, path: String, colA: String, colB: String,
-                    bits: Int = 16, numFiles: Int = 0,
-                    mode: SaveMode = SaveMode.Overwrite): Unit =
-    zOrderedFrame(df, colA, colB, bits, numFiles)
+  def writeZOrderedN(df: DataFrame, path: String, cols: Seq[String],
+                     bits: Int = 0, numFiles: Int = 0,
+                     mode: SaveMode = SaveMode.Overwrite): Unit =
+    zOrderedFrameN(df, cols, bits, numFiles)
       .write.mode(mode).parquet(path)
 
-  /** [[writeZOrdered]]'s arrangement WITHOUT the write: validation, the
+  /** [[writeZOrderedN]]'s arrangement WITHOUT the write: validation, the
     * Morton interleave, range partitioning and within-partition sort,
     * returned as a DataFrame so sinks that manage their own files (the
     * versioned table's OPTIMIZE) cluster through their own commit path.
     * The clustering survives any sink that does not reshuffle.
-    */
-  def zOrderedFrame(df: DataFrame, colA: String, colB: String,
-                    bits: Int = 16, numFiles: Int = 0): DataFrame = {
-    val n = if (numFiles > 0) numFiles
-            else df.sparkSession.sessionState.conf.numShufflePartitions
-    withMorton(df, colA, colB, bits)
-      .repartitionByRange(n, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-  }
-
-  /** N-column [[zOrderedFrame]]: Morton interleave across ANY number of
-    * dimensions (bit `i` of dimension `d` lands at `i * N + d`, so the
-    * two-column layout is the `N = 2` special case). `bits` defaults to
-    * the most precision that fits a 64-bit key (`63 / N`, capped at 16) —
-    * three 16-bit dims fit, six dims fall back to 10 bits each. More
-    * dimensions dilute per-column clustering (the curse of the Z-curve);
-    * 2–4 columns is the useful range, matching lakehouse practice.
     */
   def zOrderedFrameN(df: DataFrame, cols: Seq[String], bits: Int = 0,
                      numFiles: Int = 0): DataFrame = {
@@ -131,23 +113,14 @@ object Catalog {
       .drop("__z")
   }
 
-  /** [[writeZOrdered]] over N columns. */
-  def writeZOrderedN(df: DataFrame, path: String, cols: Seq[String],
-                     bits: Int = 0, numFiles: Int = 0,
-                     mode: SaveMode = SaveMode.Overwrite): Unit =
-    zOrderedFrameN(df, cols, bits, numFiles)
-      .write.mode(mode).parquet(path)
-
-  /** `df` plus a validated `__z` Morton-interleave column (min-max
-    * scaled to `bits` bits per dimension). Shared by the flat z-order
+  /** `df` plus a validated `__z` Morton-interleave column across N ≥ 2
+    * dimensions (bit `i` of dimension `d` lands at `i * N + d`), each
+    * min-max scaled to `bits` bits. `bits = 0` picks the most precision
+    * that fits a 64-bit key, `min(16, 63 / N)`: two or three dims get 16
+    * bits each, six fall back to 10. More dimensions dilute per-column
+    * clustering (the curse of the Z-curve); 2–4 columns is the useful
+    * range, matching lakehouse practice. Shared by the flat z-order
     * layout above and the versioned table's per-partition clustering.
-    */
-  private[catalog] def withMorton(df: DataFrame, colA: String,
-                                  colB: String, bits: Int): DataFrame =
-    withMortonN(df, Seq(colA, colB), bits)
-
-  /** [[withMorton]] across N ≥ 2 dimensions. `bits = 0` picks
-    * `min(16, 63 / N)`.
     */
   private[catalog] def withMortonN(df: DataFrame, cols: Seq[String],
                                    bits: Int = 0): DataFrame = {

@@ -151,6 +151,14 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     */
   private[catalog] var mergeInListKeys: Int = 32768
 
+  /** [[maybeAutoCompact]]'s compaction target: 128 MiB; a file below
+    * half of it counts as small.
+    */
+  private[catalog] var autoCompactTargetBytes: Long = 128L * 1024 * 1024
+
+  /** The small-file count at which [[maybeAutoCompact]] folds: 16. */
+  private[catalog] var autoCompactMinSmallFiles: Int = 16
+
   /** A checkpoint sidecar (full resolved file list) is written after
     * every this-many consecutive delta commits, bounding the manifest
     * reads a snapshot resolution can need. Checkpoints are derived and
@@ -855,11 +863,10 @@ object VersionedTable extends org.apache.spark.internal.Logging {
 
   /** Opt-in post-ingest compaction (`spark.graft.autoCompact = true`):
     * after an append lands, fold the table's small-file debt through
-    * [[compactSmallFiles]] once it crosses
-    * `spark.graft.autoCompact.minSmallFiles` (default 16) files below
-    * half of `spark.graft.autoCompact.targetFileBytes` (default
-    * 128 MiB) — streaming and micro-batch ingest then keep read
-    * amplification bounded WITHOUT an external OPTIMIZE scheduler.
+    * [[compactSmallFiles]] once it crosses [[autoCompactMinSmallFiles]]
+    * files below half of [[autoCompactTargetBytes]] — streaming and
+    * micro-batch ingest then keep read amplification bounded WITHOUT an
+    * external OPTIMIZE scheduler.
     * The debt probe is one manifest resolve + O(current files) FS
     * metadata stats; the threshold debounces it to every ~N batches'
     * worth of smalls. BEST-EFFORT by design: the ingest commit has
@@ -870,19 +877,14 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   private def maybeAutoCompact(spark: SparkSession, path: String): Unit = {
     if (!spark.conf.getOption("spark.graft.autoCompact")
         .exists(_.toBoolean)) return
-    val target = spark.conf
-      .getOption("spark.graft.autoCompact.targetFileBytes")
-      .map(_.toLong).getOrElse(128L * 1024 * 1024)
-    val minSmall = spark.conf
-      .getOption("spark.graft.autoCompact.minSmallFiles")
-      .map(_.toInt).getOrElse(16)
     try {
       val fsys = fs(spark, path)
       val cur = resolveFiles(fsys, path, manifestNumbers(fsys, path).max)
       val smalls = fileSizes(fsys, path, cur).values
-        .count(_ < target / 2)
-      if (smalls >= minSmall)
-        compactSmallFiles(spark, path, targetFileBytes = target): Unit
+        .count(_ < autoCompactTargetBytes / 2)
+      if (smalls >= autoCompactMinSmallFiles)
+        compactSmallFiles(spark, path,
+          targetFileBytes = autoCompactTargetBytes): Unit
     } catch { case NonFatal(e) =>
       logWarning(s"autoCompact at $path skipped: ${e.getMessage}")
     }
@@ -3970,58 +3972,27 @@ object VersionedTable extends org.apache.spark.internal.Logging {
   }
 
   /** OPTIMIZE as a commit: rewrite the CURRENT version's rows into
-    * ~`targetFileBytes` files (sized per partition when partitioned) and
-    * commit the result as a new, data-identical version. Incremental
-    * upserts/appends accumulate one small file set per commit; this is
-    * the amortized rewrite that caps per-file overhead — and because it
-    * is just another commit, readers on any retained version are
-    * untouched and [[vacuum]] later reclaims the small files. O(table)
-    * by design, an offline maintenance job like every store compaction
-    * here. `zorderCols` (or the legacy 2-column `zorder` pair) Morton-
-    * clusters the rewrite across any N ≥ 2 columns so the stats
-    * sidecars and row-group min/max prune on EVERY clustered column —
-    * within each partition dir when partitioned. Returns the new
-    * version.
+    * ~`targetFileBytes` files and commit the result as a new,
+    * data-identical version. Incremental upserts/appends accumulate one
+    * small file set per commit; this is the amortized rewrite that caps
+    * per-file overhead — and because it is just another commit, readers
+    * on any retained version are untouched and [[vacuum]] later reclaims
+    * the small files. O(table) by design, an offline maintenance job
+    * like every store compaction here. `zorderCols` Morton-clusters the
+    * rewrite across any N ≥ 2 columns so the stats sidecars and
+    * row-group min/max prune on EVERY clustered column; a flat non-zorder
+    * optimize restores a declared bucket layout. Reads, sizing and the
+    * commit are [[rewriteFiles]]'; a concurrent commit of any kind
+    * conflicts (the rewrite would clobber it). Returns the new version.
     */
   def optimize(spark: SparkSession, path: String,
                partitionCols: Seq[String] = Nil,
                targetFileBytes: Long = 128L * 1024 * 1024,
-               zorder: Option[(String, String)] = None,
                zorderCols: Seq[String] = Nil): Int = {
-    val fsys = fs(spark, path)
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no versioned table at $path")
-    val cur = resolveFiles(fsys, path, vs.max)
-    val fileBytes = fileSizes(fsys, path, cur)
-    val nFiles = nFilesFor(fileBytes.values.sum, targetFileBytes)
-    val df = read(spark, path, vs.max)
-    // OPTIMIZE ZORDER: cluster the rewrite on a Morton key so row-group
-    // min/max stats prune on BOTH columns in every snapshot read from
-    // here on — flat tables range-partition on the key; partitioned
-    // tables cluster WITHIN each partition (the partition dir is the
-    // coarse level, the Z-curve the fine one). Pre-arranged frames go
-    // through the commit path unshuffled (arrange = false).
-    val zcols = if (zorderCols.nonEmpty) zorderCols
-                else zorder.map(t => Seq(t._1, t._2)).getOrElse(Nil)
-    val sized = (partitionCols, zcols) match {
-      case (Seq(), cs) if cs.nonEmpty =>
-        Catalog.zOrderedFrameN(df, cs, numFiles = nFiles)
-      case (pcs, cs) if pcs.nonEmpty && cs.nonEmpty =>
-        Catalog.withMortonN(df, cs)
-          .repartition(pcs.map(col): _*)
-          .sortWithinPartitions("__z").drop("__z")
-      case (pcs, _) if pcs.nonEmpty =>
-        sizeWithinPartitions(df, pcs.toSeq, fileBytes, targetFileBytes)
-      case _ => df.repartition(nFiles)
-    }
-    // optimize READ the whole base version: any concurrent commit
-    // invalidates the rewrite (it would be clobbered) — conflict, rerun
-    // (a flat non-zorder optimize restores a declared bucket layout —
-    // zorder wins when both are asked: the caller chose clustering)
-    writeCommit(sized, path, partitionCols, "optimize",
-      arrange = partitionCols.isEmpty, scope = WholeBase(vs.max),
-      bucketArrange = zcols.isEmpty) {
-      (_, newFiles) => newFiles }
+    val (baseV, cur) = planBase(spark, path)
+    require(baseV >= 0, s"no versioned table at $path")
+    rewriteFiles(spark, path, "optimize", baseV, cur, cur, partitionCols,
+      zorderCols, targetFileBytes, wholeBase = true)
   }
 
   /** Partition-scoped OPTIMIZE: rewrite ONLY the named partitions into
@@ -4030,12 +4001,8 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     * maintenance shape that actually runs at 100 TB, where "optimize
     * the table" is a fleet of per-partition jobs (optimize yesterday's
     * ingest partition after it closes), never one O(table) rewrite.
-    * Cost: O(named partitions) read + rewrite. Data-identical by
-    * construction; constraints are skipped like every data-preserving
-    * rewrite. Concurrency follows [[compactSmallFiles]]: a concurrent
-    * rewrite of a touched file conflicts (rerun the cheap maintenance
-    * op); a concurrent append into a touched partition REBASES — its
-    * file simply carries forward beside the freshly packed ones.
+    * Cost: O(named partitions) read + rewrite, through
+    * [[rewriteFiles]]. Concurrency follows [[compactSmallFiles]].
     * Returns the new version (the current one when nothing matched).
     */
   def optimizePartitions(spark: SparkSession, path: String,
@@ -4056,10 +4023,8 @@ object VersionedTable extends org.apache.spark.internal.Logging {
                               targetFileBytes: Long = 128L * 1024 * 1024,
                               zorderCols: Seq[String] = Nil): Int = {
     require(specs.nonEmpty, "optimizePartitions needs a partition scope")
-    val fsys = fs(spark, path)
-    val prevVs = manifestNumbers(fsys, path)
-    require(prevVs.nonEmpty, s"no versioned table at $path")
-    val cur = resolveFiles(fsys, path, prevVs.max)
+    val (baseV, cur) = planBase(spark, path)
+    require(baseV >= 0, s"no versioned table at $path")
     // rewrite with the table's FULL layout (a multi-level table's
     // partition-scoped pack must keep every level — a single-level
     // rewrite would mix layouts under the indexed scan); the named
@@ -4075,81 +4040,43 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     }
     val wants = specs.map { case (c, vs) =>
       (c, vs.map(c + "=" + _).toSet) }
-    val touchedSeq = cur.filter(f => wants.forall { case (c, want) =>
+    val touched = cur.filter(f => wants.forall { case (c, want) =>
       partitionSegment(f, c).exists(want) })
-    if (touchedSeq.isEmpty) return prevVs.max
-    val touched = touchedSeq.toSet
-    val sizes = fileSizes(fsys, path, touchedSeq)
-    val (cmapO, dropsO) = schemaMetaAt(fsys, path, prevVs.max)
-    val part = readEntries(spark, path, touchedSeq, cmapO, dropsO)
-    val sized =
-      if (zorderCols.nonEmpty)
-        // cluster WITHIN each partition on the Morton key (partition dir
-        // is the coarse level, the Z-curve the fine one) — one task per
-        // named partition, the [[optimize]] partitioned-zorder shape
-        Catalog.withMortonN(part, zorderCols)
-          .repartition(writeCols.map(col): _*)
-          .sortWithinPartitions("__z").drop("__z")
-      else sizeWithinPartitions(part, writeCols, sizes,
-        targetFileBytes)
-    writeCommit(sized, path, writeCols, "optimize",
-      arrange = false, writerOptions = Map.empty,
-      bucketArrange = zorderCols.isEmpty,
-      scope = FileSet(prevVs.max, cur, touched, None)) {
-      (prev, newFiles) => prev.filterNot(touched) ++ newFiles
-    }
+    if (touched.isEmpty) baseV
+    else rewriteFiles(spark, path, "optimize", baseV, cur, touched,
+      writeCols, zorderCols, targetFileBytes)
   }
 
   /** PURGE deletion vectors (the published `REORG TABLE ... APPLY
     * (PURGE)` verb): rewrite ONLY the files carrying a vector — their
-    * surviving rows, written back under the table's own layout — so
-    * every vector folds away in O(DV'd files), never a full-table
-    * OPTIMIZE. Untouched files travel by manifest reference; the swept
-    * sidecars are reclaimed by the next [[vacuum]] once no retained
-    * manifest names them. Data-identical by construction (constraints
-    * skip, like every data-preserving rewrite). Concurrency follows
-    * [[compactSmallFiles]]: a concurrent rewrite of a touched file
-    * conflicts and the cheap maintenance op reruns. Returns the new
+    * surviving rows, written back under the table's own layout through
+    * [[rewriteFiles]] — so every vector folds away in O(DV'd files),
+    * never a full-table OPTIMIZE. Untouched files travel by manifest
+    * reference; the swept sidecars are reclaimed by the next [[vacuum]]
+    * once no retained manifest names them. A concurrent rewrite of a
+    * touched file conflicts and the purge replans. Returns the new
     * version (the current one when no vector exists).
     */
   def purgeDeletionVectors(spark: SparkSession, path: String,
                            targetFileBytes: Long = 128L * 1024 * 1024): Int =
     replanOnConflict("purge_dv", path) {
-      val fsys = fs(spark, path)
-      val prevVs = manifestNumbers(fsys, path)
-      require(prevVs.nonEmpty, s"no versioned table at $path")
-      val cur = resolveFiles(fsys, path, prevVs.max)
-      val touchedSeq = cur.filter(e => dvSplit(e)._2.isDefined)
-      if (touchedSeq.isEmpty) prevVs.max
-      else {
-        val touched = touchedSeq.toSet
-        val layout = layoutPartitionCols(spark, path)
-        val (cmap, drops) = schemaMetaAt(fsys, path, prevVs.max)
-        val survivors = readEntries(spark, path, touchedSeq, cmap, drops)
-        val sizes = fileSizes(fsys, path, touchedSeq)
-        val sized =
-          if (layout.isEmpty) survivors.repartition(
-            nFilesFor(sizes.values.sum, targetFileBytes))
-          else sizeWithinPartitions(survivors, layout, sizes,
-            targetFileBytes)
-        writeCommit(sized, path, layout, "purge_dv",
-          arrange = false, writerOptions = Map.empty,
-          bucketArrange = true,
-          scope = FileSet(prevVs.max, cur, touched, None)) {
-          (prev, newFiles) => prev.filterNot(touched) ++ newFiles
-        }
-      }
+      val (baseV, cur) = planBase(spark, path)
+      require(baseV >= 0, s"no versioned table at $path")
+      val touched = cur.filter(e => dvSplit(e)._2.isDefined)
+      if (touched.isEmpty) baseV
+      else rewriteFiles(spark, path, "purge_dv", baseV, cur, touched,
+        layoutPartitionCols(spark, path), Nil, targetFileBytes)
     }
 
   /** Incremental OPTIMIZE (bin-packing): rewrite ONLY the files smaller
-    * than `minFileBytes` into ~`targetFileBytes` files, carrying every
-    * right-sized file forward by manifest reference — the maintenance
-    * verb incremental ingest actually needs, O(small files) instead of
-    * [[optimize]]'s O(table). Partitioned tables pack within partitions
-    * (a partition with one small file keeps it — repacking it alone
-    * buys nothing). Data-identical by construction; returns the new
-    * version, or the current one when <2 small files exist anywhere
-    * (nothing worth packing).
+    * than `minFileBytes` into ~`targetFileBytes` files through
+    * [[rewriteFiles]], carrying every right-sized file forward by
+    * manifest reference — the maintenance verb incremental ingest
+    * actually needs, O(small files) instead of [[optimize]]'s O(table).
+    * Partitioned tables pack within partitions (a partition with one
+    * small file keeps it — repacking it alone buys nothing). Returns
+    * the new version, or the current one when <2 small files exist
+    * anywhere (nothing worth packing).
     */
   def compactSmallFiles(spark: SparkSession, path: String,
                         partitionCols: Seq[String] = Nil,
@@ -4157,9 +4084,8 @@ object VersionedTable extends org.apache.spark.internal.Logging {
                         minFileBytes: Long = -1L): Int = {
     val minBytes = if (minFileBytes > 0) minFileBytes else targetFileBytes / 2
     val fsys = fs(spark, path)
-    val prevVs = manifestNumbers(fsys, path)
-    require(prevVs.nonEmpty, s"no versioned table at $path")
-    val cur = resolveFiles(fsys, path, prevVs.max)
+    val (baseV, cur) = planBase(spark, path)
+    require(baseV >= 0, s"no versioned table at $path")
     // pack with the table's OWN layout when the caller names none — a
     // flat rewrite of a partitioned table's smalls would mix layouts
     // under the indexed scan
@@ -4179,8 +4105,8 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     // matching the current declaration — columns, count, read types —
     // AND carrying the sort a rewrite WOULD lay) is converged: skip it.
     val decl = bucketingOf(fsys, path)
-    lazy val headTypes = GraftScan.fieldTypesAt(spark, path, prevVs.max)
-    lazy val (cmapH, _) = schemaMetaAt(fsys, path, prevVs.max)
+    lazy val headTypes = GraftScan.fieldTypesAt(spark, path, baseV)
+    lazy val (cmapH, _) = schemaMetaAt(fsys, path, baseV)
     def converged(fls: Seq[String]): Boolean = decl.exists { d =>
       // the comparison target is the WRITER's decision, not the bare
       // declaration: an arranged rewrite sorts by effectiveSort only
@@ -4203,30 +4129,62 @@ object VersionedTable extends org.apache.spark.internal.Logging {
       .filter(_._2.size >= 2)
       .filterNot { case (_, fls) => decl.isDefined && converged(fls) }
       .values.flatten.toSeq
-    if (packable.size < 2) prevVs.max
-    else {
-      val touched = packable.toSet
-      // logical-space read: a dropped column is physically shed from the
-      // packed rewrite (incremental space reclaim), and writeCommit
-      // translates live columns back to their physical names
-      val (cmapC, dropsC) = schemaMetaAt(fsys, path, prevVs.max)
-      val packed = readEntries(spark, path, packable, cmapC, dropsC)
-      val sized =
-        if (packCols.isEmpty) packed.repartition(
-          nFilesFor(packable.map(sizes).sum, targetFileBytes))
-        else
-          // size WITHIN partitions from the packable files' bytes: a
-          // partition whose smalls sum past the target still splits
-          sizeWithinPartitions(packed, packCols,
-            sizes.view.filterKeys(touched).toMap, targetFileBytes)
-      // compaction READ the packable files: a concurrent rewrite of any
-      // of them conflicts (rule 1) and the cheap maintenance op reruns
-      writeCommit(sized, path, packCols, "compact",
-        arrange = false, writerOptions = Map.empty,
-        bucketArrange = true,
-        scope = FileSet(prevVs.max, cur, touched, None)) {
-        (prev, newFiles) => prev.filterNot(touched) ++ newFiles
-      }
+    if (packable.size < 2) baseV
+    else rewriteFiles(spark, path, "compact", baseV, cur, packable,
+      packCols, Nil, targetFileBytes)
+  }
+
+  /** The maintenance rewrite core behind [[optimize]],
+    * [[optimizePartitionsMulti]], [[purgeDeletionVectors]] and
+    * [[compactSmallFiles]]: read `entries` of version `baseV` in
+    * LOGICAL space (deletion vectors applied; a dropped column is
+    * physically shed, and [[writeCommit]] translates live columns back
+    * to their physical names), size them from their own bytes, and
+    * commit the result in their place, everything else of `base`
+    * carried forward by manifest reference. The sizing rule:
+    *
+    *  - flat, z-ordered: range-partitioned on the Morton key into
+    *    ~bytes/`targetFileBytes` files ([[Catalog.zOrderedFrameN]]);
+    *  - partitioned, z-ordered: clustered WITHIN each partition on the
+    *    Morton key (the partition dir is the coarse level, the Z-curve
+    *    the fine one), one task per partition;
+    *  - partitioned: ~bytes/`targetFileBytes` files per partition
+    *    ([[sizeWithinPartitions]]);
+    *  - flat: ~bytes/`targetFileBytes` files.
+    *
+    * The sized frame is pre-arranged, so it reaches the writer
+    * unshuffled (`arrange = false`); a non-zorder rewrite re-arranges a
+    * declared bucket layout (z-order wins when both apply: the caller
+    * chose clustering). Data-identical by construction, so constraints
+    * are skipped. `wholeBase` declares that the rewrite read the whole
+    * base version: any concurrent commit conflicts. Otherwise only a
+    * concurrent rewrite of one of `entries` conflicts, and a concurrent
+    * append rebases — its file carries forward beside the packed ones.
+    */
+  private def rewriteFiles(spark: SparkSession, path: String, op: String,
+                           baseV: Int, base: Seq[String],
+                           entries: Seq[String], layout: Seq[String],
+                           zorderCols: Seq[String], targetFileBytes: Long,
+                           wholeBase: Boolean = false): Int = {
+    val fsys = fs(spark, path)
+    val sizes = fileSizes(fsys, path, entries)
+    val (cmap, drops) = schemaMetaAt(fsys, path, baseV)
+    val df = readEntries(spark, path, entries, cmap, drops)
+    def nFiles = nFilesFor(sizes.values.sum, targetFileBytes)
+    val sized = (layout, zorderCols) match {
+      case (Seq(), Seq()) => df.repartition(nFiles)
+      case (Seq(), zs) => Catalog.zOrderedFrameN(df, zs, numFiles = nFiles)
+      case (pcs, Seq()) => sizeWithinPartitions(df, pcs, sizes, targetFileBytes)
+      case (pcs, zs) => Catalog.withMortonN(df, zs)
+        .repartition(pcs.map(col): _*)
+        .sortWithinPartitions("__z").drop("__z")
+    }
+    val touched = entries.toSet
+    writeCommit(sized, path, layout, op, arrange = false,
+      scope = if (wholeBase) WholeBase(baseV)
+              else FileSet(baseV, base, touched, None),
+      bucketArrange = zorderCols.isEmpty) {
+      (prev, newFiles) => prev.filterNot(touched) ++ newFiles
     }
   }
 
@@ -5659,13 +5617,12 @@ object VersionedTable extends org.apache.spark.internal.Logging {
     // sidecar stats carry PHYSICAL column names; residual filters run
     // in logical space after the translated read
     val (cmap, drops) = schemaMetaAt(fsys, path, v)
-    val kept = bounds.foldLeft(resolveFiles(fsys, path, v)) {
+    val all = resolveFiles(fsys, path, v)
+    val kept = bounds.foldLeft(all) {
       case (files, (c, lo, hi)) =>
         skipFiles(fsys, path, files, physicalOf(cmap, c), lo, hi)
     }
-    // every file skipped (contradictory bounds): the schemaless empty
-    // frame cannot resolve the residual filters — it IS the answer
-    if (kept.isEmpty) return spark.emptyDataFrame
+    if (kept.isEmpty) return skippedRead(spark, path, all, cmap, drops)
     bounds.foldLeft(readEntries(spark, path, kept, cmap, drops)) {
       case (df, (c, lo, hi)) => (Option(lo), Option(hi)) match {
         case (Some(l), Some(h)) => df.filter(col(c).between(lit(l), lit(h)))
@@ -5787,10 +5744,22 @@ object VersionedTable extends org.apache.spark.internal.Logging {
           .collect().toSeq // file NAMES that survived, not data
         finally bconf.destroy()
       }
-    if (kept.isEmpty) return spark.emptyDataFrame
+    if (kept.isEmpty) return skippedRead(spark, path, all, cmap, drops)
     readEntries(spark, path, kept, cmap, drops)
       .filter(col(column).isin(values.map(lit(_)): _*))
   }
+
+  /** What a skip-read returns when every file of `files` is skipped:
+    * no rows, under the logical schema a read of `files` would have,
+    * with no file opened.
+    */
+  private def skippedRead(spark: SparkSession, path: String,
+                          files: Seq[String], cmap: Seq[(String, String)],
+                          drops: Seq[String]): DataFrame =
+    spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      org.apache.spark.sql.types.StructType(
+        logicalFields(spark, path, files, cmap, drops)))
 
   /** Can `file` contain ANY of `values` in `column`, as judged by its
     * parquet bloom filters? True (keep) when any row group's filter
@@ -5859,7 +5828,7 @@ object VersionedTable extends org.apache.spark.internal.Logging {
         case _ => true
       }
     }
-    if (kept.isEmpty) return spark.emptyDataFrame
+    if (kept.isEmpty) return skippedRead(spark, path, files, cmap, drops)
     readEntries(spark, path, kept, cmap, drops).filter(col(column).isNull)
   }
 

@@ -546,14 +546,25 @@ object Dedup {
     graft.SegmentLog.compact(fs, path, "signature store", retainCycles = 2,
         orphanGraceMs) { segs =>
       val seg = graft.SegmentLog.claimSeg(fs, path)
-      def pack(sub: String, parts: Seq[String]): Unit =
+      def pack(sub: String, parts: Seq[String]): Unit = {
+        // the file schema from one footer of a leaf partition dir, on
+        // the driver: the segment reads below infer nothing in a job
+        val sch = graft.SegmentLog.leafSchema(spark, path, sub,
+          Option(fs.globStatus(new org.apache.hadoop.fs.Path(
+              s"$path/seg-{${segs.mkString(",")}}/$sub/" +
+                parts.map(_ + "=*").mkString("/"))))
+            .flatMap(_.headOption)
+            .getOrElse(throw new IllegalStateException(
+              s"signature store at $path has no $sub partition to pack"))
+            .getPath.toString)
         // per-segment reads unioned (not one multi-root read): each
         // segment dir is its own basePath, keeping the partition columns
         // parsed per segment
-        segs.map(s => spark.read.parquet(s"$path/seg-$s/$sub"))
+        segs.map(s => spark.read.schema(sch).parquet(s"$path/seg-$s/$sub"))
           .reduce(_ unionByName _)
           .repartition(parts.map(col): _*)
           .write.partitionBy(parts: _*).parquet(s"$path/seg-$seg/$sub")
+      }
       pack("sigs", Seq("sid"))
       pack("buckets", Seq("band", "hmod"))
       Seq(seg)
@@ -669,11 +680,13 @@ object Dedup {
     // batch-touched (band, hmod) directories and reads only those — even
     // the driver's file LISTING stays O(batch), where a where() over the
     // whole table would list every partition dir of the store first
-    def prunedRead(base: String, dirs: Seq[String],
+    def prunedRead(sub: String, base: String, dirs: Seq[String],
                    emptyLike: DataFrame): DataFrame = {
       val live = dirs.filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
       if (live.isEmpty) emptyLike.where(lit(false))
-      else spark.read.option("basePath", base).parquet(live: _*)
+      else spark.read
+        .schema(graft.SegmentLog.leafSchema(spark, path, sub, live.head))
+        .option("basePath", base).parquet(live: _*)
     }
     // resolve the live manifest ONCE and plan every store read against
     // it: the segments it names stay readable for the whole probe —
@@ -684,7 +697,7 @@ object Dedup {
                      emptyLike: DataFrame): DataFrame =
       liveSegs.map { s =>
         val base = s"$path/seg-$s/$sub"
-        prunedRead(base, keyDirs.map(d => s"$base/$d"), emptyLike)
+        prunedRead(sub, base, keyDirs.map(d => s"$base/$d"), emptyLike)
       }.reduceOption(_ unionByName _)
         .getOrElse(emptyLike.where(lit(false)))
     val storeBuckets = segUnionRead("buckets",

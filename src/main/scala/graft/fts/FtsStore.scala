@@ -563,7 +563,8 @@ object FtsStore {
       }
       return sample match {
         case Some(dir) =>
-          val sch = leafSchema(spark, path, "postings-files", dir)
+          val sch = graft.SegmentLog.leafSchema(spark, path,
+            "postings-files", dir)
           spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
         case None =>
@@ -572,7 +573,8 @@ object FtsStore {
             array().cast("array<int>").as("positions"))
       }
     }
-    val sch = leafSchema(spark, path, "postings-files", leafDirs.head)
+    val sch = graft.SegmentLog.leafSchema(spark, path, "postings-files",
+      leafDirs.head)
     val all = spark.read.schema(sch).parquet(leafDirs: _*)
       .withColumn("__seg", regexp_extract(input_file_name(),
         ".*/seg-(\\d+)/postings/", 1).cast("int"))
@@ -651,77 +653,6 @@ object FtsStore {
   private def fsFor(spark: SparkSession, path: String): FileSystem =
     graft.StoreLock.fs(spark, path)
 
-  /** Per-store schema cache for segment reads: every segment of a store
-    * is written by the same pipeline (postings by
-    * [[Fts.buildPositionalIndex]], docs by [[writeSegment]]/[[delete]]),
-    * so the schema is store-constant — one footer inference per store
-    * per JVM instead of one per probe (a probe paid one inference per
-    * live segment before the one-relation read). Keyed by the store's
-    * `meta.json` CREATION NONCE (written once at creation, ~60 bytes —
-    * reading the content costs the same one FS op as a status probe), so
-    * a store deleted and re-created at the same path can never be read
-    * with the old store's schema, even when the new meta.json lands in
-    * the same mtime tick with the same byte length (pre-nonce stores key
-    * on the whole meta content — the same identity argument). Bounded
-    * LRU. Holds FILE schemas (leaf-dir reads carry no `tb` partition
-    * column — dir selection replaced the partition filter, r20).
-    */
-  private val segSchemaCache =
-    new java.util.LinkedHashMap[String,
-      org.apache.spark.sql.types.StructType](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String,
-            org.apache.spark.sql.types.StructType]): Boolean =
-        size() > 256
-    }
-
-  /** The store-constant file schema for `kind` ("postings-files" /
-    * "docs-files"), derived once per store per JVM from `sampleDir` (a
-    * leaf dir: no partition discovery, so the schema is the files' own)
-    * by [[footerSchema]].
-    */
-  private def leafSchema(spark: SparkSession, path: String, kind: String,
-                         sampleDir: String)
-      : org.apache.spark.sql.types.StructType = {
-    val metaId = scala.util.Try {
-      val fsys = graft.StoreLock.fs(spark, path)
-      val meta = graft.SegmentLog.readMeta(fsys, path).get
-      meta.get("nonce").getOrElse {
-        // legacy (pre-nonce) meta.json content is DETERMINISTIC
-        // ({"numBuckets":n} — identical across delete/re-create), so
-        // content alone cannot identify the store: keep (mtime, length)
-        // in the key alongside it, the identity the nonce replaced
-        val st = fsys.getFileStatus(new HPath(s"$path/meta.json"))
-        s"$meta@${st.getModificationTime}:${st.getLen}"
-      }
-    }.toOption
-    val key = metaId.map(id => s"$path#$kind#$id")
-    val cached = key.flatMap(k =>
-      segSchemaCache.synchronized(Option(segSchemaCache.get(k))))
-    cached.getOrElse {
-      val sch = footerSchema(spark, sampleDir)
-      key.foreach(k => segSchemaCache.synchronized(
-        segSchemaCache.put(k, sch): Unit))
-      sch
-    }
-  }
-
-  /** What `spark.read.parquet(dir).schema` infers for a leaf dir of
-    * same-schema files: the footer schema of its first file by path,
-    * the one file that inference reads, read on the driver.
-    */
-  private[fts] def footerSchema(spark: SparkSession, dir: String)
-      : org.apache.spark.sql.types.StructType = {
-    val files = graft.StoreLock.fs(spark, dir).listStatus(new HPath(dir))
-      .map(_.getPath)
-      .filter { p =>
-        !p.getName.startsWith("_") && !p.getName.startsWith(".")
-      }
-    require(files.nonEmpty, s"no parquet file in $dir")
-    graft.catalog.VersionedTable.footerSchema(spark,
-      files.minBy(_.toString))
-  }
-
   /** Every live segment's doc stats as ONE scan relation (r20, the
     * [[resolved]] one-relation shape): each committed segment has a docs
     * dir by construction ([[writeSegment]]/[[delete]] always write one),
@@ -730,7 +661,8 @@ object FtsStore {
   private def docsUnion(spark: SparkSession, path: String,
                         segs: Seq[Int]): DataFrame = {
     val dirs = segs.map(s => s"$path/seg-$s/docs")
-    val sch = leafSchema(spark, path, "docs-files", dirs.head)
+    val sch = graft.SegmentLog.leafSchema(spark, path, "docs-files",
+      dirs.head)
     spark.read.schema(sch).parquet(dirs: _*)
       .withColumn("__seg", regexp_extract(input_file_name(),
         ".*/seg-(\\d+)/docs/", 1).cast("int"))

@@ -571,7 +571,7 @@ object CoreQueries {
       |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
 
   /** Z-order round-trip bound into the driver gate: events written
-    * through [[graft.catalog.Catalog.writeZOrdered]] (min-max scaled
+    * through [[graft.catalog.Catalog.writeZOrderedN]] (min-max scaled
     * bit-interleave, range-partitioned by z) and read back under a
     * 2-D range predicate must equal the plain filtered table — the
     * clustering reorders rows and files, never loses, duplicates, or
@@ -583,7 +583,8 @@ object CoreQueries {
   def q41ZorderScan(s: SparkSession, d: String): DataFrame = {
     val path = graft.Caches.newTempDir("graft_zorder_q").toString + "/events_z"
     val ev = Tables.events(s, d).select("event_id", "user_id", "value")
-    graft.catalog.Catalog.writeZOrdered(ev, path, "user_id", "value", numFiles = 8)
+    graft.catalog.Catalog.writeZOrderedN(ev, path, Seq("user_id", "value"),
+      numFiles = 8)
     s.read.parquet(path)
       .filter(col("user_id").between(100, 200) && col("value").between(10.0, 50.0))
       .select(col("event_id"), col("user_id"), round(col("value"), 2).as("value"))

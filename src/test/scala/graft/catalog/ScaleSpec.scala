@@ -428,13 +428,13 @@ class ScaleSpec extends AnyFunSuite {
     // non-numeric string: null only after cast("double")
     val strBad = Seq((1L, "12"), (2L, "not-a-number")).toDF("a", "b")
     val e1 = intercept[IllegalArgumentException] {
-      Catalog.writeZOrdered(strBad, dir, "a", "b")
+      Catalog.writeZOrderedN(strBad, dir, Seq("a", "b"))
     }
     assert(e1.getMessage.contains("non-numeric"))
     // NaN double: never null, silently garbage without the isnan check
     val nanBad = Seq((1L, 1.0), (2L, Double.NaN)).toDF("a", "b")
     val e2 = intercept[IllegalArgumentException] {
-      Catalog.writeZOrdered(nanBad, dir, "a", "b")
+      Catalog.writeZOrderedN(nanBad, dir, Seq("a", "b"))
     }
     assert(e2.getMessage.contains("NaN"))
   }
@@ -445,7 +445,7 @@ class ScaleSpec extends AnyFunSuite {
       .select("event_id", "user_id", "value")
     val zDir = graft.Caches.newTempDir("graft_zorder").toString
     val linDir = graft.Caches.newTempDir("graft_linear").toString
-    Catalog.writeZOrdered(events, zDir, "event_id", "user_id",
+    Catalog.writeZOrderedN(events, zDir, Seq("event_id", "user_id"),
       bits = 16, numFiles = 16)
     // comparison layout: same file count, clustered on event_id only —
     // the single-column sort every ingest produces by default

@@ -46,9 +46,7 @@ class VersionedTableSpec extends AnyFunSuite {
       .map(_.getString(0)).contains("compact"))
     // conf on: once the small-file count crosses the threshold, the
     // NEXT append triggers a data-identical compact commit
-    spark.conf.set("spark.graft.autoCompact", "true")
-    spark.conf.set("spark.graft.autoCompact.minSmallFiles", "6")
-    try {
+    AutoCompactSeam.withAutoCompact(spark, minSmallFiles = 6) {
       val before = rows(VersionedTable.read(spark, t))
       VersionedTable.append(
         Seq((200L, "tue", 2.0)).toDF("id", "day", "value"), t)
@@ -64,7 +62,7 @@ class VersionedTableSpec extends AnyFunSuite {
       assert(VersionedTable.versions(spark, t).max == vAfter + 1,
         "one commit only while under the threshold")
       // the streaming-sink path (appendIdempotent) folds too
-      spark.conf.set("spark.graft.autoCompact.minSmallFiles", "2")
+      VersionedTable.autoCompactMinSmallFiles = 2
       VersionedTable.appendIdempotent(
         Seq((202L, "wed", 2.2)).toDF("id", "day", "value"), t,
         "ac_app", 1L)
@@ -79,9 +77,6 @@ class VersionedTableSpec extends AnyFunSuite {
       assert(VersionedTable.read(spark, tp).inputFiles
         .forall(_.contains("day=")), "layout must survive autoCompact")
       assert(rows(VersionedTable.read(spark, tp)).size == 9)
-    } finally {
-      spark.conf.unset("spark.graft.autoCompact")
-      spark.conf.unset("spark.graft.autoCompact.minSmallFiles")
     }
   }
 
@@ -445,7 +440,7 @@ class VersionedTableSpec extends AnyFunSuite {
     VersionedTable.upsertPartitions(
       Seq((3L, "tue", 300.0)).toDF("id", "day", "value"), t, "day")
     VersionedTable.optimize(spark, t, Seq("day"),
-      zorder = Some(("id", "value")))
+      zorderCols = Seq("id", "value"))
     val h = VersionedTable.history(spark, t)
       .orderBy("version").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
@@ -458,7 +453,7 @@ class VersionedTableSpec extends AnyFunSuite {
     // flat-table variant: zorder through the range-partitioned path
     val t2 = newTable()
     VersionedTable.commit(base.drop("day"), t2)
-    VersionedTable.optimize(spark, t2, zorder = Some(("id", "value")))
+    VersionedTable.optimize(spark, t2, zorderCols = Seq("id", "value"))
     assert(VersionedTable.read(spark, t2).count() == 5)
     assert(VersionedTable.history(spark, t2).filter($"op" === "optimize")
       .count() == 1)
@@ -497,7 +492,7 @@ class VersionedTableSpec extends AnyFunSuite {
               repl.toDF("id", "day", "value"), t, "day")
           case _ =>
             VersionedTable.optimize(spark, t, Seq("day"),
-              zorder = if (rnd.nextBoolean()) Some(("id", "value")) else None)
+              zorderCols = if (rnd.nextBoolean()) Seq("id", "value") else Nil)
         }
         snaps += model.values.flatten.toSet
       }
@@ -817,16 +812,10 @@ class VersionedTableSpec extends AnyFunSuite {
       val vBase = VersionedTable.versions(spark, t5).max
       def padRow(u: Long, e: Long, v: Double) =
         Seq((u, e, v, "x" * 64)).toDF("user_id", "event_id", "value", "pad")
-      spark.conf.set("spark.graft.autoCompact", "true")
-      spark.conf.set("spark.graft.autoCompact.targetFileBytes", "16384")
-      spark.conf.set("spark.graft.autoCompact.minSmallFiles", "2")
-      try {
+      AutoCompactSeam.withAutoCompact(spark, minSmallFiles = 2,
+          targetFileBytes = 16384) {
         VersionedTable.append(padRow(43L, 999003L, 2.0), t5)
         VersionedTable.append(padRow(44L, 999004L, 3.0), t5)
-      } finally {
-        spark.conf.unset("spark.graft.autoCompact")
-        spark.conf.unset("spark.graft.autoCompact.targetFileBytes")
-        spark.conf.unset("spark.graft.autoCompact.minSmallFiles")
       }
       val vAfter = VersionedTable.versions(spark, t5).max
       assert(VersionedTable.history(spark, t5)
@@ -1770,6 +1759,17 @@ class VersionedTableSpec extends AnyFunSuite {
     val both = VersionedTable.readWhereAll(spark, t,
       Seq(("id", 110L, 119L), ("name", "k00300", "k00310")))
     assert(both.inputFiles.isEmpty || both.isEmpty)
+    // every file skipped: the empty answer keeps the read's columns, so
+    // a later select resolves, and no file is opened. readEquals(Any)
+    // (a key past every file's range) and readWhereNull (a column with
+    // no nulls) return the same shape
+    val full = VersionedTable.read(spark, t).schema
+    Seq(both, VersionedTable.readEquals(spark, t, "id", 10000L),
+        VersionedTable.readWhereNull(spark, t, "id")).foreach { df =>
+      assert(df.schema == full)
+      assert(df.inputFiles.isEmpty)
+      assert(df.select("id").collect().isEmpty)
+    }
     assert(VersionedTable.readWhereAll(spark, t,
       Seq(("id", 110L, 119L), ("name", "k00110", "k00115")))
       .count() == 6)

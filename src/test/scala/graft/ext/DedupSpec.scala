@@ -604,6 +604,35 @@ class DedupSpec extends AnyFunSuite {
     graft.Caches.releaseAll(spark)
   }
 
+  test("probes and compactions read the store under its footer schema: no inference job") {
+    val store = graft.Caches.newTempDir("graft_sigstore_schema").toString
+    def gen(base: Long) = spark.range(base, base + 60).select(col("id").as("doc_id"),
+      concat_ws(" ", (0 until 10).map(j =>
+        concat(lit(s"c${j}w"), pmod(col("id") * 17 + j, lit(7919)))): _*).as("text"))
+    // one store part and a one-doc batch keep every read under Spark's
+    // parallel-listing threshold (32 paths), so a parquet job left at a
+    // read is a schema inference
+    (0 until 2).foreach(k => Dedup.appendSignatureStore(gen(k * 1000), "doc_id", "text",
+      store, storeParts = 1))
+    val batch = gen(0).limit(1)
+      .select((col("doc_id") + 900000L).as("doc_id"), col("text"))
+    def probe() = Dedup.dedupAgainstStore(spark, store, batch, "doc_id", "text",
+        storeParts = 1)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def parquetJobs(sites: Seq[String]) =
+      sites.filter(_.startsWith("parquet at Dedup.scala"))
+    val (before, probeSites) = graft.JobCount(spark)(probe())
+    assert(before.nonEmpty, "planted copies must match their originals")
+    assert(parquetJobs(probeSites).isEmpty,
+      s"a probe's store reads infer no schema: $probeSites")
+    val (_, packSites) = graft.JobCount(spark)(
+      Dedup.compactSignatureStore(spark, store, orphanGraceMs = 0L))
+    assert(parquetJobs(packSites).isEmpty,
+      s"a compaction's segment reads infer no schema: $packSites")
+    assert(probe() == before, "probe unchanged by compaction")
+    graft.Caches.releaseAll(spark)
+  }
+
   test("incremental probe reads only batch-keyed store partitions (O(batch), not O(store))") {
     val store = graft.Caches.newTempDir("graft_sigstore_obs").toString
     // a store of 400 distinct docs: 400 × 16 bands = 6400 bucket rows

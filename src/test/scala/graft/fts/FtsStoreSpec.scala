@@ -484,7 +484,7 @@ class FtsStoreSpec extends AnyFunSuite {
     assert(leafDirs.exists(_.endsWith("/docs")) &&
       leafDirs.exists(_.contains("/postings/tb=")))
     leafDirs.foreach { dir =>
-      assert(FtsStore.footerSchema(spark, dir) ==
+      assert(graft.SegmentLog.footerSchema(spark, dir) ==
         spark.read.parquet(dir).schema, dir)
     }
   }

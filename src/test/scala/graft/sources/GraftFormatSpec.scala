@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.catalog.VersionedTable
+import graft.catalog.{AutoCompactSeam, VersionedTable}
 
 /** The `graft` Spark data source end-to-end: batch read/write through
   * `spark.read/write.format("graft")`, time travel options, SQL
@@ -194,15 +194,10 @@ class GraftFormatSpec extends AnyFunSuite {
         rows(base) + ((6L, "thu", 60.0)),
         "the optimize must add no rows and trip no removal guard")
       // the ingest-side fold (autoCompact) is equally invisible
-      spark.conf.set("spark.graft.autoCompact", "true")
-      spark.conf.set("spark.graft.autoCompact.minSmallFiles", "2")
-      try {
+      AutoCompactSeam.withAutoCompact(spark, minSmallFiles = 2) {
         VersionedTable.append(
           Seq((7L, "fri", 70.0)).toDF("id", "day", "value"), t)
         q.processAllAvailable()
-      } finally {
-        spark.conf.unset("spark.graft.autoCompact")
-        spark.conf.unset("spark.graft.autoCompact.minSmallFiles")
       }
       assert(rows(VersionedTable.read(spark, out)) ==
         rows(base) + ((6L, "thu", 60.0)) + ((7L, "fri", 70.0)))
@@ -596,29 +591,24 @@ class GraftFormatSpec extends AnyFunSuite {
     VersionedTable.setBucketing(spark, sink, "id", 4)
     VersionedTable.commit((0L until 2000L).map(i => (i, s"d${i % 7}", 1.0))
       .toDF("id", "day", "value"), src)
-    spark.conf.set("spark.graft.autoCompact", "true")
     // sized so EVERY sink file (bootstrap and 1-row batches alike)
     // counts as small: each append then re-packs the whole flat table
     // arranged, making the end state deterministic
-    spark.conf.set("spark.graft.autoCompact.targetFileBytes", "262144")
-    spark.conf.set("spark.graft.autoCompact.minSmallFiles", "2")
-    val q = spark.readStream.format("graft").load(src)
-      .writeStream.format("graft")
-      .option("path", sink).option("checkpointLocation", cp)
-      .start()
-    try {
-      q.processAllAvailable()
-      VersionedTable.append(Seq((9001L, "thu", 2.0))
-        .toDF("id", "day", "value"), src)
-      q.processAllAvailable()
-      VersionedTable.append(Seq((9002L, "fri", 3.0))
-        .toDF("id", "day", "value"), src)
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      spark.conf.unset("spark.graft.autoCompact")
-      spark.conf.unset("spark.graft.autoCompact.targetFileBytes")
-      spark.conf.unset("spark.graft.autoCompact.minSmallFiles")
+    AutoCompactSeam.withAutoCompact(spark, minSmallFiles = 2,
+        targetFileBytes = 262144) {
+      val q = spark.readStream.format("graft").load(src)
+        .writeStream.format("graft")
+        .option("path", sink).option("checkpointLocation", cp)
+        .start()
+      try {
+        q.processAllAvailable()
+        VersionedTable.append(Seq((9001L, "thu", 2.0))
+          .toDF("id", "day", "value"), src)
+        q.processAllAvailable()
+        VersionedTable.append(Seq((9002L, "fri", 3.0))
+          .toDF("id", "day", "value"), src)
+        q.processAllAvailable()
+      } finally q.stop()
     }
     assert(VersionedTable.history(spark, sink).select("op").collect()
       .map(_.getString(0)).count(_ == "compact") >= 1,
